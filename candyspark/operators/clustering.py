@@ -6,8 +6,9 @@ The reference has no iterative computation beyond its per-day driver loop
 passes); k-means is the canonical computation that genuinely IS iterative,
 so it demonstrates the engine's discipline for that class:
 
-- **Assignment** is a broadcast cross join against the (tiny) centroid
-  table + an L2 score + a per-vector rank — no shuffle of the vectors.
+- **Assignment** folds the (tiny) centroid table into one broadcast array
+  row and takes a per-vector struct-min of (L2 distance, cluster_id) over
+  it — no shuffle of the vectors, no per-vector rank.
 - **Update** recomputes centroids as per-dimension means: ``posexplode``
   the vectors, aggregate ``(cluster, dim) → avg``, fold back to arrays
   with ``array_sort(collect_list(...))``. The only shuffle per iteration,
@@ -25,7 +26,7 @@ numpy reference.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from candyspark.operators.similarity import l2sq
@@ -48,12 +49,14 @@ def assign_clusters(
     cluster_id either way. (Contract: vectors are finite — a NaN distance
     loses the struct-min where the window sorted it last; both orderings
     only diverge when EVERY distance is NaN, impossible for finite data.)
+    An empty centroid table assigns nothing: zero rows, not every vector
+    under the fold's seed id.
     """
     cents = centroids.agg(
         F.array_sort(F.collect_list(F.struct("cluster_id", "c_vec"))).alias(
             "__cents"
         )
-    )
+    ).filter(F.size("__cents") > 0)
     init = F.struct(
         F.lit(float("inf")).alias("d2"),
         F.lit(2**31 - 1).cast("int").alias("cid"),

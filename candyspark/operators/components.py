@@ -27,14 +27,14 @@ Scale design:
 - `localCheckpoint(eager=True)` per round truncates the lineage — without
   it round N replays rounds 1..N-1 (the reference's 10-deep chained-join
   mistake, SURVEY.md §4.2, made exponential).
-- The convergence check is one driver `count()` per round on the CHANGED
-  set only; it doubles as the fixpoint action that materializes the
-  checkpoint.
+- The convergence check launches no job of its own: an `observe()` metric
+  counts the CHANGED labels while the checkpoint job materializes the
+  round, so each round costs exactly one driver action.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -62,34 +62,31 @@ def connected_components(
         .withColumn("component", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    # round-7: TWO hops per checkpoint+convergence-check (A/B'd — the
-    # per-round fixed cost of checkpoint + count actions dominated these
-    # short-diameter graphs; the fixpoint is hop-batching-invariant, the
-    # check just happens every second hop, costing at most one extra
-    # already-converged round of lazy plan)
     for _ in range(max_iter):
-        cur = labels.select(
-            "node", "component", F.col("component").alias("prev")
+        # min neighbor label per node, one hop
+        nbr_min = (
+            und.join(labels, und["b"] == labels["node"])
+            .groupBy(F.col("a").alias("node"))
+            .agg(F.min("component").alias("nbr_component"))
         )
-        for _hop in range(2):
-            nbr_min = (
-                und.join(
-                    cur.select("node", "component"), und["b"] == F.col("node")
-                )
-                .groupBy(F.col("a").alias("node"))
-                .agg(F.min("component").alias("nbr_component"))
-            )
-            cur = cur.join(nbr_min, "node", "left").select(
+        changed = Observation()
+        labels = (
+            labels.join(nbr_min, "node", "left")
+            .select(
                 "node",
                 F.least(
                     F.col("component"), F.coalesce("nbr_component", "component")
                 ).alias("component"),
-                "prev",
+                F.col("component").alias("prev"),
             )
-        new_labels = cur.localCheckpoint(eager=True)
-        changed = new_labels.filter(F.col("component") < F.col("prev")).count()
-        labels = new_labels.drop("prev")
-        if changed == 0:
+            .observe(
+                changed,
+                F.sum((F.col("component") < F.col("prev")).cast("long")).alias("n"),
+            )
+            .localCheckpoint(eager=True)
+            .drop("prev")
+        )
+        if not changed.get["n"]:
             return labels
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 

@@ -24,6 +24,7 @@ from pyspark.sql.window import Window
 
 from candyspark.operators import text as X
 from candyspark.plans import QuerySpec
+from candyspark.plans.extensions import _TOKS
 from candyspark.functions.numeric import money, round2, snap_round
 from candyspark.sources.readers import fan_out, load_table
 
@@ -196,8 +197,6 @@ ORDER BY gid, l_returnflag, l_linestatus
 
 
 # --- composite corpus cleaner (C4-style) ------------------------------------
-
-_TOKS = r"list_filter(string_split_regex(lower(text), '\W+'), x -> x != '')"
 
 _QUALITY = """CAST(ROUND(CAST(
       0.4 * least(CAST(len(toks) AS DOUBLE) / 50.0, 1.0)

@@ -11,6 +11,11 @@ snapping before rounds (see plans/relational.py on why).
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -21,6 +26,20 @@ from candyspark.operators.multimodal import binary_metadata, with_binary_payload
 from candyspark.plans import QuerySpec
 from candyspark.sources.readers import fan_out, load_table
 from candyspark.streaming import events as E
+from candyspark.streaming.stream import (
+    drain,
+    merged_table_path,
+    read_events_stream,
+    run_foreach_batch_merge,
+    streaming_cms_cells,
+    streaming_dedup,
+    streaming_dedup_within_watermark,
+    streaming_full_outer_join,
+    streaming_interval_join,
+    streaming_left_join,
+    streaming_static_enrich,
+    streaming_tumbling_agg,
+)
 
 # --- shared SQL fragments (the DuckDB mirrors of operators/text.py) ---------
 
@@ -1701,6 +1720,58 @@ WHERE i % 4 = 0
 """
 
 
+@contextmanager
+def _landed(df: DataFrame, n_files: int = 1) -> Iterator[tuple[str, str]]:
+    """Re-land a frame as parquet for a single-micro-batch availableNow
+    run (multi-batch behavior — watermark drops, cross-batch state — is
+    covered by tests/test_streaming.py; the driver-visible queries pin
+    the batch-equivalence contract instead).
+
+    Default is ONE file: several drains (the dedup family) keep the
+    first-arrived row per key, so within-batch arrival order must be
+    deterministic. Order-insensitive drains (joins — every match emits,
+    null-flush is watermark-driven) pass n_files>1 for a parallel landing
+    write; any n_files ≪ the source's availableNow file-batch limit still
+    lands in a single micro-batch.
+
+    Yields ``(source dir, checkpoint dir)`` and removes both on exit: the
+    frame ``drain()`` returns lives in the memory sink on the driver, so
+    nothing reads either directory after the drain."""
+    src = tempfile.mkdtemp(prefix="candyspark_stream_src_")
+    ckpt = tempfile.mkdtemp(prefix="candyspark_stream_ckpt_")
+    try:
+        shaped = df.coalesce(1) if n_files == 1 else df.repartition(n_files)
+        shaped.write.mode("overwrite").parquet(src)
+        yield src, ckpt
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def _outer_join_sentinels(events: DataFrame) -> DataFrame:
+    """Two far-future rows (user_id −1, one click and one error, at max ts
+    + 10 h) for the outer stream-stream join drains: null-padded rows emit
+    only once the watermark passes click_ts + horizon — end-of-data alone
+    flushes nothing — so these drive the final watermark past every real
+    event and the closing no-data batch emits the unmatched tails. Callers
+    filter user_id −1 from the result."""
+    max_ts = events.agg((F.max("ts") + F.expr("INTERVAL 10 HOURS")).alias("ts"))
+    return (
+        events.sparkSession.createDataFrame(
+            [(-1, "click"), (-2, "error")], "event_id long, event_type string"
+        )
+        .crossJoin(F.broadcast(max_ts))
+        .select(
+            "event_id",
+            "ts",
+            F.lit(-1).cast("long").alias("user_id"),
+            "event_type",
+            F.lit(0.0).alias("value"),
+            F.lit(None).cast("string").alias("props"),
+        )
+    )
+
+
 def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tumbling-window aggregate run through Structured Streaming
     (file source → watermark → windowed agg → availableNow drain into a
@@ -1713,46 +1784,13 @@ def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     no longer be the spec (tests/test_streaming.py covers the multi-batch
     stateful path instead).
     """
-    import tempfile
-    import uuid
-
-    from candyspark.streaming.stream import (
-        read_events_stream,
-        run_available_now,
-        streaming_tumbling_agg,
-    )
-
     events = load_table(spark, sf_dir, "events")
-    src = tempfile.mkdtemp(prefix="candyspark_stream_src_")
-    events.coalesce(1).write.mode("overwrite").parquet(src)
-    name = f"stream_tumbling_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="candyspark_stream_ckpt_")
-    run_available_now(
-        streaming_tumbling_agg(read_events_stream(spark, src), "1 hour", "2 hours"),
-        ckpt,
-        query_name=name,
-    )
-    return spark.table(name)
-
-
-def _land_once(spark: SparkSession, df: DataFrame, n_files: int = 1) -> str:
-    """Re-land a frame as parquet for a single-micro-batch availableNow
-    run (multi-batch behavior — watermark drops, cross-batch state — is
-    covered by tests/test_streaming.py; the driver-visible queries pin
-    the batch-equivalence contract instead).
-
-    Default is ONE file: several drains (the dedup family) keep the
-    first-arrived row per key, so within-batch arrival order must be
-    deterministic. Order-insensitive drains (joins — every match emits,
-    null-flush is watermark-driven) pass n_files>1 for a parallel landing
-    write; any n_files ≪ the source's availableNow file-batch limit still
-    lands in a single micro-batch."""
-    import tempfile
-
-    src = tempfile.mkdtemp(prefix="candyspark_stream_src_")
-    shaped = df.coalesce(1) if n_files == 1 else df.repartition(n_files)
-    shaped.write.mode("overwrite").parquet(src)
-    return src
+    with _landed(events) as (src, ckpt):
+        return drain(
+            streaming_tumbling_agg(read_events_stream(spark, src), "1 hour", "2 hours"),
+            "complete",
+            ckpt,
+        )
 
 
 def q_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1764,26 +1802,17 @@ def q_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed materialization every operational pipeline maintains.
     Batch-order independence is the point: whichever file lands first, the
     merged table converges to the same latest-per-key rows."""
-    import shutil
-    import tempfile
-    import uuid
-
     from candyspark.schemas import EVENTS
-    from candyspark.streaming.stream import merged_table_path, run_foreach_batch_merge
 
     events = load_table(spark, sf_dir, "events")
-    src = tempfile.mkdtemp(prefix="candyspark_stream_src_")
-    events.repartition(2).write.mode("overwrite").parquet(src)
-    out = tempfile.mkdtemp(prefix=f"candyspark_upsert_{uuid.uuid4().hex[:8]}_")
-    ckpt = tempfile.mkdtemp(prefix="candyspark_stream_ckpt_")
-    stream = (
-        spark.readStream.schema(EVENTS)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    run_foreach_batch_merge(stream, out, ["user_id"], "event_id", ckpt)
-    shutil.rmtree(src, ignore_errors=True)  # the landed copy + checkpoint are
-    shutil.rmtree(ckpt, ignore_errors=True)  # per-invocation scratch
+    out = tempfile.mkdtemp(prefix="candyspark_upsert_")
+    with _landed(events, n_files=2) as (src, ckpt):
+        stream = (
+            spark.readStream.schema(EVENTS)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+        )
+        run_foreach_batch_merge(stream, out, ["user_id"], "event_id", ckpt)
     table = merged_table_path(out)
     if table is None:  # empty source → no batch committed
         return spark.createDataFrame([], EVENTS).select(
@@ -1811,20 +1840,12 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the stream source (every row an exact duplicate), drained through
     dropDuplicates state — output must be exactly the original table, i.e.
     the batch DISTINCT oracle."""
-    import uuid
-
-    from candyspark.streaming.stream import read_events_stream, run_append, streaming_dedup
-
     events = load_table(spark, sf_dir, "events")
-    src = _land_once(spark, events.unionByName(events))
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    import tempfile
-
-    ckpt = tempfile.mkdtemp(prefix="candyspark_stream_ckpt_")
-    run_append(
-        streaming_dedup(read_events_stream(spark, src), ["event_id"]), ckpt, query_name=name
-    )
-    return spark.table(name).select("event_id", "user_id", "event_type", "ts")
+    with _landed(events.unionByName(events)) as (src, ckpt):
+        out = drain(
+            streaming_dedup(read_events_stream(spark, src), ["event_id"]), "append", ckpt
+        )
+    return out.select("event_id", "user_id", "event_type", "ts")
 
 
 STREAMING_DEDUP_SQL = """
@@ -1842,26 +1863,15 @@ def q_streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     projects only key-determined columns (ts is first-arrival-dependent, so
     it is excluded by contract — see streaming/stream.py); the oracle is the
     batch DISTINCT of those columns."""
-    import tempfile
-    import uuid
-
-    from candyspark.streaming.stream import (
-        read_events_stream,
-        run_append,
-        streaming_dedup_within_watermark,
-    )
-
     events = load_table(spark, sf_dir, "events")
     jittered = events.withColumn("ts", F.col("ts") + F.expr("INTERVAL 60 SECONDS"))
-    src = _land_once(spark, events.unionByName(jittered))
-    name = f"stream_dedup_wm_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="candyspark_stream_ckpt_")
-    run_append(
-        streaming_dedup_within_watermark(read_events_stream(spark, src), ["event_id"]),
-        ckpt,
-        query_name=name,
-    )
-    return spark.table(name).select("event_id", "user_id", "event_type")
+    with _landed(events.unionByName(jittered)) as (src, ckpt):
+        out = drain(
+            streaming_dedup_within_watermark(read_events_stream(spark, src), ["event_id"]),
+            "append",
+            ckpt,
+        )
+    return out.select("event_id", "user_id", "event_type")
 
 
 STREAMING_DEDUP_WM_SQL = """
@@ -1874,24 +1884,13 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream inner join (clicks within 1h before each error, per
     user), drained availableNow and checked against the identical batch
     join in DuckDB — the stream-stream/batch unification gate."""
-    import tempfile
-    import uuid
-
-    from candyspark.streaming.stream import (
-        read_events_stream,
-        run_append,
-        streaming_interval_join,
-    )
-
     events = load_table(spark, sf_dir, "events")
-    src = _land_once(spark, events)
-    stream = read_events_stream(spark, src)
-    clicks = stream.filter(F.col("event_type") == "click")
-    errors = stream.filter(F.col("event_type") == "error")
-    name = f"stream_join_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="candyspark_stream_ckpt_")
-    run_append(streaming_interval_join(clicks, errors), ckpt, query_name=name)
-    return spark.table(name).select("c_user", "click_ts", "click_id", "error_ts", "error_id")
+    with _landed(events) as (src, ckpt):
+        stream = read_events_stream(spark, src)
+        clicks = stream.filter(F.col("event_type") == "click")
+        errors = stream.filter(F.col("event_type") == "error")
+        out = drain(streaming_interval_join(clicks, errors), "append", ckpt)
+    return out.select("c_user", "click_ts", "click_id", "error_ts", "error_id")
 
 
 STREAMING_INTERVAL_JOIN_SQL = """
@@ -1913,53 +1912,19 @@ def q_streaming_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves none can arrive), drained availableNow and checked against the
     identical batch LEFT JOIN in DuckDB.
 
-    Null-padded rows only emit when the event-time watermark passes
-    click_ts + horizon — end-of-data alone flushes nothing — so the source
-    carries two far-future sentinel rows (user_id −1, max ts + 10 h) that
-    drive the final watermark past every real click; the no-data
-    micro-batch availableNow runs at the end then evicts and emits the
-    unmatched tail. Sentinels are filtered from the result.
+    Null-padded rows only emit once the watermark proves no match can
+    arrive, so the source carries the far-future rows of
+    ``_outer_join_sentinels``, filtered from the result.
     """
-    import tempfile
-    import uuid
-
-    from candyspark.streaming.stream import (
-        read_events_stream,
-        run_append,
-        streaming_left_join,
-    )
-
     events = load_table(spark, sf_dir, "events")
-    sentinels = events.sparkSession.createDataFrame(
-        [(-1, "click"), (-2, "error")], "event_id long, event_type string"
-    ).select(
-        "event_id",
-        F.lit(None).cast("timestamp").alias("ts"),
-        F.lit(-1).cast("long").alias("user_id"),
-        "event_type",
-        F.lit(0.0).alias("value"),
-        F.lit(None).cast("string").alias("props"),
-    )
-    max_ts = events.agg(F.max("ts").alias("m"))
-    sentinels = sentinels.crossJoin(F.broadcast(max_ts)).select(
-        "event_id",
-        (F.col("m") + F.expr("INTERVAL 10 HOURS")).alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    )
-    src = _land_once(spark, events.unionByName(sentinels), n_files=8)
-    stream = read_events_stream(spark, src)
-    clicks = stream.filter(F.col("event_type") == "click")
-    errors = stream.filter(F.col("event_type") == "error")
-    name = f"stream_ljoin_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="candyspark_stream_ckpt_")
-    run_append(streaming_left_join(clicks, errors), ckpt, query_name=name)
-    return (
-        spark.table(name)
-        .filter(F.col("c_user") >= 0)
-        .select("c_user", "click_ts", "click_id", "error_ts", "error_id")
+    landing = events.unionByName(_outer_join_sentinels(events))
+    with _landed(landing, n_files=8) as (src, ckpt):
+        stream = read_events_stream(spark, src)
+        clicks = stream.filter(F.col("event_type") == "click")
+        errors = stream.filter(F.col("event_type") == "error")
+        out = drain(streaming_left_join(clicks, errors), "append", ckpt)
+    return out.filter(F.col("c_user") >= 0).select(
+        "c_user", "click_ts", "click_id", "error_ts", "error_id"
     )
 
 
@@ -1983,58 +1948,20 @@ def q_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     null-padded click tail (clicks that never errored), AND the
     null-padded error tail (errors no click explains) — both tails are
     watermark-driven, so the source carries the same far-future
-    sentinels as the left join (one per side) to push the final
-    watermark past every real event before the closing no-data batch.
-    Sentinels (user_id −1) are filtered from both sides of the result.
+    sentinels as the left join, filtered from both sides of the result.
     Completes the stream-stream join family: inner (interval), left
     outer, full outer.
     """
-    import tempfile
-    import uuid
-
-    from candyspark.streaming.stream import (
-        read_events_stream,
-        run_append,
-        streaming_full_outer_join,
-    )
-
     events = load_table(spark, sf_dir, "events")
-    sentinels = events.sparkSession.createDataFrame(
-        [(-1, "click"), (-2, "error")], "event_id long, event_type string"
-    ).select(
-        "event_id",
-        F.lit(None).cast("timestamp").alias("ts"),
-        F.lit(-1).cast("long").alias("user_id"),
-        "event_type",
-        F.lit(0.0).alias("value"),
-        F.lit(None).cast("string").alias("props"),
-    )
-    max_ts = events.agg(F.max("ts").alias("m"))
-    sentinels = sentinels.crossJoin(F.broadcast(max_ts)).select(
-        "event_id",
-        (F.col("m") + F.expr("INTERVAL 10 HOURS")).alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    )
-    src = _land_once(spark, events.unionByName(sentinels), n_files=8)
-    stream = read_events_stream(spark, src)
-    clicks = stream.filter(F.col("event_type") == "click")
-    errors = stream.filter(F.col("event_type") == "error")
-    name = f"stream_fojoin_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="candyspark_stream_ckpt_")
-    run_append(streaming_full_outer_join(clicks, errors), ckpt, query_name=name)
-    return (
-        spark.table(name)
-        .filter(F.coalesce(F.col("c_user"), F.col("e_user")) >= 0)
-        .select(
-            F.coalesce(F.col("c_user"), F.col("e_user")).alias("user"),
-            "click_ts",
-            "click_id",
-            "error_ts",
-            "error_id",
-        )
+    landing = events.unionByName(_outer_join_sentinels(events))
+    with _landed(landing, n_files=8) as (src, ckpt):
+        stream = read_events_stream(spark, src)
+        clicks = stream.filter(F.col("event_type") == "click")
+        errors = stream.filter(F.col("event_type") == "error")
+        out = drain(streaming_full_outer_join(clicks, errors), "append", ckpt)
+    user = F.coalesce(F.col("c_user"), F.col("e_user"))
+    return out.filter(user >= 0).select(
+        user.alias("user"), "click_ts", "click_id", "error_ts", "error_id"
     )
 
 
@@ -2058,19 +1985,12 @@ def q_streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow run so the watermark cannot drop sessions (multi-batch
     session merging is the state store's concern; batch equivalence is the
     contract here)."""
-    import tempfile
-    import uuid
-
     from candyspark.streaming.events import session_agg
-    from candyspark.streaming.stream import read_events_stream, run_available_now
 
     events = load_table(spark, sf_dir, "events")
-    src = _land_once(spark, events)
-    stream = read_events_stream(spark, src).withWatermark("ts", "2 hours")
-    name = f"stream_session_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="candyspark_stream_ckpt_")
-    run_available_now(session_agg(stream, "30 minutes"), ckpt, query_name=name)
-    return spark.table(name)
+    with _landed(events) as (src, ckpt):
+        stream = read_events_stream(spark, src).withWatermark("ts", "2 hours")
+        return drain(session_agg(stream, "30 minutes"), "complete", ckpt)
 
 
 def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2079,15 +1999,6 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     the canonical 'enrich the firehose with a slowly-changing dim' shape.
     Stateless streaming (no watermark/state store), so stream output ≡ the
     batch join, which is the DuckDB oracle."""
-    import tempfile
-    import uuid
-
-    from candyspark.streaming.stream import (
-        read_events_stream,
-        run_append,
-        streaming_static_enrich,
-    )
-
     events = load_table(spark, sf_dir, "events")
     user_spend = events.groupBy("user_id").agg(
         F.round(F.sum(F.col("value").cast("decimal(12,2)")), 2)
@@ -2095,14 +2006,10 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("user_total"),
         F.count(F.lit(1)).alias("user_events"),
     )
-    src = _land_once(spark, events)
-    stream = read_events_stream(spark, src).filter(F.col("event_type") == "purchase")
-    name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="candyspark_stream_ckpt_")
-    run_append(streaming_static_enrich(stream, user_spend, ["user_id"]), ckpt, query_name=name)
-    return spark.table(name).select(
-        "event_id", "user_id", "ts", "value", "user_total", "user_events"
-    )
+    with _landed(events) as (src, ckpt):
+        stream = read_events_stream(spark, src).filter(F.col("event_type") == "purchase")
+        out = drain(streaming_static_enrich(stream, user_spend, ["user_id"]), "append", ckpt)
+    return out.select("event_id", "user_id", "ts", "value", "user_total", "user_events")
 
 
 STREAMING_ENRICH_SQL = """
@@ -2125,20 +2032,14 @@ def q_streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate: the DuckDB oracle. Registered only when protobuf is
     importable — the v2 state protocol serializes state over protobuf, and
     the runtime gate keeps the registry honest in stripped containers."""
-    import tempfile
-    import uuid
-
-    from candyspark.streaming.stream import read_events_stream, run_update
     from candyspark.streaming.tws import streaming_running_totals
 
     events = load_table(spark, sf_dir, "events")
-    src = _land_once(spark, events)
-    name = f"stream_tws_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="candyspark_stream_ckpt_")
-    run_update(
-        streaming_running_totals(read_events_stream(spark, src)), ckpt, query_name=name
-    )
-    return spark.table(name).select(
+    with _landed(events) as (src, ckpt):
+        out = drain(
+            streaming_running_totals(read_events_stream(spark, src)), "update", ckpt
+        )
+    return out.select(
         "user_id",
         "n_events",
         (F.col("total_cents").cast("double") / F.lit(100.0)).alias("total_value"),
@@ -2209,8 +2110,6 @@ def q_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference's multiLine arrays because JSONL splits by line at scale
     (a multiLine array file is one task regardless of size — SURVEY.md
     §2.1 S2)."""
-    import tempfile
-
     from candyspark.sources.readers import load_jsonl, load_orc
     from candyspark.sources.sinks import save_jsonl, save_orc
 
@@ -3850,21 +3749,10 @@ def q_streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch DuckDB oracle as any exact aggregate. Companion to the batch
     cms_heavy_hitters (lineitem part keys): this one sketches event
     user-id frequencies live."""
-    import uuid
-
-    from candyspark.streaming.stream import read_events_stream, run_available_now
-    from candyspark.streaming.stream import streaming_cms_cells
-
     events = load_table(spark, sf_dir, "events")
-    src = _land_once(spark, events)
-    name = f"stream_cms_{uuid.uuid4().hex[:8]}"
-    import tempfile
-
-    ckpt = tempfile.mkdtemp(prefix="candyspark_stream_ckpt_")
-    run_available_now(
-        streaming_cms_cells(read_events_stream(spark, src)), ckpt, query_name=name
-    )
-    return spark.table(name).orderBy("r", "b")
+    with _landed(events) as (src, ckpt):
+        out = drain(streaming_cms_cells(read_events_stream(spark, src)), "complete", ckpt)
+    return out.orderBy("r", "b")
 
 
 STREAMING_CMS_SQL = """
@@ -4090,30 +3978,22 @@ def q_streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit, with the SAME numbers the batch gate computes — which is
     exactly what the batch DuckDB oracle checks.
     """
-    import tempfile
-    import uuid
-
-    from candyspark.streaming.stream import read_events_stream, run_available_now
-
     events = load_table(spark, sf_dir, "events")
-    src = _land_once(spark, events)
-    name = f"stream_quality_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="candyspark_stream_ckpt_")
-    stream = read_events_stream(spark, src)
-    gate = stream.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum(F.when(F.col("value").isNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_null_value"),
-        F.sum(F.when(F.col("value") < 0, 1).otherwise(0))
-        .cast("long")
-        .alias("n_negative_value"),
-        F.sum(F.when(F.col("user_id").isNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_null_user"),
-    )
-    run_available_now(gate, ckpt, query_name=name)
-    return spark.table(name).orderBy("event_type")
+    with _landed(events) as (src, ckpt):
+        gate = read_events_stream(spark, src).groupBy("event_type").agg(
+            F.count(F.lit(1)).cast("long").alias("n_rows"),
+            F.sum(F.when(F.col("value").isNull(), 1).otherwise(0))
+            .cast("long")
+            .alias("n_null_value"),
+            F.sum(F.when(F.col("value") < 0, 1).otherwise(0))
+            .cast("long")
+            .alias("n_negative_value"),
+            F.sum(F.when(F.col("user_id").isNull(), 1).otherwise(0))
+            .cast("long")
+            .alias("n_null_user"),
+        )
+        out = drain(gate, "complete", ckpt)
+    return out.orderBy("event_type")
 
 
 STREAMING_QUALITY_GATE_SQL = """
@@ -5131,28 +5011,16 @@ def q_streaming_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k from the candidate set — the read-side logic is unchanged.
     Batch-equivalence is the contract the oracle checks (same counts,
     same (count desc, user_id) tiebreak)."""
-    import tempfile
-    import uuid
-
-    from candyspark.streaming.stream import read_events_stream, run_available_now
-
     events = load_table(spark, sf_dir, "events")
-    src = _land_once(spark, events)
-    name = f"stream_topk_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="candyspark_stream_ckpt_")
-    stream = read_events_stream(spark, src)
-    counts = stream.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast("long")
-        .alias("n_purchases"),
-    )
-    run_available_now(counts, ckpt, query_name=name)
-    return (
-        spark.table(name)
-        .orderBy(F.desc("n_events"), "user_id")
-        .limit(5)
-    )
+    with _landed(events) as (src, ckpt):
+        counts = read_events_stream(spark, src).groupBy("user_id").agg(
+            F.count(F.lit(1)).cast("long").alias("n_events"),
+            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
+            .cast("long")
+            .alias("n_purchases"),
+        )
+        out = drain(counts, "complete", ckpt)
+    return out.orderBy(F.desc("n_events"), "user_id").limit(5)
 
 
 STREAMING_TOPK_USERS_SQL = """
@@ -5179,26 +5047,18 @@ def q_streaming_daily_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream and batch agree bit-for-bit — the same reasoning that puts
     decimal sums everywhere else). State is calendar×type-bounded.
     """
-    import tempfile
-    import uuid
-
-    from candyspark.streaming.stream import read_events_stream, run_available_now
-
     events = load_table(spark, sf_dir, "events")
-    src = _land_once(spark, events)
-    name = f"stream_bars_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="candyspark_stream_ckpt_")
-    stream = read_events_stream(spark, src)
-    bars = stream.groupBy(
-        F.to_date("ts").alias("day"), "event_type"
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.min(F.col("value").cast("decimal(18,4)")).cast("double").alias("lo"),
-        F.max(F.col("value").cast("decimal(18,4)")).cast("double").alias("hi"),
-        F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("value_sum"),
-    )
-    run_available_now(bars, ckpt, query_name=name)
-    return spark.table(name).orderBy("day", "event_type")
+    with _landed(events) as (src, ckpt):
+        bars = read_events_stream(spark, src).groupBy(
+            F.to_date("ts").alias("day"), "event_type"
+        ).agg(
+            F.count(F.lit(1)).cast("long").alias("n_events"),
+            F.min(F.col("value").cast("decimal(18,4)")).cast("double").alias("lo"),
+            F.max(F.col("value").cast("decimal(18,4)")).cast("double").alias("hi"),
+            F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("value_sum"),
+        )
+        out = drain(bars, "complete", ckpt)
+    return out.orderBy("day", "event_type")
 
 
 STREAMING_DAILY_BARS_SQL = """
@@ -5422,14 +5282,6 @@ def q_streaming_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is bounded by live (6h-bucket × type) + (day × type)
     windows inside the watermark horizon; both stages emit-and-evict as
     the watermark advances — the unbounded-stream contract."""
-    import tempfile
-    import uuid
-
-    from candyspark.streaming.stream import (
-        read_events_stream,
-        run_available_now_append,
-    )
-
     events = load_table(spark, sf_dir, "events")
     sentinel_ts = events.agg(
         F.date_add(F.max(F.to_date("ts")), 30).cast("timestamp").alias("t")
@@ -5442,26 +5294,23 @@ def q_streaming_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.0).alias("value"),
         F.lit("{}").alias("props"),
     )
-    src = _land_once(spark, events.unionByName(sentinel))
-    name = f"stream_chained_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="candyspark_stream_ckpt_")
-    stream = read_events_stream(spark, src)
-    hourly = (
-        stream.withWatermark("ts", "1 second")
-        .groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-    )
-    daily = (
-        hourly.groupBy(
-            F.window(F.window_time("w"), "1 day").alias("d"), "event_type"
+    with _landed(events.unionByName(sentinel)) as (src, ckpt):
+        hourly = (
+            read_events_stream(spark, src)
+            .withWatermark("ts", "1 second")
+            .groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
         )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_buckets"),
-            F.max("n_events").alias("max_bucket_events"),
+        daily = (
+            hourly.groupBy(
+                F.window(F.window_time("w"), "1 day").alias("d"), "event_type"
+            )
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_buckets"),
+                F.max("n_events").alias("max_bucket_events"),
+            )
         )
-    )
-    run_available_now_append(daily, ckpt, query_name=name)
-    out = spark.table(name)
+        out = drain(daily, "append", ckpt)
     real_max = events.agg(F.max(F.to_date("ts")).alias("mx"))
     return (
         out.select(

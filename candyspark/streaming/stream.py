@@ -16,6 +16,9 @@ always-on cluster).
 
 from __future__ import annotations
 
+import uuid
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,22 +52,6 @@ def streaming_tumbling_agg(
             "total_value",
         )
     )
-
-
-def run_available_now(
-    stream_df: DataFrame, checkpoint_dir: str, query_name: str = "events_agg"
-) -> None:
-    """Drain everything currently in the source into an in-memory sink named
-    ``query_name`` (complete mode: final window totals), then stop."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def streaming_dedup(events: DataFrame, keys: list[str], watermark: str = "2 hours") -> DataFrame:
@@ -200,7 +187,7 @@ def streaming_static_enrich(stream: DataFrame, static_dim: DataFrame, keys: list
     return stream.join(F.broadcast(static_dim), keys, "inner")
 
 
-#: State partitions for the drain harnesses. A stateful streaming query
+#: State partitions for every ``drain()``. A stateful streaming query
 #: instantiates one state store per shuffle partition per stateful
 #: operator per micro-batch; at fixture scale (<=1M rows) 32 stores are
 #: pure fixed cost — measured on streaming_left_join at sf0.1: 16.6 s at
@@ -210,7 +197,7 @@ def streaming_static_enrich(stream: DataFrame, static_dim: DataFrame, keys: list
 #: across restarts without offline state rescaling).
 STATE_PARTITIONS = 4
 
-#: State-store backend for the drain harnesses ("hdfs" | "rocksdb").
+#: State-store backend for ``drain()`` ("hdfs" | "rocksdb").
 #:
 #: 100-TB state math, per partition: the default HDFSBackedStateStoreProvider
 #: keeps EVERY live state row as JVM objects on the executor heap — a
@@ -233,85 +220,71 @@ _ROCKSDB_PROVIDER = (
 )
 
 
-class _scoped_stream_confs:
+@contextmanager
+def _scoped_stream_confs(spark: SparkSession, state_store: str):
     """Set stream-birth session confs (state partitions, state-store
     provider) around stream START — a stateful query freezes both into its
     checkpoint at birth — restoring session values after so batch queries
     planned later keep the engine-wide settings."""
-
-    def __init__(self, spark, n: int | None, state_store: str):
-        self.spark, self.n = spark, n
-        confs: dict[str, str] = {}
-        if n is not None:
-            confs["spark.sql.shuffle.partitions"] = str(n)
-        if state_store == "rocksdb":
-            confs["spark.sql.streaming.stateStore.providerClass"] = (
-                _ROCKSDB_PROVIDER
-            )
-            # per-batch delta upload instead of full-store re-snapshot
-            confs[
-                "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-            ] = "true"
-        elif state_store != "hdfs":
-            raise ValueError(f"unknown state_store {state_store!r}")
-        self.confs = confs
-
-    def __enter__(self):
-        self.prev = {
-            k: self.spark.conf.get(k, None) for k in self.confs
-        }
-        for k, v in self.confs.items():
-            self.spark.conf.set(k, v)
-
-    def __exit__(self, *exc):
-        for k, old in self.prev.items():
+    confs = {"spark.sql.shuffle.partitions": str(STATE_PARTITIONS)}
+    if state_store == "rocksdb":
+        confs["spark.sql.streaming.stateStore.providerClass"] = _ROCKSDB_PROVIDER
+        # per-batch delta upload instead of full-store re-snapshot
+        confs[
+            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+        ] = "true"
+    elif state_store != "hdfs":
+        raise ValueError(f"unknown state_store {state_store!r}")
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, old in prev.items():
             if old is None:
-                self.spark.conf.unset(k)
+                spark.conf.unset(k)
             else:
-                self.spark.conf.set(k, old)
-        return False
+                spark.conf.set(k, old)
 
 
-def run_update(
+def drain(
     stream_df: DataFrame,
+    mode: str,
     checkpoint_dir: str,
-    query_name: str,
-    state_partitions: int | None = STATE_PARTITIONS,
     state_store: str = STATE_STORE,
-) -> None:
-    """Drain the source through an UPDATE-mode memory sink (the mode
-    snapshot-emitting stateful operators like transformWithState use)."""
-    with _scoped_stream_confs(stream_df.sparkSession, state_partitions, state_store):
+) -> DataFrame:
+    """Drain everything currently in the source through a memory sink
+    (``availableNow``: process what is there, then stop) and return the
+    sink's rows.
+
+    ``mode`` is the sink's output mode: ``complete`` for final aggregate
+    totals; ``append`` for row-level operators (dedup, stream-stream joins)
+    and for chained stateful stages — append emits a window only once the
+    watermark passes its end, so callers that want every window flushed
+    land a far-future sentinel row and filter it from the result;
+    ``update`` for snapshot-emitting operators like transformWithState.
+
+    The sink's temp view is dropped before returning: the memory sink holds
+    its rows on the driver, so the returned frame outlives the view, the
+    source and the checkpoint directory, and the session catalog does not
+    grow with every drain."""
+    spark = stream_df.sparkSession
+    name = f"drain_{uuid.uuid4().hex[:12]}"
+    with _scoped_stream_confs(spark, state_store):
         q = (
             stream_df.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("update")
+            .queryName(name)
+            .outputMode(mode)
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
             .start()
         )
-    q.awaitTermination()
-
-
-def run_append(
-    stream_df: DataFrame,
-    checkpoint_dir: str,
-    query_name: str,
-    state_partitions: int | None = STATE_PARTITIONS,
-    state_store: str = STATE_STORE,
-) -> None:
-    """Drain the source through an APPEND-mode memory sink (the mode
-    row-level operators like dedup and stream-stream joins require)."""
-    with _scoped_stream_confs(stream_df.sparkSession, state_partitions, state_store):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
+    try:
+        q.awaitTermination()
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def merged_table_path(out_dir: str) -> str | None:
@@ -431,22 +404,3 @@ def streaming_cms_cells(
 
     return cms_cells(events.select("user_id"), "user_id", d_rows, width)
 
-
-def run_available_now_append(
-    stream_df: DataFrame, checkpoint_dir: str, query_name: str = "events_agg"
-) -> None:
-    """Append-mode drain: required for MULTIPLE stateful operators in one
-    query (chained windowed aggregations) — complete mode cannot host a
-    second stateful stage. Append emits a window only once the watermark
-    passes its end, so callers that want every real window flushed land a
-    far-future sentinel row and filter its windows from the result (the
-    final no-data batch then finds watermark > every real window end)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

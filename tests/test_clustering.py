@@ -84,3 +84,13 @@ def test_kmeans_separates_obvious_blobs(spark, toy):
     assert all(len(s) == 1 for s in by_blob.values())
     assert len({s.pop() for s in by_blob.values()}) == 3
     assert centroids.count() == 3
+
+
+def test_assign_clusters_empty_centroids_assigns_nothing(spark, toy):
+    """No centroids, no assignments: zero rows, not every vector labeled
+    with the argmin fold's seed id."""
+    from candyspark.operators.clustering import assign_clusters
+
+    df, _, _ = toy
+    empty = spark.createDataFrame([], "cluster_id int, c_vec array<float>")
+    assert assign_clusters(df, empty, "vec_id", "embedding").count() == 0

@@ -20,8 +20,8 @@ from candyspark.sources.sinks import save_parquet
 from candyspark.streaming.events import tumbling_agg
 from candyspark.streaming.stateful import streaming_greedy_allocation
 from candyspark.streaming.stream import (
+    drain,
     read_events_stream,
-    run_available_now,
     streaming_tumbling_agg,
 )
 
@@ -35,8 +35,7 @@ def test_streaming_equals_batch(spark, tmp_path):
 
     stream = streaming_tumbling_agg(read_events_stream(spark, src), "1 hour", "2 hours")
     assert stream.isStreaming
-    run_available_now(stream, str(tmp_path / "ckpt"), query_name="t_agg")
-    got = spark.sql("SELECT * FROM t_agg").toPandas()
+    got = drain(stream, "complete", str(tmp_path / "ckpt")).toPandas()
 
     want = tumbling_agg(events, "1 hour").toPandas()
     key = ["window_start", "event_type"]
@@ -88,17 +87,8 @@ def test_stateful_allocation_carries_stock_across_batches(spark, tmp_path):
         spark.readStream.schema(REQ_SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
     )
     assert stream.isStreaming
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("alloc_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     got = (
-        spark.sql("SELECT * FROM alloc_stream")
+        drain(stream, "append", str(tmp_path / "ckpt"))
         .toPandas()
         .sort_values(["product_id", "order_id"])
         .reset_index(drop=True)
@@ -134,7 +124,7 @@ def test_streaming_dedup_state_spans_batches(spark, tmp_path):
     import glob as _glob
     import os as _os
 
-    from candyspark.streaming.stream import read_events_stream, run_append, streaming_dedup
+    from candyspark.streaming.stream import streaming_dedup
 
     ts = dt.datetime(2024, 3, 1, 12, 0, 0)
     batch1 = [(1, ts, 10, "click", 1.0, "{}"), (2, ts, 11, "view", 2.0, "{}")]
@@ -154,8 +144,8 @@ def test_streaming_dedup_state_spans_batches(spark, tmp_path):
         ["event_id"],
     )
     assert stream.isStreaming
-    run_append(stream, str(tmp_path / "ckpt"), query_name="dedup_stream")
-    got = sorted(r["event_id"] for r in spark.sql("SELECT * FROM dedup_stream").collect())
+    out = drain(stream, "append", str(tmp_path / "ckpt"))
+    got = sorted(r["event_id"] for r in out.collect())
     assert got == [1, 2, 3]  # the batch-2 re-send of event 1 was dropped by state
 
 
@@ -168,7 +158,6 @@ def test_tws_running_totals_carry_across_batches(spark, tmp_path):
     import glob as _glob
     import os as _os
 
-    from candyspark.streaming.stream import run_update
     from candyspark.streaming.tws import streaming_running_totals
 
     ts = dt.datetime(2024, 3, 1, 12, 0, 0)
@@ -188,8 +177,7 @@ def test_tws_running_totals_carry_across_batches(spark, tmp_path):
         spark.readStream.schema(EVENTS).option("maxFilesPerTrigger", 1).parquet(str(src))
     )
     assert stream.isStreaming
-    run_update(stream, str(tmp_path / "ckpt"), query_name="tws_stream")
-    rows = spark.sql("SELECT * FROM tws_stream").collect()
+    rows = drain(stream, "update", str(tmp_path / "ckpt")).collect()
     # update mode appends one snapshot per (user, batch) to the memory sink;
     # the LAST snapshot per user is the running total
     last = {}
@@ -278,19 +266,9 @@ def test_candy_transactions_stream_matches_batch(spark, tmp_path):
             F.sum(F.col("item.qty").cast("bigint")).alias("total_qty"),
         )
 
-    q = (
-        daily(stream)
-        .writeStream.format("memory")
-        .queryName("candy_stream_daily")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     got = {
         r["w"]["start"].date().isoformat(): (r["n_items"], r["total_qty"])
-        for r in spark.sql("SELECT * FROM candy_stream_daily").collect()
+        for r in drain(daily(stream), "complete", str(tmp_path / "ckpt")).collect()
     }
 
     batch = (
@@ -440,7 +418,7 @@ def test_streaming_cms_merges_across_batches(spark, tmp_path):
     import glob as _glob
     import os as _os
 
-    from candyspark.streaming.stream import run_available_now, streaming_cms_cells
+    from candyspark.streaming.stream import streaming_cms_cells
 
     ts = dt.datetime(2024, 3, 1, 12, 0, 0)
     batch1 = [(i, ts, i % 5, "click", 1.0, "{}") for i in range(20)]
@@ -459,10 +437,9 @@ def test_streaming_cms_merges_across_batches(spark, tmp_path):
         spark.readStream.schema(EVENTS).option("maxFilesPerTrigger", 1).parquet(str(src))
     )
     assert stream.isStreaming
-    run_available_now(stream, str(tmp_path / "ckpt"), query_name="cms_stream")
     got = {
         (r["r"], r["b"]): r["cnt"]
-        for r in spark.sql("SELECT * FROM cms_stream").collect()
+        for r in drain(stream, "complete", str(tmp_path / "ckpt")).collect()
     }
     # batch twin: the same expressions run on a batch frame over the union
     both = spark.createDataFrame(batch1 + batch2, EVENTS)
@@ -480,8 +457,6 @@ def test_streaming_topk_counters_accumulate_across_batches(spark, tmp_path):
     import os as _os
 
     from pyspark.sql import functions as F
-
-    from candyspark.streaming.stream import read_events_stream, run_available_now
 
     ts = dt.datetime(2024, 3, 1, 12, 0, 0)
     batch1 = [
@@ -512,9 +487,8 @@ def test_streaming_topk_counters_accumulate_across_batches(spark, tmp_path):
         .cast("long")
         .alias("n_purchases"),
     )
-    run_available_now(counts, str(tmp_path / "ckpt"), query_name="topk_carry")
     got = {r.user_id: (r.n_events, r.n_purchases)
-           for r in spark.sql("SELECT * FROM topk_carry").collect()}
+           for r in drain(counts, "complete", str(tmp_path / "ckpt")).collect()}
     assert got == {10: (3, 2), 11: (1, 0), 12: (1, 0)}
 
 
@@ -524,8 +498,6 @@ def test_rocksdb_state_store(spark, tmp_path):
     checkpointing and produces the identical result, and the session confs
     are restored afterwards (batch queries planned later keep the default
     provider)."""
-    from candyspark.streaming.stream import run_update
-
     events = load_table(spark, "/root/testdata/sf0.001", "events")
     src = str(tmp_path / "events_src")
     save_parquet(events, src)
@@ -533,11 +505,9 @@ def test_rocksdb_state_store(spark, tmp_path):
     stream = streaming_tumbling_agg(
         read_events_stream(spark, src), "1 hour", "2 hours"
     )
-    run_update(
-        stream, str(tmp_path / "ckpt_rocks"), query_name="t_agg_rocks",
-        state_store="rocksdb",
-    )
-    got = spark.sql("SELECT * FROM t_agg_rocks").toPandas()
+    got = drain(
+        stream, "update", str(tmp_path / "ckpt_rocks"), state_store="rocksdb"
+    ).toPandas()
     want = tumbling_agg(events, "1 hour").toPandas()
     key = ["window_start", "event_type"]
     got = got.sort_values(key).reset_index(drop=True)
