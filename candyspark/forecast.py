@@ -164,6 +164,26 @@ def forecast_series(
     )
 
 
+def _daily_series(daily_summary: DataFrame) -> pd.DataFrame:
+    """The daily series on the driver, in date order. The sort is a pandas
+    one: a Spark orderBy would add a range-partitioner sampling job that
+    re-executes the upstream plan, for a handful of rows."""
+    return (
+        daily_summary.select("date", "total_sales", "total_profit")
+        .toPandas()
+        .sort_values("date", ignore_index=True)
+    )
+
+
+_FORECAST_SCHEMA = T.StructType(
+    [
+        T.StructField("date", T.DateType()),
+        T.StructField("forecasted_sales", T.DoubleType()),
+        T.StructField("forecasted_profit", T.DoubleType()),
+    ]
+)
+
+
 def forecast_sales_and_profits(
     daily_summary: DataFrame, horizon: int = 1, method: str = "auto"
 ) -> DataFrame:
@@ -171,9 +191,11 @@ def forecast_sales_and_profits(
     (/root/reference/src/data_processor.py:616-642,702-767): forecast the
     next ``horizon`` days of total_sales / total_profit from the daily
     summary. Collects the tiny series driver-side (one row per day), then
-    re-creates a DataFrame (S9)."""
-    pdf = daily_summary.select("date", "total_sales", "total_profit").orderBy("date").toPandas()
+    re-creates a DataFrame (S9). An empty series forecasts no rows."""
+    pdf = _daily_series(daily_summary)
     spark = daily_summary.sparkSession
+    if pdf.empty:
+        return spark.createDataFrame([], _FORECAST_SCHEMA)
     last = pd.to_datetime(pdf["date"].iloc[-1])
     dates = [
         (last + pd.Timedelta(days=i + 1)).date() for i in range(horizon)
@@ -184,14 +206,7 @@ def forecast_sales_and_profits(
         (d, round(float(s), 2), round(float(p), 2))
         for d, s, p in zip(dates, sales, profit)
     ]
-    schema = T.StructType(
-        [
-            T.StructField("date", T.DateType()),
-            T.StructField("forecasted_sales", T.DoubleType()),
-            T.StructField("forecasted_profit", T.DoubleType()),
-        ]
-    )
-    return spark.createDataFrame(rows, schema)
+    return spark.createDataFrame(rows, _FORECAST_SCHEMA)
 
 
 def forecast_many(
@@ -280,11 +295,7 @@ def forecast_metrics(
     fitted model's training-period predictions, one dict per forecast series
     (total_sales, total_profit). The reference prints and returns
     {"mae", "mse", "model_type"}; this returns the same keys per series."""
-    pdf = (
-        daily_summary.select("date", "total_sales", "total_profit")
-        .orderBy("date")
-        .toPandas()
-    )
+    pdf = _daily_series(daily_summary)
     model_type = (
         "prophet" if (method == "prophet" or (method == "auto" and HAVE_PROPHET))
         else (method if method in ("seasonal", "holt") else "linear")

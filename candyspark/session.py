@@ -28,8 +28,8 @@ _DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Arrow for all pandas-interop: applyInPandas (allocator, forecaster),
-    # mapInPandas (multimodal), pandas UDFs (similarity).
+    # Arrow for all pandas-interop: mapInPandas (allocator, multimodal),
+    # applyInPandas (forecast_many), pandas UDFs (similarity).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Deterministic date semantics across engines (oracle parity).
     "spark.sql.session.timeZone": "UTC",

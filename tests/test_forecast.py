@@ -28,8 +28,9 @@ def test_linear_forecast_degenerate():
 
 
 def test_forecast_sales_and_profits(spark):
+    # reverse date order: the forecaster must sort the series itself
     rows = [
-        (dt.date(2024, 2, d), 100.0 + 10 * d, 50.0 + 5 * d) for d in range(1, 11)
+        (dt.date(2024, 2, d), 100.0 + 10 * d, 50.0 + 5 * d) for d in range(10, 0, -1)
     ]
     daily = spark.createDataFrame(rows, "date date, total_sales double, total_profit double")
     out = forecast_sales_and_profits(daily, horizon=1, method="linear").toPandas()
@@ -37,6 +38,16 @@ def test_forecast_sales_and_profits(spark):
     assert out.date.iloc[0] == dt.date(2024, 2, 11)
     assert abs(out.forecasted_sales.iloc[0] - 210.0) < 1e-6
     assert abs(out.forecasted_profit.iloc[0] - 105.0) < 1e-6
+
+
+def test_forecast_sales_and_profits_empty_series(spark):
+    # e.g. transaction files that hold only []: no days, so no forecast rows
+    daily = spark.createDataFrame([], "date date, total_sales double, total_profit double")
+    out = forecast_sales_and_profits(daily, horizon=2, method="linear")
+    assert out.schema.simpleString() == (
+        "struct<date:date,forecasted_sales:double,forecasted_profit:double>"
+    )
+    assert out.count() == 0
 
 
 def test_forecast_many(spark):
