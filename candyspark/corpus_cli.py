@@ -122,11 +122,7 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> int:
     dedup_w = Window.partitionBy("norm").orderBy("doc_id")
     # content-hash split (plans/corpus.dataset_split discipline): re-shard-proof,
     # no assignment table — the bucket is a pure function of the content id.
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 100
-    )
+    bucket = X.char_hash32(F.col("doc_id").cast("string")) % 100
     survivors = (
         scored.withColumn("rn", F.row_number().over(dedup_w))
         .filter(F.col("rn") == 1)

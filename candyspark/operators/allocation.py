@@ -10,14 +10,16 @@ fill. No partial fulfillment.
 The reference runs this as a driver-collected dict + RDD
 ``groupByKey().mapValues(list).flatMap`` inside a per-day Python loop
 (anti-patterns §4.2: full-row pickling, 10× rescans, driver state). Here it
-is one ``groupBy(group).applyInPandas`` pass over the whole period:
+is one ``repartition(group)`` + ``sortWithinPartitions(group, order)`` +
+``mapInPandas`` pass over the whole period:
 
 - state (stock) travels IN the data via a broadcast dim join, not a driver
   dict (reference :401-406);
 - Arrow batches instead of Python-object pickling;
 - the day dimension is just the sort key — one shuffle total, and the plan
-  scales per-group across 1000 executors (each part's history is one group;
-  the sort inside the kernel is per-group, not global).
+  scales per-group across 1000 executors (each part's history lands in one
+  partition, already sorted, and the kernel walks its groups in order; the
+  sort is per-partition, not global).
 
 Determinism: the reference's allocation order is underdetermined at
 stock-exhaustion (its own outputs diverge from its goldens on 290 line items

@@ -67,6 +67,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from candyspark.session import job_description
+
 
 def _ranks_for(n: int, p: float, discrete: bool) -> tuple[int, int, float]:
     """(k_lo, k_hi, h) for one group of exact size n at prob p — the same
@@ -126,9 +128,10 @@ def _extract(
     ``with_b`` must be the bucketed fact: columns (grp, v, b). The counts
     and hit values collected here are the very relations v1 broadcast —
     driver-resident either way; ≤ groups × occupied-buckets rows."""
-    sc = spark.sparkContext
-    sc.setJobDescription(f"exact_quantiles{label}: bucket counts")
-    counts = with_b.groupBy("grp", "b").agg(F.count(F.lit(1)).alias("cnt")).collect()
+    with job_description(spark, f"exact_quantiles{label}: bucket counts"):
+        counts = (
+            with_b.groupBy("grp", "b").agg(F.count(F.lit(1)).alias("cnt")).collect()
+        )
     by_grp: dict = {}
     for r in counts:
         by_grp.setdefault(r["grp"], []).append((r["b"], r["cnt"]))
@@ -190,20 +193,19 @@ def _extract(
         F.transform(F.col("lrs"), lambda lr: F.get(F.col("vs"), lr)),
         lambda k, v: F.struct(k.alias("k"), v.alias("v")),
     )
-    sc.setJobDescription(f"exact_quantiles{label}: needed-bucket extraction")
-    hits = (
-        with_b.join(F.broadcast(need), ["grp", "b"])
-        .groupBy("grp", "b")
-        .agg(
-            F.array_sort(F.collect_list("v")).alias("vs"),
-            F.first("lrs").alias("lrs"),
-            F.first("ks").alias("ks"),
+    with job_description(spark, f"exact_quantiles{label}: needed-bucket extraction"):
+        hits = (
+            with_b.join(F.broadcast(need), ["grp", "b"])
+            .groupBy("grp", "b")
+            .agg(
+                F.array_sort(F.collect_list("v")).alias("vs"),
+                F.first("lrs").alias("lrs"),
+                F.first("ks").alias("ks"),
+            )
+            .select("grp", F.explode(picked).alias("kv"))
+            .select("grp", "kv.k", "kv.v")
+            .collect()
         )
-        .select("grp", F.explode(picked).alias("kv"))
-        .select("grp", "kv.k", "kv.v")
-        .collect()
-    )
-    sc.setJobDescription(None)
     kv = {(r["grp"], r["k"]): r["v"] for r in hits}
     return [r for r in bounds_rows if r["grp"] is not None and r["grp"] in by_grp], kv
 
@@ -236,11 +238,10 @@ def exact_quantiles_rows(
     vals = df.select(F.col(value_col).cast("double").alias("v")).filter(
         F.col("v").isNotNull() & ~F.isnan("v")
     )
-    spark.sparkContext.setJobDescription("exact_quantiles: bounds")
-    row = vals.agg(
-        F.min("v").alias("lo"), F.max("v").alias("hi"), F.count("v").alias("n")
-    ).collect()[0]
-    spark.sparkContext.setJobDescription(None)
+    with job_description(spark, "exact_quantiles: bounds"):
+        row = vals.agg(
+            F.min("v").alias("lo"), F.max("v").alias("hi"), F.count("v").alias("n")
+        ).collect()[0]
     if not row["n"]:
         return []
     # single group: lo/hi inline as literals — the bucket key needs no join
@@ -318,26 +319,22 @@ def exact_quantiles_grouped_rows(
         # scan entirely. lo/hi may over-cover ([lo, hi] ⊇ the true value
         # range keeps the bucket key monotone, just coarser); n MUST equal
         # the exact non-null count — ranks derive from it.
-        spark.sparkContext.setJobDescription("exact_quantiles_grouped: caller bounds")
-        bounds_rows = (
-            bounds_df.select(
+        with job_description(spark, "exact_quantiles_grouped: caller bounds"):
+            bounds_rows = bounds_df.select(
                 F.col(group_col).alias("grp"),
                 F.col("lo").cast("double"),
                 F.col("hi").cast("double"),
                 F.col("n").cast("long"),
-            )
-        ).collect()
-        spark.sparkContext.setJobDescription(None)
+            ).collect()
     else:
-        spark.sparkContext.setJobDescription("exact_quantiles_grouped: bounds")
-        bounds_rows = (
-            vals.groupBy("grp")
-            .agg(
-                F.min("v").alias("lo"), F.max("v").alias("hi"), F.count("v").alias("n")
+        with job_description(spark, "exact_quantiles_grouped: bounds"):
+            bounds_rows = (
+                vals.groupBy("grp")
+                .agg(
+                    F.min("v").alias("lo"), F.max("v").alias("hi"), F.count("v").alias("n")
+                )
+                .collect()
             )
-            .collect()
-        )
-        spark.sparkContext.setJobDescription(None)
     grp_field = T.StructField("grp", df.schema[group_col].dataType, True)
     bounds_rows = [r for r in bounds_rows if r["grp"] is not None and r["n"]]
     if not bounds_rows:

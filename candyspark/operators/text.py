@@ -74,11 +74,18 @@ def stopword_count(text: Column | str, lang: str = "en") -> Column:
     return _count_in(tokens(text), STOPWORDS[lang])
 
 
+def md5_prefix_int(s: Column, hex_digits: int) -> Column:
+    """The first ``hex_digits`` hex digits of md5(s) as a non-negative
+    bigint (≤ 15 digits, so it fits a signed 64-bit) — identical in DuckDB
+    as ``CAST(concat('0x', substr(md5(s), 1, hex_digits)) AS BIGINT)``.
+    md5 is overkill cryptographically but is the one hash both engines
+    share bit-for-bit. The engine's single definition of this hash."""
+    return F.conv(F.substring(F.md5(s), 1, hex_digits), 16, 10).cast("bigint")
+
+
 def char_hash32(s: Column) -> Column:
-    """Deterministic 32-bit hash from md5 hex — identical in DuckDB as
-    ``CAST(concat('0x', substr(md5(s),1,8)) AS BIGINT)``. md5 is overkill
-    cryptographically but is the one hash both engines share bit-for-bit."""
-    return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint")
+    """Deterministic 32-bit hash: the first 8 hex digits of md5(s)."""
+    return md5_prefix_int(s, 8)
 
 
 def normalized_text(text: Column | str) -> Column:

@@ -22,50 +22,37 @@ class QuerySpec:
     sql: str | None  # None => not SQL-expressible; rows-only check
 
 
-#: Names promoted to the FRONT of the merged registry. The driver's
-#: correctness gate evaluates the first 50 entries, so each round rotates
-#: its new and materially-changed queries in — CORRECTNESS_r{N} then
-#: certifies code no prior round certified (round-2 verdict item 6).
-ROUND5_WINDOW = [
-    # newly hash-checked: the reference's core sequential operator, via a
-    # recursive-CTE lockstep-walk oracle (round-4 verdict item 1)
+#: Names promoted to the front of the merged registry, in this order. The
+#: driver's correctness gate evaluates only the first 50 registry entries,
+#: so this one list is that window: a round rotates its new and materially
+#: changed queries in by editing it (and drops as many), and the gate then
+#: certifies code no earlier round certified. Every other name follows in
+#: module order.
+FRONT = [
     "greedy_allocation",
-    # new round-5 operators: state-space filters (recursive-CTE oracles)
     "ses_forecast",
     "holt_forecast",
     "kalman_local_level",
     "hmm_regime_filter",
-    # new round-5 statistics
     "cochran_armitage",
     "jonckheere_terpstra",
     "mantel_haenszel",
     "kendall_w",
     "ewma_volatility",
-    # new round-5 corpus/dedup/ops
     "ngram_novelty",
     "lsh_band_fpr",
     "idempotency_audit",
     "neyman_allocation",
     "als_rank1",
-    # materially rewritten this round (collect_set edge builder)
     "triangle_count",
     "pagerank_parts",
-    # oracle-expression fix this round (ADVICE item: int64-wrap guard)
     "anderson_darling",
-    # rmtree guard touched this round
     "bucketed_join_no_shuffle",
-]
-
-ROUND4_WINDOW = [
-    # approx-percentile swap-in twins (round-3 verdict item 5)
     "robust_stats_approx",
     "quantile_normalize_approx",
     "distribution_distance_approx",
-    # new round-4 operators
-    "bucketed_join_no_shuffle",
     "streaming_full_outer_join",
     "multimodal_phash_dedup",
-    "anderson_darling",
     "cramer_von_mises",
     "vif_collinearity",
     "breusch_pagan",
@@ -77,21 +64,13 @@ ROUND4_WINDOW = [
     "approx_aggregates",
     "randomization_inference",
     "cross_source_near_dup",
-    # oracle-expression-tree fixes this round (ADVICE items 1-2)
     "cox_ph",
     "distance_correlation",
     "fleiss_kappa",
-]
-
-ROUND3_WINDOW = [
-    # new operators (session 4)
-    "cox_ph",
     "friedman_test",
     "mood_median_test",
-    "fleiss_kappa",
     "tost_equivalence",
     "dunn_posthoc",
-    "distance_correlation",
     "bayesian_ab_beta",
     "average_precision_eval",
     "dickey_fuller",
@@ -100,139 +79,12 @@ ROUND3_WINDOW = [
     "abc_xyz",
     "newsvendor_stock",
     "katz_centrality",
-    "t_closeness",
-    "kish_ess",
-    "theil_inequality",
-    "mincer_zarnowitz",
-    "diebold_mariano",
-    "hosmer_lemeshow",
-    "uplift_deciles",
-    "ivf_probe_curve",
-    "conformal_coverage",
-    "pinball_loss",
-    "mi_feature_ranking",
-    "pq_recall",
-    "centered_anisotropy",
-    "code_detector",
-    "did_placebo",
-    # new operators (session 3)
-    "stl_strength",
-    "rich_club",
-    "poisson_rate_ratio",
-    "weibull_fit",
-    "markov_entropy_rate",
-    "woe_information_value",
-    "poisson_rate_test",
-    "interleave_eval",
-    "wasserstein_distance",
-    "energy_distance",
-    "cochran_q",
-    "page_hinkley",
-    "pot_gpd_fit",
-    "rbo_rank_agreement",
-    "synthetic_control",
-    "rake_keywords",
-    "cumulative_incidence",
-    "event_study",
-    "ljung_box",
-    "permutation_entropy",
-    "oaxaca_decomposition",
-    "ams_f2_sketch",
-    "linear_cka",
-    "frechet_embedding_distance",
-    "mrr_eval",
-    "err_eval",
-    "ks_test",
-    "bartlett_test",
-    "runs_test",
-    "effect_sizes",
-    # new operators this round
-    "yules_k",
-    "kruskal_wallis",
-    "iv_2sls",
-    "knn_classifier",
-    "yule_walker_ar2",
-    "weekly_spectral_power",
-    "decile_lift",
-    "entropy_profile",
-    "jackknife_variance",
-    "query_expansion_prf",
-    "quality_ensemble",
-    "ann_recall",
-    "importance_resampling",
-    # new operators (session 2)
-    "cramers_v",
-    "mann_kendall",
-    "nelson_aalen",
-    "mcc_langid",
-    "good_turing_mass",
-    "tokenizer_fertility",
-    "textrank_keywords",
-    "bfs_hop_histogram",
-    "partial_correlation",
-    "rr_frequency_estimate",
-    "distinct_ngram_diversity",
-    "matryoshka_recall",
-    "g_test",
-    "theil_u",
-    "markov2_transitions",
-    "embedding_anisotropy",
-    "length_quality_profile",
-    "jarque_bera",
-    "evalue_sensitivity",
-    "rmst",
-    "chow_break_test",
-    "raking_weights",
-    "qld_retrieval",
-    "streaming_topk_users",
-    "streaming_daily_bars",
-    "negative_binomial_fit",
-    "mv_join_delta_refresh",
-    "hurst_exponent",
-    "mcnemar_test",
-    "wilcoxon_signed_rank",
-    "cronbach_alpha",
-    "matching_att",
-    "granger_lead_lag",
-    "hill_tail_index",
-    "binary_quantization_recall",
-    "personalized_pagerank",
-    "streaming_chained_windows",
-    "fisher_exact_test",
-    "brier_decomposition",
-    "randomization_inference",
-    "cross_source_near_dup",
-    # newly hash-checked (rows-only through round 2)
-    "markov_attribution",
-    "isotonic_calibration",
-    "bpe_train_merges",
-    "hits_customers_parts",
-    # re-parameterized vacuous gates (round-2 verdict item 2)
-    "important_part_value",
-    "dominant_suppliers",
-    # √n quantizer rewrite (round-2 verdict item 3)
-    "semantic_dedup",
-    # position 51+: certified by the suite's own parity sweep (and, for the
-    # re-parameterized gates, by r1/r2 driver windows plus planted tests);
-    # the driver window holds 50 and never-certified code takes precedence
-    "similarity_mmr",
-    "kmeans_clusters",
-    "bpe_encode",
-    "label_propagation",
-    "pagerank_parts",
-    "kcore_parts",
-    "robust_outliers",
-    "max_drawdown",
-    "retention_cohorts",
-    "cohort_ltv",
-    "heaps_law",
-    "bilateral_trade_volume",
 ]
 
 
 def collect_registry() -> dict[str, QuerySpec]:
     """Union of all plan modules' registries (stable names across rounds),
-    with the current round's window promoted to the front."""
+    with FRONT promoted to the front."""
     from candyspark.plans import (
         analytics,
         behavior,
@@ -293,8 +145,5 @@ def collect_registry() -> dict[str, QuerySpec]:
         if overlap:
             raise ValueError(f"duplicate query names: {sorted(overlap)}")
         merged.update(mod.REGISTRY)
-    window = list(
-        dict.fromkeys(ROUND5_WINDOW + ROUND4_WINDOW + ROUND3_WINDOW)
-    )
-    front = {n: merged[n] for n in window if n in merged}
+    front = {n: merged[n] for n in FRONT if n in merged}
     return front | {n: s for n, s in merged.items() if n not in front}

@@ -2628,7 +2628,7 @@ def q_importance_resampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     score = quality_score("text")  # snapped 4dp inside
-    h = F.conv(F.substring(F.md5("text"), 1, 8), 16, 10).cast("bigint")
+    h = char_hash32("text")
     u = (h.cast("double") + 0.5) / F.lit(4294967296.0)
     rows = d.select(
         "source",

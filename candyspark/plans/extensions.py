@@ -1080,10 +1080,7 @@ def q_split_leakage_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter, never an all-pairs sweep. Per-label output so a skewed leak
     (one class contaminated) is visible, not averaged away."""
     e = load_table(spark, sf_dir, "embeddings")
-    bucket100 = (
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10)
-        .cast("long") % 100
-    )
+    bucket100 = X.char_hash32(F.col("vec_id").cast("string")) % 100
     tagged = e.select(
         "vec_id", "embedding", "label", (bucket100 < 90).alias("is_train")
     )
@@ -1801,28 +1798,36 @@ def q_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the batch latest-row-per-user oracle — the streaming CDC-style
     keyed materialization every operational pipeline maintains.
     Batch-order independence is the point: whichever file lands first, the
-    merged table converges to the same latest-per-key rows."""
+    merged table converges to the same latest-per-key rows.
+
+    The merged table's dir is scoped to the call: the result is
+    materialized with ``localCheckpoint()`` before the dir is removed, so
+    the returned frame never reads it."""
     from candyspark.schemas import EVENTS
 
     events = load_table(spark, sf_dir, "events")
     out = tempfile.mkdtemp(prefix="candyspark_upsert_")
-    with _landed(events, n_files=2) as (src, ckpt):
-        stream = (
-            spark.readStream.schema(EVENTS)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+    try:
+        with _landed(events, n_files=2) as (src, ckpt):
+            stream = (
+                spark.readStream.schema(EVENTS)
+                .option("maxFilesPerTrigger", "1")
+                .parquet(src)
+            )
+            run_foreach_batch_merge(stream, out, ["user_id"], "event_id", ckpt)
+        table = merged_table_path(out)
+        if table is None:  # empty source → no batch committed
+            return spark.createDataFrame([], EVENTS).select(
+                "user_id", "event_id", "event_type", "value"
+            )
+        return (
+            spark.read.parquet(table)
+            .select("user_id", "event_id", "event_type", "value")
+            .orderBy("user_id")
+            .localCheckpoint()
         )
-        run_foreach_batch_merge(stream, out, ["user_id"], "event_id", ckpt)
-    table = merged_table_path(out)
-    if table is None:  # empty source → no batch committed
-        return spark.createDataFrame([], EVENTS).select(
-            "user_id", "event_id", "event_type", "value"
-        )
-    return (
-        spark.read.parquet(table)
-        .select("user_id", "event_id", "event_type", "value")
-        .orderBy("user_id")
-    )
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
 
 
 STREAMING_UPSERT_SQL = """
@@ -2741,9 +2746,7 @@ def q_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = fan_out(load_table(spark, sf_dir, "documents"))
     tok = d.select("doc_id", F.explode(X.tokens("text")).alias("term"))
-    bucket = (
-        F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("bigint") % 1024
-    ).cast("int")
+    bucket = (X.char_hash32("term") % 1024).cast("int")
     return (
         tok.withColumn("b", bucket)
         .groupBy("doc_id")
@@ -4037,11 +4040,7 @@ def q_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").alias("pu"), F.col("ts").alias("p_ts")
     )
     horizon = e.agg(F.max("ts").alias("end_ts"))
-    arm = (
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 2
-    ).cast("int")
+    arm = (X.char_hash32(F.col("user_id").cast("string")) % 2).cast("int")
     per_user = (
         signups.join(
             purchases,

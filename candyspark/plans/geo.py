@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from candyspark.functions.numeric import snap_round
+from candyspark.operators.text import md5_prefix_int
 from candyspark.plans import QuerySpec
 from candyspark.sources.readers import load_table
 
@@ -54,9 +55,7 @@ def _synth_coords(key: Column, prefix: str) -> tuple[Column, Column]:
     (lat in [-85, 85) — poles avoided so haversine stays well-conditioned)."""
 
     def u(tag: str) -> Column:
-        h = F.conv(
-            F.substring(F.md5(F.concat(F.lit(tag), key.cast("string"))), 1, 15), 16, 10
-        ).cast("bigint")
+        h = md5_prefix_int(F.concat(F.lit(tag), key.cast("string")), 15)
         return h.cast("double") / F.lit(float(2**60))
 
     lat = F.round((u(f"{prefix}lat:") * 170.0 - 85.0).cast("decimal(28,8)"), 6).cast(

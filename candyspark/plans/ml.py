@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from candyspark.operators import text as X
@@ -51,11 +51,7 @@ def q_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     language constants are a ≤langs-row broadcast.
     """
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    split = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 5
-    )
+    split = X.char_hash32(F.col("doc_id").cast("string")) % 5
     docs = d.select("doc_id", "lang", "text").withColumn(
         "is_test", (split == 0).cast("int")
     )
@@ -438,11 +434,7 @@ def q_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     smoothed-uniform floor ≈ obvious junk).
     """
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    split = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 5
-    )
+    split = X.char_hash32(F.col("doc_id").cast("string")) % 5
     toks = F.col("toks")
     pairs = F.when(
         F.size(toks) >= 2,
@@ -958,6 +950,131 @@ REGISTRY["isotonic_calibration"] = QuerySpec(
 )
 
 
+def _ols2(x1: Column, x2: Column, y: Column, snap: int | None = None):
+    """Closed-form OLS of y ~ b0 + b1*x1 + b2*x2: the kernel of the price
+    model family. Returns ``(sums, (b0, b1, b2), sse, sst)``. ``sums`` are
+    the ten aggregate columns for the caller's ``agg`` (n, the first
+    moments, the Gram cross products and the y moments), each summed in
+    exact decimal and cast to double once. The rest are expressions over
+    that aggregate's output: the normal equations solved by Cramer's rule
+    on the 3x3 Gram matrix with the minors spelled out, so the SQL mirror
+    (_ols2_sql) evaluates the SAME double ops in the SAME order. ``snap``
+    rounds each coefficient to that many dp before it enters ``sse``."""
+    sums = [
+        F.count(F.lit(1)).alias("n"),
+        F.sum(x1).cast("double").alias("s1"),
+        F.sum(x2).cast("double").alias("s2"),
+        F.sum(y).cast("double").alias("sy"),
+        F.sum(x1 * x1).cast("double").alias("s11"),
+        F.sum(x2 * x2).cast("double").alias("s22"),
+        F.sum(x1 * x2).cast("double").alias("s12"),
+        F.sum(x1 * y).cast("double").alias("s1y"),
+        F.sum(x2 * y).cast("double").alias("s2y"),
+        F.sum(y * y).cast("double").alias("syy"),
+    ]
+    n = F.col("n").cast("double")
+    s1, s2, sy = F.col("s1"), F.col("s2"), F.col("sy")
+    s11, s22, s12 = F.col("s11"), F.col("s22"), F.col("s12")
+    s1y, s2y, syy = F.col("s1y"), F.col("s2y"), F.col("syy")
+    # det of [[n,s1,s2],[s1,s11,s12],[s2,s12,s22]] and its three
+    # column-replaced minors
+    det = (
+        n * (s11 * s22 - s12 * s12)
+        - s1 * (s1 * s22 - s12 * s2)
+        + s2 * (s1 * s12 - s11 * s2)
+    )
+    det0 = (
+        sy * (s11 * s22 - s12 * s12)
+        - s1 * (s1y * s22 - s12 * s2y)
+        + s2 * (s1y * s12 - s11 * s2y)
+    )
+    det1 = (
+        n * (s1y * s22 - s12 * s2y)
+        - sy * (s1 * s22 - s12 * s2)
+        + s2 * (s1 * s2y - s1y * s2)
+    )
+    det2 = (
+        n * (s11 * s2y - s1y * s12)
+        - s1 * (s1 * s2y - s1y * s2)
+        + sy * (s1 * s12 - s11 * s2)
+    )
+    b = [F.when(det != 0, d / det) for d in (det0, det1, det2)]
+    if snap is not None:
+        b = [X.snap_round(c, snap) for c in b]
+    b0, b1, b2 = b
+    sse = syy - b0 * sy - b1 * s1y - b2 * s2y
+    sst = syy - sy * sy / n
+    return sums, (b0, b1, b2), sse, sst
+
+
+def _ols2_sql(rel: str, keys: str = "", snap: int | None = None) -> str:
+    """DuckDB mirror of _ols2 over ``rel`` (columns x1, x2, y, plus the
+    GROUP BY ``keys``): a SELECT of the keys, the ten sums, b0-b2, sse and
+    sst, with the same double ops in the same order. y must be at least
+    DECIMAL(19,4): that forces DuckDB's INT128 multiply path for y*y,
+    whose 28-digit result overflows the INT64 decimal check (the VALUE is
+    identical to Spark's (14,4))."""
+    b = [f"CASE WHEN det != 0 THEN det{i} / det END" for i in range(3)]
+    if snap is not None:
+        b = [f"CAST(ROUND(CAST({c} AS DECIMAL(28,8)), {snap}) AS DOUBLE)" for c in b]
+    group = f" GROUP BY {keys}" if keys else ""
+    keys = f"{keys}, " if keys else ""
+    return f"""
+SELECT *, syy - b0 * sy - b1 * s1y - b2 * s2y AS sse,
+       syy - sy * sy / CAST(n AS DOUBLE) AS sst
+FROM (
+    SELECT *, {b[0]} AS b0,
+           {b[1]} AS b1,
+           {b[2]} AS b2
+    FROM (
+        SELECT *,
+               CAST(n AS DOUBLE) * (s11 * s22 - s12 * s12)
+                 - s1 * (s1 * s22 - s12 * s2)
+                 + s2 * (s1 * s12 - s11 * s2) AS det,
+               sy * (s11 * s22 - s12 * s12)
+                 - s1 * (s1y * s22 - s12 * s2y)
+                 + s2 * (s1y * s12 - s11 * s2y) AS det0,
+               CAST(n AS DOUBLE) * (s1y * s22 - s12 * s2y)
+                 - sy * (s1 * s22 - s12 * s2)
+                 + s2 * (s1 * s2y - s1y * s2) AS det1,
+               CAST(n AS DOUBLE) * (s11 * s2y - s1y * s12)
+                 - s1 * (s1 * s2y - s1y * s2)
+                 + sy * (s1 * s12 - s11 * s2) AS det2
+        FROM (
+            SELECT {keys}COUNT(*) AS n,
+                   CAST(SUM(x1) AS DOUBLE) AS s1,
+                   CAST(SUM(x2) AS DOUBLE) AS s2,
+                   CAST(SUM(y) AS DOUBLE) AS sy,
+                   CAST(SUM(x1 * x1) AS DOUBLE) AS s11,
+                   CAST(SUM(x2 * x2) AS DOUBLE) AS s22,
+                   CAST(SUM(x1 * x2) AS DOUBLE) AS s12,
+                   CAST(SUM(x1 * y) AS DOUBLE) AS s1y,
+                   CAST(SUM(x2 * y) AS DOUBLE) AS s2y,
+                   CAST(SUM(y * y) AS DOUBLE) AS syy
+            FROM {rel}{group}
+        )
+    )
+)"""
+
+
+def _price_xy() -> tuple[Column, Column, Column]:
+    """The price model's regressors and target over lineitem: x1 = price,
+    x2 = discount scaled x100 so the Gram matrix is well-conditioned in
+    double (raw 1e-2-scale columns next to 1e4-scale price sums lose ~4
+    digits in the determinant cancellation), y = net revenue x1*(1-d)."""
+    x1 = F.col("l_extendedprice").cast("decimal(12,2)")
+    x2 = (F.col("l_discount").cast("decimal(4,2)") * 100).cast("decimal(8,2)")
+    y = (x1 * (1 - F.col("l_discount").cast("decimal(4,2)"))).cast("decimal(14,4)")
+    return x1, x2, y
+
+
+#: _price_xy, DuckDB form
+_PRICE_XY_SQL = """CAST(l_extendedprice AS DECIMAL(12,2)) AS x1,
+           CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS DECIMAL(8,2)) AS x2,
+           CAST(CAST(l_extendedprice AS DECIMAL(12,2))
+                * (1 - CAST(l_discount AS DECIMAL(4,2))) AS DECIMAL(19,4)) AS y"""
+
+
 def q_ols_price_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Closed-form multiple linear regression (two features + intercept):
     fit net revenue (l_extendedprice*(1-l_discount)) ~ b0 +
@@ -981,65 +1098,13 @@ def q_ols_price_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference's forecast family (src/time_series.py) approximates
     per-series; here it's the multivariate batch form.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    x1 = F.col("l_extendedprice").cast("decimal(12,2)")
-    # discount in [0,0.1] is scaled x100 so the Gram matrix is well-
-    # conditioned in double (raw 1e-2-scale columns next to 1e4-scale
-    # price sums lose ~4 digits in the determinant cancellation)
-    x2 = (F.col("l_discount").cast("decimal(4,2)") * 100).cast("decimal(8,2)")
     # the target carries REAL structure (y = x1 - x1*x2/100 + no noise on
     # the linear terms' scale): the fit must recover b1 ~ 1-E[d], b2 ~
     # -E[price]/100, R^2 >> 0.99 — pinned in tests; the synthetic tables'
     # raw columns are mutually independent, so a raw-column target would
     # only ever demonstrate R^2 = 0
-    y = (
-        F.col("l_extendedprice").cast("decimal(12,2)")
-        * (1 - F.col("l_discount").cast("decimal(4,2)"))
-    ).cast("decimal(14,4)")
-    sums = li.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x1).cast("double").alias("s1"),
-        F.sum(x2).cast("double").alias("s2"),
-        F.sum(y).cast("double").alias("sy"),
-        F.sum(x1 * x1).cast("double").alias("s11"),
-        F.sum(x2 * x2).cast("double").alias("s22"),
-        F.sum(x1 * x2).cast("double").alias("s12"),
-        F.sum(x1 * y).cast("double").alias("s1y"),
-        F.sum(x2 * y).cast("double").alias("s2y"),
-        F.sum(y * y).cast("double").alias("syy"),
-    )
-    n = F.col("n").cast("double")
-    s1, s2, sy = F.col("s1"), F.col("s2"), F.col("sy")
-    s11, s22, s12 = F.col("s11"), F.col("s22"), F.col("s12")
-    s1y, s2y, syy = F.col("s1y"), F.col("s2y"), F.col("syy")
-    # det of [[n,s1,s2],[s1,s11,s12],[s2,s12,s22]] — minors spelled out so
-    # the SQL mirror evaluates the SAME double ops in the SAME order
-    det = (
-        n * (s11 * s22 - s12 * s12)
-        - s1 * (s1 * s22 - s12 * s2)
-        + s2 * (s1 * s12 - s11 * s2)
-    )
-    det0 = (
-        sy * (s11 * s22 - s12 * s12)
-        - s1 * (s1y * s22 - s12 * s2y)
-        + s2 * (s1y * s12 - s11 * s2y)
-    )
-    det1 = (
-        n * (s1y * s22 - s12 * s2y)
-        - sy * (s1 * s22 - s12 * s2)
-        + s2 * (s1 * s2y - s1y * s2)
-    )
-    det2 = (
-        n * (s11 * s2y - s1y * s12)
-        - s1 * (s1 * s2y - s1y * s2)
-        + sy * (s1 * s12 - s11 * s2)
-    )
-    b0 = F.when(det != 0, det0 / det)
-    b1 = F.when(det != 0, det1 / det)
-    b2 = F.when(det != 0, det2 / det)
-    sse = syy - b0 * sy - b1 * s1y - b2 * s2y
-    sst = syy - sy * sy / n
-    return sums.select(
+    sums, (b0, b1, b2), sse, sst = _ols2(*_price_xy())
+    return load_table(spark, sf_dir, "lineitem").agg(*sums).select(
         F.col("n").alias("n_rows"),
         X.snap_round(b0, 4).alias("intercept"),
         X.snap_round(b1, 4).alias("beta_price"),
@@ -1048,62 +1113,14 @@ def q_ols_price_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-OLS_PRICE_MODEL_SQL = """
-WITH sums AS (
-    SELECT COUNT(*) AS n,
-           CAST(SUM(x1) AS DOUBLE) AS s1,
-           CAST(SUM(x2) AS DOUBLE) AS s2,
-           CAST(SUM(y) AS DOUBLE) AS sy,
-           CAST(SUM(x1 * x1) AS DOUBLE) AS s11,
-           CAST(SUM(x2 * x2) AS DOUBLE) AS s22,
-           CAST(SUM(x1 * x2) AS DOUBLE) AS s12,
-           CAST(SUM(x1 * y) AS DOUBLE) AS s1y,
-           CAST(SUM(x2 * y) AS DOUBLE) AS s2y,
-           CAST(SUM(y * y) AS DOUBLE) AS syy
-    FROM (
-        SELECT CAST(l_extendedprice AS DECIMAL(12,2)) AS x1,
-               CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS DECIMAL(8,2)) AS x2,
-               -- DECIMAL(19,4) (not 14,4): forces DuckDB's INT128 multiply
-               -- path for y*y, whose 28-digit result overflows the INT64
-               -- decimal check; the VALUE is identical to Spark's (14,4)
-               CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-                    * (1 - CAST(l_discount AS DECIMAL(4,2))) AS DECIMAL(19,4)) AS y
-        FROM lineitem
-    )
-),
-solved AS (
-    SELECT *,
-           CAST(n AS DOUBLE) * (s11 * s22 - s12 * s12)
-             - s1 * (s1 * s22 - s12 * s2)
-             + s2 * (s1 * s12 - s11 * s2) AS det,
-           sy * (s11 * s22 - s12 * s12)
-             - s1 * (s1y * s22 - s12 * s2y)
-             + s2 * (s1y * s12 - s11 * s2y) AS det0,
-           CAST(n AS DOUBLE) * (s1y * s22 - s12 * s2y)
-             - sy * (s1 * s22 - s12 * s2)
-             + s2 * (s1 * s2y - s1y * s2) AS det1,
-           CAST(n AS DOUBLE) * (s11 * s2y - s1y * s12)
-             - s1 * (s1 * s2y - s1y * s2)
-             + sy * (s1 * s12 - s11 * s2) AS det2
-    FROM sums
-),
-coefs AS (
-    SELECT *,
-           CASE WHEN det != 0 THEN det0 / det END AS b0,
-           CASE WHEN det != 0 THEN det1 / det END AS b1,
-           CASE WHEN det != 0 THEN det2 / det END AS b2
-    FROM solved
-)
+OLS_PRICE_MODEL_SQL = f"""
 SELECT n AS n_rows,
        CAST(ROUND(CAST(b0 AS DECIMAL(28,8)), 4) AS DOUBLE) AS intercept,
        CAST(ROUND(CAST(b1 AS DECIMAL(28,8)), 4) AS DOUBLE) AS beta_price,
        CAST(ROUND(CAST(b2 AS DECIMAL(28,8)), 4) AS DOUBLE) AS beta_discount_pct,
-       CAST(ROUND(CAST(
-           CASE WHEN syy - sy * sy / CAST(n AS DOUBLE) > 0
-                THEN 1.0 - (syy - b0 * sy - b1 * s1y - b2 * s2y)
-                     / (syy - sy * sy / CAST(n AS DOUBLE)) END
+       CAST(ROUND(CAST(CASE WHEN sst > 0 THEN 1.0 - sse / sst END
            AS DECIMAL(28,8)), 6) AS DOUBLE) AS r2
-FROM coefs
+FROM ({_ols2_sql(f"(SELECT {_PRICE_XY_SQL} FROM lineitem)")})
 """
 
 
@@ -1238,124 +1255,36 @@ def q_ols_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    x1 = F.col("l_extendedprice").cast("decimal(12,2)")
-    x2 = (F.col("l_discount").cast("decimal(4,2)") * 100).cast("decimal(8,2)")
-    y = (
-        F.col("l_extendedprice").cast("decimal(12,2)")
-        * (1 - F.col("l_discount").cast("decimal(4,2)"))
-    ).cast("decimal(14,4)")
-    sums = (
+    sums, (b0, b1, b2), sse, sst = _ols2(*_price_xy())
+    return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy("p_brand")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(x1).cast("double").alias("s1"),
-            F.sum(x2).cast("double").alias("s2"),
-            F.sum(y).cast("double").alias("sy"),
-            F.sum(x1 * x1).cast("double").alias("s11"),
-            F.sum(x2 * x2).cast("double").alias("s22"),
-            F.sum(x1 * x2).cast("double").alias("s12"),
-            F.sum(x1 * y).cast("double").alias("s1y"),
-            F.sum(x2 * y).cast("double").alias("s2y"),
-            F.sum(y * y).cast("double").alias("syy"),
+        .agg(*sums)
+        .select(
+            F.col("p_brand").alias("brand"),
+            F.col("n").alias("n_rows"),
+            X.snap_round(b0, 4).alias("intercept"),
+            X.snap_round(b1, 4).alias("beta_price"),
+            X.snap_round(b2, 4).alias("beta_discount_pct"),
+            X.snap_round(F.when(sst > 0, 1.0 - sse / sst), 6).alias("r2"),
         )
+        .orderBy("brand")
     )
-    n = F.col("n").cast("double")
-    s1, s2, sy = F.col("s1"), F.col("s2"), F.col("sy")
-    s11, s22, s12 = F.col("s11"), F.col("s22"), F.col("s12")
-    s1y, s2y, syy = F.col("s1y"), F.col("s2y"), F.col("syy")
-    det = (
-        n * (s11 * s22 - s12 * s12)
-        - s1 * (s1 * s22 - s12 * s2)
-        + s2 * (s1 * s12 - s11 * s2)
-    )
-    det0 = (
-        sy * (s11 * s22 - s12 * s12)
-        - s1 * (s1y * s22 - s12 * s2y)
-        + s2 * (s1y * s12 - s11 * s2y)
-    )
-    det1 = (
-        n * (s1y * s22 - s12 * s2y)
-        - sy * (s1 * s22 - s12 * s2)
-        + s2 * (s1 * s2y - s1y * s2)
-    )
-    det2 = (
-        n * (s11 * s2y - s1y * s12)
-        - s1 * (s1 * s2y - s1y * s2)
-        + sy * (s1 * s12 - s11 * s2)
-    )
-    b0 = F.when(det != 0, det0 / det)
-    b1 = F.when(det != 0, det1 / det)
-    b2 = F.when(det != 0, det2 / det)
-    sse = syy - b0 * sy - b1 * s1y - b2 * s2y
-    sst = syy - sy * sy / n
-    return sums.select(
-        F.col("p_brand").alias("brand"),
-        F.col("n").alias("n_rows"),
-        X.snap_round(b0, 4).alias("intercept"),
-        X.snap_round(b1, 4).alias("beta_price"),
-        X.snap_round(b2, 4).alias("beta_discount_pct"),
-        X.snap_round(F.when(sst > 0, 1.0 - sse / sst), 6).alias("r2"),
-    ).orderBy("brand")
 
 
-OLS_BY_BRAND_SQL = """
-WITH sums AS (
-    SELECT p_brand,
-           COUNT(*) AS n,
-           CAST(SUM(x1) AS DOUBLE) AS s1,
-           CAST(SUM(x2) AS DOUBLE) AS s2,
-           CAST(SUM(y) AS DOUBLE) AS sy,
-           CAST(SUM(x1 * x1) AS DOUBLE) AS s11,
-           CAST(SUM(x2 * x2) AS DOUBLE) AS s22,
-           CAST(SUM(x1 * x2) AS DOUBLE) AS s12,
-           CAST(SUM(x1 * y) AS DOUBLE) AS s1y,
-           CAST(SUM(x2 * y) AS DOUBLE) AS s2y,
-           CAST(SUM(y * y) AS DOUBLE) AS syy
-    FROM (
-        SELECT p.p_brand,
-               CAST(l_extendedprice AS DECIMAL(12,2)) AS x1,
-               CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS DECIMAL(8,2)) AS x2,
-               CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-                    * (1 - CAST(l_discount AS DECIMAL(4,2))) AS DECIMAL(19,4)) AS y
-        FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-    )
-    GROUP BY p_brand
-),
-solved AS (
-    SELECT *,
-           CAST(n AS DOUBLE) * (s11 * s22 - s12 * s12)
-             - s1 * (s1 * s22 - s12 * s2)
-             + s2 * (s1 * s12 - s11 * s2) AS det,
-           sy * (s11 * s22 - s12 * s12)
-             - s1 * (s1y * s22 - s12 * s2y)
-             + s2 * (s1y * s12 - s11 * s2y) AS det0,
-           CAST(n AS DOUBLE) * (s1y * s22 - s12 * s2y)
-             - sy * (s1 * s22 - s12 * s2)
-             + s2 * (s1 * s2y - s1y * s2) AS det1,
-           CAST(n AS DOUBLE) * (s11 * s2y - s1y * s12)
-             - s1 * (s1 * s2y - s1y * s2)
-             + sy * (s1 * s12 - s11 * s2) AS det2
-    FROM sums
-),
-coefs AS (
-    SELECT *,
-           CASE WHEN det != 0 THEN det0 / det END AS b0,
-           CASE WHEN det != 0 THEN det1 / det END AS b1,
-           CASE WHEN det != 0 THEN det2 / det END AS b2
-    FROM solved
-)
+OLS_BY_BRAND_SQL = f"""
 SELECT p_brand AS brand,
        n AS n_rows,
        CAST(ROUND(CAST(b0 AS DECIMAL(28,8)), 4) AS DOUBLE) AS intercept,
        CAST(ROUND(CAST(b1 AS DECIMAL(28,8)), 4) AS DOUBLE) AS beta_price,
        CAST(ROUND(CAST(b2 AS DECIMAL(28,8)), 4) AS DOUBLE) AS beta_discount_pct,
-       CAST(ROUND(CAST(
-           CASE WHEN syy - sy * sy / CAST(n AS DOUBLE) > 0
-                THEN 1.0 - (syy - b0 * sy - b1 * s1y - b2 * s2y)
-                     / (syy - sy * sy / CAST(n AS DOUBLE)) END
+       CAST(ROUND(CAST(CASE WHEN sst > 0 THEN 1.0 - sse / sst END
            AS DECIMAL(28,8)), 6) AS DOUBLE) AS r2
-FROM coefs
+FROM ({_ols2_sql(
+    f"(SELECT p.p_brand, {_PRICE_XY_SQL} "
+    "FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey)",
+    keys="p_brand",
+)})
 ORDER BY brand
 """
 
@@ -2143,21 +2072,13 @@ def q_logistic_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     with per-cell terms snapped to decimal (order-free sums).
     """
     li = load_table(spark, sf_dir, "lineitem")
-    split_hash = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    F.col("l_orderkey").cast("string"),
-                    F.col("l_linenumber").cast("string"),
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    split_hash = X.char_hash32(
+        F.concat_ws(
+            ":",
+            F.col("l_orderkey").cast("string"),
+            F.col("l_linenumber").cast("string"),
+        )
+    )
     cells = (
         li.select(
             (F.col("l_discount").cast("decimal(4,2)") * 100)
@@ -2617,59 +2538,14 @@ def q_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
     compact parquet lands in 3 byte-sized splits (profiled: 0.8 + 1.3 s
     in 3-task stages); no-op at real scale (fan_out contract).
     """
-    from candyspark.sources.readers import fan_out
-
     li = fan_out(
         load_table(spark, sf_dir, "lineitem").select(
             "l_extendedprice", "l_discount"
         )
     )
-    x1 = F.col("l_extendedprice").cast("decimal(12,2)")
-    x2 = (F.col("l_discount").cast("decimal(4,2)") * 100).cast("decimal(8,2)")
-    y = (
-        F.col("l_extendedprice").cast("decimal(12,2)")
-        * (1 - F.col("l_discount").cast("decimal(4,2)"))
-    ).cast("decimal(14,4)")
-    sums = li.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x1).cast("double").alias("s1"),
-        F.sum(x2).cast("double").alias("s2"),
-        F.sum(y).cast("double").alias("sy"),
-        F.sum(x1 * x1).cast("double").alias("s11"),
-        F.sum(x2 * x2).cast("double").alias("s22"),
-        F.sum(x1 * x2).cast("double").alias("s12"),
-        F.sum(x1 * y).cast("double").alias("s1y"),
-        F.sum(x2 * y).cast("double").alias("s2y"),
-    )
-    n = F.col("n").cast("double")
-    s1, s2, sy = F.col("s1"), F.col("s2"), F.col("sy")
-    s11, s22, s12 = F.col("s11"), F.col("s22"), F.col("s12")
-    s1y, s2y = F.col("s1y"), F.col("s2y")
-    det = (
-        n * (s11 * s22 - s12 * s12)
-        - s1 * (s1 * s22 - s12 * s2)
-        + s2 * (s1 * s12 - s11 * s2)
-    )
-    det0 = (
-        sy * (s11 * s22 - s12 * s12)
-        - s1 * (s1y * s22 - s12 * s2y)
-        + s2 * (s1y * s12 - s11 * s2y)
-    )
-    det1 = (
-        n * (s1y * s22 - s12 * s2y)
-        - sy * (s1 * s22 - s12 * s2)
-        + s2 * (s1 * s2y - s1y * s2)
-    )
-    det2 = (
-        n * (s11 * s2y - s1y * s12)
-        - s1 * (s1 * s2y - s1y * s2)
-        + sy * (s1 * s12 - s11 * s2)
-    )
-    betas = sums.select(
-        X.snap_round(F.when(det != 0, det0 / det), 8).alias("b0"),
-        X.snap_round(F.when(det != 0, det1 / det), 8).alias("b1"),
-        X.snap_round(F.when(det != 0, det2 / det), 8).alias("b2"),
-    )
+    x1, x2, y = _price_xy()
+    sums, b, _, _ = _ols2(x1, x2, y, snap=8)
+    betas = li.agg(*sums).select(*(c.alias(f"b{i}") for i, c in enumerate(b)))
     e = (
         y.cast("double")
         - F.col("b0")
@@ -2678,102 +2554,28 @@ def q_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e4 = F.round(e.cast("decimal(28,8)"), 4).cast("decimal(18,4)")
     u = F.round((e4 * e4).cast("decimal(37,8)"), 4).cast("decimal(18,4)")
-    aux = li.crossJoin(F.broadcast(betas)).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x1).cast("double").alias("s1"),
-        F.sum(x2).cast("double").alias("s2"),
-        F.sum(u).cast("double").alias("su"),
-        F.sum(x1 * x1).cast("double").alias("s11"),
-        F.sum(x2 * x2).cast("double").alias("s22"),
-        F.sum(x1 * x2).cast("double").alias("s12"),
-        F.sum(u * x1).cast("double").alias("su1"),
-        F.sum(u * x2).cast("double").alias("su2"),
-        F.sum(u * u).cast("double").alias("suu"),
-    )
-    su, su1, su2, suu = F.col("su"), F.col("su1"), F.col("su2"), F.col("suu")
-    adet = (
-        n * (s11 * s22 - s12 * s12)
-        - s1 * (s1 * s22 - s12 * s2)
-        + s2 * (s1 * s12 - s11 * s2)
-    )
-    adet0 = (
-        su * (s11 * s22 - s12 * s12)
-        - s1 * (su1 * s22 - s12 * su2)
-        + s2 * (su1 * s12 - s11 * su2)
-    )
-    adet1 = (
-        n * (su1 * s22 - s12 * su2)
-        - su * (s1 * s22 - s12 * s2)
-        + s2 * (s1 * su2 - su1 * s2)
-    )
-    adet2 = (
-        n * (s11 * su2 - su1 * s12)
-        - s1 * (s1 * su2 - su1 * s2)
-        + su * (s1 * s12 - s11 * s2)
-    )
-    a0 = F.when(adet != 0, adet0 / adet)
-    a1 = F.when(adet != 0, adet1 / adet)
-    a2c = F.when(adet != 0, adet2 / adet)
-    sse = suu - a0 * su - a1 * su1 - a2c * su2
-    sst = suu - su * su / n
-    r2 = F.when(sst > 0, 1.0 - sse / sst)
-    lm = X.snap_round(n * r2, 4)
-    return aux.select(
+    aux_sums, _, sse, sst = _ols2(x1, x2, u)
+    lm = X.snap_round(F.col("n").cast("double") * F.when(sst > 0, 1.0 - sse / sst), 4)
+    return li.crossJoin(F.broadcast(betas)).agg(*aux_sums).select(
         F.col("n").cast("long").alias("n_rows"),
         lm.alias("lm_stat"),
         (lm > 5.991).alias("heteroskedastic"),
     )
 
 
-BREUSCH_PAGAN_SQL = """
+BREUSCH_PAGAN_SQL = f"""
 WITH rows_ AS (
-    SELECT CAST(l_extendedprice AS DECIMAL(12,2)) AS x1,
-           CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS DECIMAL(8,2)) AS x2,
-           CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-                * (1 - CAST(l_discount AS DECIMAL(4,2))) AS DECIMAL(19,4)) AS y
+    SELECT {_PRICE_XY_SQL}
     FROM lineitem
 ),
-sums AS (
-    SELECT COUNT(*) AS n,
-           CAST(SUM(x1) AS DOUBLE) AS s1, CAST(SUM(x2) AS DOUBLE) AS s2,
-           CAST(SUM(y) AS DOUBLE) AS sy,
-           CAST(SUM(x1 * x1) AS DOUBLE) AS s11,
-           CAST(SUM(x2 * x2) AS DOUBLE) AS s22,
-           CAST(SUM(x1 * x2) AS DOUBLE) AS s12,
-           CAST(SUM(x1 * y) AS DOUBLE) AS s1y,
-           CAST(SUM(x2 * y) AS DOUBLE) AS s2y
-    FROM rows_
-),
 betas AS (
-    SELECT
-      CAST(ROUND(CAST(CASE WHEN det != 0 THEN det0 / det END
-           AS DECIMAL(28,8)), 8) AS DOUBLE) AS b0,
-      CAST(ROUND(CAST(CASE WHEN det != 0 THEN det1 / det END
-           AS DECIMAL(28,8)), 8) AS DOUBLE) AS b1,
-      CAST(ROUND(CAST(CASE WHEN det != 0 THEN det2 / det END
-           AS DECIMAL(28,8)), 8) AS DOUBLE) AS b2
-    FROM (
-        SELECT
-          CAST(n AS DOUBLE) * (s11 * s22 - s12 * s12)
-            - s1 * (s1 * s22 - s12 * s2)
-            + s2 * (s1 * s12 - s11 * s2) AS det,
-          sy * (s11 * s22 - s12 * s12)
-            - s1 * (s1y * s22 - s12 * s2y)
-            + s2 * (s1y * s12 - s11 * s2y) AS det0,
-          CAST(n AS DOUBLE) * (s1y * s22 - s12 * s2y)
-            - sy * (s1 * s22 - s12 * s2)
-            + s2 * (s1 * s2y - s1y * s2) AS det1,
-          CAST(n AS DOUBLE) * (s11 * s2y - s1y * s12)
-            - s1 * (s1 * s2y - s1y * s2)
-            + sy * (s1 * s12 - s11 * s2) AS det2
-        FROM sums
-    )
+    SELECT b0, b1, b2 FROM ({_ols2_sql("rows_", snap=8)})
 ),
 resid AS (
     SELECT x1, x2,
            CAST(ROUND(CAST(
                CAST(e4 AS DECIMAL(18,4)) * CAST(e4 AS DECIMAL(18,4))
-               AS DECIMAL(37,8)), 4) AS DECIMAL(18,4)) AS u
+               AS DECIMAL(37,8)), 4) AS DECIMAL(19,4)) AS y
     FROM (
         SELECT x1, x2,
                CAST(ROUND(CAST(CAST(y AS DOUBLE) - b0
@@ -2782,51 +2584,12 @@ resid AS (
         FROM rows_ CROSS JOIN betas
     )
 ),
-aux AS (
-    SELECT COUNT(*) AS n,
-           CAST(SUM(x1) AS DOUBLE) AS s1, CAST(SUM(x2) AS DOUBLE) AS s2,
-           CAST(SUM(u) AS DOUBLE) AS su,
-           CAST(SUM(x1 * x1) AS DOUBLE) AS s11,
-           CAST(SUM(x2 * x2) AS DOUBLE) AS s22,
-           CAST(SUM(x1 * x2) AS DOUBLE) AS s12,
-           CAST(SUM(u * x1) AS DOUBLE) AS su1,
-           CAST(SUM(u * x2) AS DOUBLE) AS su2,
-           CAST(SUM(CAST(u AS DECIMAL(19,4)) * CAST(u AS DECIMAL(19,4)))
-                AS DOUBLE) AS suu
-    FROM resid
-),
-solved AS (
-    SELECT n, su, su1, su2, suu,
-           CAST(n AS DOUBLE) * (s11 * s22 - s12 * s12)
-             - s1 * (s1 * s22 - s12 * s2)
-             + s2 * (s1 * s12 - s11 * s2) AS adet,
-           su * (s11 * s22 - s12 * s12)
-             - s1 * (su1 * s22 - s12 * su2)
-             + s2 * (su1 * s12 - s11 * su2) AS adet0,
-           CAST(n AS DOUBLE) * (su1 * s22 - s12 * su2)
-             - su * (s1 * s22 - s12 * s2)
-             + s2 * (s1 * su2 - su1 * s2) AS adet1,
-           CAST(n AS DOUBLE) * (s11 * su2 - su1 * s12)
-             - s1 * (s1 * su2 - su1 * s2)
-             + su * (s1 * s12 - s11 * s2) AS adet2
-    FROM aux
-),
 stat AS (
     SELECT n,
            CAST(ROUND(CAST(CASE WHEN sst > 0
                 THEN CAST(n AS DOUBLE) * (1.0 - sse / sst) END
                 AS DECIMAL(28,8)), 4) AS DOUBLE) AS lm
-    FROM (
-        SELECT n, suu - a0 * su - a1 * su1 - a2 * su2 AS sse,
-               suu - su * su / CAST(n AS DOUBLE) AS sst
-        FROM (
-            SELECT n, su, su1, su2, suu,
-                   CASE WHEN adet != 0 THEN adet0 / adet END AS a0,
-                   CASE WHEN adet != 0 THEN adet1 / adet END AS a1,
-                   CASE WHEN adet != 0 THEN adet2 / adet END AS a2
-            FROM solved
-        )
-    )
+    FROM ({_ols2_sql("resid")})
 )
 SELECT CAST(n AS BIGINT) AS n_rows, lm AS lm_stat,
        lm > 5.991 AS heteroskedastic
@@ -2855,53 +2618,10 @@ def q_nested_f_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     thousands the F(1, n−3) critical is its asymptotic χ²(1) value
     3.841 (documented). At 100 TB: one map-side-combined aggregate,
     then constants."""
-    li = load_table(spark, sf_dir, "lineitem")
-    x1 = F.col("l_extendedprice").cast("decimal(12,2)")
-    x2 = (F.col("l_discount").cast("decimal(4,2)") * 100).cast("decimal(8,2)")
-    y = (
-        F.col("l_extendedprice").cast("decimal(12,2)")
-        * (1 - F.col("l_discount").cast("decimal(4,2)"))
-    ).cast("decimal(14,4)")
-    sums = li.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x1).cast("double").alias("s1"),
-        F.sum(x2).cast("double").alias("s2"),
-        F.sum(y).cast("double").alias("sy"),
-        F.sum(x1 * x1).cast("double").alias("s11"),
-        F.sum(x2 * x2).cast("double").alias("s22"),
-        F.sum(x1 * x2).cast("double").alias("s12"),
-        F.sum(x1 * y).cast("double").alias("s1y"),
-        F.sum(x2 * y).cast("double").alias("s2y"),
-        F.sum(y * y).cast("double").alias("syy"),
-    )
+    sums, _, sse_f, _ = _ols2(*_price_xy(), snap=8)
     n = F.col("n").cast("double")
-    s1, s2, sy = F.col("s1"), F.col("s2"), F.col("sy")
-    s11, s22, s12 = F.col("s11"), F.col("s22"), F.col("s12")
-    s1y, s2y, syy = F.col("s1y"), F.col("s2y"), F.col("syy")
-    det = (
-        n * (s11 * s22 - s12 * s12)
-        - s1 * (s1 * s22 - s12 * s2)
-        + s2 * (s1 * s12 - s11 * s2)
-    )
-    det0 = (
-        sy * (s11 * s22 - s12 * s12)
-        - s1 * (s1y * s22 - s12 * s2y)
-        + s2 * (s1y * s12 - s11 * s2y)
-    )
-    det1 = (
-        n * (s1y * s22 - s12 * s2y)
-        - sy * (s1 * s22 - s12 * s2)
-        + s2 * (s1 * s2y - s1y * s2)
-    )
-    det2 = (
-        n * (s11 * s2y - s1y * s12)
-        - s1 * (s1 * s2y - s1y * s2)
-        + sy * (s1 * s12 - s11 * s2)
-    )
-    b0 = X.snap_round(F.when(det != 0, det0 / det), 8)
-    b1 = X.snap_round(F.when(det != 0, det1 / det), 8)
-    b2 = X.snap_round(F.when(det != 0, det2 / det), 8)
-    sse_f = syy - b0 * sy - b1 * s1y - b2 * s2y
+    s1, sy, s11 = F.col("s1"), F.col("sy"), F.col("s11")
+    s1y, syy = F.col("s1y"), F.col("syy")
     # restricted model y ~ c0 + c1*x1 (closed 2-param form)
     rdet = n * s11 - s1 * s1
     c1 = X.snap_round(F.when(rdet != 0, (n * s1y - s1 * sy) / rdet), 8)
@@ -2910,7 +2630,7 @@ def q_nested_f_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     f_stat = X.snap_round(
         F.when(sse_f > 0, (sse_r - sse_f) / (sse_f / (n - 3.0))), 4
     )
-    return sums.select(
+    return load_table(spark, sf_dir, "lineitem").agg(*sums).select(
         F.col("n").cast("long").alias("n_rows"),
         X.snap_round(sse_r - sse_f, 2).alias("ssr_gain"),
         f_stat.alias("f_stat"),
@@ -2918,51 +2638,8 @@ def q_nested_f_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-NESTED_F_TEST_SQL = """
-WITH sums AS (
-    SELECT COUNT(*) AS n,
-           CAST(SUM(x1) AS DOUBLE) AS s1, CAST(SUM(x2) AS DOUBLE) AS s2,
-           CAST(SUM(y) AS DOUBLE) AS sy,
-           CAST(SUM(x1 * x1) AS DOUBLE) AS s11,
-           CAST(SUM(x2 * x2) AS DOUBLE) AS s22,
-           CAST(SUM(x1 * x2) AS DOUBLE) AS s12,
-           CAST(SUM(x1 * y) AS DOUBLE) AS s1y,
-           CAST(SUM(x2 * y) AS DOUBLE) AS s2y,
-           CAST(SUM(y * y) AS DOUBLE) AS syy
-    FROM (
-        SELECT CAST(l_extendedprice AS DECIMAL(12,2)) AS x1,
-               CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS DECIMAL(8,2)) AS x2,
-               CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-                    * (1 - CAST(l_discount AS DECIMAL(4,2))) AS DECIMAL(19,4)) AS y
-        FROM lineitem
-    )
-),
-betas AS (
-    SELECT n, sy, s1y, s2y, syy, s1, s11,
-      CAST(ROUND(CAST(CASE WHEN det != 0 THEN det0 / det END
-           AS DECIMAL(28,8)), 8) AS DOUBLE) AS b0,
-      CAST(ROUND(CAST(CASE WHEN det != 0 THEN det1 / det END
-           AS DECIMAL(28,8)), 8) AS DOUBLE) AS b1,
-      CAST(ROUND(CAST(CASE WHEN det != 0 THEN det2 / det END
-           AS DECIMAL(28,8)), 8) AS DOUBLE) AS b2
-    FROM (
-        SELECT n, sy, s1y, s2y, syy, s1, s11,
-          CAST(n AS DOUBLE) * (s11 * s22 - s12 * s12)
-            - s1 * (s1 * s22 - s12 * s2)
-            + s2 * (s1 * s12 - s11 * s2) AS det,
-          sy * (s11 * s22 - s12 * s12)
-            - s1 * (s1y * s22 - s12 * s2y)
-            + s2 * (s1y * s12 - s11 * s2y) AS det0,
-          CAST(n AS DOUBLE) * (s1y * s22 - s12 * s2y)
-            - sy * (s1 * s22 - s12 * s2)
-            + s2 * (s1 * s2y - s1y * s2) AS det1,
-          CAST(n AS DOUBLE) * (s11 * s2y - s1y * s12)
-            - s1 * (s1 * s2y - s1y * s2)
-            + sy * (s1 * s12 - s11 * s2) AS det2
-        FROM sums
-    )
-),
-stat AS (
+NESTED_F_TEST_SQL = f"""
+WITH stat AS (
     SELECT CAST(n AS BIGINT) AS n_rows,
            sse_r - sse_f AS ssr_gain,
            CAST(ROUND(CAST(CASE WHEN sse_f > 0
@@ -2970,7 +2647,7 @@ stat AS (
                 AS DECIMAL(28,8)), 4) AS DOUBLE) AS f_stat
     FROM (
         SELECT n,
-               syy - b0 * sy - b1 * s1y - b2 * s2y AS sse_f,
+               sse AS sse_f,
                syy - (CAST(ROUND(CAST((sy - (CASE WHEN CAST(n AS DOUBLE) * s11
                     - s1 * s1 != 0 THEN CAST(ROUND(CAST(
                     (CAST(n AS DOUBLE) * s1y - s1 * sy)
@@ -2981,7 +2658,7 @@ stat AS (
                       THEN CAST(ROUND(CAST((CAST(n AS DOUBLE) * s1y - s1 * sy)
                            / (CAST(n AS DOUBLE) * s11 - s1 * s1)
                            AS DECIMAL(28,8)), 8) AS DOUBLE) END) * s1y AS sse_r
-        FROM betas
+        FROM ({_ols2_sql(f"(SELECT {_PRICE_XY_SQL} FROM lineitem)", snap=8)})
     )
 )
 SELECT n_rows,

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from candyspark.operators.mutation import merge_upsert, scd2_history, snapshot_diff
+from candyspark.operators.text import char_hash32
 from candyspark.plans import QuerySpec
 from candyspark.sources.readers import load_table
 
@@ -248,9 +249,7 @@ def q_idempotency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "ts", "value"
     )
-    bucket = F.conv(
-        F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    bucket = char_hash32(F.col("event_id").cast("string"))
     retries = e.filter(bucket % 20 == 0).select(
         "event_id",
         "event_type",

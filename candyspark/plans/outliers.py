@@ -15,8 +15,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from candyspark.operators.text import snap_round
+from candyspark.operators.text import char_hash32, snap_round
 from candyspark.plans import QuerySpec
+from candyspark.session import job_description
 from candyspark.sources.readers import load_table
 
 _HASH32 = "CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT)"
@@ -34,7 +35,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     which Spark executes as per-partition TakeOrdered + a k-row driver
     merge — no global sort, no single-task window over the corpus."""
     d = load_table(spark, sf_dir, "documents")
-    h = F.conv(F.substring(F.md5("text"), 1, 8), 16, 10).cast("bigint")
+    h = char_hash32("text")
     u = (h.cast("double") + 0.5) / F.lit(4294967296.0)
     pri = snap_round(F.log(u) / F.col("n_chars"), 6)
     top = (
@@ -213,22 +214,22 @@ def _grouped_median_mad(
     # other — fail loudly at plan time, not with AMBIGUOUS_REFERENCE later
     if len(set(aliases)) != len(aliases):
         raise ValueError(f"extra_probs too close: aliases collide: {aliases}")
-    spark.sparkContext.setJobDescription("grouped_median_mad: shared bounds")
-    bounds_rows = (
-        # same filter as exact_quantiles_grouped's internal pass: a NaN
-        # would inflate n and poison hi (NaN ranks above every double),
-        # making the top rank unlocatable and med/mad silently NULL
-        vals.filter(F.col(value_col).isNotNull() & ~F.isnan(F.col(value_col).cast("double")))
-        .groupBy(group_col)
-        .agg(
-            F.min(value_col).cast("double").alias("lo"),
-            F.max(value_col).cast("double").alias("hi"),
-            F.count(F.lit(1)).alias("n"),
+    # same filter as exact_quantiles_grouped's internal pass: a NaN would
+    # inflate n and poison hi (NaN ranks above every double), making the
+    # top rank unlocatable and med/mad silently NULL
+    valid = F.col(value_col).isNotNull() & ~F.isnan(F.col(value_col).cast("double"))
+    with job_description(spark, "grouped_median_mad: shared bounds"):
+        bounds_rows = (
+            vals.filter(valid)
+            .groupBy(group_col)
+            .agg(
+                F.min(value_col).cast("double").alias("lo"),
+                F.max(value_col).cast("double").alias("hi"),
+                F.count(F.lit(1)).alias("n"),
+            )
+            .withColumnRenamed(group_col, "grp")
+            .collect()
         )
-        .withColumnRenamed(group_col, "grp")
-        .collect()
-    )
-    spark.sparkContext.setJobDescription(None)
     # round-7: ONE bounds collect feeds both extractor calls (v2 spent a
     # localCheckpoint write + two more collect round-trips on these same
     # driver-sized bytes), and the pivot/MAD-bounds arithmetic runs in
@@ -1306,13 +1307,9 @@ def q_ransac_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("eps"),
     )
-    h = lambda tag: F.conv(  # noqa: E731
-        F.substring(
-            F.md5(F.concat(F.lit(tag), F.col("cid").cast("string"))), 1, 8
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = lambda tag: char_hash32(  # noqa: E731
+        F.concat(F.lit(tag), F.col("cid").cast("string"))
+    )
     cand = (
         spark.range(24)
         .select(F.col("id").cast("int").alias("cid"))

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from candyspark.functions.numeric import snap_round
+from candyspark.operators.text import char_hash32, md5_prefix_int
 from candyspark.plans import QuerySpec
 from candyspark.sources.readers import load_table
 
@@ -513,11 +514,7 @@ def q_ab_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         (F.col("n_purchases") > F.col("med")).cast("int").alias("converted"),
     )
-    arm = (
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 2
-    )
+    arm = char_hash32(F.col("user_id").cast("string")) % 2
     wide = users.withColumn("arm", arm).agg(
         F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).cast("long").alias("na"),
         F.sum(F.when(F.col("arm") == 0, F.col("converted")).otherwise(0))
@@ -1043,11 +1040,7 @@ def q_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.lit(0).cast("decimal(12,2)"))
         ).alias("y"),
     )
-    arm = (
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 2
-    )
+    arm = char_hash32(F.col("user_id").cast("string")) % 2
     xd = F.col("x").cast("decimal(18,2)")
     yd = F.col("y").cast("decimal(18,2)")
     arms = (
@@ -1198,11 +1191,7 @@ def q_quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = e.groupBy("user_id").agg(
         F.sum(F.col("value").cast("decimal(12,2)")).alias("outcome")
     )
-    arm = (
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 2
-    ).cast("int")
+    arm = (char_hash32(F.col("user_id").cast("string")) % 2).cast("int")
     users = per_user.select(arm.alias("arm"), F.col("outcome").cast("double"))
     probs = [i / 10.0 for i in range(11)]
     q = exact_quantiles_grouped(spark, users, "arm", "outcome", probs)
@@ -1283,11 +1272,7 @@ def q_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("true_count"))
         .join(F.broadcast(nation), cust["c_nationkey"] == nation["n_nationkey"])
     )
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("release-2026-08:"), F.col("n_name"))), 1, 15),
-        16,
-        10,
-    ).cast("bigint")
+    h = md5_prefix_int(F.concat(F.lit("release-2026-08:"), F.col("n_name")), 15)
     # u in [-0.5, 0.5); greatest(h,1) guards the measure-zero h=0 edge
     # where 1-2|u| would hit ln(0)
     u = F.greatest(h, F.lit(1)).cast("double") / F.lit(float(2**60)) - F.lit(0.5)
@@ -2465,11 +2450,7 @@ def q_sequential_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.unix_micros("ts")).alias("lo"),
         F.max(F.unix_micros("ts")).alias("hi"),
     )
-    arm = (
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 2
-    )
+    arm = char_hash32(F.col("user_id").cast("string")) % 2
     look = F.least(
         F.lit(4),
         F.floor(
@@ -2956,11 +2937,7 @@ def q_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("decimal(18,2)")
         .alias("y")
     )
-    arm = (
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 2
-    )
+    arm = char_hash32(F.col("user_id").cast("string")) % 2
     sums = users.select(arm.alias("g"), "y").agg(
         F.sum(F.when(F.col("g") == 0, 1).otherwise(0)).cast("long").alias("na"),
         F.sum(F.when(F.col("g") == 1, 1).otherwise(0)).cast("long").alias("nb"),
@@ -3801,10 +3778,7 @@ def q_rr_frequency_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def u(tag):
-        h = F.conv(
-            F.substring(F.md5(F.concat(F.lit(tag), F.col("user_id").cast("string"))), 1, 8),
-            16, 10,
-        ).cast("bigint")
+        h = char_hash32(F.concat(F.lit(tag), F.col("user_id").cast("string")))
         return (h.cast("double") + 0.5) / F.lit(4294967296.0)
 
     reported = per_user.select(
@@ -5433,11 +5407,11 @@ def q_randomization_inference_bernoulli(spark: SparkSession, sf_dir: str) -> Dat
 
     draws = spark.range(0, b_draws).select(F.col("id").alias("b"))
     u = (
-        F.conv(F.substring(F.md5(
+        char_hash32(
             F.concat(
                 F.col("b").cast("string"), F.lit(":"), F.col("o_orderkey").cast("string")
             )
-        ), 1, 8), 16, 10).cast("long").cast("double")
+        ).cast("double")
         / F.lit(4294967296.0)
     )
     p = F.col("n1").cast("double") / F.col("n").cast("double")
@@ -5886,11 +5860,7 @@ def q_uplift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     <=10-row rollup.
     """
     e = load_table(spark, sf_dir, "events")
-    arm = (
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 2
-    )
+    arm = char_hash32(F.col("user_id").cast("string")) % 2
     per_user = e.groupBy("user_id").agg(
         # activity EXCLUDES the outcome event: counting purchases into the
         # ranking covariate leaks the outcome into the deciles (treated

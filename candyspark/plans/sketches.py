@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from candyspark.functions.numeric import snap_round
-from candyspark.operators.text import char_hash32, tokens
+from candyspark.operators.text import char_hash32, md5_prefix_int, tokens
 from candyspark.plans import QuerySpec
 from candyspark.sources.readers import load_table
 
@@ -573,9 +573,7 @@ def q_kmv_set_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     k = 64
     orders = load_table(spark, sf_dir, "orders")
-    h = F.conv(
-        F.substring(F.md5(F.col("o_custkey").cast("string")), 1, 15), 16, 10
-    ).cast("bigint")
+    h = md5_prefix_int(F.col("o_custkey").cast("string"), 15)
 
     def sketch(pred: F.Column) -> DataFrame:
         return (
@@ -855,15 +853,9 @@ def q_ams_f2_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     signed = tf.crossJoin(F.broadcast(rs)).select(
         "r",
         F.when(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.col("r").cast("string"), F.lit(":"), F.col("term"))),
-                    1,
-                    1,
-                ),
-                16,
-                10,
-            ).cast("int")
+            md5_prefix_int(
+                F.concat(F.col("r").cast("string"), F.lit(":"), F.col("term")), 1
+            )
             % 2
             == 0,
             F.col("tf"),

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from candyspark.functions.numeric import money, snap_round
+from candyspark.operators.text import char_hash32
 from candyspark.plans import QuerySpec
 from candyspark.sources.readers import load_table
 
@@ -1213,11 +1214,7 @@ def q_bayesian_ab_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded 1-row collect (the fisher/set-cover precedent).
     """
     e = load_table(spark, sf_dir, "events")
-    arm = (
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 2
-    )
+    arm = char_hash32(F.col("user_id").cast("string")) % 2
     per_user = e.groupBy("user_id").agg(
         F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
             "converted"

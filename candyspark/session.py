@@ -21,6 +21,8 @@ from __future__ import annotations
 import os
 import tempfile
 import zipfile
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -104,3 +106,18 @@ def ship_package(spark: SparkSession) -> None:
                     zf.write(full, rel)
     sc.addPyFile(zip_path)
     sc._candyspark_shipped = True
+
+
+@contextmanager
+def job_description(spark: SparkSession, text: str) -> Iterator[None]:
+    """Label the Spark jobs run inside the block with ``text``, then give
+    the caller's own ``spark.job.description`` back (also when the block
+    raises) — an engine operator's label must not erase the one its
+    caller set to attribute the surrounding jobs."""
+    sc = spark.sparkContext
+    saved = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", saved)

@@ -1,0 +1,62 @@
+"""Spark-free checks on the lists the engine derives instead of hand-keeping,
+and a source guard that keeps deleted inline copies from growing back."""
+
+from __future__ import annotations
+
+import pathlib
+import re
+
+import bench
+from candyspark.plans import FRONT, collect_registry
+
+PKG = pathlib.Path(__file__).resolve().parent.parent / "candyspark"
+
+
+def test_headline_excludes_every_streaming_drain():
+    # streaming_running_totals is registered only where protobuf imports:
+    # the drain set must follow the registry, not a list kept beside it
+    fake = dict.fromkeys(
+        ["streaming_running_totals", "streaming_tumbling", "daily_summary", "zz_new"]
+    )
+    names = bench.headline_names(fake)
+    assert names == ["daily_summary", "zz_new"]
+    assert bench.streaming_names(fake) == [
+        "streaming_running_totals",
+        "streaming_tumbling",
+    ]
+
+
+def test_front_is_the_first_50_registry_names():
+    registry = collect_registry()
+    assert len(FRONT) == len(set(FRONT)) == 50
+    assert set(FRONT) <= set(registry)
+    assert list(registry)[:50] == FRONT
+
+
+def _call_args(src: str, start: int) -> str:
+    """The text between the parenthesis opening at ``start`` and its match."""
+    depth = 0
+    for i in range(start, len(src)):
+        depth += {"(": 1, ")": -1}.get(src[i], 0)
+        if depth == 0:
+            return src[start + 1 : i]
+    raise AssertionError("unbalanced parentheses")
+
+
+def test_no_inline_md5_prefix_hash_or_label_reset():
+    hash_home = PKG / "operators" / "text.py"
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        src = path.read_text()
+        rel = path.relative_to(PKG.parent)
+        if path != hash_home:
+            for m in re.finditer(r"F\.conv\(", src):
+                if "md5(" in _call_args(src, m.end() - 1):
+                    line = src.count("\n", 0, m.start()) + 1
+                    offenders.append(f"{rel}:{line}: inline md5-prefix hash "
+                                     "(use operators.text.md5_prefix_int)")
+        for m in re.finditer(r"setJobDescription\(\s*None\s*\)", src):
+            line = src.count("\n", 0, m.start()) + 1
+            offenders.append(f"{rel}:{line}: job-description reset "
+                             "(use session.job_description)")
+    assert not offenders, "\n".join(offenders)

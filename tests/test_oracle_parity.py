@@ -43,13 +43,8 @@ def test_query_matches_oracle(spark, oracle, name):
         dirs_before, tables_before = _debris(spark)
     spark_pdf = spec.fn(spark, SF_DIR).toPandas()
     if drains:
-        # The one dir allowed to outlive the call: streaming_upsert's merged
-        # table, which its returned frame reads lazily.
         dirs, tables = _debris(spark)
-        new_dirs = {
-            d for d in dirs - dirs_before
-            if not os.path.basename(d).startswith("candyspark_upsert_")
-        }
+        new_dirs = dirs - dirs_before
         assert not new_dirs, f"{name}: leaked temp dirs {sorted(new_dirs)}"
         assert tables <= tables_before, (
             f"{name}: leaked session tables {sorted(tables - tables_before)}"
