@@ -22,6 +22,7 @@ import datetime as dt
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -191,22 +192,20 @@ def forecast_sales_and_profits(
     (/root/reference/src/data_processor.py:616-642,702-767): forecast the
     next ``horizon`` days of total_sales / total_profit from the daily
     summary. Collects the tiny series driver-side (one row per day), then
-    re-creates a DataFrame (S9). An empty series forecasts no rows."""
+    re-creates a DataFrame from Arrow (S9). An empty series forecasts no
+    rows."""
     pdf = _daily_series(daily_summary)
-    spark = daily_summary.sparkSession
-    if pdf.empty:
-        return spark.createDataFrame([], _FORECAST_SCHEMA)
-    last = pd.to_datetime(pdf["date"].iloc[-1])
-    dates = [
-        (last + pd.Timedelta(days=i + 1)).date() for i in range(horizon)
-    ]
-    sales = forecast_series(pdf["date"], pdf["total_sales"].to_numpy(), horizon, method)
-    profit = forecast_series(pdf["date"], pdf["total_profit"].to_numpy(), horizon, method)
-    rows = [
-        (d, round(float(s), 2), round(float(p), 2))
-        for d, s, p in zip(dates, sales, profit)
-    ]
-    return spark.createDataFrame(rows, _FORECAST_SCHEMA)
+    cols = {f.name: [] for f in _FORECAST_SCHEMA.fields}
+    if not pdf.empty:
+        last = pd.to_datetime(pdf["date"].iloc[-1])
+        cols["date"] = [(last + pd.Timedelta(days=i + 1)).date() for i in range(horizon)]
+        for col in ("sales", "profit"):
+            preds = forecast_series(pdf["date"], pdf[f"total_{col}"].to_numpy(), horizon, method)
+            cols[f"forecasted_{col}"] = [round(float(v), 2) for v in preds]
+    # From an Arrow table the frame is a LocalTableScan, empty or not; a
+    # Python list (or an empty pandas frame) plans a Scan ExistingRDD, whose
+    # every read starts Python-worker tasks.
+    return daily_summary.sparkSession.createDataFrame(pa.table(cols), _FORECAST_SCHEMA)
 
 
 def forecast_many(

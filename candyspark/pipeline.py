@@ -9,9 +9,10 @@ anti-patterns removed (SURVEY.md §4.2):
 - inventory state travels in-data via a broadcast dim join + mapInPandas
   instead of a per-day driver ``collect()`` dict (:401-406) and RDD
   ``groupByKey`` (:410-429);
-- the two shared subtrees (line items, allocation) are local-checkpointed,
-  so the JSON scan and the allocator run once per call, not once per
-  output; the four CSV sinks then run concurrently;
+- the allocation and the ~10-row daily series are local-checkpointed, so
+  the allocator runs once per call and the daily series once for its sink
+  and the forecast; orders and the daily summary share ONE per-order
+  aggregate (no header distinct, no join back); the sinks run concurrently;
 - the stock decrement is one aggregate + one join, not 10 chained full-outer
   joins on a growing lineage (:444-464);
 - money stays numeric until the sink; golden CSV formatting (%.2f) happens
@@ -39,6 +40,9 @@ from candyspark.operators.allocation import allocate_greedy
 from candyspark.schemas import CUSTOMERS, PRODUCTS, TRANSACTIONS_RAW
 from candyspark.sources.readers import load_csv, load_json_array_files
 from candyspark.sources.sinks import save_single_csv
+
+
+HEADER = ["order_id", "order_datetime", "order_ts", "customer_id"]
 
 
 @dataclass
@@ -70,8 +74,8 @@ def prepare_line_items(transactions: DataFrame) -> DataFrame:
     order header attached. ``order_datetime`` keeps the RAW ISO string (the
     output contract) alongside a parsed timestamp for ordering. The
     reference's full-row ``dropDuplicates()`` (:398) is reproduced on the
-    line-item grain. Checkpointed: the allocator and the order headers both
-    consume it, and each would otherwise rescan and re-explode the JSON."""
+    line-item grain. Checkpointed although the allocator is its only
+    consumer: a same-session A/B without the checkpoint was no faster."""
     return (
         transactions.na.drop()  # P5, reference :343
         .select(
@@ -100,9 +104,9 @@ def allocate_inventory(line_items: DataFrame, products: DataFrame) -> DataFrame:
     stock + unit price attached via broadcast join (J1, reference :388-390).
     Total order: (order_ts, order_id) — chronological, ties broken by
     order_id; equivalent to the reference's day-loop + within-day
-    chronological scan wherever timestamps are unique. Checkpointed: all
-    four outputs and the forecast read the allocation, so the Python
-    allocator runs once, not once per consumer."""
+    chronological scan wherever timestamps are unique. Lines keep their
+    order HEADER. Checkpointed: all four outputs read the allocation, so
+    the Python allocator runs once, not once per consumer."""
     dim = products.select(
         "product_id",
         F.col("stock").cast("double").alias("stock"),
@@ -116,7 +120,7 @@ def allocate_inventory(line_items: DataFrame, products: DataFrame) -> DataFrame:
         qty_col="quantity",
         stock_col="stock",
         unit_price_col="unit_price",
-        out_keys=["order_id", "product_id", "unit_price"],
+        out_keys=[*HEADER, "product_id", "unit_price"],
     ).localCheckpoint()
 
 
@@ -125,35 +129,36 @@ def build_final_outputs(
 ) -> CandyOutputs:
     """Final orders / order_line_items / products_updated / daily_summary
     (reference _build_final_data :466-515, save_updated_inventory :574-582,
-    create_daily_summary :517-572), all numeric."""
+    create_daily_summary :517-572), all numeric. ``orders`` and
+    ``daily_summary`` share ONE per-order aggregate over the allocation
+    (which carries the headers, so ``line_items`` goes unused); the daily
+    series is checkpointed for its CSV sink and the forecast."""
     order_line_items = allocated.select(
         "order_id",
         "product_id",
         F.col("fulfilled_qty").cast("int").alias("quantity"),
         "unit_price",
-        F.round(F.col("line_total"), 2).alias("line_total"),
+        "line_total",
     )
 
-    # A2: per-order totals; num_items counts lines INCLUDING cancelled ones
-    # (reference counts rows, :490-493 — a deliberate parity quirk).
-    order_summary = order_line_items.groupBy("order_id").agg(
-        F.round(F.sum("line_total"), 2).alias("total_amount"),
-        F.count("product_id").alias("num_items"),
-    )
-
-    headers = line_items.select(
-        "order_id", "order_datetime", "order_ts", "customer_id"
-    ).distinct()
-    orders = (
-        headers.join(order_summary, "order_id", "left")
-        # na.drop (reference :508): orders whose items were all null-qty have
-        # no line items → null total_amount → dropped (10,000 → 9,846).
-        .na.drop()
-        .select(
-            "order_id", "order_datetime", "order_ts", "customer_id",
-            "total_amount", "num_items",
+    # A2 + J4-J6: exact decimal sums of the 2-dp line totals and line
+    # profits per order header. num_items counts lines INCLUDING cancelled
+    # ones (reference counts rows, :490-493 — a deliberate parity quirk).
+    sum_cents = lambda c: F.sum(F.round(c, 2).cast("decimal(12,2)"))  # noqa: E731
+    cost_dim = F.broadcast(products.select("product_id", "cost_to_make"))
+    per_order = (
+        allocated.join(cost_dim, "product_id", "left")
+        .groupBy(*HEADER)
+        .agg(
+            sum_cents(F.col("line_total")).alias("total_amount"),
+            F.count("product_id").alias("num_items"),
+            sum_cents(F.col("line_total") - F.col("fulfilled_qty") * F.col("cost_to_make"))
+            .alias("profit"),
         )
+        # na.drop (reference :508) over the orders columns only, not profit
+        .na.drop(subset=[*HEADER, "total_amount", "num_items"])
     )
+    orders = per_order.select(*HEADER, F.col("total_amount").cast("double"), "num_items")
 
     # J2 as ONE agg + ONE join (not 10 chained outer joins, §4.2).
     sold = allocated.groupBy("product_id").agg(
@@ -170,29 +175,17 @@ def build_final_outputs(
         )
     )
 
-    # Daily summary (J4/J5/J6 + A3/A4, reference :517-572): per-line profit
-    # against cost_to_make, day bucketing from the order timestamp.
-    cost_dim = products.select("product_id", "cost_to_make")
-    with_profit = order_line_items.join(F.broadcast(cost_dim), "product_id", "left").withColumn(
-        "line_profit",
-        F.round(F.col("line_total") - F.col("quantity") * F.col("cost_to_make"), 2),
-    )
-    order_dates = orders.select(
-        "order_id", F.to_date("order_ts").alias("date")
-    ).distinct()
-    daily_orders = order_dates.groupBy("date").agg(
-        F.countDistinct("order_id").alias("num_orders")
-    )
-    daily_money = (
-        with_profit.join(order_dates, "order_id", "left")
-        .groupBy("date")
+    # A3/A4: one row per order, so the row count is num_orders; the exact
+    # sums round once, to double. Unordered: the sink and the forecast sort.
+    daily_summary = (
+        per_order.groupBy(F.to_date("order_ts").alias("date"))
         .agg(
-            F.round(F.sum("line_total"), 2).alias("total_sales"),
-            F.round(F.sum("line_profit"), 2).alias("total_profit"),
+            F.count(F.lit(1)).alias("num_orders"),
+            F.sum("total_amount").cast("double").alias("total_sales"),
+            F.sum("profit").cast("double").alias("total_profit"),
         )
+        .localCheckpoint()
     )
-    # unordered: the sink and the forecast sort the daily rows themselves
-    daily_summary = daily_orders.join(daily_money, "date", "inner")
 
     return CandyOutputs(
         orders=orders,

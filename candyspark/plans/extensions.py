@@ -2114,28 +2114,34 @@ def q_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     text mangled by either roundtrip breaks the hash. JSONL rather than
     the reference's multiLine arrays because JSONL splits by line at scale
     (a multiLine array file is one task regardless of size — SURVEY.md
-    §2.1 S2)."""
+    §2.1 S2). Both dirs are scoped to the call: the small result is
+    materialized with ``localCheckpoint()`` before they are removed."""
     from candyspark.sources.readers import load_jsonl, load_orc
     from candyspark.sources.sinks import save_jsonl, save_orc
 
     d = load_table(spark, sf_dir, "documents")
     orc_dir = tempfile.mkdtemp(prefix="candyspark_orc_")
-    save_orc(d, orc_dir)
-    via_orc = load_orc(spark, orc_dir)
     jsonl_dir = tempfile.mkdtemp(prefix="candyspark_jsonl_")
-    save_jsonl(via_orc, jsonl_dir)
-    back = load_jsonl(spark, jsonl_dir, schema=via_orc.schema)
-    return (
-        back.groupBy("lang", "source")
-        .agg(
-            F.count(F.lit(1)).alias("num_docs"),
-            F.sum("n_chars").alias("total_chars"),
-            F.sum(F.length("text")).alias("total_text_len"),
-            F.min("doc_id").alias("min_doc_id"),
-            F.max("doc_id").alias("max_doc_id"),
+    try:
+        save_orc(d, orc_dir)
+        via_orc = load_orc(spark, orc_dir)
+        save_jsonl(via_orc, jsonl_dir)
+        back = load_jsonl(spark, jsonl_dir, schema=via_orc.schema)
+        return (
+            back.groupBy("lang", "source")
+            .agg(
+                F.count(F.lit(1)).alias("num_docs"),
+                F.sum("n_chars").alias("total_chars"),
+                F.sum(F.length("text")).alias("total_text_len"),
+                F.min("doc_id").alias("min_doc_id"),
+                F.max("doc_id").alias("max_doc_id"),
+            )
+            .orderBy("lang", "source")
+            .localCheckpoint()
         )
-        .orderBy("lang", "source")
-    )
+    finally:
+        shutil.rmtree(orc_dir, ignore_errors=True)
+        shutil.rmtree(jsonl_dir, ignore_errors=True)
 
 
 FORMAT_ROUNDTRIP_SQL = """

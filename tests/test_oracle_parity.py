@@ -30,7 +30,7 @@ def oracle():
 
 def _debris(spark):
     """Scratch dirs under the temp root and session tables: what a
-    streaming drain could leave behind."""
+    streaming drain (or a format roundtrip, dirs only) could leave behind."""
     dirs = set(glob.glob(os.path.join(tempfile.gettempdir(), "candyspark_*")))
     return dirs, {t.name for t in spark.catalog.listTables()}
 
@@ -39,13 +39,15 @@ def _debris(spark):
 def test_query_matches_oracle(spark, oracle, name):
     spec = REGISTRY[name]
     drains = name.startswith("streaming_")
-    if drains:
+    lands = drains or name == "format_roundtrip"
+    if lands:
         dirs_before, tables_before = _debris(spark)
     spark_pdf = spec.fn(spark, SF_DIR).toPandas()
-    if drains:
+    if lands:
         dirs, tables = _debris(spark)
         new_dirs = dirs - dirs_before
         assert not new_dirs, f"{name}: leaked temp dirs {sorted(new_dirs)}"
+    if drains:
         assert tables <= tables_before, (
             f"{name}: leaked session tables {sorted(tables - tables_before)}"
         )
