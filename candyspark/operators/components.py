@@ -29,12 +29,15 @@ Scale design:
   mistake, SURVEY.md §4.2, made exponential).
 - The convergence check launches no job of its own: an `observe()` metric
   counts the CHANGED labels while the checkpoint job materializes the
-  round, so each round costs exactly one driver action.
+  round, so each round costs exactly one driver action
+  (``checkpoint_observed``, shared with the LPA and k-core loops).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from typing import Any
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -43,6 +46,17 @@ def symmetrize(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFram
     fwd = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     rev = edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
     return fwd.unionByName(rev).filter(F.col("a") != F.col("b")).distinct()
+
+
+def checkpoint_observed(df: DataFrame, metric: Column) -> tuple[DataFrame, Any]:
+    """Eagerly ``localCheckpoint`` ``df`` and return it with the value of
+    the aggregate ``metric`` over its rows, computed by the checkpoint job
+    itself through ``observe()`` — a convergence test costs no job of its
+    own. ``df`` must reach the plan once: observing a frame that feeds two
+    branches of one plan failed the job (an AssertionError in toPyRow)."""
+    obs = Observation()
+    out = df.observe(obs, metric.alias("n")).localCheckpoint(eager=True)
+    return out, obs.get["n"]
 
 
 def connected_components(
@@ -69,24 +83,18 @@ def connected_components(
             .groupBy(F.col("a").alias("node"))
             .agg(F.min("component").alias("nbr_component"))
         )
-        changed = Observation()
-        labels = (
-            labels.join(nbr_min, "node", "left")
-            .select(
+        labels, changed = checkpoint_observed(
+            labels.join(nbr_min, "node", "left").select(
                 "node",
                 F.least(
                     F.col("component"), F.coalesce("nbr_component", "component")
                 ).alias("component"),
                 F.col("component").alias("prev"),
-            )
-            .observe(
-                changed,
-                F.sum((F.col("component") < F.col("prev")).cast("long")).alias("n"),
-            )
-            .localCheckpoint(eager=True)
-            .drop("prev")
+            ),
+            F.sum((F.col("component") < F.col("prev")).cast("long")),
         )
-        if not changed.get["n"]:
+        labels = labels.drop("prev")
+        if not changed:
             return labels
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 

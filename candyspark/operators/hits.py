@@ -41,29 +41,13 @@ _SNAP = "decimal(24,14)"
 
 
 def _l1_normalize(scores: DataFrame, col: str) -> DataFrame:
-    total = scores.agg(F.sum(F.col(col).cast(_SNAP)).alias("tot"))
-    return (
-        scores.crossJoin(F.broadcast(total))
-        .select(
-            scores.columns[0],
-            F.round((F.col(col).cast(_SNAP) / F.col("tot")).cast(_SNAP), 14)
-            .cast("double")
-            .alias(col),
-        )
-    )
-
-
-def _l1_normalize_window(scores: DataFrame, col: str) -> DataFrame:
-    """`_l1_normalize` with the total as an UNPARTITIONED window sum instead
-    of a separate aggregate + crossJoin — bit-identical values (the window
-    sum is the same exact decimal sum over the same casts; the division /
-    round ladder is unchanged) but ONE plan, so the per-round normalize
-    rides the round's checkpoint/broadcast job instead of costing its own
-    total-aggregate job (round-7, guide §2.4 — measured 2 jobs/round fewer
-    over 8 rounds). The single-partition window pass is over the NODE-grain
-    score relation, which the broadcast_scores=True contract already
-    declares broadcast-scale; the keyed (web-scale) path keeps
-    `_l1_normalize`."""
+    """L1-normalize ``col`` by its exact decimal total. The total is an
+    UNPARTITIONED window sum, so the per-round normalize rides the round's
+    checkpoint/broadcast job; a separate total aggregate would cost a job
+    of its own (round-7, guide §2.4 — measured 2 jobs/round over 8
+    rounds). The single-partition window pass is over the NODE-grain score
+    relation, which is broadcast-scale by the loop's own design (see
+    ``hits``)."""
     w = Window.partitionBy()
     return scores.select(
         scores.columns[0],
@@ -81,7 +65,6 @@ def _l1_normalize_window(scores: DataFrame, col: str) -> DataFrame:
 def hits(
     edges: DataFrame,
     rounds: int = 8,
-    broadcast_scores: bool = True,
     prepared: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """HITS over a directed edge relation (columns ``src``, ``dst``).
@@ -93,19 +76,12 @@ def hits(
     appear — on the purchase bipartite graph every listed node has ≥1
     edge by construction).
 
-    ``broadcast_scores``: the score vector has one row per NODE while the
-    join runs over EDGES — on bipartite retail graphs (customers × parts)
-    nodes ≪ edges, so broadcasting the score side turns each half-round's
-    join map-side and leaves only the partial-aggregated (node, score)
-    combine on the wire; the edge relation is never re-shuffled. Flip off
-    for graphs whose node set itself exceeds broadcast scale (web graphs)
-    — the loop then falls back to keyed shuffle joins.
+    The score vector has one row per NODE while the join runs over EDGES
+    — on bipartite retail graphs (customers × parts) nodes ≪ edges, so
+    the score side is broadcast: each half-round's join runs map-side and
+    only the partial-aggregated (node, score) combine goes on the wire;
+    the edge relation is never re-shuffled.
     """
-    bcast = F.broadcast if broadcast_scores else (lambda df: df)
-    # window normalize fuses the L1 total into the round's one plan; the
-    # keyed path keeps the aggregate+crossJoin form (its node set is by
-    # contract too big for a single-partition window)
-    norm = _l1_normalize_window if broadcast_scores else _l1_normalize
     # prepared=True: the caller passes an already-DISTINCT, already-
     # MATERIALIZED (checkpointed) (src, dst) relation — so a caller that
     # also aggregates over the same edge set (q_hits' buyers count) shares
@@ -116,13 +92,13 @@ def hits(
         if prepared
         else edges.select("src", "dst").distinct().localCheckpoint()
     )
-    hubs = norm(
+    hubs = _l1_normalize(
         e.select("src").distinct().withColumn("hub", F.lit(1.0)), "hub"
     ).localCheckpoint()
     raw_a = None
     for r in range(rounds):
         raw_a = (
-            e.join(bcast(hubs), "src")
+            e.join(F.broadcast(hubs), "src")
             .groupBy("dst")
             .agg(F.sum(F.col("hub").cast(_SNAP)).alias("auth"))
         )
@@ -141,11 +117,11 @@ def hits(
         # normalize over the checkpointed node-sized relation is free by
         # comparison, and the next round's broadcast collects through it.
         raw_h = (
-            e.join(bcast(raw_a), "dst")
+            e.join(F.broadcast(raw_a), "dst")
             .groupBy("src")
             .agg(F.sum(F.col("auth").cast(_SNAP)).alias("hub"))
         )
         if r < rounds - 1:
             raw_h = raw_h.localCheckpoint(eager=True)
-        hubs = norm(raw_h, "hub")
-    return hubs, norm(raw_a, "auth")
+        hubs = _l1_normalize(raw_h, "hub")
+    return hubs, _l1_normalize(raw_a, "auth")

@@ -24,9 +24,11 @@ Scale design (the connected-components discipline, operators/components.py):
   no per-node state beyond (node, label).
 - The plurality argmax is ``min(struct(-cnt, label))`` — one aggregate,
   no window over a node's full vote list.
-- ``localCheckpoint(eager=True)`` per round truncates lineage; the
-  convergence check is one driver count on the CHANGED set only and
-  doubles as the materializing action.
+- ``localCheckpoint(eager=True)`` per round truncates lineage, and the
+  convergence check rides that checkpoint job: the self-vote is tagged, so
+  the vote aggregate also yields each node's old label, and an
+  ``observe()`` metric counts the CHANGED labels (``checkpoint_observed``,
+  the connected-components pattern) — one driver action per round.
 - Rounds are bounded (default 5): LPA converges in a handful of sweeps on
   modular graphs, and a fixed bound keeps worst-case behavior predictable
   at 100 TB (the components max_iter argument, same reasoning).
@@ -37,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from candyspark.operators.components import symmetrize
+from candyspark.operators.components import checkpoint_observed, symmetrize
 
 
 def label_propagation(
@@ -56,15 +58,17 @@ def label_propagation(
         .withColumn("label", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    for rnd in range(max_rounds):
+    for _ in range(max_rounds):
         neighbor_votes = und.join(
             labels.select(F.col("node").alias("b"), "label"), "b"
-        ).select(F.col("a").alias("node"), "label")
-        votes = neighbor_votes.unionByName(labels.select("node", "label"))
-        counted = votes.groupBy("node", "label").agg(
-            F.count(F.lit(1)).alias("cnt")
+        ).select(F.col("a").alias("node"), "label", F.lit(False).alias("own"))
+        votes = neighbor_votes.unionByName(
+            labels.select("node", "label", F.lit(True).alias("own"))
         )
-        new_labels = (
+        counted = votes.groupBy("node", "label").agg(
+            F.count(F.lit(1)).alias("cnt"), F.max("own").alias("own")
+        )
+        labels, changed = checkpoint_observed(
             counted.groupBy("node")
             .agg(
                 F.min(
@@ -72,23 +76,13 @@ def label_propagation(
                         (-F.col("cnt")).alias("neg_cnt"),
                         F.col("label").alias("l"),
                     )
-                ).alias("m")
+                ).alias("m"),
+                F.max(F.when(F.col("own"), F.col("label"))).alias("old"),
             )
-            .select("node", F.col("m.l").alias("label"))
-            .localCheckpoint(eager=True)
+            .select("node", F.col("m.l").alias("label"), "old"),
+            F.sum((F.col("label") != F.col("old")).cast("long")),
         )
-        last_round = rnd == max_rounds - 1
-        if not last_round:
-            # convergence probe (node-sized, reads two checkpoints); the
-            # final round skips it — its answer could not save any work
-            changed = (
-                new_labels.join(
-                    labels.select("node", F.col("label").alias("old")), "node"
-                )
-                .filter(F.col("label") != F.col("old"))
-                .count()
-            )
-        labels = new_labels
-        if not last_round and changed == 0:
+        labels = labels.drop("old")
+        if not changed:
             break
     return labels

@@ -4,10 +4,17 @@ counterpart (extension surface, SURVEY.md §2.13): the use case here is
 ranking nodes of a similarity / co-occurrence graph (e.g. "most central
 products" over market-basket edges, or hub documents in a near-dup graph).
 
+``power_iterate`` is the one power-iteration kernel of the graph family:
+``pagerank`` (and through it TextRank, plans/corpus.py), personalized
+PageRank and Katz centrality (plans/graph.py) differ only in the
+per-edge contribution and the per-node update they pass it.
+
 Scale design mirrors connected_components:
-- Each iteration is ONE shuffle: per-edge contributions grouped by
-  destination. The degree attach is pre-joined once OUTSIDE the loop, so
-  the loop body re-shuffles only (node, rank).
+- The node-grain state is BROADCAST into the edge join each round, so the
+  edge relation is never re-shuffled; the round's one keyed shuffle is the
+  per-destination sum of the contributions, itself broadcast onto the node
+  set. Edge attributes (out-degree, weights) are pre-joined once OUTSIDE
+  the loop.
 - ``localCheckpoint(eager=True)`` per round truncates lineage (without it
   round N replays rounds 1..N-1).
 - Fixed iteration count, no driver-side convergence scan — at 100 TB the
@@ -29,12 +36,48 @@ simplification is exact there.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
 def _snap12(c):
     return F.round(c.cast("decimal(28,14)"), 12).cast("double")
+
+
+def power_iterate(
+    edges: DataFrame,
+    nodes: DataFrame,
+    state: DataFrame,
+    contrib: Column,
+    update: Column,
+    rounds: int,
+) -> DataFrame:
+    """``rounds`` synchronous rounds of ``state' = update(Σ_{s→t} contrib)``.
+
+    ``edges`` has columns ``s``, ``t`` (plus any edge attributes);
+    ``nodes`` and ``state`` are keyed by ``node``. ``contrib`` is
+    evaluated on each edge joined with the state of its source ``s``;
+    ``update`` is evaluated on ``nodes`` left-joined with ``mass``, the
+    summed contributions into each node (NULL for a node with no in-edge),
+    and must be aliased to the state column. Each round ends in one eager
+    checkpoint; returns the last state ``(node, <state>)``.
+    """
+    for _ in range(rounds):
+        # state and mass are node-grain (≪ edges); the explicit hints
+        # matter: a checkpointed round output is a fresh LogicalRDD whose
+        # default size estimate blocks the automatic broadcast, which would
+        # re-shuffle the edge relation every round
+        mass = (
+            edges.join(F.broadcast(state), edges["s"] == state["node"])
+            .groupBy(F.col("t").alias("node"))
+            .agg(F.sum(contrib).alias("mass"))
+        )
+        state = (
+            nodes.join(F.broadcast(mass), "node", "left")
+            .select("node", update)
+            .localCheckpoint(eager=True)
+        )
+    return state
 
 
 def pagerank(
@@ -43,10 +86,20 @@ def pagerank(
     dst: str = "dst",
     damping: float = 0.85,
     iterations: int = 8,
+    weight: Column | None = None,
 ) -> DataFrame:
-    """Rank every node of the directed edge list. Returns ``(node, rank)``."""
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-    deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("out_deg"))
+    """Rank every node of the directed edge list. Returns ``(node, rank)``.
+
+    ``weight`` (an expression over ``edges``) makes the walk proportional
+    to edge weight — TextRank's co-occurrence counts; unweighted edges
+    count 1 each.
+    """
+    e = edges.select(
+        F.col(src).alias("s"),
+        F.col(dst).alias("t"),
+        (F.lit(1) if weight is None else weight).alias("w"),
+    )
+    deg = e.groupBy("s").agg(F.sum("w").alias("out_deg"))
     # degree rides on the edges once; the loop never re-joins it
     ew = e.join(deg, "s").localCheckpoint(eager=True)
     nodes = (
@@ -59,26 +112,12 @@ def pagerank(
     if n == 0:  # empty graph: stable (node, rank) schema, zero rows
         return nodes.withColumn("rank", F.lit(0.0))
     base = (1.0 - damping) / n
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for _ in range(iterations):
-        contribs = (
-            ew.join(ranks, ew["s"] == ranks["node"])
-            .select(
-                F.col("t").alias("node"),
-                (F.col("rank") / F.col("out_deg")).cast("decimal(24,14)").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("in_mass"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                _snap12(
-                    F.lit(base)
-                    + F.lit(damping) * F.coalesce(F.col("in_mass").cast("double"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks
+    mass = F.coalesce(F.col("mass").cast("double"), F.lit(0.0))
+    return power_iterate(
+        ew,
+        nodes,
+        nodes.withColumn("rank", F.lit(1.0 / n)),
+        (F.col("rank") * F.col("w") / F.col("out_deg")).cast("decimal(24,14)"),
+        _snap12(F.lit(base) + F.lit(damping) * mass).alias("rank"),
+        iterations,
+    )

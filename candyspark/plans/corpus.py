@@ -2860,16 +2860,18 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbors are — a term co-occurring with other central terms wins
     even at moderate frequency).
 
-    Determinism is the pagerank discipline verbatim (operators/pagerank):
+    The walk IS operators/pagerank's ``pagerank`` with ``weight=w``:
     per-edge contributions rank·w/strength snap to DECIMAL(24,14) before
     the sum, rank updates snap at 12 dp, the walk is 6 fixed rounds, and
     the oracle below unrolls them (the pagerank_parts/LPA precedent).
 
     Scale: the pair explode is one tokenize pass (bigrams ≈ |tokens|),
     collapsed map-side into the VOCAB²-bounded (and threshold-pruned)
-    edge relation; each round is one keyed shuffle of the node-sized rank
-    vector with the weighted degree riding on the checkpointed edges.
+    edge relation; each round broadcasts the node-sized rank vector into
+    the checkpointed edges (weighted degree riding on them) and shuffles
+    only the per-term contribution sums.
     """
+    from candyspark.operators.pagerank import pagerank
     from candyspark.operators.text import tokens
     from candyspark.sources.readers import fan_out
 
@@ -2895,45 +2897,7 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = edges.select(F.col("u").alias("s"), F.col("v").alias("t"), "w").unionByName(
         edges.select(F.col("v").alias("s"), F.col("u").alias("t"), "w")
     )
-    strength = und.groupBy("s").agg(F.sum("w").alias("strength"))
-    ew = und.join(strength, "s").localCheckpoint(eager=True)
-    nodes = und.select(F.col("s").alias("node")).distinct().localCheckpoint(eager=True)
-    n = nodes.count()
-    if n == 0:  # empty corpus/graph: stable (term, rank) schema, zero rows
-        return nodes.select(
-            F.col("node").alias("term"), F.lit(0.0).alias("rank")
-        )
-    base = (1.0 - 0.85) / n
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for _ in range(6):
-        contribs = (
-            ew.join(ranks, ew["s"] == ranks["node"])
-            .select(
-                F.col("t").alias("node"),
-                (F.col("rank") * F.col("w") / F.col("strength"))
-                .cast("decimal(24,14)")
-                .alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("in_mass"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                F.round(
-                    (
-                        F.lit(base)
-                        + F.lit(0.85)
-                        * F.coalesce(F.col("in_mass").cast("double"), F.lit(0.0))
-                    ).cast("decimal(28,14)"),
-                    12,
-                )
-                .cast("double")
-                .alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
+    ranks = pagerank(und, "s", "t", iterations=6, weight=F.col("w"))
     return (
         ranks.orderBy(F.desc("rank"), "node")
         .limit(25)

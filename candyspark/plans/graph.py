@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from candyspark.operators import dedup as D
-from candyspark.operators.components import dedup_clusters
+from candyspark.operators.components import checkpoint_observed, dedup_clusters
 from candyspark.plans import QuerySpec
 from candyspark.plans.extensions import DEDUP_MINHASH_SQL
 from candyspark.sources.readers import load_table
@@ -540,16 +540,17 @@ def kcore_decompose(
     2-core can't be in any triangle; outside the k-core it can't be in
     any (k+1)-clique).
 
-    Iteration discipline (the components/pagerank pattern): each round is
+    Iteration discipline (the components pattern): each round is
     degree-aggregate → semi-join both endpoints → localCheckpoint (flat
-    lineage); the driver reads ONE scalar (the surviving edge count) per
-    round and stops at the fixpoint — peeling converges in ≤ rounds the
+    lineage); the surviving edge count is observed on that checkpoint job
+    (``checkpoint_observed``, no count job of its own) and the loop stops
+    at the fixpoint — peeling converges in ≤ rounds the
     depth of the degeneracy ordering, and ``max_rounds`` bounds the
     pathological chain. Rows-only driver check (iterative); fuzzed
     against a single-threaded peeling reference in test_components.
     """
-    und = edges.select("u", "v").localCheckpoint()
-    prev_edges = und.count()
+    n_edges = F.count(F.lit(1))
+    und, prev_edges = checkpoint_observed(edges.select("u", "v"), n_edges)
     for _ in range(max_rounds):
         deg = (
             und.select(F.col("u").alias("x"))
@@ -558,13 +559,13 @@ def kcore_decompose(
             .agg(F.count(F.lit(1)).alias("deg"))
         )
         keep = deg.filter(F.col("deg") >= k).select("x")
-        und = (
+        # observe the result, never ``deg``: it feeds both semi-joins
+        und, n = checkpoint_observed(
             und.join(keep.withColumnRenamed("x", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("x", "v"), "v", "left_semi")
-            .select("u", "v")
-            .localCheckpoint()
+            .select("u", "v"),
+            n_edges,
         )
-        n = und.count()
         if n == prev_edges:
             break
         prev_edges = n
@@ -1310,12 +1311,14 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     CONSTRUCTION, not empirically. The one float op is the final
     rank = r12/10¹² display conversion.
 
-    Scale: identical loop shape to operators/pagerank.py — ONE keyed
-    shuffle per round over (node, r12), degree pre-joined outside the
-    loop, per-round eager localCheckpoint truncating lineage; int64
+    Scale: the pagerank kernel (operators/pagerank.power_iterate) — the
+    node-grain (node, r12) state broadcast into the edge join, ONE keyed
+    shuffle of the contribution sums per round, degree pre-joined outside
+    the loop, per-round eager localCheckpoint truncating lineage; int64
     headroom is ample (contribution sums ≤ 10¹⁴, damping product
     ≤ 1.7·10¹⁶)."""
     from candyspark.operators.components import symmetrize
+    from candyspark.operators.pagerank import power_iterate
 
     edges = symmetrize(_copurchase_edges(spark, sf_dir), "u", "v")
     e = edges.select(F.col("a").alias("s"), F.col("b").alias("t"))
@@ -1336,36 +1339,23 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("node", F.coalesce(F.col("is_seed"), F.lit(0)).alias("is_seed"))
         .localCheckpoint(eager=True)
     )
-    ranks = nodes_p.select(
-        "node",
-        F.when(F.col("is_seed") == 1, F.lit(init12))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("r12"),
+    ranks = power_iterate(
+        ew,
+        nodes_p,
+        nodes_p.select(
+            "node",
+            F.when(F.col("is_seed") == 1, F.lit(init12))
+            .otherwise(F.lit(0))
+            .cast("long")
+            .alias("r12"),
+        ),
+        F.expr("(r12 * 200 + out_deg) div (2 * out_deg)"),
+        (
+            F.when(F.col("is_seed") == 1, F.lit(base12)).otherwise(F.lit(0))
+            + F.expr("(85 * coalesce(mass, 0L) * 2 + 10000) div 20000")
+        ).cast("long").alias("r12"),
+        8,
     )
-    for _ in range(8):
-        contribs = (
-            ew.join(ranks, ew["s"] == ranks["node"])
-            .select(
-                F.col("t").alias("node"),
-                F.expr("(r12 * 200 + out_deg) div (2 * out_deg)").alias("c14"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c14").alias("m14"))
-        )
-        ranks = (
-            nodes_p.join(contribs, "node", "left")
-            .select(
-                "node",
-                (
-                    F.when(F.col("is_seed") == 1, F.lit(base12)).otherwise(F.lit(0))
-                    + F.expr(
-                        "(85 * coalesce(m14, 0L) * 2 + 10000) div 20000"
-                    )
-                ).cast("long").alias("r12"),
-            )
-            .localCheckpoint(eager=True)
-        )
     return (
         ranks.select(
             F.col("node").alias("part"),
@@ -1467,8 +1457,9 @@ def q_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaves the truncated tail under the 12-dp floor.
 
     At 100 TB: the deduped edge set reduces per order (bounded
-    pairs-per-order), is checkpointed once, and each round is one keyed
-    join + aggregate - the pagerank plan shape exactly.
+    pairs-per-order), is checkpointed once, and each round is the
+    pagerank kernel (operators/pagerank.power_iterate): the node-grain
+    score broadcast into the edge join, one keyed aggregate.
     """
     # round-7: the edge set comes from the _copurchase_edges collect_set
     # discipline at min_orders=1 (one map-side-combined shuffle + in-map
@@ -1491,44 +1482,31 @@ def q_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once the edge relation naturally exceeds defaultParallelism — and the
     # re-checkpoint pins the round-robin layout so the rounds reuse it
     # instead of re-shuffling per round.
+    from candyspark.operators.pagerank import power_iterate
     from candyspark.sources.readers import fan_out
 
     fanned = fan_out(edges)
     if fanned is not edges:
         edges = fanned.localCheckpoint()
-    # node set checkpointed ONCE — the per-round zero-union below otherwise
+    # node set checkpointed ONCE — the per-round left join below otherwise
     # re-runs this distinct every round (round-7)
-    nodes = edges.select(F.col("a").alias("v")).distinct().localCheckpoint()
+    nodes = edges.select(F.col("a").alias("node")).distinct().localCheckpoint()
     one12 = 10**12
-    x = nodes.select("v", F.lit(one12).cast("long").alias("x12"))
-    for _ in range(_KATZ_ROUNDS):
-        # the score vector is node-grain (bounded, ≪ edges) — broadcast it
-        # explicitly like the pagerank/HITS loops do; a checkpointed round
-        # output is a fresh LogicalRDD whose default size estimate blocks
-        # the automatic broadcast, shuffling the edge relation every round
-        # (round-7: this was ~+0.6 s/round)
-        contrib = (
-            edges.join(F.broadcast(x), edges["b"] == x["v"])
-            .groupBy("a")
-            .agg(F.sum("x12").cast("long").alias("nbr"))
-        )
-        x = (
-            nodes.join(F.broadcast(contrib), nodes["v"] == contrib["a"], "left")
-            .select(
-                "v",
-                (
-                    F.lit(one12)
-                    + F.expr("(coalesce(nbr, 0L) * 2 + 200) div 400")
-                )
-                .cast("long")
-                .alias("x12"),
-            )
-            .localCheckpoint()
-        )
-    w = Window.orderBy(F.desc("x12"), "v")
+    # x_a' sums x over a's neighbours b: the walk runs b -> a
+    x = power_iterate(
+        edges.select(F.col("b").alias("s"), F.col("a").alias("t")),
+        nodes,
+        nodes.select("node", F.lit(one12).cast("long").alias("x12")),
+        F.col("x12"),
+        (F.lit(one12) + F.expr("(coalesce(mass, 0L) * 2 + 200) div 400"))
+        .cast("long")
+        .alias("x12"),
+        _KATZ_ROUNDS,
+    )
+    w = Window.orderBy(F.desc("x12"), "node")
     return (
         x.select(
-            F.col("v").alias("partkey"),
+            F.col("node").alias("partkey"),
             (F.col("x12").cast("double") / F.lit(1e12)).alias("katz"),
             F.row_number().over(w).cast("long").alias("rank"),
         )

@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 
 from candyspark.functions.numeric import money, rate, round2, snap_round
 from candyspark.plans import QuerySpec
+from candyspark.session import remove_at_exit
 from candyspark.sources.readers import load_table
 
 # Shared decimal-mean fragment (see plans/relational.py pricing_summary):
@@ -1201,6 +1202,7 @@ def q_partitioned_scan_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load_table(spark, sf_dir, "orders")
     out = tempfile.mkdtemp(prefix="candyspark_part_orders_")
+    remove_at_exit(out)  # the returned frame scans it lazily
     o.withColumn(
         "order_month", F.date_format("o_orderdate", "yyyy-MM")
     ).write.mode("overwrite").partitionBy("order_month").parquet(out)

@@ -18,7 +18,9 @@ it is not baked in because it is deployment, not engine, concern.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import zipfile
 from collections.abc import Iterator
@@ -106,6 +108,22 @@ def ship_package(spark: SparkSession) -> None:
                     zf.write(full, rel)
     sc.addPyFile(zip_path)
     sc._candyspark_shipped = True
+    # not earlier: executors may fetch the zip until the process exits
+    remove_at_exit(zip_path)
+
+
+def remove_at_exit(path: str) -> None:
+    """Delete the temp file or dir ``path`` when the interpreter exits —
+    for files that a lazily evaluated plan or an executor may still read
+    for as long as the session lives."""
+
+    def _remove() -> None:
+        if os.path.isdir(path):
+            shutil.rmtree(path, ignore_errors=True)
+        elif os.path.exists(path):
+            os.remove(path)
+
+    atexit.register(_remove)
 
 
 @contextmanager

@@ -60,3 +60,16 @@ def test_no_inline_md5_prefix_hash_or_label_reset():
             offenders.append(f"{rel}:{line}: job-description reset "
                              "(use session.job_description)")
     assert not offenders, "\n".join(offenders)
+
+
+def test_rank_snap_lives_in_the_pagerank_kernel_only():
+    # the 12-dp rank snap is the power-iteration kernel's; a second copy
+    # means a loop that bypasses operators.pagerank
+    home = PKG / "operators" / "pagerank.py"
+    offenders = [
+        str(path.relative_to(PKG.parent))
+        for path in sorted(PKG.rglob("*.py"))
+        if path != home and "decimal(28,14)" in path.read_text()
+    ]
+    assert "decimal(28,14)" in home.read_text()
+    assert not offenders, offenders

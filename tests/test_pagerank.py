@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from candyspark.operators.components import symmetrize
 from candyspark.operators.pagerank import pagerank
@@ -23,18 +24,21 @@ EDGES = [  # two hubs (1, 5) bridged by 3; 6 is a spoke
 ]
 
 
-def numpy_pagerank(edges, d=0.85, iters=8):
+def numpy_pagerank(edges, d=0.85, iters=8, weights=None):
+    """Dense power iteration; ``weights`` (one per edge, default 1) makes
+    the walk proportional to edge weight."""
+    weights = [1.0] * len(edges) if weights is None else weights
     nodes = sorted({a for a, _ in edges} | {b for _, b in edges})
     idx = {n: i for i, n in enumerate(nodes)}
     n = len(nodes)
     out_deg = np.zeros(n)
-    for a, _ in edges:
-        out_deg[idx[a]] += 1
+    for (a, _), w in zip(edges, weights):
+        out_deg[idx[a]] += w
     r = np.full(n, 1.0 / n)
     for _ in range(iters):
         nxt = np.full(n, (1.0 - d) / n)
-        for a, b in edges:
-            nxt[idx[b]] += d * r[idx[a]] / out_deg[idx[a]]
+        for (a, b), w in zip(edges, weights):
+            nxt[idx[b]] += d * r[idx[a]] * w / out_deg[idx[a]]
         r = nxt
     return {node: r[idx[node]] for node in nodes}
 
@@ -48,6 +52,24 @@ def _run(spark, edges, **kw):
 def test_matches_numpy_power_iteration(spark):
     got = _run(spark, EDGES)
     want = numpy_pagerank(EDGES)
+    assert set(got) == set(want)
+    for node in want:
+        assert got[node] == pytest.approx(want[node], abs=1e-9), node
+
+
+def test_weighted_matches_numpy_power_iteration(spark):
+    # TextRank's path: co-occurrence counts as edge weights
+    weights = [5, 1, 5, 1, 2, 3, 3, 1, 1]
+    df = spark.createDataFrame(
+        [(a, b, w) for (a, b), w in zip(EDGES, weights)],
+        "src bigint, dst bigint, w bigint",
+    )
+    got = {
+        r["node"]: r["rank"]
+        for r in pagerank(df, "src", "dst", weight=F.col("w")).collect()
+    }
+    want = numpy_pagerank(EDGES, weights=weights)
+    assert want != pytest.approx(numpy_pagerank(EDGES), abs=1e-6)
     assert set(got) == set(want)
     for node in want:
         assert got[node] == pytest.approx(want[node], abs=1e-9), node
