@@ -7,7 +7,8 @@ dataset. The fixture runs the pipeline once per module; the tests then pin
 the five CSVs, the executed plans of the outputs, the jobs one pass
 launches and the labels of the sink jobs. Two hand-built inputs pin the
 edge cases: transaction files that hold only ``[]``, and one transaction
-delivered twice under different headers.
+delivered twice under different headers. One test runs the CLI,
+``python -m candyspark --observe``, in a subprocess.
 """
 
 from __future__ import annotations
@@ -17,16 +18,20 @@ import glob
 import importlib.util
 import json
 import os
+import re
+import subprocess
+import sys
 import uuid
 from pathlib import Path
 
 import pytest
 
 from candyspark.forecast import forecast_sales_and_profits
-from candyspark.pipeline import run_pipeline, save_outputs
+from candyspark.pipeline import run_pipeline, run_pipeline_observed, save_outputs
 from candyspark.sources.sinks import save_single_csv
 
-PERFBENCH = Path(__file__).resolve().parents[1] / "perfbench"
+ROOT = Path(__file__).resolve().parents[1]
+PERFBENCH = ROOT / "perfbench"
 ORDERS_PER_DAY = 60  # 600 orders over the ten days: small, still exhausts stock
 
 
@@ -115,9 +120,64 @@ def test_forecast_frame_is_a_local_table_scan(candy_run):
 
 
 def test_one_pass_launches_few_jobs(candy_run):
-    # a pass launches 20 jobs; re-running the finalize lineage per consumer
-    # (a header distinct and joins for orders, daily CSV and forecast) is ~40
-    assert 0 < len(candy_run["pass_jobs"]) <= 24
+    # a pass launches 16 jobs; a separate line-item checkpoint and an eager
+    # daily checkpoint before the sinks were 20, and re-running the finalize
+    # lineage per consumer (a header distinct and joins for orders, daily CSV
+    # and forecast) was ~40
+    assert 0 < len(candy_run["pass_jobs"]) <= 18
+
+
+def _shuffle_map_stages(spark, tag: str) -> int:
+    """Stages of the jobs tagged ``tag`` that ran and wrote shuffle output."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()  # the status store lags the jobs
+    store = jsc.statusStore()
+    stages = {
+        s
+        for j in jsc.statusTracker().getJobIdsForTag(tag)
+        for s in sc.statusTracker().getJobInfo(j).stageIds
+    }
+    ran = [store.lastStageAttempt(s) for s in stages]
+    return sum(st.status().toString() == "COMPLETE" and st.shuffleWriteRecords() > 0 for st in ran)
+
+
+@pytest.mark.parametrize("observed", [False, True], ids=["run_pipeline", "run_pipeline_observed"])
+def test_one_shuffle_from_the_json_scan_to_the_allocator(candy_run, spark, observed):
+    """Building the outputs runs the JSON scan, the dedupe and the allocator
+    as one checkpointed plan: one shuffle map stage (on product_id), also
+    with ``observe()`` on the line items. The per-order aggregate reads
+    ``cost_to_make`` off the allocation, not off a second products scan."""
+    sc = spark.sparkContext
+    tag = f"candy-build-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        if observed:
+            outputs, _obs = run_pipeline_observed(spark, candy_run["data"])
+        else:
+            outputs = run_pipeline(spark, candy_run["data"])
+    finally:
+        sc.removeJobTag(tag)
+    assert _shuffle_map_stages(spark, tag) == 1
+    assert "Scan csv" not in outputs.orders._jdf.queryExecution().executedPlan().toString()
+
+
+def test_cli_observe_matches_reference(candy_run, tmp_path):
+    """``python -m candyspark --observe`` end to end: the five CSVs match
+    the reference and the printed line-item count is the deduplicated one."""
+    out = tmp_path / "out"
+    env = {**os.environ, "PYTHONPATH": str(ROOT), "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    proc = subprocess.run(
+        [sys.executable, "-m", "candyspark", "--observe",
+         "--data-dir", candy_run["data"], "--output-dir", str(out)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    expected = candyref.reference(candy_run["data"])
+    assert candyref.check_outputs(str(out), expected) == []
+    n_line_items = re.search(r"\[metrics\] line_items: .*'n_line_items': (\d+)", proc.stdout)
+    assert n_line_items is not None, proc.stdout
+    assert int(n_line_items.group(1)) == len(expected["order_line_items.csv"])
 
 
 def test_empty_transactions_give_header_only_outputs(spark, tmp_path):
