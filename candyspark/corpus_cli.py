@@ -90,6 +90,7 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> int:
     from pyspark.sql import functions as F
 
     from candyspark.operators import text as X
+    from candyspark.plans.corpus import join_in_order, word_segments
     from candyspark.session import get_spark
     from candyspark.sources.readers import fan_out, load_table
 
@@ -158,25 +159,8 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> int:
         # the boilerplate_audit predicate, APPLIED: same 10-word segment
         # grain as dedup_paragraphs, per-(source, segment) document
         # frequency, 5*df >= n_docs_source AND df >= 3 => strip
-        words = survivors.select(
-            "doc_id",
-            "source",
-            F.posexplode(F.split("text", " ")).alias("pos", "word"),
-        )
-        segs = (
-            words.withColumn("seg_idx", (F.col("pos") / 10).cast("long"))
-            .groupBy("doc_id", "source", "seg_idx")
-            .agg(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("pos", "word"))),
-                        lambda x: x["word"],
-                    ),
-                    " ",
-                ).alias("seg")
-            )
-            .localCheckpoint()  # feeds df relation AND the anti-join
-        )
+        # feeds df relation AND the anti-join
+        segs = word_segments(survivors, "source").localCheckpoint()
         seg_df = segs.groupBy("source", "seg").agg(
             F.countDistinct("doc_id").alias("df")
         )
@@ -191,13 +175,7 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> int:
         kept_segs = segs.join(boiler, ["source", "seg"], "left_anti")
         n_boiler_stripped = segs.count() - kept_segs.count()
         rebuilt = kept_segs.groupBy("doc_id").agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("seg_idx", "seg"))),
-                    lambda x: x["seg"],
-                ),
-                " ",
-            ).alias("new_text")
+            join_in_order("seg_idx", "seg").alias("new_text")
         )
         stripped = (
             survivors.join(rebuilt, "doc_id", "left")

@@ -18,14 +18,11 @@ value comparison). This rebuild:
 
 from __future__ import annotations
 
-import datetime as dt
-
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 try:  # pragma: no cover - optional dependency
@@ -36,69 +33,49 @@ except Exception:  # pragma: no cover
     HAVE_PROPHET = False
 
 
-def _linear_forecast(values: np.ndarray, horizon: int) -> np.ndarray:
-    """OLS linear trend: deterministic fallback (and test anchor)."""
+def _linear(
+    dates: pd.Series, values: np.ndarray, horizon: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """OLS linear trend over the position index: the deterministic default
+    (and test anchor). A 0- or 1-point series predicts itself and
+    continues flat (0 for an empty one)."""
     n = len(values)
-    if n == 0:
-        return np.zeros(horizon)
-    if n == 1:
-        return np.repeat(values[0], horizon)
-    x = np.arange(n, dtype=float)
-    slope, intercept = np.polyfit(x, values.astype(float), 1)
-    future = np.arange(n, n + horizon, dtype=float)
-    return intercept + slope * future
+    if n < 2:
+        return values.copy(), np.full(horizon, values[0] if n else 0.0)
+    x = np.arange(n + horizon, dtype=float)
+    slope, intercept = np.polyfit(x[:n], values, 1)
+    fit = intercept + slope * x
+    return fit[:n], fit[n:]
 
 
-def _prophet_forecast(
+def _seasonal(
     dates: pd.Series, values: np.ndarray, horizon: int
-) -> np.ndarray:  # pragma: no cover - env has no prophet
-    model = Prophet()
-    # Anchored at the TRUE dates (fixing reference src/time_series.py:21).
-    model.fit(pd.DataFrame({"ds": pd.to_datetime(dates), "y": values}))
-    future = model.make_future_dataframe(periods=horizon, include_history=False)
-    return model.predict(future)["yhat"].to_numpy()
-
-
-def _seasonal_fit(
-    dates: pd.Series, values: np.ndarray
-) -> tuple[float, float, np.ndarray, pd.Series]:
-    """Shared fit for the day-of-week seasonal model: OLS linear trend on
-    the CALENDAR day index (gap-aware) plus each weekday's mean residual
-    as an additive offset. Returns (intercept, slope, offsets[7], parsed
-    dates) — used by both the forecaster and the in-sample metrics so the
-    two can never drift apart. Callers guard the n == 0 case."""
-    values = np.asarray(values, dtype=float)
-    d = pd.to_datetime(pd.Series(dates).reset_index(drop=True))
-    x = (d - d.iloc[0]).dt.days.to_numpy(dtype=float)
-    if len(values) == 1:
-        slope, intercept = 0.0, values[0]
-    else:
-        slope, intercept = np.polyfit(x, values, 1)
-    resid = values - (intercept + slope * x)
-    dow = d.dt.dayofweek.to_numpy()
-    offsets = np.zeros(7)
-    for w in range(7):
-        mask = dow == w
-        if mask.any():
-            offsets[w] = resid[mask].mean()
-    return float(intercept), float(slope), offsets, d
-
-
-def _seasonal_forecast(
-    dates: pd.Series, values: np.ndarray, horizon: int
-) -> np.ndarray:
+) -> tuple[np.ndarray, np.ndarray]:
     """Deterministic day-of-week seasonal model — the weekday seasonality
     that is the reference's entire Prophet rationale
-    (/root/reference/src/time_series.py:21), without Prophet's run-date
-    anchoring bug. Weekdays never observed get offset 0 (pure trend)."""
-    if len(values) == 0:
-        return np.zeros(horizon)
-    intercept, slope, offsets, d = _seasonal_fit(dates, values)
-    last = d.iloc[-1]
-    future = [last + pd.Timedelta(days=i + 1) for i in range(horizon)]
-    fx = np.array([(f - d.iloc[0]).days for f in future], dtype=float)
-    fdow = np.array([f.dayofweek for f in future])
-    return intercept + slope * fx + offsets[fdow]
+    (reference src/time_series.py:21), without Prophet's run-date
+    anchoring bug: an OLS linear trend on the CALENDAR day index
+    (gap-aware) plus each weekday's mean residual as an additive offset.
+    Weekdays never observed get offset 0 (pure trend)."""
+    n = len(values)
+    if n == 0:
+        return values.copy(), np.zeros(horizon)
+    d = pd.DatetimeIndex(pd.to_datetime(pd.Series(dates).reset_index(drop=True)))
+    days = d.append(d[-1] + pd.to_timedelta(np.arange(1, horizon + 1), unit="D"))
+    x = (days - d[0]).days.to_numpy(dtype=float)
+    dow = days.dayofweek.to_numpy()
+    if n == 1:
+        slope, intercept = 0.0, values[0]
+    else:
+        slope, intercept = np.polyfit(x[:n], values, 1)
+    resid = values - (intercept + slope * x[:n])
+    offsets = np.zeros(7)
+    for w in range(7):
+        mask = dow[:n] == w
+        if mask.any():
+            offsets[w] = resid[mask].mean()
+    fit = intercept + slope * x + offsets[dow]
+    return fit[:n], fit[n:]
 
 
 def _holt_fit(
@@ -133,36 +110,61 @@ def _holt_fit(
     return float(level), float(trend), preds
 
 
-def _holt_forecast(values: np.ndarray, horizon: int) -> np.ndarray:
-    if len(values) == 0:
-        return np.zeros(horizon)
-    level, trend, _ = _holt_fit(values)
-    return level + trend * np.arange(1, horizon + 1, dtype=float)
+def _holt(
+    dates: pd.Series, values: np.ndarray, horizon: int
+) -> tuple[np.ndarray, np.ndarray]:
+    level, trend, preds = _holt_fit(values)
+    return preds, level + trend * np.arange(1, horizon + 1, dtype=float)
 
 
-def forecast_series(
-    dates: pd.Series, values: np.ndarray, horizon: int, method: str = "auto"
-) -> np.ndarray:
-    """Dispatch on method: 'linear' | 'seasonal' | 'holt' | 'prophet' |
-    'auto' (prophet when importable, else linear). Unknown methods raise —
-    a silent fallback would hand a user wrong-model output (round-1 judge
-    finding on --forecast-method seasonal)."""
+def _prophet(
+    dates: pd.Series, values: np.ndarray, horizon: int
+) -> tuple[np.ndarray, np.ndarray]:  # pragma: no cover - prophet is optional
+    model = Prophet()
+    # Anchored at the TRUE dates (fixing reference src/time_series.py:21).
+    ds = pd.to_datetime(dates)
+    model.fit(pd.DataFrame({"ds": ds, "y": values}))
+    future = model.make_future_dataframe(periods=horizon, include_history=False)
+    yhat = model.predict(pd.DataFrame({"ds": [*ds, *future["ds"]]}))["yhat"].to_numpy()
+    return yhat[: len(values)], yhat[len(values) :]
+
+
+#: Each method is one fit returning (predictions at the series' own
+#: positions, predictions at the next ``horizon`` days).
+_METHODS = {
+    "linear": _linear,
+    "seasonal": _seasonal,
+    "holt": _holt,
+    "prophet": _prophet,
+}
+
+
+def _fit(
+    dates: pd.Series, values: np.ndarray, horizon: int, method: str
+) -> tuple[str, np.ndarray, np.ndarray]:
+    """Resolve ``method`` ('auto' = prophet when importable, else linear)
+    and fit it: (model name, in-sample predictions, forecast). Unknown
+    methods raise — a silent fallback would hand a user wrong-model output."""
+    if method == "auto":
+        method = "prophet" if HAVE_PROPHET else "linear"
+    if method not in _METHODS:
+        raise ValueError(
+            f"unknown forecast method {method!r}: use linear|seasonal|holt|prophet|auto"
+        )
     if method == "prophet" and not HAVE_PROPHET:
         raise ImportError(
             "method='prophet' requires the prophet package (not installed); "
             "use 'seasonal' for the same weekday-seasonality-plus-trend shape"
         )
-    if method == "prophet" or (method == "auto" and HAVE_PROPHET):
-        return _prophet_forecast(dates, values, horizon)
-    if method == "seasonal":
-        return _seasonal_forecast(dates, np.asarray(values, dtype=float), horizon)
-    if method == "holt":
-        return _holt_forecast(np.asarray(values, dtype=float), horizon)
-    if method in ("linear", "auto"):
-        return _linear_forecast(np.asarray(values, dtype=float), horizon)
-    raise ValueError(
-        f"unknown forecast method {method!r}: use linear|seasonal|holt|prophet|auto"
-    )
+    return method, *_METHODS[method](dates, np.asarray(values, dtype=float), horizon)
+
+
+def forecast_series(
+    dates: pd.Series, values: np.ndarray, horizon: int, method: str = "auto"
+) -> np.ndarray:
+    """Forecast the next ``horizon`` days with 'linear' | 'seasonal' |
+    'holt' | 'prophet' | 'auto' (prophet when importable, else linear)."""
+    return _fit(dates, values, horizon, method)[2]
 
 
 def _daily_series(daily_summary: DataFrame) -> pd.DataFrame:
@@ -247,45 +249,6 @@ def forecast_many(
     return df.groupBy(*key_cols).applyInPandas(kernel, schema=out_schema)
 
 
-def _in_sample_predictions(
-    dates: pd.Series, values: np.ndarray, method: str
-) -> np.ndarray:
-    """ŷ over the training period for the chosen model (the reference's
-    get_metrics predicts the training frame back through the fitted model,
-    /root/reference/src/time_series.py:45-58)."""
-    values = np.asarray(values, dtype=float)
-    n = len(values)
-    if method == "prophet" and not HAVE_PROPHET:
-        raise ImportError(
-            "method='prophet' requires the prophet package (not installed); "
-            "use 'seasonal' for the same weekday-seasonality-plus-trend shape"
-        )
-    if method == "prophet" or (method == "auto" and HAVE_PROPHET):
-        model = Prophet()
-        model.fit(pd.DataFrame({"ds": pd.to_datetime(dates), "y": values}))
-        return model.predict(
-            pd.DataFrame({"ds": pd.to_datetime(dates)})
-        )["yhat"].to_numpy()
-    if method == "seasonal":
-        if n == 0:
-            return values.copy()
-        intercept, slope, offsets, d = _seasonal_fit(dates, values)
-        x = (d - d.iloc[0]).dt.days.to_numpy(dtype=float)
-        dow = d.dt.dayofweek.to_numpy()
-        return intercept + slope * x + offsets[dow]
-    if method == "holt":
-        return _holt_fit(values)[2]
-    if method in ("linear", "auto"):
-        if n < 2:
-            return values.copy()
-        x = np.arange(n, dtype=float)
-        slope, intercept = np.polyfit(x, values, 1)
-        return intercept + slope * x
-    raise ValueError(
-        f"unknown forecast method {method!r}: use linear|seasonal|holt|prophet|auto"
-    )
-
-
 def forecast_metrics(
     daily_summary: DataFrame, method: str = "auto"
 ) -> dict[str, dict[str, float]]:
@@ -295,21 +258,13 @@ def forecast_metrics(
     (total_sales, total_profit). The reference prints and returns
     {"mae", "mse", "model_type"}; this returns the same keys per series."""
     pdf = _daily_series(daily_summary)
-    model_type = (
-        "prophet" if (method == "prophet" or (method == "auto" and HAVE_PROPHET))
-        else (method if method in ("seasonal", "holt") else "linear")
-    )
     out: dict[str, dict[str, float]] = {}
     for series in ("total_sales", "total_profit"):
         y = pdf[series].to_numpy(dtype=float)
-        yhat = _in_sample_predictions(pdf["date"], y, method)
+        model_type, yhat, _ = _fit(pdf["date"], y, 0, method)
         out[series] = {
             "mae": float(np.abs(y - yhat).mean()),
             "mse": float(((y - yhat) ** 2).mean()),
             "model_type": model_type,
         }
     return out
-
-
-def next_dates(last_date: dt.date, horizon: int) -> list[dt.date]:
-    return [last_date + dt.timedelta(days=i + 1) for i in range(horizon)]

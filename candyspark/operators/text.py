@@ -133,12 +133,6 @@ def punct_density(text: Column | str) -> Column:
     )
 
 
-def snap_round(c: Column, digits: int = 4) -> Column:
-    """Engine-independent rounding of a double: snap through decimal(28,8)
-    (same exact value in both engines), then round half-away-from-zero."""
-    return F.round(c.cast("decimal(28,8)"), digits).cast("double")
-
-
 def lang_scores(text: Column | str) -> dict[str, Column]:
     toks = tokens(text)
     return {lang: _count_in(toks, words) for lang, words in STOPWORDS.items()}
@@ -165,6 +159,9 @@ def quality_score(text: Column | str) -> Column:
     """Deterministic [0,1] quality heuristic: length saturation (40%), low
     punctuation density (30%), moderate mean token length (30%). The exact
     formula is mirrored in the oracle SQL — parity is the contract."""
+    # a local import: candyspark.functions' package init imports this module
+    from candyspark.functions.numeric import snap_round
+
     toks = tokens(text)
     n = F.size(toks)
     total_len = F.aggregate(

@@ -18,7 +18,7 @@ discipline as plans/relational.py. Cross-engine determinism notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -582,7 +582,7 @@ def pareto_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         agg.withColumn(
             "cum_share",
-            X.snap_round(
+            snap_round(
                 F.sum("revenue").over(cum) / F.sum("revenue").over(whole), 6
             ),
         )
@@ -686,7 +686,7 @@ def segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_customers"))
         .withColumn(
             "row_share",
-            X.snap_round(
+            snap_round(
                 F.col("n_customers") / F.sum("n_customers").over(per_from), 6
             ),
         )
@@ -882,7 +882,7 @@ def rolling_median_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "day",
         round2(F.col("day_value")).alias("day_value"),
-        X.snap_round(
+        snap_round(
             F.percentile(F.col("day_value").cast("double"), F.lit(0.5)).over(w), 4
         ).alias("median_7d"),
     ).orderBy("event_type", "day")
@@ -913,36 +913,42 @@ REGISTRY["rolling_median_value"] = QuerySpec(
 )
 
 
-def q_acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Autocorrelation function of the daily order-revenue series at lags
-    1..7 — the standard pre-forecasting diagnostic (weekday seasonality
-    shows as a lag-7 spike; trend as slow decay) that the forecast family
-    (forecast_linear / seasonal) acts on. ACF(l) = Σ_t (r_t−μ)(r_{t−l}−μ)
-    / Σ_t (r_t−μ)², the series indexed by PRESENT days (row_number over
-    the date order, the convention for gappy business calendars).
+# --- the daily revenue series ------------------------------------------------
+
+
+def daily_revenue(
+    spark: SparkSession, sf_dir: str, day: str | Column = "o_orderdate"
+) -> DataFrame:
+    """``(day, r)``: order revenue per order date, Σ o_totalprice as exact
+    DECIMAL(12,2). Orders collapse to this ≤|calendar| relation first, so
+    everything after it is bounded at any SF."""
+    return (
+        load_table(spark, sf_dir, "orders")
+        .groupBy(day)
+        .agg(F.sum(F.col("o_totalprice").cast("decimal(12,2)")).alias("r"))
+    )
+
+
+def revenue_series(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(t, r)``: :func:`daily_revenue` indexed by PRESENT days (row_number
+    over the date order, the convention for gappy business calendars). The
+    window is a global sort over that BOUNDED series (same contract as
+    histogram_equidepth)."""
+    w = Window.orderBy("o_orderdate")
+    return daily_revenue(spark, sf_dir).select(F.row_number().over(w).alias("t"), "r")
+
+
+def centred_series(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(t, d)``: :func:`revenue_series` centred on its mean.
 
     Exactness: μ is computed once in double and snapped to 6 dp, so both
     engines center by the same constant; every centered value is then an
-    exact DECIMAL(16,6) and all products/sums stay exact decimals — the
-    numerator and denominator cross the engine boundary as exact values
-    with ONE snapped division per lag (float Σ of 2,400 products would be
-    summation-order-dependent, the classic silent mismatch).
-
-    Scale: orders collapse to the ≤|calendar| daily relation first; the
-    row_number window is a global sort over that BOUNDED series (same
-    contract as histogram_equidepth); the lag pairing is an equi-join on
-    the derived index against a 7-row broadcast of lags — never a
-    window-per-lag re-sort. The centered series is materialized once for
-    its three consumers (denominator + both join sides).
-    """
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy("o_orderdate").agg(
-        F.sum(F.col("o_totalprice").cast("decimal(12,2)")).alias("r")
-    )
-    w = Window.orderBy("o_orderdate")
-    series = daily.select(F.row_number().over(w).alias("t"), "r")
+    exact DECIMAL(16,6), surfaced as double (values < 2^53-exact range).
+    Products of centered values are snapped per TERM (:func:`snap_term`)
+    and summed as exact decimals — a raw float sum of ~2,400 products is
+    summation-order-dependent, the classic silent mismatch."""
+    series = revenue_series(spark, sf_dir)
     mu_stats = series.agg(
-        F.count(F.lit(1)).alias("n"),
         F.round(
             (F.sum("r").cast("double") / F.count(F.lit(1)).cast("double")).cast(
                 "decimal(28,8)"
@@ -952,44 +958,91 @@ def q_acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("decimal(18,6)")
         .alias("mu"),
     )
-    ser = (
-        series.crossJoin(F.broadcast(mu_stats))
-        # exact decimal diff surfaced as double (values < 2^53-exact range);
-        # products are snapped per-TERM then summed as exact decimals — a
-        # raw float sum of ~2,400 products is summation-order-dependent
-        .select(
-            "t",
-            (F.col("r") - F.col("mu")).cast("decimal(16,6)").cast("double").alias("d"),
-        )
-        .localCheckpoint()  # 3 consumers: denominator + both join sides
+    return series.crossJoin(F.broadcast(mu_stats)).select(
+        "t",
+        (F.col("r") - F.col("mu")).cast("decimal(16,6)").cast("double").alias("d"),
     )
 
-    def term(p: F.Column) -> F.Column:
-        return F.round(p.cast("decimal(28,8)"), 6)
 
-    den = ser.agg(
-        F.sum(term(F.col("d") * F.col("d"))).alias("den"),
-        F.count(F.lit(1)).alias("n_days"),
-    )
-    lags = spark.createDataFrame([(l,) for l in range(1, 8)], "l int")
+def snap_term(p: Column) -> Column:
+    """A product of centered values snapped at 6 dp for an exact decimal sum."""
+    return F.round(p.cast("decimal(28,8)"), 6)
+
+
+def lag_sums(ser: DataFrame, lags: DataFrame, *extra: Column) -> DataFrame:
+    """``(l, num, *extra)``: Σ_t d_t·d_{t−l} over a :func:`centred_series`
+    for each lag ``l`` of the small ``lags`` frame — an equi-join on the
+    derived index against the broadcast lags, never a window-per-lag
+    re-sort. ``extra`` are further aggregates over the lag pairs."""
     shifted = ser.crossJoin(F.broadcast(lags)).select(
         (F.col("t") + F.col("l")).alias("t"), "l", F.col("d").alias("d2")
     )
-    num = (
+    return (
         ser.join(shifted, "t")
         .groupBy("l")
-        .agg(
-            F.sum(term(F.col("d") * F.col("d2"))).alias("num"),
-            F.count(F.lit(1)).alias("n_pairs"),
-        )
+        .agg(F.sum(snap_term(F.col("d") * F.col("d2"))).alias("num"), *extra)
     )
+
+
+def daily_revenue_sql(day: str = "o_orderdate") -> str:
+    """The oracle's ``daily`` CTE (:func:`daily_revenue`), keyed by ``day``."""
+    return f"""daily AS (
+    SELECT {day}, SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS r
+    FROM orders GROUP BY 1
+)"""
+
+
+#: ``daily`` plus the day-indexed ``series`` (:func:`revenue_series`).
+REVENUE_SERIES_SQL = daily_revenue_sql() + """,
+series AS (
+    SELECT ROW_NUMBER() OVER (ORDER BY o_orderdate) AS t, r FROM daily
+)"""
+
+#: ``daily``, ``series``, ``mu_stats`` and the centred ``ser`` (t, d)
+#: (:func:`centred_series`).
+CENTRED_SERIES_SQL = REVENUE_SERIES_SQL + """,
+mu_stats AS (
+    SELECT CAST(ROUND(CAST(CAST(SUM(r) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
+                AS DECIMAL(28,8)), 6) AS DECIMAL(18,6)) AS mu
+    FROM series
+),
+ser AS (
+    SELECT t, CAST(CAST(r - mu AS DECIMAL(16,6)) AS DOUBLE) AS d
+    FROM series CROSS JOIN mu_stats
+)"""
+
+
+def q_acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Autocorrelation function of the daily order-revenue series at lags
+    1..7 — the standard pre-forecasting diagnostic (weekday seasonality
+    shows as a lag-7 spike; trend as slow decay) that the forecast family
+    (forecast_linear / seasonal) acts on. ACF(l) = Σ_t (r_t−μ)(r_{t−l}−μ)
+    / Σ_t (r_t−μ)², the series indexed by PRESENT days
+    (:func:`revenue_series`).
+
+    Exactness: :func:`centred_series`; the numerator and denominator
+    cross the engine boundary as exact values with ONE snapped division
+    per lag.
+
+    Scale: :func:`revenue_series` and :func:`lag_sums` against a 7-row
+    broadcast of lags. The centered series is materialized once for its
+    three consumers (denominator + both join sides).
+    """
+    # 3 consumers: denominator + both join sides
+    ser = centred_series(spark, sf_dir).localCheckpoint()
+    den = ser.agg(
+        F.sum(snap_term(F.col("d") * F.col("d"))).alias("den"),
+        F.count(F.lit(1)).alias("n_days"),
+    )
+    lags = spark.createDataFrame([(l,) for l in range(1, 8)], "l int")
+    num = lag_sums(ser, lags, F.count(F.lit(1)).alias("n_pairs"))
     return (
         num.crossJoin(F.broadcast(den))
         .select(
             F.col("l").alias("lag"),
             "n_days",
             "n_pairs",
-            X.snap_round(F.col("num").cast("double") / F.col("den").cast("double"), 6).alias(
+            snap_round(F.col("num").cast("double") / F.col("den").cast("double"), 6).alias(
                 "acf"
             ),
         )
@@ -997,24 +1050,8 @@ def q_acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ACF_DAILY_REVENUE_SQL = """
-WITH daily AS (
-    SELECT o_orderdate, SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS r
-    FROM orders GROUP BY o_orderdate
-),
-series AS (
-    SELECT ROW_NUMBER() OVER (ORDER BY o_orderdate) AS t, r FROM daily
-),
-mu_stats AS (
-    SELECT COUNT(*) AS n,
-           CAST(ROUND(CAST(CAST(SUM(r) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-                AS DECIMAL(28,8)), 6) AS DECIMAL(18,6)) AS mu
-    FROM series
-),
-ser AS (
-    SELECT t, CAST(CAST(r - mu AS DECIMAL(16,6)) AS DOUBLE) AS d
-    FROM series CROSS JOIN mu_stats
-),
+ACF_DAILY_REVENUE_SQL = f"""
+WITH {CENTRED_SERIES_SQL},
 den AS (
     SELECT SUM(ROUND(CAST(d * d AS DECIMAL(28,8)), 6)) AS den,
            COUNT(*) AS n_days
@@ -1125,43 +1162,11 @@ def q_pacf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders collapse to the bounded daily series once; everything after
     the 5-row lag aggregate is constant-size algebra.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy("o_orderdate").agg(
-        F.sum(F.col("o_totalprice").cast("decimal(12,2)")).alias("r")
-    )
-    w = Window.orderBy("o_orderdate")
-    series = daily.select(F.row_number().over(w).alias("t"), "r")
-    mu_stats = series.agg(
-        F.round(
-            (F.sum("r").cast("double") / F.count(F.lit(1)).cast("double")).cast(
-                "decimal(28,8)"
-            ),
-            6,
-        )
-        .cast("decimal(18,6)")
-        .alias("mu"),
-    )
-    ser = (
-        series.crossJoin(F.broadcast(mu_stats))
-        .select(
-            "t",
-            (F.col("r") - F.col("mu")).cast("decimal(16,6)").cast("double").alias("d"),
-        )
-        .localCheckpoint()
-    )
-
-    def term(p: F.Column) -> F.Column:
-        return F.round(p.cast("decimal(28,8)"), 6)
-
-    den = ser.agg(F.sum(term(F.col("d") * F.col("d"))).alias("den"))
+    ser = centred_series(spark, sf_dir).localCheckpoint()
+    den = ser.agg(F.sum(snap_term(F.col("d") * F.col("d"))).alias("den"))
     lags = spark.createDataFrame([(lg,) for lg in range(1, 6)], "l int")
-    shifted = ser.crossJoin(F.broadcast(lags)).select(
-        (F.col("t") + F.col("l")).alias("t"), "l", F.col("d").alias("d2")
-    )
     rho_rows = (
-        ser.join(shifted, "t")
-        .groupBy("l")
-        .agg(F.sum(term(F.col("d") * F.col("d2"))).alias("num"))
+        lag_sums(ser, lags)
         .crossJoin(F.broadcast(den))
         .select(
             "l",
@@ -1261,21 +1266,8 @@ def _pacf_sql() -> str:
             f"pacfs || [{a}] AS pacfs FROM step{k - 1})"
         )
     return (
-        """
-WITH daily AS (
-    SELECT o_orderdate, SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS r
-    FROM orders GROUP BY o_orderdate
-),
-series AS (SELECT ROW_NUMBER() OVER (ORDER BY o_orderdate) AS t, r FROM daily),
-mu_stats AS (
-    SELECT CAST(ROUND(CAST(CAST(SUM(r) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-                AS DECIMAL(28,8)), 6) AS DECIMAL(18,6)) AS mu
-    FROM series
-),
-ser AS (
-    SELECT t, CAST(CAST(r - mu AS DECIMAL(16,6)) AS DOUBLE) AS d
-    FROM series CROSS JOIN mu_stats
-),
+        f"""
+WITH {CENTRED_SERIES_SQL},
 den AS (
     SELECT SUM(CAST(ROUND(CAST(d * d AS DECIMAL(28,8)), 6) AS DECIMAL(28,6))) AS den
     FROM ser
@@ -1378,10 +1370,10 @@ def q_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("p") * F.col("q")).alias("p1q1"),
         F.sum(F.col("p0") * F.col("q")).alias("p0q1"),
     )
-    lasp = X.snap_round(
+    lasp = snap_round(
         F.col("p1q0").cast("double") / F.col("p0q0").cast("double"), 6
     )
-    paas = X.snap_round(
+    paas = snap_round(
         F.col("p1q1").cast("double") / F.col("p0q1").cast("double"), 6
     )
     return sums.select(
@@ -1389,7 +1381,7 @@ def q_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_parts",
         lasp.alias("laspeyres"),
         paas.alias("paasche"),
-        X.snap_round(F.sqrt(lasp * paas), 6).alias("fisher"),
+        snap_round(F.sqrt(lasp * paas), 6).alias("fisher"),
     ).orderBy("year")
 
 
@@ -1474,7 +1466,7 @@ def q_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         shared.groupBy("s_nationkey")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_suppliers"),
-            X.snap_round(
+            snap_round(
                 F.sum(F.col("sh") * F.col("sh")).cast("double"), 6
             ).alias("hhi"),
         )
@@ -1543,7 +1535,7 @@ def q_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("c").over(w.orderBy("d")).alias("peak"),
     ).select(
         "d",
-        X.snap_round(
+        snap_round(
             (F.col("peak") - F.col("c")).cast("double")
             / F.col("peak").cast("double"),
             8,
@@ -1605,46 +1597,14 @@ def q_yule_walker_ar2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: orders collapse to the bounded daily series first; one
     window over ≤|calendar| rows, one self-join at two lags.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy("o_orderdate").agg(
-        F.sum(F.col("o_totalprice").cast("decimal(12,2)")).alias("r")
-    )
-    w = Window.orderBy("o_orderdate")
-    series = daily.select(F.row_number().over(w).alias("t"), "r")
-    mu_stats = series.agg(
-        F.round(
-            (F.sum("r").cast("double") / F.count(F.lit(1)).cast("double")).cast(
-                "decimal(28,8)"
-            ),
-            6,
-        )
-        .cast("decimal(18,6)")
-        .alias("mu"),
-    )
-    ser = (
-        series.crossJoin(F.broadcast(mu_stats))
-        .select(
-            "t",
-            (F.col("r") - F.col("mu")).cast("decimal(16,6)").cast("double").alias("d"),
-        )
-        .localCheckpoint()
-    )
-
-    def term(p: F.Column) -> F.Column:
-        return F.round(p.cast("decimal(28,8)"), 6)
-
+    ser = centred_series(spark, sf_dir).localCheckpoint()
     den = ser.agg(
-        F.sum(term(F.col("d") * F.col("d"))).alias("den"),
+        F.sum(snap_term(F.col("d") * F.col("d"))).alias("den"),
         F.count(F.lit(1)).alias("n_days"),
     )
     lags = spark.createDataFrame([(1,), (2,)], "l int")
-    shifted = ser.crossJoin(F.broadcast(lags)).select(
-        (F.col("t") + F.col("l")).alias("t"), "l", F.col("d").alias("d2")
-    )
     nums = (
-        ser.join(shifted, "t")
-        .groupBy("l")
-        .agg(F.sum(term(F.col("d") * F.col("d2"))).alias("num"))
+        lag_sums(ser, lags)
         .agg(
             F.sum(F.when(F.col("l") == 1, F.col("num"))).alias("num1"),
             F.sum(F.when(F.col("l") == 2, F.col("num"))).alias("num2"),
@@ -1676,31 +1636,16 @@ def q_yule_walker_ar2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_days",
         "rho1",
         "rho2",
-        X.snap_round(phi1, 6).alias("phi1"),
-        X.snap_round(phi2, 6).alias("phi2"),
-        X.snap_round(
+        snap_round(phi1, 6).alias("phi1"),
+        snap_round(phi2, 6).alias("phi2"),
+        snap_round(
             F.lit(1.0) - phi1 * F.col("rho1") - phi2 * F.col("rho2"), 6
         ).alias("innovation_ratio"),
     )
 
 
-YULE_WALKER_AR2_SQL = """
-WITH daily AS (
-    SELECT o_orderdate, SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS r
-    FROM orders GROUP BY o_orderdate
-),
-series AS (
-    SELECT ROW_NUMBER() OVER (ORDER BY o_orderdate) AS t, r FROM daily
-),
-mu_stats AS (
-    SELECT CAST(ROUND(CAST(CAST(SUM(r) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-                AS DECIMAL(28,8)), 6) AS DECIMAL(18,6)) AS mu
-    FROM series
-),
-ser AS (
-    SELECT t, CAST(CAST(r - mu AS DECIMAL(16,6)) AS DOUBLE) AS d
-    FROM series CROSS JOIN mu_stats
-),
+YULE_WALKER_AR2_SQL = f"""
+WITH {CENTRED_SERIES_SQL},
 den AS (
     SELECT SUM(ROUND(CAST(d * d AS DECIMAL(28,8)), 6)) AS den,
            COUNT(*) AS n_days
@@ -1766,37 +1711,17 @@ def q_weekly_spectral_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: orders → bounded daily series; one pass over it.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy("o_orderdate").agg(
-        F.sum(F.col("o_totalprice").cast("decimal(12,2)")).alias("r")
-    )
-    w = Window.orderBy("o_orderdate")
-    series = daily.select(F.row_number().over(w).alias("t"), "r")
-    mu_stats = series.agg(
-        F.round(
-            (F.sum("r").cast("double") / F.count(F.lit(1)).cast("double")).cast(
-                "decimal(28,8)"
-            ),
-            6,
-        )
-        .cast("decimal(18,6)")
-        .alias("mu"),
-    )
     phase = ((F.col("t") - 1) % 7 + 1).cast("int")
-    ser = series.crossJoin(F.broadcast(mu_stats)).select(
-        (F.col("r") - F.col("mu")).cast("decimal(16,6)").cast("double").alias("d"),
+    ser = centred_series(spark, sf_dir).select(
+        "d",
         F.element_at(F.array(*[F.lit(c) for c in _COS7]), phase).alias("c7"),
         F.element_at(F.array(*[F.lit(s) for s in _SIN7]), phase).alias("s7"),
     )
-
-    def term(p: F.Column) -> F.Column:
-        return F.round(p.cast("decimal(28,8)"), 6)
-
     sums = ser.agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum(term(F.col("d") * F.col("c7"))).alias("c"),
-        F.sum(term(F.col("d") * F.col("s7"))).alias("s"),
-        F.sum(term(F.col("d") * F.col("d"))).alias("ss"),
+        F.sum(snap_term(F.col("d") * F.col("c7"))).alias("c"),
+        F.sum(snap_term(F.col("d") * F.col("s7"))).alias("s"),
+        F.sum(snap_term(F.col("d") * F.col("d"))).alias("ss"),
     )
     n = F.col("n_days").cast("double")
     c = F.col("c").cast("double")
@@ -1804,8 +1729,8 @@ def q_weekly_spectral_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     power = c * c + s * s
     return sums.select(
         "n_days",
-        X.snap_round(F.lit(2.0) * F.sqrt(power) / n, 4).alias("weekly_amplitude"),
-        X.snap_round(
+        snap_round(F.lit(2.0) * F.sqrt(power) / n, 4).alias("weekly_amplitude"),
+        snap_round(
             F.lit(2.0) * power / (n * F.col("ss").cast("double")), 6
         ).alias("variance_fraction"),
     )
@@ -1815,30 +1740,19 @@ _C7_LIT = "[" + ", ".join(repr(c) for c in _COS7) + "]"
 _S7_LIT = "[" + ", ".join(repr(s) for s in _SIN7) + "]"
 
 WEEKLY_SPECTRAL_POWER_SQL = f"""
-WITH daily AS (
-    SELECT o_orderdate, SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS r
-    FROM orders GROUP BY o_orderdate
-),
-series AS (
-    SELECT ROW_NUMBER() OVER (ORDER BY o_orderdate) AS t, r FROM daily
-),
-mu_stats AS (
-    SELECT CAST(ROUND(CAST(CAST(SUM(r) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-                AS DECIMAL(28,8)), 6) AS DECIMAL(18,6)) AS mu
-    FROM series
-),
-ser AS (
-    SELECT CAST(CAST(r - mu AS DECIMAL(16,6)) AS DOUBLE) AS d,
+WITH {CENTRED_SERIES_SQL},
+ser7 AS (
+    SELECT d,
            ({_C7_LIT})[CAST((t - 1) % 7 + 1 AS INTEGER)] AS c7,
            ({_S7_LIT})[CAST((t - 1) % 7 + 1 AS INTEGER)] AS s7
-    FROM series CROSS JOIN mu_stats
+    FROM ser
 ),
 sums AS (
     SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
            SUM(ROUND(CAST(d * c7 AS DECIMAL(28,8)), 6)) AS c,
            SUM(ROUND(CAST(d * s7 AS DECIMAL(28,8)), 6)) AS s,
            SUM(ROUND(CAST(d * d AS DECIMAL(28,8)), 6)) AS ss
-    FROM ser
+    FROM ser7
 )
 SELECT n_days,
        CAST(ROUND(CAST(2.0 * SQRT(CAST(c AS DOUBLE) * CAST(c AS DOUBLE)
@@ -1876,10 +1790,8 @@ def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~2.4k days → ~3M comparisons at ANY SF, and it runs as one broadcast
     join + map-side sign-sum, no quadratic row-count term in the fact
     table)."""
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy("o_orderdate").agg(
-        F.sum(F.col("o_totalprice").cast("decimal(12,2)")).alias("r")
-    ).localCheckpoint()  # 3 consumers: both pair sides + the tie spectrum
+    # 3 consumers: both pair sides + the tie spectrum
+    daily = daily_revenue(spark, sf_dir).localCheckpoint()
     a = daily.select(F.col("o_orderdate").alias("d1"), F.col("r").alias("r1"))
     b = daily.select(F.col("o_orderdate").alias("d2"), F.col("r").alias("r2"))
     pairs = a.join(F.broadcast(b), F.col("d1") < F.col("d2"))
@@ -1909,12 +1821,12 @@ def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = F.when(F.col("s_stat") > 0, (F.col("s_stat") - 1).cast("double") / F.sqrt(var_s)) \
         .when(F.col("s_stat") < 0, (F.col("s_stat") + 1).cast("double") / F.sqrt(var_s)) \
         .otherwise(F.lit(0.0))
-    zs = X.snap_round(z, 6)
+    zs = snap_round(z, 6)
     return s_n.crossJoin(F.broadcast(ties)).select(
         F.col("n_days").cast("bigint").alias("n_days"),
         F.col("s_stat").cast("bigint").alias("s_stat"),
         F.col("tie_term").cast("bigint").alias("tie_term"),
-        X.snap_round(var_s, 4).alias("var_s"),
+        snap_round(var_s, 4).alias("var_s"),
         zs.alias("z"),
         F.when(zs > 1.96, "increasing")
         .when(zs < -1.96, "decreasing")
@@ -1923,11 +1835,8 @@ def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MANN_KENDALL_SQL = """
-WITH daily AS (
-    SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS r
-    FROM orders GROUP BY 1
-),
+MANN_KENDALL_SQL = f"""
+WITH {daily_revenue_sql("o_orderdate AS d")},
 s AS (
     SELECT CAST(SUM(CAST(SIGN(CAST(b.r - a.r AS DOUBLE)) AS BIGINT)) AS BIGINT) AS s_stat
     FROM daily a JOIN daily b ON a.d < b.d
@@ -1983,14 +1892,8 @@ def q_chow_break_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded global-window contract); pooled stats are the sums
     of the halves, every SSR is the identical IEEE expression, one 4-dp
     snap on F."""
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy("o_orderdate").agg(
-        F.sum(F.col("o_totalprice").cast("decimal(12,2)")).alias("r")
-    )
-    w = Window.orderBy("o_orderdate")
-    idx = daily.select(
-        F.row_number().over(w).alias("t"),
-        F.col("r").cast("decimal(20,2)").alias("y"),
+    idx = revenue_series(spark, sf_dir).select(
+        "t", F.col("r").cast("decimal(20,2)").alias("y")
     )
     n_all = idx.agg(F.count(F.lit(1)).alias("n_tot"))
     half = F.col("t") <= F.col("n_tot") / 2
@@ -2043,8 +1946,8 @@ def q_chow_break_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresh = F.lit(1e-9) * syy_p
     ssr_u = ssr1 + ssr2
     f_raw = ((ssrp - ssr_u) / 2.0) / (ssr_u / (nd - 4.0))
-    f_stat = F.when(ssr_u > thresh, X.snap_round(f_raw, 4))
-    brk = F.when(ssr_u > thresh, X.snap_round(f_raw, 4) > 3.0).otherwise(
+    f_stat = F.when(ssr_u > thresh, snap_round(f_raw, 4))
+    brk = F.when(ssr_u > thresh, snap_round(f_raw, 4) > 3.0).otherwise(
         ssrp - ssr_u > thresh
     )
     return j.select(
@@ -2055,15 +1958,9 @@ def q_chow_break_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CHOW_BREAK_TEST_SQL = """
-WITH daily AS (
-    SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS r
-    FROM orders GROUP BY 1
-),
-idx AS (
-    SELECT ROW_NUMBER() OVER (ORDER BY d) AS t, CAST(r AS DECIMAL(20,2)) AS y
-    FROM daily
-),
+CHOW_BREAK_TEST_SQL = f"""
+WITH {REVENUE_SERIES_SQL},
+idx AS (SELECT t, CAST(r AS DECIMAL(20,2)) AS y FROM series),
 n_all AS (SELECT COUNT(*) AS n_tot FROM idx),
 stats AS (
     SELECT CASE WHEN t <= n_tot / 2 THEN 1 ELSE 2 END AS h,
@@ -2136,14 +2033,8 @@ def q_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     each segment's R/S snaps at 9 dp into exact decimal means per size;
     the 3-point log-log slope is one fixed-order IEEE expression. Scale:
     everything after the daily rollup is the ≤|calendar|×3 relation."""
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy("o_orderdate").agg(
-        F.sum(F.col("o_totalprice").cast("decimal(12,2)")).alias("r")
-    )
-    w_t = Window.orderBy("o_orderdate")
-    idx = daily.select(
-        F.row_number().over(w_t).alias("t"),
-        F.col("r").cast("decimal(20,2)").alias("y"),
+    idx = revenue_series(spark, sf_dir).select(
+        "t", F.col("r").cast("decimal(20,2)").alias("y")
     )
     sizes = spark.createDataFrame([(16,), (32,), (64,)], "w int")
     g = idx.crossJoin(F.broadcast(sizes)).withColumn(
@@ -2178,7 +2069,7 @@ def q_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("rn") == 1) & (F.col("s2") > 0))
         .select(
             "w",
-            X.snap_round(F.col("rng") / F.sqrt(F.col("s2")), 9)
+            snap_round(F.col("rng") / F.sqrt(F.col("s2")), 9)
             .cast("decimal(18,9)")
             .alias("rs"),
         )
@@ -2201,13 +2092,13 @@ def q_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     ly16, ly32, ly64 = (F.log(F.col(f"rs{w}")) for w in (16, 32, 64))
     sy_ = ly16 + ly32 + ly64
     sxy = F.lit(lw16) * ly16 + F.lit(lw32) * ly32 + F.lit(lw64) * ly64
-    hurst = X.snap_round(
+    hurst = snap_round(
         (F.lit(3.0) * sxy - sx * sy_) / (F.lit(3.0) * sxx - sx * sx), 6
     )
     return one.select(
-        X.snap_round(F.col("rs16"), 6).alias("rs16"),
-        X.snap_round(F.col("rs32"), 6).alias("rs32"),
-        X.snap_round(F.col("rs64"), 6).alias("rs64"),
+        snap_round(F.col("rs16"), 6).alias("rs16"),
+        snap_round(F.col("rs32"), 6).alias("rs32"),
+        snap_round(F.col("rs64"), 6).alias("rs64"),
         hurst.alias("hurst"),
         F.when(hurst > 0.55, "persistent")
         .when(hurst < 0.45, "mean_reverting")
@@ -2216,15 +2107,9 @@ def q_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-HURST_EXPONENT_SQL = """
-WITH daily AS (
-    SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS r
-    FROM orders GROUP BY 1
-),
-idx AS (
-    SELECT ROW_NUMBER() OVER (ORDER BY d) AS t, CAST(r AS DECIMAL(20,2)) AS y
-    FROM daily
-),
+HURST_EXPONENT_SQL = f"""
+WITH {REVENUE_SERIES_SQL},
+idx AS (SELECT t, CAST(r AS DECIMAL(20,2)) AS y FROM series),
 g0 AS (
     SELECT idx.t, idx.y, s.w, CAST(FLOOR((idx.t - 1) / s.w) AS BIGINT) AS seg
     FROM idx CROSS JOIN (SELECT unnest([16, 32, 64]) AS w) s
@@ -2399,13 +2284,13 @@ def q_granger_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b0 = snap8((sz - b1 * so - b2 * sc) / nd)
     rss_u = szz - b0 * sz - b1 * szo - b2 * szc
-    f_stat = X.snap_round((rss_r - rss_u) / (rss_u / (nd - 3.0)), 6)
+    f_stat = snap_round((rss_r - rss_u) / (rss_u / (nd - 3.0)), 6)
     return sums.select(
         "direction",
         F.col("n").alias("n_days"),
         b2.alias("cross_lag_coef"),
-        X.snap_round(rss_r, 4).alias("rss_restricted"),
-        X.snap_round(rss_u, 4).alias("rss_unrestricted"),
+        snap_round(rss_r, 4).alias("rss_restricted"),
+        snap_round(rss_u, 4).alias("rss_unrestricted"),
         f_stat.alias("f_stat"),
         (f_stat > 4.35).alias("leads"),
     ).orderBy("direction")
@@ -2562,8 +2447,8 @@ def q_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         F.col("k"),
         F.col("x_k1").cast("double").alias("tail_cutoff"),
-        X.snap_round(h, 6).alias("hill_h"),
-        X.snap_round(F.lit(1.0) / h, 6).alias("hill_alpha"),
+        snap_round(h, 6).alias("hill_h"),
+        snap_round(F.lit(1.0) / h, 6).alias("hill_alpha"),
     )
 
 

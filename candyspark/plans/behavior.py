@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from candyspark.operators.text import snap_round
+from candyspark.functions.numeric import snap_round
 from candyspark.plans import QuerySpec
 from candyspark.sources.readers import load_table
 

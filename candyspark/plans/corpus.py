@@ -31,10 +31,11 @@ to the syntax subset Java regex and RE2 share.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from candyspark.operators.text import char_hash32, snap_round
+from candyspark.functions.numeric import snap_round
+from candyspark.operators.text import char_hash32
 from candyspark.plans import QuerySpec
 from candyspark.sources.readers import load_table
 
@@ -644,78 +645,92 @@ ORDER BY lang, bin_id
 REGISTRY["corpus_pipeline"] = QuerySpec(corpus_pipeline, CORPUS_PIPELINE_SQL)
 
 
+# --- 10-word segments --------------------------------------------------------
+
+
+def join_in_order(key: str, text: str) -> Column:
+    """Aggregate: the group's ``text`` values joined by spaces in ``key``
+    order."""
+    return F.array_join(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct(key, text))), lambda x: x[text]
+        ),
+        " ",
+    )
+
+
+def word_segments(docs: DataFrame, *keys: str) -> DataFrame:
+    """``(doc_id, *keys, seg_idx, seg)``: each document's words regrouped
+    into deterministic 10-word segments (segment id = pos / 10), each
+    rebuilt in word order — the sub-document unit of the segment-level
+    operators, so they all agree. The corpus is a flat word stream (no
+    newline paragraph marks); on real data the segmentation expression is
+    the only line that changes. One keyed exchange on (doc, segment),
+    carrying rows bounded by words/10. A dedup or df key over ``seg`` at
+    100 TB should be xxhash64 of the segment (8 bytes shuffled, not the
+    text); it is kept as text here so the oracle states the identical
+    computation."""
+    words = docs.select(
+        "doc_id", *keys, F.posexplode(F.split("text", " ")).alias("pos", "word")
+    )
+    return (
+        words.withColumn("seg_idx", (F.col("pos") / 10).cast("long"))
+        .groupBy("doc_id", *keys, "seg_idx")
+        .agg(join_in_order("pos", "word").alias("seg"))
+    )
+
+
+def segments_sql(*keys: str) -> str:
+    """The oracle's ``split``, ``words`` and ``seg_rows`` CTEs
+    (:func:`word_segments`)."""
+    cols = "".join(f", {k}" for k in keys)
+    return f"""split AS (SELECT doc_id{cols}, string_split(text, ' ') AS l FROM documents),
+words AS (
+    -- parallel unnest zips element with its index (DuckDB semantics)
+    SELECT doc_id{cols}, unnest(l) AS word, unnest(range(len(l))) AS pos
+    FROM split
+),
+seg_rows AS (
+    SELECT doc_id{cols}, CAST(pos // 10 AS BIGINT) AS seg_idx,
+           string_agg(word, ' ' ORDER BY pos) AS seg
+    FROM words GROUP BY doc_id{cols}, pos // 10
+)"""
+
+
 def dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Paragraph-level (segment-level) dedup — the C4/RefinedWeb step that
     removes boilerplate REPEATED ACROSS documents while keeping each
     document's unique content, at sub-document granularity.
 
-    The corpus here is a flat word stream (no newline paragraph marks), so
-    the "paragraph" unit is a deterministic 10-word segment; on real data
-    the segmentation expression is the only line that changes. Flow:
-    posexplode words → segment id = pos / 10 → rebuild each segment in
-    word order → global first-occurrence window over the segment TEXT
-    (keeper = lowest (doc_id, seg_idx), the same pinned total order as
-    the allocator) → reassemble surviving segments per document in
-    segment order.
+    The "paragraph" unit is the deterministic 10-word segment
+    (:func:`word_segments`). Flow: segments → global first-occurrence
+    window over the segment TEXT (keeper = lowest (doc_id, seg_idx), the
+    same pinned total order as the allocator) → reassemble surviving
+    segments per document in segment order.
 
     Scale: three keyed exchanges — (doc) for segment rebuild, (segment
     text) for the dedup window, (doc) for reassembly; each carries rows
-    bounded by words/10. The dedup key at 100 TB should be xxhash64 of
-    the segment (8 bytes shuffled, not the text); kept as text here so
-    the oracle states the identical computation.
+    bounded by words/10.
     """
-    d = load_table(spark, sf_dir, "documents")
-    words = d.select(
-        "doc_id",
-        F.posexplode(F.split("text", " ")).alias("pos", "word"),
-    )
-    segs = (
-        words.withColumn("seg_idx", (F.col("pos") / 10).cast("long"))
-        .groupBy("doc_id", "seg_idx")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "word"))),
-                    lambda x: x["word"],
-                ),
-                " ",
-            ).alias("seg")
-        )
-    )
+    segs = word_segments(load_table(spark, sf_dir, "documents"))
     first = Window.partitionBy("seg").orderBy("doc_id", "seg_idx")
     kept = segs.withColumn("rn", F.row_number().over(first)).filter(F.col("rn") == 1)
     return (
         kept.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_kept_segs"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("seg_idx", "seg"))),
-                    lambda x: x["seg"],
-                ),
-                " ",
-            ).alias("deduped_text"),
+            join_in_order("seg_idx", "seg").alias("deduped_text"),
         )
         .orderBy("doc_id")
     )
 
 
-DEDUP_PARAGRAPHS_SQL = """
-WITH split AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-words AS (
-    -- parallel unnest zips element with its index (DuckDB semantics)
-    SELECT doc_id, unnest(l) AS word, unnest(range(len(l))) AS pos
-    FROM split
-),
-segs AS (
-    SELECT doc_id, CAST(pos // 10 AS BIGINT) AS seg_idx,
-           string_agg(word, ' ' ORDER BY pos) AS seg
-    FROM words GROUP BY doc_id, pos // 10
-),
+DEDUP_PARAGRAPHS_SQL = f"""
+WITH {segments_sql()},
 kept AS (
     SELECT doc_id, seg_idx, seg,
            ROW_NUMBER() OVER (PARTITION BY seg ORDER BY doc_id, seg_idx) AS rn
-    FROM segs
+    FROM seg_rows
 )
 SELECT doc_id, COUNT(*) AS n_kept_segs,
        string_agg(seg, ' ' ORDER BY seg_idx) AS deduped_text
@@ -1357,8 +1372,6 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    from candyspark.operators.text import snap_round
-
     return (
         per_source_word.join(F.broadcast(encoded), "word")
         .groupBy("source")
@@ -1640,27 +1653,10 @@ def q_boilerplate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-multiplication (5·df ≥ n_docs — never float-vs-float at the
     threshold). Scale: two keyed exchanges ((doc, seg) rebuild, then
     (source, seg) df); the rollup is map-side combined; at 100 TB the df
-    key should be xxhash64 of the segment (the dedup_paragraphs note).
+    key should be xxhash64 of the segment (the word_segments note).
     """
     d = load_table(spark, sf_dir, "documents")
-    words = d.select(
-        "doc_id",
-        "source",
-        F.posexplode(F.split("text", " ")).alias("pos", "word"),
-    )
-    segs = (
-        words.withColumn("seg_idx", (F.col("pos") / 10).cast("long"))
-        .groupBy("doc_id", "source", "seg_idx")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "word"))),
-                    lambda x: x["word"],
-                ),
-                " ",
-            ).alias("seg")
-        )
-    )
+    segs = word_segments(d, "source")
     seg_df = segs.groupBy("source", "seg").agg(
         F.countDistinct("doc_id").cast("long").alias("df"),
         F.count(F.lit(1)).cast("long").alias("occurrences"),
@@ -1699,22 +1695,13 @@ def q_boilerplate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-BOILERPLATE_AUDIT_SQL = """
-WITH split AS (SELECT doc_id, source, string_split(text, ' ') AS l FROM documents),
-words AS (
-    SELECT doc_id, source, unnest(l) AS word, unnest(range(len(l))) AS pos
-    FROM split
-),
-segs AS (
-    SELECT doc_id, source, CAST(pos // 10 AS BIGINT) AS seg_idx,
-           string_agg(word, ' ' ORDER BY pos) AS seg
-    FROM words GROUP BY doc_id, source, pos // 10
-),
+BOILERPLATE_AUDIT_SQL = f"""
+WITH {segments_sql("source")},
 seg_df AS (
     SELECT source, seg,
            CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df,
            CAST(COUNT(*) AS BIGINT) AS occurrences
-    FROM segs GROUP BY source, seg
+    FROM seg_rows GROUP BY source, seg
 ),
 src_docs AS (
     SELECT source, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
@@ -1759,26 +1746,8 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact; one snapped coefficient. Top-15 by coefficient, total order.
     """
     d = load_table(spark, sf_dir, "documents")
-    words = d.select(
-        "doc_id",
-        "source",
-        F.posexplode(F.split("text", " ")).alias("pos", "word"),
-    )
     segs = (
-        words.withColumn("seg_idx", (F.col("pos") / 10).cast("long"))
-        .groupBy("doc_id", "source", "seg_idx")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "word"))),
-                    lambda x: x["word"],
-                ),
-                " ",
-            ).alias("seg")
-        )
-        .select("source", "seg")
-        .distinct()
-        .localCheckpoint()
+        word_segments(d, "source").select("source", "seg").distinct().localCheckpoint()
     )
     sizes = segs.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_segs")
@@ -1815,18 +1784,9 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SOURCE_OVERLAP_SQL = """
-WITH split AS (SELECT doc_id, source, string_split(text, ' ') AS l FROM documents),
-words AS (
-    SELECT doc_id, source, unnest(l) AS word, unnest(range(len(l))) AS pos
-    FROM split
-),
-segs AS (
-    SELECT DISTINCT source, seg FROM (
-        SELECT doc_id, source, string_agg(word, ' ' ORDER BY pos) AS seg
-        FROM words GROUP BY doc_id, source, pos // 10
-    )
-),
+SOURCE_OVERLAP_SQL = f"""
+WITH {segments_sql("source")},
+segs AS (SELECT DISTINCT source, seg FROM seg_rows),
 sizes AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_segs FROM segs GROUP BY 1),
 shared AS (
     SELECT a.source AS src_a, b.source AS src_b,
@@ -2036,25 +1996,7 @@ def q_source_set_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus one snapped share.
     """
     d = load_table(spark, sf_dir, "documents")
-    words = d.select(
-        "doc_id",
-        "source",
-        F.posexplode(F.split("text", " ")).alias("pos", "word"),
-    )
-    seg_rel = (
-        words.withColumn("seg_idx", (F.col("pos") / 10).cast("long"))
-        .groupBy("doc_id", "source", "seg_idx")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "word"))),
-                    lambda x: x["word"],
-                ),
-                " ",
-            ).alias("seg")
-        )
-        .select("source", "seg")
-    )
+    seg_rel = word_segments(d, "source").select("source", "seg")
     subset_hist = (
         seg_rel.groupBy("seg")
         .agg(F.array_sort(F.collect_set("source")).alias("srcs"))
@@ -2101,18 +2043,9 @@ def q_source_set_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _set_cover_sql() -> str:
-    base = """
-WITH split AS (SELECT doc_id, source, string_split(text, ' ') AS l FROM documents),
-words AS (
-    SELECT doc_id, source, unnest(l) AS word, unnest(range(len(l))) AS pos
-    FROM split
-),
-segs AS (
-    SELECT DISTINCT source, seg FROM (
-        SELECT doc_id, source, string_agg(word, ' ' ORDER BY pos) AS seg
-        FROM words GROUP BY doc_id, source, pos // 10
-    )
-),
+    base = f"""
+WITH {segments_sql("source")},
+segs AS (SELECT DISTINCT source, seg FROM seg_rows),
 n_total AS (SELECT CAST(COUNT(DISTINCT seg) AS BIGINT) AS n FROM segs)"""
     rounds = []
     prev_cov = None
@@ -3415,8 +3348,6 @@ def q_code_detector(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: scan-stage expressions, one <=|sources| rollup.
     """
-    from candyspark.operators import text as X
-
     d = load_table(spark, sf_dir, "documents")
     n_chars = F.greatest(F.col("n_chars").cast("double"), F.lit(1.0))
     braces = F.regexp_count("text", F.lit(r"[{}\[\]()]")).cast("double")
@@ -3427,7 +3358,7 @@ def q_code_detector(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("double")
     lines = F.regexp_count("text", F.lit(r"\n")).cast("double") + 1.0
     indented = F.regexp_count("text", F.lit(r"\n[ \t]{2,}")).cast("double")
-    score = X.snap_round(
+    score = snap_round(
         0.3 * F.least(braces * 40.0 / n_chars, F.lit(1.0))
         + 0.25 * F.least(stmts * 40.0 / n_chars, F.lit(1.0))
         + 0.25 * F.least(kw * 10.0 / lines, F.lit(1.0))
@@ -3444,10 +3375,10 @@ def q_code_detector(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "n_docs",
         "n_code",
-        X.snap_round(
+        snap_round(
             F.col("n_code").cast("double") / F.col("n_docs").cast("double"), 6
         ).alias("code_share"),
-        X.snap_round(
+        snap_round(
             F.col("score_sum").cast("double") / F.col("n_docs").cast("double"), 6
         ).alias("mean_code_score"),
     ).orderBy("source")

@@ -16,11 +16,12 @@ import tempfile
 from collections.abc import Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from candyspark.operators import dedup as D
 from candyspark.operators import similarity as S
+from candyspark.functions.numeric import snap_round
 from candyspark.operators import text as X
 from candyspark.operators.multimodal import binary_metadata, with_binary_payload
 from candyspark.plans import QuerySpec
@@ -81,11 +82,11 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         n.alias("n_tokens"),
-        X.snap_round(
+        snap_round(
             F.when(n > 0, sw.cast("double") / n).otherwise(F.lit(0.0)), 4
         ).alias("stopword_ratio"),
-        X.snap_round(X.punct_density("text"), 4).alias("punct_density"),
-        X.snap_round(
+        snap_round(X.punct_density("text"), 4).alias("punct_density"),
+        snap_round(
             F.when(n > 0, total_len.cast("double") / n).otherwise(F.lit(0.0)), 4
         ).alias("avg_token_len"),
         X.quality_score("text").alias("quality_score"),
@@ -341,7 +342,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
             "n_incoming",
             "n_dup",
-            X.snap_round(F.col("n_dup") / F.col("n_incoming"), 6).alias("dup_rate"),
+            snap_round(F.col("n_dup") / F.col("n_incoming"), 6).alias("dup_rate"),
         )
         .orderBy("lang")
     )
@@ -429,7 +430,7 @@ def q_cross_source_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         labeled.groupBy("source_x", "source_y")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_pairs"),
-            X.snap_round(
+            snap_round(
                 F.sum(
                     F.round(F.col("jaccard_sim").cast("decimal(28,8)"), 8).cast(
                         "decimal(28,8)"
@@ -1130,7 +1131,7 @@ def q_split_leakage_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             "n_eval",
             "n_leaked",
-            X.snap_round(F.col("n_leaked") / F.col("n_eval"), 6).alias("leak_rate"),
+            snap_round(F.col("n_leaked") / F.col("n_eval"), 6).alias("leak_rate"),
         )
         .orderBy("label")
     )
@@ -1461,8 +1462,8 @@ def q_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.select(
         "vec_id",
         F.size("embedding").alias("dim"),
-        X.snap_round(fold(dbl), 4).alias("el_sum"),
-        X.snap_round(fold(F.transform(dbl, F.abs)), 4).alias("l1_norm"),
+        snap_round(fold(dbl), 4).alias("el_sum"),
+        snap_round(fold(F.transform(dbl, F.abs)), 4).alias("l1_norm"),
         F.array_max("embedding").cast("double").alias("max_el"),
         F.array_min("embedding").cast("double").alias("min_el"),
         F.size(F.filter(F.col("embedding"), lambda x: x > 0)).alias("num_positive"),
@@ -1535,7 +1536,7 @@ def q_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "qty_map",
                 # snap the float ratio to DECIMAL before rounding — round()
                 # straight on a double is engine-dependent at 4-dp ties
-                lambda k, g, q: X.snap_round(
+                lambda k, g, q: snap_round(
                     g.cast("double") / q.cast("double"), 4
                 ),
             ),
@@ -2181,7 +2182,7 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "cluster_id",
             "num_vectors",
-            X.snap_round(norm(F.col("c_vec")), 4).alias("centroid_norm"),
+            snap_round(norm(F.col("c_vec")), 4).alias("centroid_norm"),
         )
         .orderBy("cluster_id")
     )
@@ -2706,7 +2707,7 @@ def q_target_encode_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_linenumber",
             F.col("p_brand").alias("brand"),
             F.col("y").cast("int").alias("returned"),
-            X.snap_round(
+            snap_round(
                 F.when(F.col("brand_n") > 1, loo), 6
             ).alias("brand_return_loo"),
         )
@@ -2792,27 +2793,27 @@ ORDER BY doc_id
 REGISTRY["feature_hashing"] = QuerySpec(q_feature_hashing, FEATURE_HASHING_SQL)
 
 
-def q_conversion_lag_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-to-convert survival curve: of users who signed up, the share
-    whose FIRST subsequent purchase landed within k days (k = 0..7) — the
-    activation-latency curve growth teams read before touching onboarding
-    (the lag-resolved deepening of q_event_funnel's binary conversion).
+# --- first conversion after signup -------------------------------------------
 
-    Lag is exact integer days from exact epoch seconds; each k's share is
-    a conditional count over the per-user lag relation (8 bands × one
-    conditional-agg pass — the quality_report one-scan-many-checks
-    discipline, via explode of the band sequence on a per-user frame).
-    Scale: signup and first-purchase reductions key on user_id and join
-    keyed; non-converters stay (NULL lag) and count in every denominator.
-    """
-    e = load_table(spark, sf_dir, "events")
-    signups = e.filter(F.col("event_type") == "signup").groupBy("user_id").agg(
-        F.min("ts").alias("signup_ts")
+
+def signup_times(events: DataFrame) -> DataFrame:
+    """``(user_id, signup_ts)``: each user's first signup, keyed on user_id."""
+    return (
+        events.filter(F.col("event_type") == "signup")
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("signup_ts"))
     )
-    purchases = e.filter(F.col("event_type") == "purchase").select(
+
+
+def first_conversions(events: DataFrame, signups: DataFrame) -> DataFrame:
+    """``(user_id, signup_ts, conv_ts)``: each signed-up user's FIRST
+    purchase at or after signup. The signup and purchase reductions key on
+    user_id and join keyed; a user who never converted stays, with a NULL
+    conv_ts, and counts in every denominator."""
+    purchases = events.filter(F.col("event_type") == "purchase").select(
         F.col("user_id").alias("pu"), F.col("ts").alias("p_ts")
     )
-    first_conv = (
+    return (
         signups.join(
             purchases,
             (F.col("user_id") == F.col("pu")) & (F.col("p_ts") >= F.col("signup_ts")),
@@ -2820,13 +2821,69 @@ def q_conversion_lag_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("user_id", "signup_ts")
         .agg(F.min("p_ts").alias("conv_ts"))
-        .select(
-            "user_id",
-            F.floor(
-                (F.unix_micros("conv_ts") - F.unix_micros("signup_ts"))
-                / F.lit(86400000000)
-            ).alias("lag_days"),
-        )
+    )
+
+
+def censored_conversions(events: DataFrame, signups: DataFrame) -> DataFrame:
+    """:func:`first_conversions` with the table horizon ``end_ts`` broadcast
+    on: the survival form, where a user who never converted is censored at
+    the horizon (:func:`time_to_event`)."""
+    horizon = events.agg(F.max("ts").alias("end_ts"))
+    return first_conversions(events, signups).crossJoin(F.broadcast(horizon))
+
+
+def days_since_signup(ts: str) -> Column:
+    """Whole days from signup_ts to ``ts``: exact integer days from exact
+    epoch microseconds."""
+    return F.floor(
+        (F.unix_micros(ts) - F.unix_micros("signup_ts")) / F.lit(86400000000)
+    )
+
+
+def time_to_event() -> Column:
+    """Days from signup to the first conversion, or to the horizon for a
+    censored user (over :func:`censored_conversions`)."""
+    return F.when(
+        F.col("conv_ts").isNotNull(), days_since_signup("conv_ts")
+    ).otherwise(days_since_signup("end_ts"))
+
+
+#: The oracle's ``signups``, ``conversions`` (user_id, signup_ts, conv_ts)
+#: and ``horizon`` CTEs (:func:`first_conversions`, :func:`censored_conversions`).
+FIRST_CONVERSIONS_SQL = """signups AS (
+    SELECT user_id, MIN(ts) AS signup_ts
+    FROM events WHERE event_type = 'signup' GROUP BY user_id
+),
+conversions AS (
+    SELECT s.user_id, s.signup_ts, MIN(p.ts) AS conv_ts
+    FROM signups s
+    LEFT JOIN events p
+      ON p.user_id = s.user_id AND p.event_type = 'purchase' AND p.ts >= s.signup_ts
+    GROUP BY s.user_id, s.signup_ts
+),
+horizon AS (SELECT MAX(ts) AS end_ts FROM events)"""
+#: :func:`time_to_event` over ``conversions CROSS JOIN horizon``.
+TIME_TO_EVENT_SQL = """CASE WHEN conv_ts IS NOT NULL
+                THEN FLOOR((epoch_us(conv_ts) - epoch_us(signup_ts)) / 86400000000)
+                ELSE FLOOR((epoch_us(end_ts) - epoch_us(signup_ts)) / 86400000000)
+           END"""
+
+
+def q_conversion_lag_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Time-to-convert survival curve: of users who signed up, the share
+    whose FIRST subsequent purchase landed within k days (k = 0..7) — the
+    activation-latency curve growth teams read before touching onboarding
+    (the lag-resolved deepening of q_event_funnel's binary conversion).
+
+    Lag is :func:`days_since_signup` over :func:`first_conversions`; each
+    k's share is a conditional count over the per-user lag relation (8
+    bands × one conditional-agg pass — the quality_report
+    one-scan-many-checks discipline, via explode of the band sequence on a
+    per-user frame).
+    """
+    e = load_table(spark, sf_dir, "events")
+    first_conv = first_conversions(e, signup_times(e)).select(
+        "user_id", days_since_signup("conv_ts").alias("lag_days")
     )
     bands = first_conv.select(
         "lag_days", F.explode(F.sequence(F.lit(0), F.lit(7))).alias("k")
@@ -2848,7 +2905,7 @@ def q_conversion_lag_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("k").cast("int").alias("within_days"),
             "n_signups",
             "n_converted",
-            X.snap_round(
+            snap_round(
                 F.col("n_converted") / F.col("n_signups").cast("double"), 6
             ).alias("conversion_share"),
         )
@@ -2856,19 +2913,12 @@ def q_conversion_lag_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CONVERSION_LAG_CURVE_SQL = """
-WITH signups AS (
-    SELECT user_id, MIN(ts) AS signup_ts
-    FROM events WHERE event_type = 'signup' GROUP BY user_id
-),
+CONVERSION_LAG_CURVE_SQL = f"""
+WITH {FIRST_CONVERSIONS_SQL},
 first_conv AS (
-    SELECT s.user_id,
-           FLOOR((epoch_us(MIN(p.ts)) - epoch_us(s.signup_ts)) / 86400000000) AS lag_days
-    FROM signups s
-    LEFT JOIN events p
-      ON p.user_id = s.user_id AND p.event_type = 'purchase'
-     AND p.ts >= s.signup_ts
-    GROUP BY s.user_id, s.signup_ts
+    SELECT user_id,
+           FLOOR((epoch_us(conv_ts) - epoch_us(signup_ts)) / 86400000000) AS lag_days
+    FROM conversions
 ),
 bands AS (
     SELECT lag_days, unnest(generate_series(0, 7)) AS k FROM first_conv
@@ -2914,10 +2964,10 @@ def q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
             "lang_guess",
             "n_docs",
-            X.snap_round(F.col("n_docs") / F.sum("n_docs").over(row_w), 6).alias(
+            snap_round(F.col("n_docs") / F.sum("n_docs").over(row_w), 6).alias(
                 "recall_share"
             ),
-            X.snap_round(F.col("n_docs") / F.sum("n_docs").over(col_w), 6).alias(
+            snap_round(F.col("n_docs") / F.sum("n_docs").over(col_w), 6).alias(
                 "precision_share"
             ),
         )
@@ -2985,7 +3035,7 @@ def q_auc_quality_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("p_total").alias("n_english"),
         F.col("n_total").alias("n_other"),
-        X.snap_round(
+        snap_round(
             F.col("u_sum") / (F.col("p_total") * F.col("n_total")).cast("double"), 6
         ).alias("auc"),
     )
@@ -3070,9 +3120,9 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("q", q)
         .select(
             "vec_id",
-            X.snap_round(F.col("scale_raw"), 6).alias("scale"),
+            snap_round(F.col("scale_raw"), 6).alias("scale"),
             "q",
-            X.snap_round(
+            snap_round(
                 err.cast("double") / F.size("embedding"), 6
             ).alias("mean_abs_err"),
         )
@@ -3160,7 +3210,7 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_linenumber",
             F.col("p_brand").alias("brand"),
             "l_extendedprice",
-            X.snap_round(mapped, 4).alias("normalized_price"),
+            snap_round(mapped, 4).alias("normalized_price"),
         )
         .orderBy("l_orderkey", "l_linenumber")
     )
@@ -3244,8 +3294,8 @@ def q_quantile_normalize_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(approx))
         .select(
             "p",
-            X.snap_round(F.col("lo_v"), 4).alias("band_lo"),
-            X.snap_round(F.col("hi_v"), 4).alias("band_hi"),
+            snap_round(F.col("lo_v"), 4).alias("band_lo"),
+            snap_round(F.col("hi_v"), 4).alias("band_hi"),
             (
                 (F.col("qa")[F.col("i")] >= F.col("lo_v"))
                 & (F.col("qa")[F.col("i")] <= F.col("hi_v"))
@@ -3310,10 +3360,10 @@ def q_calibration_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "bin",
             "n_docs",
-            X.snap_round(
+            snap_round(
                 F.col("score_sum").cast("double") / F.col("n_docs"), 6
             ).alias("mean_score"),
-            X.snap_round(
+            snap_round(
                 F.col("n_english") / F.col("n_docs").cast("double"), 6
             ).alias("english_rate"),
         )
@@ -3360,39 +3410,9 @@ def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     reductions and one keyed join; everything after is calendar-bounded.
     """
     e = load_table(spark, sf_dir, "events")
-    signups = e.filter(F.col("event_type") == "signup").groupBy("user_id").agg(
-        F.min("ts").alias("signup_ts")
-    )
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("pu"), F.col("ts").alias("p_ts")
-    )
-    horizon = e.agg(F.max("ts").alias("end_ts"))
-    per_user = (
-        signups.join(
-            purchases,
-            (F.col("user_id") == F.col("pu")) & (F.col("p_ts") >= F.col("signup_ts")),
-            "left",
-        )
-        .groupBy("user_id", "signup_ts")
-        .agg(F.min("p_ts").alias("conv_ts"))
-        .crossJoin(F.broadcast(horizon))
-        .select(
-            F.when(
-                F.col("conv_ts").isNotNull(),
-                F.floor(
-                    (F.unix_micros("conv_ts") - F.unix_micros("signup_ts"))
-                    / F.lit(86400000000)
-                ),
-            )
-            .otherwise(
-                F.floor(
-                    (F.unix_micros("end_ts") - F.unix_micros("signup_ts"))
-                    / F.lit(86400000000)
-                )
-            )
-            .alias("t"),
-            F.when(F.col("conv_ts").isNotNull(), 1).otherwise(0).alias("event"),
-        )
+    per_user = censored_conversions(e, signup_times(e)).select(
+        time_to_event().alias("t"),
+        F.when(F.col("conv_ts").isNotNull(), 1).otherwise(0).alias("event"),
     )
     daily = per_user.groupBy("t").agg(
         F.sum("event").cast("long").alias("d"),
@@ -3407,7 +3427,7 @@ def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     term = F.when(
         (F.col("d") > 0) & (F.col("d") < F.col("n_risk")),
-        X.snap_round(
+        snap_round(
             F.log(
                 F.lit(1.0) - F.col("d").cast("double") / F.col("n_risk").cast("double")
             ),
@@ -3425,7 +3445,7 @@ def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "survival",
             F.when(hit_zero == 1, F.lit(0.0)).otherwise(
-                X.snap_round(F.exp(F.sum("logterm").over(upto)), 6)
+                snap_round(F.exp(F.sum("logterm").over(upto)), 6)
             ),
         )
         .select(
@@ -3439,24 +3459,12 @@ def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-KAPLAN_MEIER_SQL = """
-WITH signups AS (
-    SELECT user_id, MIN(ts) AS signup_ts
-    FROM events WHERE event_type = 'signup' GROUP BY user_id
-),
-horizon AS (SELECT MAX(ts) AS end_ts FROM events),
+KAPLAN_MEIER_SQL = f"""
+WITH {FIRST_CONVERSIONS_SQL},
 per_user AS (
-    SELECT s.user_id,
-           CASE WHEN MIN(p.ts) IS NOT NULL
-                THEN FLOOR((epoch_us(MIN(p.ts)) - epoch_us(s.signup_ts)) / 86400000000)
-                ELSE FLOOR((epoch_us(h.end_ts) - epoch_us(s.signup_ts)) / 86400000000)
-           END AS t,
-           CASE WHEN MIN(p.ts) IS NOT NULL THEN 1 ELSE 0 END AS event
-    FROM signups s
-    CROSS JOIN horizon h
-    LEFT JOIN events p
-      ON p.user_id = s.user_id AND p.event_type = 'purchase' AND p.ts >= s.signup_ts
-    GROUP BY s.user_id, s.signup_ts, h.end_ts
+    SELECT user_id, {TIME_TO_EVENT_SQL} AS t,
+           CASE WHEN conv_ts IS NOT NULL THEN 1 ELSE 0 END AS event
+    FROM conversions CROSS JOIN horizon
 ),
 daily AS (
     SELECT t, CAST(SUM(event) AS BIGINT) AS d,
@@ -3472,7 +3480,7 @@ risked AS (
 terms AS (
     SELECT *,
            CASE WHEN d > 0 AND d < n_risk THEN
-             -- X.snap_round(·, 9) casts through DECIMAL(28,8) first, so the
+             -- snap_round(·, 9) casts through DECIMAL(28,8) first, so the
              -- effective Spark-side snap is 8 dp; mirror that exactly (a
              -- (28,9) cast here would round one digit finer and disagree)
              CAST(ROUND(CAST(LN(1.0 - CAST(d AS DOUBLE) / n_risk)
@@ -3537,7 +3545,7 @@ def q_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "label_a",
             "label_b",
-            X.snap_round(
+            snap_round(
                 F.col("dot").cast("double") / (F.col("norm_a") * F.col("norm_b")), 6
             ).alias("cosine"),
         )
@@ -3640,7 +3648,6 @@ def q_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((1 - F.col("label")) * F.col("pred")).alias("fp"),
         F.sum(F.col("label") * (1 - F.col("pred"))).alias("fn"),
     )
-    snap = X.snap_round
     return agg.select(
         (F.col("i") / 20.0).alias("threshold"),
         "tp",
@@ -3648,15 +3655,15 @@ def q_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fn",
         F.when(
             F.col("tp") + F.col("fp") > 0,
-            snap(F.col("tp") / (F.col("tp") + F.col("fp")), 6),
+            snap_round(F.col("tp") / (F.col("tp") + F.col("fp")), 6),
         ).alias("precision"),
         F.when(
             F.col("tp") + F.col("fn") > 0,
-            snap(F.col("tp") / (F.col("tp") + F.col("fn")), 6),
+            snap_round(F.col("tp") / (F.col("tp") + F.col("fn")), 6),
         ).alias("recall"),
         F.when(
             2 * F.col("tp") + F.col("fp") + F.col("fn") > 0,
-            snap(
+            snap_round(
                 2 * F.col("tp") / (2 * F.col("tp") + F.col("fp") + F.col("fn")), 6
             ),
         ).alias("f1"),
@@ -3817,9 +3824,9 @@ def q_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         F.col("n").alias("n_docs"),
         F.col("agree").alias("agreements"),
-        X.snap_round(po, 6).alias("p_observed"),
-        X.snap_round(pe, 6).alias("p_expected"),
-        X.snap_round((po - pe) / (1.0 - pe), 6).alias("kappa"),
+        snap_round(po, 6).alias("p_observed"),
+        snap_round(pe, 6).alias("p_expected"),
+        snap_round((po - pe) / (1.0 - pe), 6).alias("kappa"),
     )
 
 
@@ -4039,42 +4046,11 @@ def q_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap to decimal, the two sums are exact, one snapped χ².
     """
     e = load_table(spark, sf_dir, "events")
-    signups = e.filter(F.col("event_type") == "signup").groupBy("user_id").agg(
-        F.min("ts").alias("signup_ts")
-    )
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("pu"), F.col("ts").alias("p_ts")
-    )
-    horizon = e.agg(F.max("ts").alias("end_ts"))
     arm = (X.char_hash32(F.col("user_id").cast("string")) % 2).cast("int")
-    per_user = (
-        signups.join(
-            purchases,
-            (F.col("user_id") == F.col("pu")) & (F.col("p_ts") >= F.col("signup_ts")),
-            "left",
-        )
-        .groupBy("user_id", "signup_ts")
-        .agg(F.min("p_ts").alias("conv_ts"))
-        .crossJoin(F.broadcast(horizon))
-        .select(
-            arm.alias("g"),
-            F.when(
-                F.col("conv_ts").isNotNull(),
-                F.floor(
-                    (F.unix_micros("conv_ts") - F.unix_micros("signup_ts"))
-                    / F.lit(86400000000)
-                ),
-            )
-            .otherwise(
-                F.floor(
-                    (F.unix_micros("end_ts") - F.unix_micros("signup_ts"))
-                    / F.lit(86400000000)
-                )
-            )
-            .cast("long")
-            .alias("t"),
-            F.col("conv_ts").isNotNull().cast("int").alias("d"),
-        )
+    per_user = censored_conversions(e, signup_times(e)).select(
+        arm.alias("g"),
+        time_to_event().cast("long").alias("t"),
+        F.col("conv_ts").isNotNull().cast("int").alias("d"),
     )
     gt = (
         per_user.groupBy("g", "t")
@@ -4154,30 +4130,19 @@ def q_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return sums.select(
         "n_events",
-        X.snap_round(chi2, 6).alias("chi2"),
-        (X.snap_round(chi2, 6) > 3.841).alias("curves_differ"),
+        snap_round(chi2, 6).alias("chi2"),
+        (snap_round(chi2, 6) > 3.841).alias("curves_differ"),
     )
 
 
-LOGRANK_TEST_SQL = """
-WITH signups AS (
-    SELECT user_id, MIN(ts) AS signup_ts FROM events
-    WHERE event_type = 'signup' GROUP BY user_id
-),
-horizon AS (SELECT MAX(ts) AS end_ts FROM events),
+LOGRANK_TEST_SQL = f"""
+WITH {FIRST_CONVERSIONS_SQL},
 per_user AS (
-    SELECT CAST(CAST(concat('0x', substr(md5(CAST(u.user_id AS VARCHAR)), 1, 8))
+    SELECT CAST(CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 8))
                AS BIGINT) % 2 AS INTEGER) AS g,
-           CAST(CASE WHEN MIN(p.ts) IS NOT NULL
-                THEN FLOOR((epoch_us(MIN(p.ts)) - epoch_us(u.signup_ts)) / 86400000000)
-                ELSE FLOOR((epoch_us(h.end_ts) - epoch_us(u.signup_ts)) / 86400000000)
-           END AS BIGINT) AS t,
-           CAST(MIN(p.ts) IS NOT NULL AS INTEGER) AS d
-    FROM signups u
-    LEFT JOIN (SELECT user_id, ts FROM events WHERE event_type = 'purchase') p
-      ON p.user_id = u.user_id AND p.ts >= u.signup_ts
-    CROSS JOIN horizon h
-    GROUP BY u.user_id, u.signup_ts, h.end_ts
+           CAST({TIME_TO_EVENT_SQL} AS BIGINT) AS t,
+           CAST(conv_ts IS NOT NULL AS INTEGER) AS d
+    FROM conversions CROSS JOIN horizon
 ),
 gt AS (
     SELECT g, t, CAST(SUM(d) AS BIGINT) AS events,
@@ -4354,7 +4319,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             F.coalesce(F.col("n_hits"), F.lit(0)).alias("n_hits"),
             "n_true",
-            X.snap_round(
+            snap_round(
                 F.coalesce(F.col("n_hits"), F.lit(0)).cast("double")
                 / F.col("n_true").cast("double"),
                 4,
@@ -4489,39 +4454,9 @@ def q_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to KM — two user_id reductions, one keyed join, then
     everything is calendar-bounded."""
     e = load_table(spark, sf_dir, "events")
-    signups = e.filter(F.col("event_type") == "signup").groupBy("user_id").agg(
-        F.min("ts").alias("signup_ts")
-    )
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("pu"), F.col("ts").alias("p_ts")
-    )
-    horizon = e.agg(F.max("ts").alias("end_ts"))
-    per_user = (
-        signups.join(
-            purchases,
-            (F.col("user_id") == F.col("pu")) & (F.col("p_ts") >= F.col("signup_ts")),
-            "left",
-        )
-        .groupBy("user_id", "signup_ts")
-        .agg(F.min("p_ts").alias("conv_ts"))
-        .crossJoin(F.broadcast(horizon))
-        .select(
-            F.when(
-                F.col("conv_ts").isNotNull(),
-                F.floor(
-                    (F.unix_micros("conv_ts") - F.unix_micros("signup_ts"))
-                    / F.lit(86400000000)
-                ),
-            )
-            .otherwise(
-                F.floor(
-                    (F.unix_micros("end_ts") - F.unix_micros("signup_ts"))
-                    / F.lit(86400000000)
-                )
-            )
-            .alias("t"),
-            F.when(F.col("conv_ts").isNotNull(), 1).otherwise(0).alias("event"),
-        )
+    per_user = censored_conversions(e, signup_times(e)).select(
+        time_to_event().alias("t"),
+        F.when(F.col("conv_ts").isNotNull(), 1).otherwise(0).alias("event"),
     )
     daily = per_user.groupBy("t").agg(
         F.sum("event").cast("long").alias("d"),
@@ -4536,7 +4471,7 @@ def q_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     term = F.when(
         F.col("d") > 0,
-        X.snap_round(
+        snap_round(
             F.col("d").cast("double") / F.col("n_risk").cast("double"), 8
         ),
     ).otherwise(F.lit(0.0))
@@ -4549,31 +4484,19 @@ def q_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_risk",
             F.col("d").alias("n_events"),
             F.col("c").alias("n_censored"),
-            X.snap_round(cumhaz, 6).alias("cum_hazard"),
-            X.snap_round(F.exp(-cumhaz), 6).alias("breslow_survival"),
+            snap_round(cumhaz, 6).alias("cum_hazard"),
+            snap_round(F.exp(-cumhaz), 6).alias("breslow_survival"),
         )
         .orderBy("day")
     )
 
 
-NELSON_AALEN_SQL = """
-WITH signups AS (
-    SELECT user_id, MIN(ts) AS signup_ts
-    FROM events WHERE event_type = 'signup' GROUP BY user_id
-),
-horizon AS (SELECT MAX(ts) AS end_ts FROM events),
+NELSON_AALEN_SQL = f"""
+WITH {FIRST_CONVERSIONS_SQL},
 per_user AS (
-    SELECT s.user_id,
-           CASE WHEN MIN(p.ts) IS NOT NULL
-                THEN FLOOR((epoch_us(MIN(p.ts)) - epoch_us(s.signup_ts)) / 86400000000)
-                ELSE FLOOR((epoch_us(h.end_ts) - epoch_us(s.signup_ts)) / 86400000000)
-           END AS t,
-           CASE WHEN MIN(p.ts) IS NOT NULL THEN 1 ELSE 0 END AS event
-    FROM signups s
-    CROSS JOIN horizon h
-    LEFT JOIN events p
-      ON p.user_id = s.user_id AND p.event_type = 'purchase' AND p.ts >= s.signup_ts
-    GROUP BY s.user_id, s.signup_ts, h.end_ts
+    SELECT user_id, {TIME_TO_EVENT_SQL} AS t,
+           CASE WHEN conv_ts IS NOT NULL THEN 1 ELSE 0 END AS event
+    FROM conversions CROSS JOIN horizon
 ),
 daily AS (
     SELECT t, CAST(SUM(event) AS BIGINT) AS d,
@@ -4660,7 +4583,7 @@ def q_mcc_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mcc = F.when(
         denom > 0.0,
-        X.snap_round(
+        snap_round(
             (d_("tp") * d_("tn") - d_("fp") * d_("fn")) / F.sqrt(denom), 6
         ),
     ).otherwise(F.lit(0.0))
@@ -4790,7 +4713,7 @@ def q_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dim",
             F.col("n_queries").cast("long").alias("n_queries"),
             "n_hits",
-            X.snap_round(
+            snap_round(
                 F.col("n_hits").cast("double")
                 / (F.col("n_queries").cast("double") * 10.0),
                 6,
@@ -4872,7 +4795,7 @@ def q_embedding_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("nxt").isNotNull())
         .select(
             cosine(F.col("embedding"), F.col("nxt")).alias("cos"),
-            X.snap_round(norm(F.col("embedding")), 6).alias("nrm"),
+            snap_round(norm(F.col("embedding")), 6).alias("nrm"),
         )
     )
     cd = F.col("cos").cast("decimal(10,6)")
@@ -4888,9 +4811,9 @@ def q_embedding_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     var_c = F.col("scc").cast("double") / n - mean_c * mean_c
     return sums.select(
         F.col("n_pairs").cast("bigint").alias("n_pairs"),
-        X.snap_round(mean_c, 6).alias("mean_cos"),
-        X.snap_round(F.sqrt(var_c), 6).alias("std_cos"),
-        X.snap_round(F.col("sn").cast("double") / n, 6).alias("mean_norm"),
+        snap_round(mean_c, 6).alias("mean_cos"),
+        snap_round(F.sqrt(var_c), 6).alias("std_cos"),
+        snap_round(F.col("sn").cast("double") / n, 6).alias("mean_norm"),
     )
 
 
@@ -4957,7 +4880,7 @@ def q_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
         km.withColumn("nxt", F.coalesce(F.lead("day").over(w), F.lit(tau)))
         .filter(F.col("day") < tau)
         .select(
-            X.snap_round(
+            snap_round(
                 F.col("survival")
                 * (F.least(F.col("nxt"), F.lit(tau)) - F.col("day")).cast("double"),
                 6,
@@ -4974,8 +4897,8 @@ def q_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
     return total.crossJoin(F.broadcast(first)).select(
         F.lit(tau).cast("int").alias("tau_days"),
         F.col("d1").cast("int").alias("first_event_day"),
-        X.snap_round(F.col("rmst_sum").cast("double"), 6).alias("rmst_days"),
-        X.snap_round(F.col("rmst_sum").cast("double") / tau, 6).alias("rmst_share"),
+        snap_round(F.col("rmst_sum").cast("double"), 6).alias("rmst_days"),
+        snap_round(F.col("rmst_sum").cast("double") / tau, 6).alias("rmst_share"),
     )
 
 
@@ -5179,10 +5102,10 @@ def q_binary_quantization_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_queries",
         "hits_hamming",
         "hits_reranked",
-        X.snap_round(F.col("hits_hamming").cast("double") / denom, 6).alias(
+        snap_round(F.col("hits_hamming").cast("double") / denom, 6).alias(
             "recall_hamming_at_10"
         ),
-        X.snap_round(F.col("hits_reranked").cast("double") / denom, 6).alias(
+        snap_round(F.col("hits_reranked").cast("double") / denom, 6).alias(
             "recall_reranked_at_10"
         ),
     )
@@ -5436,13 +5359,13 @@ def q_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = per_q.select(
         F.col("n_probe").cast("long").alias("n_probe"),
         "query_id",
-        X.snap_round(
+        snap_round(
             F.col("n_hits").cast("double") / F.col("n_true").cast("double"), 4
         ).alias("recall_at_10"),
     )
     curve = rows.groupBy("n_probe").agg(
         F.lit(-1).cast("long").alias("query_id"),
-        X.snap_round(
+        snap_round(
             F.sum(F.col("recall_at_10").cast("decimal(10,4)")).cast("double")
             / F.count(F.lit(1)).cast("double"),
             4,
@@ -5549,7 +5472,7 @@ def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.slice(col, s_col * 8 + 1, 8)
 
     def l2s(a, b):
-        return X.snap_round(
+        return snap_round(
             F.aggregate(
                 F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
                 F.lit(0.0),
@@ -5660,7 +5583,7 @@ def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             F.coalesce(F.col("n_hits"), F.lit(0)).alias("n_hits"),
             "n_true",
-            X.snap_round(
+            snap_round(
                 F.coalesce(F.col("n_hits"), F.lit(0)).cast("double")
                 / F.col("n_true").cast("double"),
                 4,
@@ -5832,14 +5755,14 @@ def q_centered_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean_c = F.col("sc").cast("double") / n
     var_r = F.col("srr").cast("double") / n - mean_r * mean_r
     var_c = F.col("scc").cast("double") / n - mean_c * mean_c
-    mr = X.snap_round(mean_r, 6)
-    mc = X.snap_round(mean_c, 6)
+    mr = snap_round(mean_r, 6)
+    mc = snap_round(mean_c, 6)
     return sums.select(
         "n_pairs",
         mr.alias("mean_cos_raw"),
-        X.snap_round(F.sqrt(F.greatest(var_r, F.lit(0.0))), 6).alias("std_cos_raw"),
+        snap_round(F.sqrt(F.greatest(var_r, F.lit(0.0))), 6).alias("std_cos_raw"),
         mc.alias("mean_cos_centered"),
-        X.snap_round(F.sqrt(F.greatest(var_c, F.lit(0.0))), 6).alias(
+        snap_round(F.sqrt(F.greatest(var_c, F.lit(0.0))), 6).alias(
             "std_cos_centered"
         ),
         (F.abs(mc) < F.abs(mr)).alias("centering_helps"),
@@ -6160,7 +6083,7 @@ def q_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_pairs").cast("long").alias("n_pairs"),
             # per-cell term snaps to decimal BEFORE the sum so the
             # cross-partition accumulation is exact and order-free
-            X.snap_round(
+            snap_round(
                 F.sum(
                     (F.col("p") * F.col("n_pairs")).cast("decimal(28,12)")
                 ).cast("double")

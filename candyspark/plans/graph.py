@@ -807,7 +807,7 @@ def q_hits_customers_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the top-25 boundary is decided on the SNAPPED value with a part-id
     tiebreak, so membership is engine-independent too."""
     from candyspark.operators.hits import hits
-    from candyspark.operators.text import snap_round
+    from candyspark.functions.numeric import snap_round
 
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -940,7 +940,7 @@ def q_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         * F.coalesce(F.col("n_triangles"), F.lit(0)).cast("double")
         / (F.col("deg").cast("double") * (F.col("deg").cast("double") - 1.0))
     )
-    from candyspark.operators.text import snap_round
+    from candyspark.functions.numeric import snap_round
 
     return (
         deg.filter(F.col("deg") >= 2)

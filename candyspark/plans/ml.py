@@ -24,6 +24,7 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from candyspark.functions.numeric import snap_round
 from candyspark.operators import text as X
 from candyspark.plans import QuerySpec
 from candyspark.plans.extensions import _TOKS, TEXT_STATS_SQL
@@ -82,10 +83,10 @@ def q_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(n_train))
         .select(
             F.col("lang").alias("cand_lang"),
-            X.snap_round(
+            snap_round(
                 F.log(F.col("n_docs_l") / F.col("n_train").cast("double")), 9
             ).alias("log_prior"),
-            X.snap_round(
+            snap_round(
                 F.log((F.col("n_l") + F.col("v")).cast("double")), 9
             ).alias("log_denom"),
         )
@@ -134,7 +135,7 @@ def q_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         m.withColumn(
             "row_share",
-            X.snap_round(F.col("n_docs") / F.sum("n_docs").over(row_w), 6),
+            snap_round(F.col("n_docs") / F.sum("n_docs").over(row_w), 6),
         )
         .orderBy("true_lang", "pred_lang")
     )
@@ -333,8 +334,8 @@ def q_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
         out, "dim int, loading double, explained_variance_ratio double"
     ).select(
         "dim",
-        X.snap_round(F.col("loading"), 6).alias("loading"),
-        X.snap_round(F.col("explained_variance_ratio"), 6).alias(
+        snap_round(F.col("loading"), 6).alias("loading"),
+        snap_round(F.col("explained_variance_ratio"), 6).alias(
             "explained_variance_ratio"
         ),
     )
@@ -488,7 +489,7 @@ def q_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "n_bigrams",
-            X.snap_round(ppl, 4).alias("perplexity"),
+            snap_round(ppl, 4).alias("perplexity"),
             (ppl > 0.5 * F.col("v")).cast("int").alias("flag_junk"),
         )
         .orderBy("doc_id")
@@ -683,9 +684,9 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whose half-even ties differ from the oracle's decimal rounding)
     return raw.select(
         "channel",
-        X.snap_round(F.col("base_conversion"), 6).alias("base_conversion"),
-        X.snap_round(F.col("removal_effect"), 6).alias("removal_effect"),
-        X.snap_round(F.col("attribution_share"), 6).alias("attribution_share"),
+        snap_round(F.col("base_conversion"), 6).alias("base_conversion"),
+        snap_round(F.col("removal_effect"), 6).alias("removal_effect"),
+        snap_round(F.col("attribution_share"), 6).alias("attribution_share"),
     ).orderBy("channel")
 
 
@@ -891,8 +892,8 @@ def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             "bin",
             "n_docs",
-            X.snap_round(F.col("raw_rate"), 6).alias("raw_rate"),
-            X.snap_round(F.col("iso_rate"), 6).alias("iso_rate"),
+            snap_round(F.col("raw_rate"), 6).alias("raw_rate"),
+            snap_round(F.col("iso_rate"), 6).alias("iso_rate"),
         )
         .orderBy("source", "bin")
     )
@@ -1000,7 +1001,7 @@ def _ols2(x1: Column, x2: Column, y: Column, snap: int | None = None):
     )
     b = [F.when(det != 0, d / det) for d in (det0, det1, det2)]
     if snap is not None:
-        b = [X.snap_round(c, snap) for c in b]
+        b = [snap_round(c, snap) for c in b]
     b0, b1, b2 = b
     sse = syy - b0 * sy - b1 * s1y - b2 * s2y
     sst = syy - sy * sy / n
@@ -1106,10 +1107,10 @@ def q_ols_price_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums, (b0, b1, b2), sse, sst = _ols2(*_price_xy())
     return load_table(spark, sf_dir, "lineitem").agg(*sums).select(
         F.col("n").alias("n_rows"),
-        X.snap_round(b0, 4).alias("intercept"),
-        X.snap_round(b1, 4).alias("beta_price"),
-        X.snap_round(b2, 4).alias("beta_discount_pct"),
-        X.snap_round(F.when(sst > 0, 1.0 - sse / sst), 6).alias("r2"),
+        snap_round(b0, 4).alias("intercept"),
+        snap_round(b1, 4).alias("beta_price"),
+        snap_round(b2, 4).alias("beta_discount_pct"),
+        snap_round(F.when(sst > 0, 1.0 - sse / sst), 6).alias("r2"),
     )
 
 
@@ -1180,7 +1181,7 @@ def q_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.struct(
                     F.lit(a).alias("feat_a"),
                     F.lit(b).alias("feat_b"),
-                    X.snap_round(
+                    snap_round(
                         F.when((da > 0) & (db > 0), num / F.sqrt(da * db)), 6
                     ).alias("corr"),
                 )
@@ -1263,10 +1264,10 @@ def q_ols_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("p_brand").alias("brand"),
             F.col("n").alias("n_rows"),
-            X.snap_round(b0, 4).alias("intercept"),
-            X.snap_round(b1, 4).alias("beta_price"),
-            X.snap_round(b2, 4).alias("beta_discount_pct"),
-            X.snap_round(F.when(sst > 0, 1.0 - sse / sst), 6).alias("r2"),
+            snap_round(b0, 4).alias("intercept"),
+            snap_round(b1, 4).alias("beta_price"),
+            snap_round(b2, 4).alias("beta_discount_pct"),
+            snap_round(F.when(sst > 0, 1.0 - sse / sst), 6).alias("r2"),
         )
         .orderBy("brand")
     )
@@ -1347,7 +1348,7 @@ def q_embedding_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         ratios.groupBy("label")
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),
-            X.snap_round(
+            snap_round(
                 F.sum("ratio").cast("double") / F.count(F.lit(1)).cast("double"),
                 6,
             ).alias("mean_ratio"),
@@ -1997,8 +1998,8 @@ def q_eb_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("p_brand").alias("brand"),
             F.col("n").alias("n_lines"),
-            X.snap_round(F.col("p").cast("double"), 6).alias("raw_rate"),
-            X.snap_round(eb, 6).alias("eb_rate"),
+            snap_round(F.col("p").cast("double"), 6).alias("raw_rate"),
+            snap_round(eb, 6).alias("eb_rate"),
         )
         .orderBy("brand")
     )
@@ -2324,9 +2325,9 @@ def q_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "decile",
         "n_docs",
         "n_pos",
-        X.snap_round(rate, 6).alias("pos_rate"),
-        X.snap_round(rate / base, 6).alias("lift"),
-        X.snap_round(
+        snap_round(rate, 6).alias("pos_rate"),
+        snap_round(rate / base, 6).alias("lift"),
+        snap_round(
             F.col("cum_pos").cast("double") / F.col("total_pos").cast("double"), 6
         ).alias("cum_gain"),
     ).orderBy("decile")
@@ -2411,7 +2412,7 @@ def q_vif_collinearity(spark: SparkSession, sf_dir: str) -> DataFrame:
     def corr(sij, si, sj, sii, sjj):
         num = n * sij - si * sj
         den = F.sqrt(n * sii - si * si) * F.sqrt(n * sjj - sj * sj)
-        return X.snap_round(F.when(den > 0, num / den), 8)
+        return snap_round(F.when(den > 0, num / den), 8)
 
     r12 = corr(F.col("s12"), F.col("s1"), F.col("s2"), F.col("s11"), F.col("s22"))
     r13 = corr(F.col("s13"), F.col("s1"), F.col("s3"), F.col("s11"), F.col("s33"))
@@ -2431,11 +2432,11 @@ def q_vif_collinearity(spark: SparkSession, sf_dir: str) -> DataFrame:
         r12.alias("r_price_discount"),
         r13.alias("r_price_quantity"),
         r23.alias("r_discount_quantity"),
-        X.snap_round(vif1, 6).alias("vif_price"),
-        X.snap_round(vif2, 6).alias("vif_discount"),
-        X.snap_round(vif3, 6).alias("vif_quantity"),
+        snap_round(vif1, 6).alias("vif_price"),
+        snap_round(vif2, 6).alias("vif_discount"),
+        snap_round(vif3, 6).alias("vif_quantity"),
         (
-            F.greatest(X.snap_round(vif1, 6), X.snap_round(vif2, 6), X.snap_round(vif3, 6))
+            F.greatest(snap_round(vif1, 6), snap_round(vif2, 6), snap_round(vif3, 6))
             > 5.0
         ).alias("collinear"),
     )
@@ -2555,7 +2556,7 @@ def q_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
     e4 = F.round(e.cast("decimal(28,8)"), 4).cast("decimal(18,4)")
     u = F.round((e4 * e4).cast("decimal(37,8)"), 4).cast("decimal(18,4)")
     aux_sums, _, sse, sst = _ols2(x1, x2, u)
-    lm = X.snap_round(F.col("n").cast("double") * F.when(sst > 0, 1.0 - sse / sst), 4)
+    lm = snap_round(F.col("n").cast("double") * F.when(sst > 0, 1.0 - sse / sst), 4)
     return li.crossJoin(F.broadcast(betas)).agg(*aux_sums).select(
         F.col("n").cast("long").alias("n_rows"),
         lm.alias("lm_stat"),
@@ -2624,15 +2625,15 @@ def q_nested_f_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     s1y, syy = F.col("s1y"), F.col("syy")
     # restricted model y ~ c0 + c1*x1 (closed 2-param form)
     rdet = n * s11 - s1 * s1
-    c1 = X.snap_round(F.when(rdet != 0, (n * s1y - s1 * sy) / rdet), 8)
-    c0 = X.snap_round((sy - c1 * s1) / n, 8)
+    c1 = snap_round(F.when(rdet != 0, (n * s1y - s1 * sy) / rdet), 8)
+    c0 = snap_round((sy - c1 * s1) / n, 8)
     sse_r = syy - c0 * sy - c1 * s1y
-    f_stat = X.snap_round(
+    f_stat = snap_round(
         F.when(sse_f > 0, (sse_r - sse_f) / (sse_f / (n - 3.0))), 4
     )
     return load_table(spark, sf_dir, "lineitem").agg(*sums).select(
         F.col("n").cast("long").alias("n_rows"),
-        X.snap_round(sse_r - sse_f, 2).alias("ssr_gain"),
+        snap_round(sse_r - sse_f, 2).alias("ssr_gain"),
         f_stat.alias("f_stat"),
         (f_stat > 3.841).alias("discount_adds_signal"),
     )

@@ -15,7 +15,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from candyspark.operators.text import char_hash32, snap_round
+from candyspark.functions.numeric import snap_round
+from candyspark.operators.text import char_hash32
 from candyspark.plans import QuerySpec
 from candyspark.session import job_description
 from candyspark.sources.readers import load_table

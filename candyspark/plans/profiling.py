@@ -28,8 +28,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from candyspark.functions.numeric import money, rate, round2, snap_round
+from candyspark.functions.numeric import money, round2, snap_round
 from candyspark.plans import QuerySpec
+from candyspark.plans.relational import _revenue
 from candyspark.session import remove_at_exit
 from candyspark.sources.readers import load_table
 
@@ -1149,7 +1150,7 @@ def q_bucketed_join_no_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey"
     ).saveAsTable(ot)
     lib, ob = spark.table(lt), spark.table(ot)
-    rev = money("l_extendedprice") * rate(1 - F.col("l_discount"))
+    rev = _revenue()
     return (
         lib.hint("merge")
         .join(ob.hint("merge"), F.col("l_orderkey") == F.col("o_orderkey"))

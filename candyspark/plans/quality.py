@@ -33,6 +33,13 @@ from pyspark.sql import functions as F
 from candyspark.functions.numeric import snap_round
 from candyspark.operators.text import char_hash32, md5_prefix_int
 from candyspark.plans import QuerySpec
+from candyspark.plans.stats2 import (
+    MIDRANK2_SQL,
+    doubled_midrank,
+    returned_vs_kept,
+    split_sql,
+    split_totals,
+)
 from candyspark.sources.readers import load_table
 
 
@@ -1419,13 +1426,10 @@ def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Rank math without a global sort: l_quantity has BOUNDED integral
     support (TPC-H: 1..50), so the corpus collapses to one ≤50-row
-    per-value aggregate (map-side combined) and every rank statistic is a
-    window over that tiny relation. DOUBLED midranks stay exact int64
-    (R2(v) = 2·|{x < v}| + n(v) + 1 — the halves vanish, the
-    spearman_orders_revenue trick), so 2·U = Σ n_a(v)·R2(v) − n_a(n_a+1)
-    is exact integer algebra end to end. The tie-correction Σ(t³−t) runs
-    in DECIMAL(38,0) (t³ overflows int64 past ~2M rows per value; decimal
-    sums stay exact and order-free).
+    per-value aggregate (plans/stats2.returned_vs_kept) and U comes from
+    its exact doubled midranks (stats2.doubled_midrank). The
+    tie-correction Σ(t³−t) runs in DECIMAL(38,0) (t³ overflows int64 past
+    ~2M rows per value; decimal sums stay exact and order-free).
 
     The normal approximation (valid at any bench SF: min(n_a, n_b) ≫ 20)
     assembles in double with ONE association, identical in both engines,
@@ -1434,34 +1438,14 @@ def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     implementation would pay is gone by construction.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    per_v = (
-        li.select(
-            F.col("l_quantity").cast("long").alias("v"),
-            (F.col("l_returnflag") == "R").alias("is_a"),
-        )
-        .groupBy("v")
-        .agg(
-            F.sum(F.when(F.col("is_a"), 1).otherwise(0)).cast("long").alias("na_v"),
-            F.sum(F.when(F.col("is_a"), 0).otherwise(1)).cast("long").alias("nb_v"),
-        )
-    )
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = per_v.select(
+    ranked = returned_vs_kept(li, F.col("l_quantity").cast("long")).select(
         "na_v",
         "nb_v",
         (F.col("na_v") + F.col("nb_v")).alias("n_v"),
-        F.coalesce(
-            F.sum(F.col("na_v") + F.col("nb_v")).over(w), F.lit(0)
-        ).alias("cum_before"),
-    ).select(
-        "na_v",
-        "nb_v",
-        "n_v",
-        (2 * F.col("cum_before") + F.col("n_v") + 1).alias("r2"),
+        doubled_midrank().alias("r2"),
     )
-    sums = ranked.agg(
-        F.sum("na_v").cast("long").alias("n_a"),
-        F.sum("nb_v").cast("long").alias("n_b"),
+    sums = split_totals(
+        ranked,
         F.sum(F.col("na_v") * F.col("r2")).cast("long").alias("sum_r2a"),
         F.sum(
             F.col("n_v").cast("decimal(38,0)")
@@ -1493,19 +1477,10 @@ def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MANN_WHITNEY_SQL = """
-WITH per_v AS (
-    SELECT CAST(l_quantity AS BIGINT) AS v,
-           CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS na_v,
-           CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 0 ELSE 1 END) AS BIGINT) AS nb_v
-    FROM lineitem
-    GROUP BY 1
-),
+MANN_WHITNEY_SQL = f"""
+WITH {split_sql("CAST(l_quantity AS BIGINT)")},
 ranked AS (
-    SELECT na_v, nb_v, na_v + nb_v AS n_v,
-           2 * COALESCE(SUM(na_v + nb_v) OVER
-               (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-             + (na_v + nb_v) + 1 AS r2
+    SELECT na_v, nb_v, na_v + nb_v AS n_v, {MIDRANK2_SQL} AS r2
     FROM per_v
 ),
 sums AS (

@@ -11,10 +11,13 @@ mirrored bit-for-bit in the DuckDB oracle SQL.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from collections.abc import Iterable
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from candyspark.operators.text import snap_round, tokens, word_shingles
+from candyspark.functions.numeric import snap_round
+from candyspark.operators.text import tokens, word_shingles
 from candyspark.plans import QuerySpec
 from candyspark.plans.extensions import _TOKS
 from candyspark.sources.readers import fan_out, load_table
@@ -469,49 +472,56 @@ LIMIT 50
 REGISTRY["doc_cosine_pairs"] = QuerySpec(q_doc_cosine_pairs, DOC_COSINE_PAIRS_SQL)
 
 
-def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 retrieval (k1=1.2, b=0.75): score every document against a
-    fixed 4-term query and return the top 20. The missing classic next to
-    the TF-IDF rankers above; no reference counterpart (extension surface,
-    SURVEY.md §2.13).
+#: The 4-term query every single-query ranker here (and plans/retrieval2)
+#: scores the corpus against.
+QUERY_TERMS = ("hash", "join", "stream", "spark")
+QUERY_TERMS_SQL = ", ".join(f"'{t}'" for t in QUERY_TERMS)
 
-    Exactness across engines: with k1=1.2, b=0.75 the per-term score
-    idf·tf(k1+1)/(tf + k1(1-b+b·dl/avgdl)) rescales (multiply num/denom by
-    10·Σdl) to idf · 22·tf·Σdl / (10·tf·Σdl + 3·Σdl + 9·dl·N) — every
-    factor an exact int64 at bench SFs (Σdl < 2^53/22; re-scale per-shard
-    at 100 TB). The one transcendental (idf's ln) is snapped through
-    decimal once per TERM, and each per-term contribution is snapped to
-    DECIMAL(18,6) BEFORE the per-doc sum, so totals are partial-order
-    independent and engine-exact.
 
-    Scale: tf explodes tokens but filters to the query's terms BEFORE the
-    (doc, term) aggregate — the shuffle carries only query-term hits, not
-    the vocabulary. The text is tokenized ONCE: the narrow (doc_id, dl)
-    and (doc_id, term, tf) relations are materialized (localCheckpoint)
-    for their two consumers each, so the corpus never rescans — dl is
-    16 bytes/doc (at petabyte corpora swap the checkpoint for
-    persist(DISK_ONLY) or re-derive; tf is query-bounded either way). N, Σdl and
-    the ≤|query| idf rows ride in on broadcasts. Top-20 is a
-    TakeOrderedAndProject, never a global sort.
-    """
-    query_terms = ("hash", "join", "stream", "spark")
-    d = fan_out(load_table(spark, sf_dir, "documents"))
-    toks = d.select("doc_id", tokens("text").alias("toks"))
-    # tokenize once: dl feeds totals + contrib, tf feeds idf + contrib
-    dl = toks.select(
-        "doc_id", F.size("toks").cast("long").alias("dl")
-    ).localCheckpoint()
-    totals = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sumdl")
+def doc_lengths(toks: DataFrame) -> DataFrame:
+    """``(doc_id, dl)``: each document's token count, 16 bytes/doc. The
+    tokenize-once rankers materialize it (localCheckpoint) when it feeds
+    both the totals and the scored hits, so the corpus never rescans (at
+    petabyte corpora swap the checkpoint for persist(DISK_ONLY) or
+    re-derive)."""
+    return toks.select("doc_id", F.size("toks").cast("long").alias("dl"))
+
+
+def corpus_totals(dl: DataFrame) -> DataFrame:
+    """One row ``(n_docs, sumdl)``: N and Σdl, the constants every
+    length-normalized scorer divides by; it rides in on broadcasts."""
+    return dl.agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("dl").cast("long").alias("sumdl"),
     )
-    tf = (
+
+
+def query_tf(toks: DataFrame, terms: Iterable[str]) -> DataFrame:
+    """``(doc_id, term, tf)`` for the query's terms only: the explode filters
+    to the terms BEFORE the (doc, term) aggregate, so the shuffle carries
+    only query-term hits, not the vocabulary (query-bounded at any corpus
+    size)."""
+    return (
         toks.select("doc_id", F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(*query_terms))
+        .filter(F.col("term").isin(*terms))
         .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint()
+        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )
-    idf = (
+
+
+def scored_hits(tf: DataFrame, dl: DataFrame, totals: DataFrame) -> DataFrame:
+    """One row per query-term hit carrying tf, dl, n_docs and sumdl: the
+    keyed tf ⨝ dl join with the one-row totals broadcast on."""
+    return tf.join(dl, "doc_id").crossJoin(F.broadcast(totals))
+
+
+def bm25_idf(tf: DataFrame, totals: DataFrame, *extra: Column) -> DataFrame:
+    """``(term, idf, *extra)``: the BM25 idf ln((N − df + 0.5)/(df + 0.5) + 1)
+    per query term, over the ≤|query| document frequencies. The one
+    transcendental is snapped through decimal once per TERM, so both
+    engines score from the same constant. ``extra`` are further per-term
+    columns over ``df`` and the totals (rrf_fusion's smooth idf)."""
+    return (
         tf.groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
         .crossJoin(F.broadcast(totals))
@@ -519,33 +529,98 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "term",
             snap_round(
                 F.log(
-                    (F.col("n_docs") - F.col("df") + 0.5)
-                    / (F.col("df") + 0.5)
+                    (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
                     + 1.0
                 ),
                 6,
             ).alias("idf"),
+            *extra,
         )
     )
-    contrib = (
-        tf.join(dl, "doc_id")
-        .crossJoin(F.broadcast(totals))
-        .join(F.broadcast(idf), "term")
-        .select(
-            "doc_id",
-            snap_round(
-                F.col("idf")
-                * (22 * F.col("tf") * F.col("sumdl")).cast("double")
-                / (
-                    10 * F.col("tf") * F.col("sumdl")
-                    + 3 * F.col("sumdl")
-                    + 9 * F.col("dl") * F.col("n_docs")
-                ).cast("double"),
-                6,
-            )
-            .cast("decimal(18,6)")
-            .alias("c"),
+
+
+def bm25_term() -> Column:
+    """One hit's BM25 (k1=1.2, b=0.75) contribution over
+    :func:`scored_hits` joined to :func:`bm25_idf`, as DECIMAL(18,6).
+
+    Exactness across engines: the per-term score
+    idf·tf(k1+1)/(tf + k1(1-b+b·dl/avgdl)) rescales (multiply num/denom by
+    10·Σdl) to idf · 22·tf·Σdl / (10·tf·Σdl + 3·Σdl + 9·dl·N) — every
+    factor an exact int64 at bench SFs (Σdl < 2^53/22; re-scale per-shard
+    at 100 TB). Each per-term contribution is snapped to DECIMAL(18,6)
+    BEFORE the per-doc sum, so the sums are partial-order independent and
+    engine-exact."""
+    return (
+        snap_round(
+            F.col("idf")
+            * (22 * F.col("tf") * F.col("sumdl")).cast("double")
+            / (
+                10 * F.col("tf") * F.col("sumdl")
+                + 3 * F.col("sumdl")
+                + 9 * F.col("dl") * F.col("n_docs")
+            ).cast("double"),
+            6,
         )
+        .cast("decimal(18,6)")
+    )
+
+
+def bm25_corpus_sql(terms: str) -> str:
+    """The oracle's tokenize-once CTEs ``t``, ``dl``, ``totals`` and ``tf``
+    (the SQL side of :func:`doc_lengths`, :func:`corpus_totals` and
+    :func:`query_tf`); ``terms`` is the body of the tf ``IN (...)``."""
+    return f"""t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
+totals AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
+                  CAST(SUM(dl) AS BIGINT) AS sumdl FROM dl),
+tf AS (
+    SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
+    FROM (SELECT doc_id, unnest(toks) AS term FROM t)
+    WHERE term IN ({terms})
+    GROUP BY doc_id, term
+)"""
+
+
+#: The per-term snapped BM25 idf (:func:`bm25_idf`) over ``n_docs``/``df``.
+_BM25_IDF_SQL = """CAST(ROUND(CAST(LN((n_docs - df + 0.5) / (df + 0.5) + 1.0)
+                AS DECIMAL(28,8)), 6) AS DOUBLE)"""
+_IDF_SQL = f"""idf AS (
+    SELECT term, {_BM25_IDF_SQL} AS idf
+    FROM (SELECT term, COUNT(*) AS df FROM tf GROUP BY term)
+    CROSS JOIN totals
+)"""
+#: One hit's rescaled, snapped contribution (:func:`bm25_term`).
+_BM25_TERM_SQL = """CAST(ROUND(CAST(
+                idf * CAST(22 * tf * sumdl AS DOUBLE)
+                    / CAST(10 * tf * sumdl + 3 * sumdl + 9 * dl * n_docs
+                           AS DOUBLE)
+                AS DECIMAL(28,8)), 6) AS DECIMAL(18,6))"""
+#: The FROM clause of :func:`scored_hits`.
+HITS_SQL = "tf JOIN dl USING (doc_id) CROSS JOIN totals"
+
+
+def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 retrieval (k1=1.2, b=0.75): score every document against a
+    fixed 4-term query and return the top 20. The missing classic next to
+    the TF-IDF rankers above; no reference counterpart (extension surface,
+    SURVEY.md §2.13). Exactness: :func:`bm25_idf` and :func:`bm25_term`.
+
+    Scale: the text is tokenized ONCE: the narrow (doc_id, dl) and
+    (doc_id, term, tf) relations are materialized (localCheckpoint) for
+    their two consumers each, so the corpus never rescans. N, Σdl and the
+    ≤|query| idf rows ride in on broadcasts. Top-20 is a
+    TakeOrderedAndProject, never a global sort.
+    """
+    d = fan_out(load_table(spark, sf_dir, "documents"))
+    toks = d.select("doc_id", tokens("text").alias("toks"))
+    # tokenize once: dl feeds totals + contrib, tf feeds idf + contrib
+    dl = doc_lengths(toks).localCheckpoint()
+    totals = corpus_totals(dl)
+    tf = query_tf(toks, QUERY_TERMS).localCheckpoint()
+    contrib = (
+        scored_hits(tf, dl, totals)
+        .join(F.broadcast(bm25_idf(tf, totals)), "term")
+        .select("doc_id", bm25_term().alias("c"))
     )
     return (
         contrib.groupBy("doc_id")
@@ -556,30 +631,11 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 BM25_TOPK_SQL = f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
-totals AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS sumdl FROM dl),
-tf AS (
-    SELECT doc_id, term, COUNT(*) AS tf
-    FROM (SELECT doc_id, unnest(toks) AS term FROM t)
-    WHERE term IN ('hash', 'join', 'stream', 'spark')
-    GROUP BY doc_id, term
-),
-idf AS (
-    SELECT term,
-           CAST(ROUND(CAST(LN((n_docs - df + 0.5) / (df + 0.5) + 1.0)
-                AS DECIMAL(28,8)), 6) AS DOUBLE) AS idf
-    FROM (SELECT term, COUNT(*) AS df FROM tf GROUP BY term)
-    CROSS JOIN totals
-),
+WITH {bm25_corpus_sql(QUERY_TERMS_SQL)},
+{_IDF_SQL},
 contrib AS (
-    SELECT doc_id,
-           CAST(ROUND(CAST(
-                idf * CAST(22 * tf * sumdl AS DOUBLE)
-                    / CAST(10 * tf * sumdl + 3 * sumdl + 9 * dl * n_docs
-                           AS DOUBLE)
-                AS DECIMAL(28,8)), 6) AS DECIMAL(18,6)) AS c
-    FROM tf JOIN dl USING (doc_id) CROSS JOIN totals JOIN idf USING (term)
+    SELECT doc_id, {_BM25_TERM_SQL} AS c
+    FROM {HITS_SQL} JOIN idf USING (term)
 )
 SELECT doc_id, CAST(SUM(c) AS DOUBLE) AS bm25
 FROM contrib GROUP BY doc_id
@@ -612,55 +668,25 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapped at 8 dp. At 100 TB the only corpus-sized work is the
     query-term tf shuffle both rankers already share.
     """
-    query_terms = ("hash", "join", "stream", "spark")
     d = fan_out(load_table(spark, sf_dir, "documents"))
     toks = d.select("doc_id", tokens("text").alias("toks"))
-    dl = toks.select(
-        "doc_id", F.size("toks").cast("long").alias("dl")
-    ).localCheckpoint()
-    totals = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sumdl")
-    )
-    tf = (
-        toks.select("doc_id", F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(*query_terms))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint()
-    )
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idfs = dfreq.crossJoin(F.broadcast(totals)).select(
-        "term",
-        snap_round(
-            F.log(
-                (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                + 1.0
-            ),
-            6,
-        ).alias("idf_bm25"),
+    dl = doc_lengths(toks).localCheckpoint()
+    totals = corpus_totals(dl)
+    tf = query_tf(toks, QUERY_TERMS).localCheckpoint()
+    idfs = bm25_idf(
+        tf,
+        totals,
         snap_round(
             F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)) + F.lit(1.0),
             6,
         ).alias("idf_smooth"),
     )
     contrib = (
-        tf.join(dl, "doc_id")
-        .crossJoin(F.broadcast(totals))
+        scored_hits(tf, dl, totals)
         .join(F.broadcast(idfs), "term")
         .select(
             "doc_id",
-            snap_round(
-                F.col("idf_bm25")
-                * (22 * F.col("tf") * F.col("sumdl")).cast("double")
-                / (
-                    10 * F.col("tf") * F.col("sumdl")
-                    + 3 * F.col("sumdl")
-                    + 9 * F.col("dl") * F.col("n_docs")
-                ).cast("double"),
-                6,
-            )
-            .cast("decimal(18,6)")
-            .alias("c_bm25"),
+            bm25_term().alias("c_bm25"),
             snap_round(F.col("tf") * F.col("idf_smooth"), 6)
             .cast("decimal(18,6)")
             .alias("c_tfidf"),
@@ -706,19 +732,10 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 RRF_FUSION_SQL = f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
-totals AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS sumdl FROM dl),
-tf AS (
-    SELECT doc_id, term, COUNT(*) AS tf
-    FROM (SELECT doc_id, unnest(toks) AS term FROM t)
-    WHERE term IN ('hash', 'join', 'stream', 'spark')
-    GROUP BY doc_id, term
-),
-idfs AS (
+WITH {bm25_corpus_sql(QUERY_TERMS_SQL)},
+idf AS (
     SELECT term,
-           CAST(ROUND(CAST(LN((n_docs - df + 0.5) / (df + 0.5) + 1.0)
-                AS DECIMAL(28,8)), 6) AS DOUBLE) AS idf_bm25,
+           {_BM25_IDF_SQL} AS idf,
            CAST(ROUND(CAST(LN((n_docs + 1.0) / (df + 1.0)) + 1.0
                 AS DECIMAL(28,8)), 6) AS DOUBLE) AS idf_smooth
     FROM (SELECT term, COUNT(*) AS df FROM tf GROUP BY term)
@@ -726,14 +743,10 @@ idfs AS (
 ),
 contrib AS (
     SELECT doc_id,
-           CAST(ROUND(CAST(
-                idf_bm25 * CAST(22 * tf * sumdl AS DOUBLE)
-                    / CAST(10 * tf * sumdl + 3 * sumdl + 9 * dl * n_docs
-                           AS DOUBLE)
-                AS DECIMAL(28,8)), 6) AS DECIMAL(18,6)) AS c_bm25,
+           {_BM25_TERM_SQL} AS c_bm25,
            CAST(ROUND(CAST(tf * idf_smooth AS DECIMAL(28,8)), 6)
                 AS DECIMAL(18,6)) AS c_tfidf
-    FROM tf JOIN dl USING (doc_id) CROSS JOIN totals JOIN idfs USING (term)
+    FROM {HITS_SQL} JOIN idf USING (term)
 ),
 scores AS (
     SELECT doc_id,
@@ -789,22 +802,11 @@ def q_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-20s are TakeOrderedAndProject; everything after runs on ≤20-row
     frames.
     """
-    query_terms = ("hash", "join", "stream", "spark")
     d = fan_out(load_table(spark, sf_dir, "documents"))
     toks = d.select("doc_id", tokens("text").alias("toks"))
-    dl = toks.select(
-        "doc_id", F.size("toks").cast("long").alias("dl")
-    ).localCheckpoint()
-    totals = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sumdl")
-    )
-    tf = (
-        toks.select("doc_id", F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(*query_terms))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint()
-    )
+    dl = doc_lengths(toks).localCheckpoint()
+    totals = corpus_totals(dl)
+    tf = query_tf(toks, QUERY_TERMS).localCheckpoint()
     rel = tf.groupBy("doc_id").agg(
         (
             F.countDistinct("term")
@@ -813,40 +815,10 @@ def q_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("rel")
     ).localCheckpoint()
-    idf = (
-        tf.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(totals))
-        .select(
-            "term",
-            snap_round(
-                F.log(
-                    (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                    + 1.0
-                ),
-                6,
-            ).alias("idf"),
-        )
-    )
     scores = (
-        tf.join(dl, "doc_id")
-        .crossJoin(F.broadcast(totals))
-        .join(F.broadcast(idf), "term")
-        .select(
-            "doc_id",
-            snap_round(
-                F.col("idf")
-                * (22 * F.col("tf") * F.col("sumdl")).cast("double")
-                / (
-                    10 * F.col("tf") * F.col("sumdl")
-                    + 3 * F.col("sumdl")
-                    + 9 * F.col("dl") * F.col("n_docs")
-                ).cast("double"),
-                6,
-            )
-            .cast("decimal(18,6)")
-            .alias("c"),
-        )
+        scored_hits(tf, dl, totals)
+        .join(F.broadcast(bm25_idf(tf, totals)), "term")
+        .select("doc_id", bm25_term().alias("c"))
         .groupBy("doc_id")
         .agg(F.sum("c").cast("double").alias("bm25"))
     )
@@ -892,37 +864,18 @@ def q_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 NDCG_EVAL_SQL = f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
-totals AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS sumdl FROM dl),
-tf AS (
-    SELECT doc_id, term, COUNT(*) AS tf
-    FROM (SELECT doc_id, unnest(toks) AS term FROM t)
-    WHERE term IN ('hash', 'join', 'stream', 'spark')
-    GROUP BY doc_id, term
-),
+WITH {bm25_corpus_sql(QUERY_TERMS_SQL)},
 rel AS (SELECT doc_id,
                CAST(COUNT(DISTINCT term)
                     + CASE WHEN SUM(tf) >= 8 THEN 2
                            WHEN SUM(tf) >= 4 THEN 1 ELSE 0 END AS BIGINT) AS rel
         FROM tf GROUP BY doc_id),
-idf AS (
-    SELECT term,
-           CAST(ROUND(CAST(LN((n_docs - df + 0.5) / (df + 0.5) + 1.0)
-                AS DECIMAL(28,8)), 6) AS DOUBLE) AS idf
-    FROM (SELECT term, COUNT(*) AS df FROM tf GROUP BY term)
-    CROSS JOIN totals
-),
+{_IDF_SQL},
 scores AS (
     SELECT doc_id, CAST(SUM(c) AS DOUBLE) AS bm25
     FROM (
-        SELECT doc_id,
-               CAST(ROUND(CAST(
-                    idf * CAST(22 * tf * sumdl AS DOUBLE)
-                        / CAST(10 * tf * sumdl + 3 * sumdl + 9 * dl * n_docs
-                               AS DOUBLE)
-                    AS DECIMAL(28,8)), 6) AS DECIMAL(18,6)) AS c
-        FROM tf JOIN dl USING (doc_id) CROSS JOIN totals JOIN idf USING (term)
+        SELECT doc_id, {_BM25_TERM_SQL} AS c
+        FROM {HITS_SQL} JOIN idf USING (term)
     ) GROUP BY doc_id
 ),
 top AS (SELECT doc_id, bm25 FROM scores ORDER BY bm25 DESC, doc_id LIMIT 20),
@@ -1332,56 +1285,14 @@ def q_batch_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = spark.createDataFrame(query_rows, "qid int, term string")
     d = fan_out(load_table(spark, sf_dir, "documents"))
     toks = d.select("doc_id", tokens("text").alias("toks"))
-    dl = toks.select(
-        "doc_id", F.size("toks").cast("long").alias("dl")
-    ).localCheckpoint()
-    totals = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sumdl")
-    )
+    dl = doc_lengths(toks).localCheckpoint()
+    totals = corpus_totals(dl)
     all_terms = sorted({term for _, term in query_rows})
-    tf = (
-        toks.select("doc_id", F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(*all_terms))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint()
-    )
-    idf = (
-        tf.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(totals))
-        .select(
-            "term",
-            snap_round(
-                F.log(
-                    (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                    + 1.0
-                ),
-                6,
-            ).alias("idf"),
-        )
-    )
+    tf = query_tf(toks, all_terms).localCheckpoint()
     contrib = (
-        tf.join(F.broadcast(queries), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(totals))
-        .join(F.broadcast(idf), "term")
-        .select(
-            "qid",
-            "doc_id",
-            snap_round(
-                F.col("idf")
-                * (22 * F.col("tf") * F.col("sumdl")).cast("double")
-                / (
-                    10 * F.col("tf") * F.col("sumdl")
-                    + 3 * F.col("sumdl")
-                    + 9 * F.col("dl") * F.col("n_docs")
-                ).cast("double"),
-                6,
-            )
-            .cast("decimal(18,6)")
-            .alias("c"),
-        )
+        scored_hits(tf.join(F.broadcast(queries), "term"), dl, totals)
+        .join(F.broadcast(bm25_idf(tf, totals)), "term")
+        .select("qid", "doc_id", bm25_term().alias("c"))
     )
     scored = contrib.groupBy("qid", "doc_id").agg(
         F.sum("c").cast("double").alias("bm25")
@@ -1403,31 +1314,12 @@ WITH queries AS (
         (3, 'spark'), (3, 'query'), (3, 'fast')
     ) AS q(qid, term)
 ),
-t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
-totals AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS sumdl FROM dl),
-tf AS (
-    SELECT doc_id, term, COUNT(*) AS tf
-    FROM (SELECT doc_id, unnest(toks) AS term FROM t)
-    WHERE term IN (SELECT DISTINCT term FROM queries)
-    GROUP BY doc_id, term
-),
-idf AS (
-    SELECT term,
-           CAST(ROUND(CAST(LN((n_docs - df + 0.5) / (df + 0.5) + 1.0)
-                AS DECIMAL(28,8)), 6) AS DOUBLE) AS idf
-    FROM (SELECT term, COUNT(*) AS df FROM tf GROUP BY term)
-    CROSS JOIN totals
-),
+{bm25_corpus_sql("SELECT DISTINCT term FROM queries")},
+{_IDF_SQL},
 scored AS (
     SELECT qid, doc_id, CAST(SUM(c) AS DOUBLE) AS bm25
     FROM (
-        SELECT qid, doc_id,
-               CAST(ROUND(CAST(
-                    idf * CAST(22 * tf * sumdl AS DOUBLE)
-                        / CAST(10 * tf * sumdl + 3 * sumdl + 9 * dl * n_docs
-                               AS DOUBLE)
-                    AS DECIMAL(28,8)), 6) AS DECIMAL(18,6)) AS c
+        SELECT qid, doc_id, {_BM25_TERM_SQL} AS c
         FROM tf
         JOIN queries USING (term)
         JOIN dl USING (doc_id)
@@ -1468,14 +1360,13 @@ def q_query_expansion_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids broadcast back against the (doc, term) relation; corpus df is one
     map-side-combined aggregate.
     """
-    query_terms = ("hash", "join", "stream", "spark")
     d = fan_out(load_table(spark, sf_dir, "documents"))
     toks = d.select("doc_id", tokens("text").alias("toks")).localCheckpoint()
     doc_terms = toks.select("doc_id", F.explode("toks").alias("term")).distinct()
     qtf = (
         toks.select(
             "doc_id",
-            F.size(F.filter(F.col("toks"), lambda t: t.isin(*query_terms))).alias(
+            F.size(F.filter(F.col("toks"), lambda t: t.isin(*QUERY_TERMS))).alias(
                 "qtf"
             ),
         )
@@ -1487,7 +1378,7 @@ def q_query_expansion_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = toks.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     fb = (
         doc_terms.join(F.broadcast(qtf), "doc_id")
-        .filter(~F.col("term").isin(*query_terms))
+        .filter(~F.col("term").isin(*QUERY_TERMS))
         .groupBy("term")
         .agg(F.count(F.lit(1)).cast("long").alias("df_fb"))
     )
@@ -1574,25 +1465,18 @@ def q_qld_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the bm25 contract — dl and query-term tf materialize via
     localCheckpoint), the shuffle carries query-term hits only, top-10
     is TakeOrdered."""
-    query_terms = ("hash", "join", "stream", "spark")
     mu = 300.0
     d = fan_out(load_table(spark, sf_dir, "documents"))
     toks = d.select("doc_id", tokens("text").alias("toks")).localCheckpoint()
-    dl = toks.select("doc_id", F.size("toks").cast("long").alias("dl"))
-    tf = (
-        toks.select("doc_id", F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(*query_terms))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    totals = dl.agg(F.sum("dl").cast("long").alias("coll_len"))
+    dl = doc_lengths(toks)
+    tf = query_tf(toks, QUERY_TERMS)
     cf = (
         tf.groupBy("term")
         .agg(F.sum("tf").cast("long").alias("cf"))
-        .crossJoin(F.broadcast(totals))
+        .crossJoin(F.broadcast(corpus_totals(dl)))
         .select(
             "term",
-            (F.col("cf").cast("double") / F.col("coll_len").cast("double")).alias("pq"),
+            (F.col("cf").cast("double") / F.col("sumdl").cast("double")).alias("pq"),
         )
     )
     c_const = cf.select(
@@ -1628,18 +1512,10 @@ def q_qld_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QLD_RETRIEVAL_SQL = f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks),
-tf AS (
-    SELECT doc_id, term, COUNT(*) AS tf
-    FROM (SELECT doc_id, unnest(t) AS term FROM toks)
-    WHERE term IN ('hash', 'join', 'stream', 'spark')
-    GROUP BY doc_id, term
-),
-totals AS (SELECT CAST(SUM(dl) AS BIGINT) AS coll_len FROM dl),
+WITH {bm25_corpus_sql(QUERY_TERMS_SQL)},
 cf AS (
-    SELECT term, CAST(SUM(tf) AS DOUBLE) / CAST(totals.coll_len AS DOUBLE) AS pq
-    FROM tf CROSS JOIN totals GROUP BY term, totals.coll_len
+    SELECT term, CAST(SUM(tf) AS DOUBLE) / CAST(totals.sumdl AS DOUBLE) AS pq
+    FROM tf CROSS JOIN totals GROUP BY term, totals.sumdl
 ),
 c_const AS (
     SELECT CAST(SUM(CAST(ROUND(CAST(LN(300.0 * pq) AS DECIMAL(28,8)), 9)

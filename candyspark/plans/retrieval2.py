@@ -20,38 +20,71 @@ construction, so the log never sees zero).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from candyspark.operators.text import snap_round, tokens
+from candyspark.functions.numeric import snap_round
+from candyspark.operators.text import tokens
 from candyspark.plans import QuerySpec
-from candyspark.plans.extensions import _TOKS
+from candyspark.plans.retrieval import (
+    HITS_SQL,
+    QUERY_TERMS,
+    QUERY_TERMS_SQL,
+    bm25_corpus_sql,
+    corpus_totals,
+    doc_lengths,
+    query_tf,
+    scored_hits,
+)
 from candyspark.sources.readers import fan_out, load_table
 
 REGISTRY: dict[str, QuerySpec] = {}
 
-_QUERY_TERMS = ("hash", "join", "stream", "spark")
+
+def _corpus(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The tokenized documents and their lengths, left lazy: the rankers in
+    plans/retrieval checkpoint dl and tf, these evaluators re-derive them."""
+    d = fan_out(load_table(spark, sf_dir, "documents"))
+    toks = d.select("doc_id", tokens("text").alias("toks"))
+    return toks, doc_lengths(toks)
+
+
+def _saturation(b: float) -> Column:
+    """BM25 saturation tf/(tf + k1·(1 − b + b·dl/avgdl)), k1 = 1.2, over
+    :func:`scored_hits`: orderings for different b genuinely differ — any
+    pure function of tf/dl would rank identically."""
+    return snap_round(
+        F.col("tf").cast("double")
+        / (
+            F.col("tf").cast("double")
+            + 1.2
+            * (
+                (1.0 - b)
+                + b
+                * F.col("dl").cast("double")
+                * F.col("n_docs").cast("double")
+                / F.col("sumdl").cast("double")
+            )
+        ),
+        6,
+    )
+
+
+def _saturation_sql(b: float) -> str:
+    return f"""CAST(ROUND(CAST(
+               CAST(tf AS DOUBLE)
+               / (CAST(tf AS DOUBLE)
+                  + 1.2 * ((1.0 - {b}) + {b} * CAST(dl AS DOUBLE)
+                           * CAST(n_docs AS DOUBLE) / CAST(sumdl AS DOUBLE)))
+               AS DECIMAL(28,8)), 6) AS DOUBLE)"""
 
 
 def _per_term_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared scaffold: per (term, doc) tf over the 4-term query relation,
     length-normalized score, per-term rank (window keyed by term), top-10."""
-    d = fan_out(load_table(spark, sf_dir, "documents"))
-    toks = d.select("doc_id", tokens("text").alias("toks"))
-    dl = toks.select("doc_id", F.size("toks").cast("long").alias("dl"))
-    totals = dl.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("sumdl"),
-    )
-    tf = (
-        toks.select("doc_id", F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(*_QUERY_TERMS))
-        .groupBy("term", "doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
+    toks, dl = _corpus(spark, sf_dir)
     scored = (
-        tf.join(dl, "doc_id")
-        .crossJoin(F.broadcast(totals))
+        scored_hits(query_tf(toks, QUERY_TERMS), dl, corpus_totals(dl))
         .select(
             "term",
             "doc_id",
@@ -76,16 +109,7 @@ def _per_term_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _RANKED_SQL = f"""
-t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
-totals AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-                  CAST(SUM(dl) AS BIGINT) AS sumdl FROM dl),
-tf AS (
-    SELECT term, doc_id, CAST(COUNT(*) AS BIGINT) AS tf
-    FROM (SELECT doc_id, unnest(toks) AS term FROM t)
-    WHERE term IN ('hash', 'join', 'stream', 'spark')
-    GROUP BY term, doc_id
-),
+{bm25_corpus_sql(QUERY_TERMS_SQL)},
 scored AS (
     SELECT term, doc_id, tf,
            CAST(ROUND(CAST(
@@ -93,7 +117,7 @@ scored AS (
                / (CAST(2 * tf AS DOUBLE) * CAST(sumdl AS DOUBLE)
                   + 3.0 * CAST(dl AS DOUBLE) * CAST(n_docs AS DOUBLE))
                AS DECIMAL(28,8)), 6) AS DOUBLE) AS score
-    FROM tf JOIN dl USING (doc_id) CROSS JOIN totals
+    FROM {HITS_SQL}
 ),
 ranked AS (
     SELECT term, doc_id, tf,
@@ -300,43 +324,12 @@ def q_rbo_rank_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer overlaps, snapped p-power weights, exact decimal sums;
     '__mean__' row appended. Ranks are keyed windows (per query).
     """
-    d = fan_out(load_table(spark, sf_dir, "documents"))
-    toks = d.select("doc_id", tokens("text").alias("toks"))
-    dl = toks.select("doc_id", F.size("toks").cast("long").alias("dl"))
-    totals = dl.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("sumdl"),
-    )
-    tf = (
-        toks.select("doc_id", F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(*_QUERY_TERMS))
-        .groupBy("term", "doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
-
-    def score(b: float) -> F.Column:
-        # BM25 saturation (k1 = 1.2): orderings for different b genuinely
-        # differ — any pure function of tf/dl would rank identically
-        return snap_round(
-            F.col("tf").cast("double")
-            / (
-                F.col("tf").cast("double")
-                + 1.2
-                * (
-                    (1.0 - b)
-                    + b
-                    * F.col("dl").cast("double")
-                    * F.col("n_docs").cast("double")
-                    / F.col("sumdl").cast("double")
-                )
-            ),
-            6,
-        )
-
+    toks, dl = _corpus(spark, sf_dir)
     scored = (
-        tf.join(dl, "doc_id")
-        .crossJoin(F.broadcast(totals))
-        .select("term", "doc_id", score(0.25).alias("sa"), score(0.75).alias("sb"))
+        scored_hits(query_tf(toks, QUERY_TERMS), dl, corpus_totals(dl))
+        .select(
+            "term", "doc_id", _saturation(0.25).alias("sa"), _saturation(0.75).alias("sb")
+        )
         .localCheckpoint()  # two rank consumers
     )
     ra = F.row_number().over(Window.partitionBy("term").orderBy(F.desc("sa"), "doc_id"))
@@ -388,31 +381,12 @@ def q_rbo_rank_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 RBO_RANK_AGREEMENT_SQL = f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
-totals AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-                  CAST(SUM(dl) AS BIGINT) AS sumdl FROM dl),
-tf AS (
-    SELECT term, doc_id, CAST(COUNT(*) AS BIGINT) AS tf
-    FROM (SELECT doc_id, unnest(toks) AS term FROM t)
-    WHERE term IN ('hash', 'join', 'stream', 'spark')
-    GROUP BY term, doc_id
-),
+WITH {bm25_corpus_sql(QUERY_TERMS_SQL)},
 scored AS (
     SELECT term, doc_id,
-           CAST(ROUND(CAST(
-               CAST(tf AS DOUBLE)
-               / (CAST(tf AS DOUBLE)
-                  + 1.2 * ((1.0 - 0.25) + 0.25 * CAST(dl AS DOUBLE)
-                           * CAST(n_docs AS DOUBLE) / CAST(sumdl AS DOUBLE)))
-               AS DECIMAL(28,8)), 6) AS DOUBLE) AS sa,
-           CAST(ROUND(CAST(
-               CAST(tf AS DOUBLE)
-               / (CAST(tf AS DOUBLE)
-                  + 1.2 * ((1.0 - 0.75) + 0.75 * CAST(dl AS DOUBLE)
-                           * CAST(n_docs AS DOUBLE) / CAST(sumdl AS DOUBLE)))
-               AS DECIMAL(28,8)), 6) AS DOUBLE) AS sb
-    FROM tf JOIN dl USING (doc_id) CROSS JOIN totals
+           {_saturation_sql(0.25)} AS sa,
+           {_saturation_sql(0.75)} AS sb
+    FROM {HITS_SQL}
 ),
 top_a AS (
     SELECT term, doc_id,
@@ -486,42 +460,16 @@ def q_interleave_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     drafting). Per-query credit counts are exact integers; the verdict
     row per query plus the '__wins__' summary.
     """
-    d = fan_out(load_table(spark, sf_dir, "documents"))
-    toks = d.select("doc_id", tokens("text").alias("toks"))
-    dl = toks.select("doc_id", F.size("toks").cast("long").alias("dl"))
-    totals = dl.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("sumdl"),
-    )
-    tf = (
-        toks.select("doc_id", F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(*_QUERY_TERMS))
-        .groupBy("term", "doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
-
-    def score(b: float) -> F.Column:
-        # BM25 saturation (k1 = 1.2) — see q_rbo_rank_agreement
-        return snap_round(
-            F.col("tf").cast("double")
-            / (
-                F.col("tf").cast("double")
-                + 1.2
-                * (
-                    (1.0 - b)
-                    + b
-                    * F.col("dl").cast("double")
-                    * F.col("n_docs").cast("double")
-                    / F.col("sumdl").cast("double")
-                )
-            ),
-            6,
-        )
-
+    toks, dl = _corpus(spark, sf_dir)
     scored = (
-        tf.join(dl, "doc_id")
-        .crossJoin(F.broadcast(totals))
-        .select("term", "doc_id", "tf", score(0.25).alias("sa"), score(0.75).alias("sb"))
+        scored_hits(query_tf(toks, QUERY_TERMS), dl, corpus_totals(dl))
+        .select(
+            "term",
+            "doc_id",
+            "tf",
+            _saturation(0.25).alias("sa"),
+            _saturation(0.75).alias("sb"),
+        )
         .localCheckpoint()
     )
     ra = F.row_number().over(Window.partitionBy("term").orderBy(F.desc("sa"), "doc_id"))
@@ -585,31 +533,12 @@ def q_interleave_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 INTERLEAVE_EVAL_SQL = f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
-totals AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-                  CAST(SUM(dl) AS BIGINT) AS sumdl FROM dl),
-tf AS (
-    SELECT term, doc_id, CAST(COUNT(*) AS BIGINT) AS tf
-    FROM (SELECT doc_id, unnest(toks) AS term FROM t)
-    WHERE term IN ('hash', 'join', 'stream', 'spark')
-    GROUP BY term, doc_id
-),
+WITH {bm25_corpus_sql(QUERY_TERMS_SQL)},
 scored AS (
     SELECT term, doc_id, tf,
-           CAST(ROUND(CAST(
-               CAST(tf AS DOUBLE)
-               / (CAST(tf AS DOUBLE)
-                  + 1.2 * ((1.0 - 0.25) + 0.25 * CAST(dl AS DOUBLE)
-                           * CAST(n_docs AS DOUBLE) / CAST(sumdl AS DOUBLE)))
-               AS DECIMAL(28,8)), 6) AS DOUBLE) AS sa,
-           CAST(ROUND(CAST(
-               CAST(tf AS DOUBLE)
-               / (CAST(tf AS DOUBLE)
-                  + 1.2 * ((1.0 - 0.75) + 0.75 * CAST(dl AS DOUBLE)
-                           * CAST(n_docs AS DOUBLE) / CAST(sumdl AS DOUBLE)))
-               AS DECIMAL(28,8)), 6) AS DOUBLE) AS sb
-    FROM tf JOIN dl USING (doc_id) CROSS JOIN totals
+           {_saturation_sql(0.25)} AS sa,
+           {_saturation_sql(0.75)} AS sb
+    FROM {HITS_SQL}
 ),
 both_r AS (
     SELECT term, doc_id, tf,
@@ -683,13 +612,9 @@ def q_average_precision_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows out.
     """
     ranked = _per_term_ranked(spark, sf_dir)
-    d = fan_out(load_table(spark, sf_dir, "documents"))
-    toks = d.select("doc_id", tokens("text").alias("toks"))
+    toks, _ = _corpus(spark, sf_dir)
     rel_total = (
-        toks.select("doc_id", F.explode("toks").alias("term"))
-        .filter(F.col("term").isin(*_QUERY_TERMS))
-        .groupBy("term", "doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
+        query_tf(toks, QUERY_TERMS)
         .filter(F.col("tf") >= 4)
         .groupBy("term")
         .agg(F.count(F.lit(1)).cast("long").alias("r_total"))
@@ -750,14 +675,7 @@ AVERAGE_PRECISION_SQL = f"""
 WITH {_RANKED_SQL},
 rel_total AS (
     SELECT term, CAST(COUNT(*) AS BIGINT) AS r_total
-    FROM (
-        SELECT term, doc_id, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM (SELECT doc_id, unnest(toks) AS term FROM t)
-        WHERE term IN ('hash', 'join', 'stream', 'spark')
-        GROUP BY term, doc_id
-    )
-    WHERE tf >= 4
-    GROUP BY term
+    FROM tf WHERE tf >= 4 GROUP BY term
 ),
 contrib AS (
     SELECT term, pos,

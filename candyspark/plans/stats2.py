@@ -26,14 +26,108 @@ posture as the acf/pacf family in plans/analytics.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from candyspark.functions.numeric import snap_round
 from candyspark.plans import QuerySpec
+from candyspark.plans.analytics import (
+    CENTRED_SERIES_SQL,
+    centred_series,
+    daily_revenue,
+    daily_revenue_sql,
+    lag_sums,
+    snap_term,
+)
 from candyspark.sources.readers import load_table
 
 REGISTRY: dict[str, QuerySpec] = {}
+
+
+# --- the returned-vs-kept split ----------------------------------------------
+
+
+def returned_vs_kept(
+    li: DataFrame, v: Column, *aggs: Column, **cols: Column
+) -> DataFrame:
+    """``(v, na_v, nb_v, *aggs)``: lineitem collapsed to one row per value
+    ``v`` with its returned ('R', sample a) and kept (sample b) counts —
+    the two-sample tests' bounded-support posture. l_quantity (50 integer
+    values) or the discount in cents (11) collapse the table to ≤50 rows
+    in one map-side-combined aggregate, so every rank and ECDF statistic
+    after it is a window over that tiny relation, never a distributed
+    sort. ``aggs`` are further per-value aggregates; they read ``is_a``
+    and the projected ``cols``."""
+    return (
+        li.select(
+            v.alias("v"),
+            (F.col("l_returnflag") == "R").alias("is_a"),
+            *(c.alias(k) for k, c in cols.items()),
+        )
+        .groupBy("v")
+        .agg(
+            F.sum(F.when(F.col("is_a"), 1).otherwise(0)).cast("long").alias("na_v"),
+            F.sum(F.when(F.col("is_a"), 0).otherwise(1)).cast("long").alias("nb_v"),
+            *aggs,
+        )
+    )
+
+
+def split_cums(per_v: DataFrame, *cols: Column | str) -> DataFrame:
+    """``(*cols, ca, cb)``: the cumulative returned and kept counts in
+    value order — both ECDFs on the pooled support, as exact integers."""
+    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
+    return per_v.select(
+        *cols, F.sum("na_v").over(w).alias("ca"), F.sum("nb_v").over(w).alias("cb")
+    )
+
+
+def split_totals(per_v: DataFrame, *aggs: Column) -> DataFrame:
+    """One row ``(n_a, n_b, *aggs)``: the two sample sizes."""
+    return per_v.agg(
+        F.sum("na_v").cast("long").alias("n_a"),
+        F.sum("nb_v").cast("long").alias("n_b"),
+        *aggs,
+    )
+
+
+def doubled_midrank() -> Column:
+    """R2(v) = 2·|{x < v}| + n(v) + 1 over :func:`returned_vs_kept`: the
+    DOUBLED midrank stays an exact int64 (the halves vanish, the
+    spearman_orders_revenue trick), so 2·U = Σ n_a(v)·R2(v) − n_a(n_a+1)
+    is exact integer algebra end to end."""
+    before = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
+    n_v = F.col("na_v") + F.col("nb_v")
+    return 2 * F.coalesce(F.sum(n_v).over(before), F.lit(0)) + n_v + 1
+
+
+def split_sql(v: str, *aggs: str) -> str:
+    """The oracle's ``per_v`` CTE (:func:`returned_vs_kept`)."""
+    extra = "".join(f",\n           {a}" for a in aggs)
+    return f"""per_v AS (
+    SELECT {v} AS v,
+           CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS na_v,
+           CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 0 ELSE 1 END) AS BIGINT) AS nb_v{extra}
+    FROM lineitem GROUP BY 1
+)"""
+
+
+#: The per-value split's ``cums`` (:func:`split_cums`, with ``l = n(v)``)
+#: and ``totals`` (:func:`split_totals`) CTEs.
+SPLIT_CUMS_SQL = """cums AS (
+    SELECT v, na_v + nb_v AS l,
+           SUM(na_v) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS ca,
+           SUM(nb_v) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cb
+    FROM per_v
+)"""
+SPLIT_TOTALS_SQL = """totals AS (
+    SELECT CAST(SUM(na_v) AS BIGINT) AS n_a, CAST(SUM(nb_v) AS BIGINT) AS n_b
+    FROM per_v
+)"""
+#: :func:`doubled_midrank` over ``per_v``.
+MIDRANK2_SQL = """2 * COALESCE(SUM(na_v + nb_v) OVER
+               (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+             + (na_v + nb_v) + 1"""
 
 
 def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -55,26 +149,9 @@ def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     implementation pays never happens.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    per_v = (
-        li.select(
-            F.round(F.col("l_discount") * 100, 0).cast("long").alias("v"),
-            (F.col("l_returnflag") == "R").alias("is_a"),
-        )
-        .groupBy("v")
-        .agg(
-            F.sum(F.when(F.col("is_a"), 1).otherwise(0)).cast("long").alias("na_v"),
-            F.sum(F.when(F.col("is_a"), 0).otherwise(1)).cast("long").alias("nb_v"),
-        )
-    )
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    cums = per_v.select(
-        F.sum("na_v").over(w).alias("ca"),
-        F.sum("nb_v").over(w).alias("cb"),
-    )
-    totals = per_v.agg(
-        F.sum("na_v").cast("long").alias("n_a"),
-        F.sum("nb_v").cast("long").alias("n_b"),
-    )
+    per_v = returned_vs_kept(li, F.round(F.col("l_discount") * 100, 0).cast("long"))
+    cums = split_cums(per_v)
+    totals = split_totals(per_v)
     gaps = cums.crossJoin(F.broadcast(totals)).select(
         "n_a",
         "n_b",
@@ -111,23 +188,10 @@ def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-KS_TEST_SQL = """
-WITH per_v AS (
-    SELECT CAST(ROUND(l_discount * 100, 0) AS BIGINT) AS v,
-           CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS na_v,
-           CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 0 ELSE 1 END) AS BIGINT) AS nb_v
-    FROM lineitem
-    GROUP BY 1
-),
-cums AS (
-    SELECT SUM(na_v) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS ca,
-           SUM(nb_v) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cb
-    FROM per_v
-),
-totals AS (
-    SELECT CAST(SUM(na_v) AS BIGINT) AS n_a, CAST(SUM(nb_v) AS BIGINT) AS n_b
-    FROM per_v
-),
+KS_TEST_SQL = f"""
+WITH {split_sql("CAST(ROUND(l_discount * 100, 0) AS BIGINT)")},
+{SPLIT_CUMS_SQL},
+{SPLIT_TOTALS_SQL},
 top AS (
     SELECT n_a, n_b, CAST(MAX(ABS(ca * n_b - cb * n_a)) AS BIGINT) AS d_int
     FROM cums CROSS JOIN totals
@@ -446,40 +510,20 @@ def q_effect_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholds.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    qty = F.col("l_quantity").cast("decimal(12,2)")
-    per_v = (
-        li.select(
-            F.col("l_quantity").cast("long").alias("v"),
-            (F.col("l_returnflag") == "R").alias("is_a"),
-            qty.alias("q"),
-        )
-        .groupBy("v")
-        .agg(
-            F.sum(F.when(F.col("is_a"), 1).otherwise(0)).cast("long").alias("na_v"),
-            F.sum(F.when(F.col("is_a"), 0).otherwise(1)).cast("long").alias("nb_v"),
-            F.sum(F.when(F.col("is_a"), F.col("q")).otherwise(F.lit(0))).alias("sqa"),
-            F.sum(F.when(F.col("is_a"), F.col("q") * F.col("q")).otherwise(F.lit(0))).alias("sqqa"),
-            F.sum(F.when(F.col("is_a"), F.lit(0)).otherwise(F.col("q"))).alias("sqb"),
-            F.sum(F.when(F.col("is_a"), F.lit(0)).otherwise(F.col("q") * F.col("q"))).alias("sqqb"),
-        )
+    per_v = returned_vs_kept(
+        li,
+        F.col("l_quantity").cast("long"),
+        F.sum(F.when(F.col("is_a"), F.col("q")).otherwise(F.lit(0))).alias("sqa"),
+        F.sum(F.when(F.col("is_a"), F.col("q") * F.col("q")).otherwise(F.lit(0))).alias("sqqa"),
+        F.sum(F.when(F.col("is_a"), F.lit(0)).otherwise(F.col("q"))).alias("sqb"),
+        F.sum(F.when(F.col("is_a"), F.lit(0)).otherwise(F.col("q") * F.col("q"))).alias("sqqb"),
+        q=F.col("l_quantity").cast("decimal(12,2)"),
     )
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
     ranked = per_v.select(
-        "na_v",
-        "nb_v",
-        "sqa",
-        "sqqa",
-        "sqb",
-        "sqqb",
-        (
-            2 * F.coalesce(F.sum(F.col("na_v") + F.col("nb_v")).over(w), F.lit(0))
-            + (F.col("na_v") + F.col("nb_v"))
-            + 1
-        ).alias("r2"),
+        "na_v", "nb_v", "sqa", "sqqa", "sqb", "sqqb", doubled_midrank().alias("r2")
     )
-    sums = ranked.agg(
-        F.sum("na_v").cast("long").alias("n_a"),
-        F.sum("nb_v").cast("long").alias("n_b"),
+    sums = split_totals(
+        ranked,
         F.sum(F.col("na_v") * F.col("r2")).cast("long").alias("sum_r2a"),
         F.sum("sqa").alias("sa"),
         F.sum("sqqa").alias("saa"),
@@ -510,29 +554,17 @@ def q_effect_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EFFECT_SIZES_SQL = """
-WITH per_v AS (
-    SELECT CAST(l_quantity AS BIGINT) AS v,
-           CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS na_v,
-           CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 0 ELSE 1 END) AS BIGINT) AS nb_v,
-           SUM(CASE WHEN l_returnflag = 'R'
-                    THEN CAST(l_quantity AS DECIMAL(12,2)) ELSE 0 END) AS sqa,
-           SUM(CASE WHEN l_returnflag = 'R'
-                    THEN CAST(l_quantity AS DECIMAL(12,2))
-                         * CAST(l_quantity AS DECIMAL(12,2)) ELSE 0 END) AS sqqa,
-           SUM(CASE WHEN l_returnflag = 'R'
-                    THEN 0 ELSE CAST(l_quantity AS DECIMAL(12,2)) END) AS sqb,
-           SUM(CASE WHEN l_returnflag = 'R'
-                    THEN 0 ELSE CAST(l_quantity AS DECIMAL(12,2))
-                                * CAST(l_quantity AS DECIMAL(12,2)) END) AS sqqb
-    FROM lineitem
-    GROUP BY 1
-),
+_Q = "CAST(l_quantity AS DECIMAL(12,2))"
+EFFECT_SIZES_SQL = f"""
+WITH {split_sql(
+    "CAST(l_quantity AS BIGINT)",
+    f"SUM(CASE WHEN l_returnflag = 'R' THEN {_Q} ELSE 0 END) AS sqa",
+    f"SUM(CASE WHEN l_returnflag = 'R' THEN {_Q} * {_Q} ELSE 0 END) AS sqqa",
+    f"SUM(CASE WHEN l_returnflag = 'R' THEN 0 ELSE {_Q} END) AS sqb",
+    f"SUM(CASE WHEN l_returnflag = 'R' THEN 0 ELSE {_Q} * {_Q} END) AS sqqb",
+)},
 ranked AS (
-    SELECT na_v, nb_v, sqa, sqqa, sqb, sqqb,
-           2 * COALESCE(SUM(na_v + nb_v) OVER
-               (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-             + (na_v + nb_v) + 1 AS r2
+    SELECT na_v, nb_v, sqa, sqqa, sqb, sqqb, {MIDRANK2_SQL} AS r2
     FROM per_v
 ),
 sums AS (
@@ -904,46 +936,15 @@ def q_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     exp(−Q/2)·Σ_{k≤3}(Q/2)^k/k! — no incomplete-gamma machinery, one
     identical double expression in both engines.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy("o_orderdate").agg(
-        F.sum(F.col("o_totalprice").cast("decimal(12,2)")).alias("r")
-    )
-    w = Window.orderBy("o_orderdate")
-    series = daily.select(F.row_number().over(w).alias("t"), "r")
-    mu_stats = series.agg(
-        F.round(
-            (F.sum("r").cast("double") / F.count(F.lit(1)).cast("double")).cast(
-                "decimal(28,8)"
-            ),
-            6,
-        )
-        .cast("decimal(18,6)")
-        .alias("mu"),
-    )
-    ser = (
-        series.crossJoin(F.broadcast(mu_stats))
-        .select(
-            "t",
-            (F.col("r") - F.col("mu")).cast("decimal(16,6)").cast("double").alias("d"),
-        )
-        .localCheckpoint()  # 3 consumers: denominator + both join sides
-    )
+    # 3 consumers: denominator + both join sides
+    ser = centred_series(spark, sf_dir).localCheckpoint()
     den = ser.agg(
-        F.sum(F.round((F.col("d") * F.col("d")).cast("decimal(28,8)"), 6)).alias("den"),
+        F.sum(snap_term(F.col("d") * F.col("d"))).alias("den"),
         F.count(F.lit(1)).cast("long").alias("n"),
     )
     lags = spark.range(1, 9).select(F.col("id").cast("int").alias("l"))
-    shifted = ser.crossJoin(F.broadcast(lags)).select(
-        (F.col("t") + F.col("l")).alias("t"), "l", F.col("d").alias("d2")
-    )
     rho = (
-        ser.join(shifted, "t")
-        .groupBy("l")
-        .agg(
-            F.sum(F.round((F.col("d") * F.col("d2")).cast("decimal(28,8)"), 6)).alias(
-                "num"
-            )
-        )
+        lag_sums(ser, lags)
         .crossJoin(F.broadcast(den))
         .select(
             "l",
@@ -985,23 +986,8 @@ def q_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-LJUNG_BOX_SQL = """
-WITH daily AS (
-    SELECT o_orderdate, SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS r
-    FROM orders GROUP BY o_orderdate
-),
-series AS (
-    SELECT ROW_NUMBER() OVER (ORDER BY o_orderdate) AS t, r FROM daily
-),
-mu_stats AS (
-    SELECT CAST(ROUND(CAST(CAST(SUM(r) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-                AS DECIMAL(28,8)), 6) AS DECIMAL(18,6)) AS mu
-    FROM series
-),
-ser AS (
-    SELECT t, CAST(CAST(r - mu AS DECIMAL(16,6)) AS DOUBLE) AS d
-    FROM series CROSS JOIN mu_stats
-),
+LJUNG_BOX_SQL = f"""
+WITH {CENTRED_SERIES_SQL},
 den AS (
     SELECT SUM(ROUND(CAST(d * d AS DECIMAL(28,8)), 6)) AS den,
            CAST(COUNT(*) AS BIGINT) AS n
@@ -1067,12 +1053,8 @@ def q_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-pattern −p·ln p terms snapped at 10 dp and summed as exact
     decimals, normalized by ln 6 (the tie-free alphabet size).
     """
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy("o_orderdate").agg(
-        F.sum(F.col("o_totalprice").cast("decimal(12,2)")).alias("r")
-    )
     w = Window.orderBy("o_orderdate")
-    trip = daily.select(
+    trip = daily_revenue(spark, sf_dir).select(
         F.col("r").alias("a"),
         F.lead("r", 1).over(w).alias("b"),
         F.lead("r", 2).over(w).alias("c"),
@@ -1124,11 +1106,8 @@ def q_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PERMUTATION_ENTROPY_SQL = """
-WITH daily AS (
-    SELECT o_orderdate, SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS r
-    FROM orders GROUP BY o_orderdate
-),
+PERMUTATION_ENTROPY_SQL = f"""
+WITH {daily_revenue_sql()},
 trip AS (
     SELECT r AS a,
            LEAD(r, 1) OVER (ORDER BY o_orderdate) AS b,
@@ -1692,28 +1671,12 @@ def q_wasserstein_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     One ≤11-row aggregate past the scan, same posture as ks_test.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    per_v = (
-        li.select(
-            F.round(F.col("l_discount") * 100, 0).cast("long").alias("v"),
-            (F.col("l_returnflag") == "R").alias("is_a"),
-        )
-        .groupBy("v")
-        .agg(
-            F.sum(F.when(F.col("is_a"), 1).otherwise(0)).cast("long").alias("na_v"),
-            F.sum(F.when(F.col("is_a"), 0).otherwise(1)).cast("long").alias("nb_v"),
-        )
-    )
-    w = Window.orderBy("v")
-    wc = w.rowsBetween(Window.unboundedPreceding, 0)
-    cums = per_v.select(
-        "v",
-        F.sum("na_v").over(wc).alias("ca"),
-        F.sum("nb_v").over(wc).alias("cb"),
-        (F.lead("v").over(w) - F.col("v")).alias("dv"),
+    per_v = returned_vs_kept(li, F.round(F.col("l_discount") * 100, 0).cast("long"))
+    cums = split_cums(
+        per_v, "v", (F.lead("v").over(Window.orderBy("v")) - F.col("v")).alias("dv")
     ).filter(F.col("dv").isNotNull())
-    totals = per_v.agg(
-        F.sum("na_v").cast("long").alias("n_a"),
-        F.sum("nb_v").cast("long").alias("n_b"),
+    totals = split_totals(
+        per_v,
         F.sum(F.col("v") * F.col("na_v")).cast("long").alias("sa"),
         F.sum(F.col("v") * F.col("nb_v")).cast("long").alias("sb"),
     )
@@ -1747,13 +1710,8 @@ def q_wasserstein_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-WASSERSTEIN_DISTANCE_SQL = """
-WITH per_v AS (
-    SELECT CAST(ROUND(l_discount * 100, 0) AS BIGINT) AS v,
-           CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS na_v,
-           CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 0 ELSE 1 END) AS BIGINT) AS nb_v
-    FROM lineitem GROUP BY 1
-),
+WASSERSTEIN_DISTANCE_SQL = f"""
+WITH {split_sql("CAST(ROUND(l_discount * 100, 0) AS BIGINT)")},
 cums AS (
     SELECT v,
            SUM(na_v) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS ca,
@@ -1808,18 +1766,8 @@ def q_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Also reports the test statistic T = (n_a·n_b/(n_a+n_b))·E.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    per_v = (
-        li.select(
-            F.col("l_quantity").cast("long").alias("v"),
-            (F.col("l_returnflag") == "R").alias("is_a"),
-        )
-        .groupBy("v")
-        .agg(
-            F.sum(F.when(F.col("is_a"), 1).otherwise(0)).cast("long").alias("na_v"),
-            F.sum(F.when(F.col("is_a"), 0).otherwise(1)).cast("long").alias("nb_v"),
-        )
-        .localCheckpoint()  # both sides of the 50×50 product + totals
-    )
+    # both sides of the 50×50 product + totals
+    per_v = returned_vs_kept(li, F.col("l_quantity").cast("long")).localCheckpoint()
     o = per_v.select(
         F.col("v").alias("u"),
         F.col("na_v").alias("na_u"),
@@ -1837,11 +1785,7 @@ def q_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("dist") * F.col("na_v") * F.col("na_u")).alias("saa"),
         F.sum(F.col("dist") * F.col("nb_v") * F.col("nb_u")).alias("sbb"),
     )
-    totals = per_v.agg(
-        F.sum("na_v").cast("long").alias("n_a"),
-        F.sum("nb_v").cast("long").alias("n_b"),
-    )
-    j = sums.crossJoin(F.broadcast(totals))
+    j = sums.crossJoin(F.broadcast(split_totals(per_v)))
     na = F.col("n_a").cast("double")
     nb = F.col("n_b").cast("double")
     e = (
@@ -1857,13 +1801,8 @@ def q_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ENERGY_DISTANCE_SQL = """
-WITH per_v AS (
-    SELECT CAST(l_quantity AS BIGINT) AS v,
-           CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS na_v,
-           CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 0 ELSE 1 END) AS BIGINT) AS nb_v
-    FROM lineitem GROUP BY 1
-),
+ENERGY_DISTANCE_SQL = f"""
+WITH {split_sql("CAST(l_quantity AS BIGINT)")},
 prod AS (
     SELECT CAST(ABS(a.v - b.v) AS DECIMAL(28,0)) AS dist,
            CAST(a.na_v AS DECIMAL(28,0)) AS na_v,
@@ -1878,10 +1817,7 @@ sums AS (
            SUM(dist * nb_v * nb_u) AS sbb
     FROM prod
 ),
-totals AS (
-    SELECT CAST(SUM(na_v) AS BIGINT) AS n_a, CAST(SUM(nb_v) AS BIGINT) AS n_b
-    FROM per_v
-)
+{SPLIT_TOTALS_SQL}
 SELECT n_a, n_b,
        CAST(ROUND(CAST(
            2.0 * CAST(sab AS DOUBLE) / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE))
@@ -2037,10 +1973,7 @@ def q_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows — the replay is bit-identical across engines. Reports the
     max excursion, the λ threshold, the first alarm day, and the verdict.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(12,2)")).alias("r")
-    )
+    daily = daily_revenue(spark, sf_dir, F.to_date("o_orderdate").alias("d"))
     gstats = daily.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("r").alias("sr"),
@@ -2109,12 +2042,8 @@ def q_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PAGE_HINKLEY_SQL = """
-WITH daily AS (
-    SELECT CAST(o_orderdate AS DATE) AS d,
-           SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS r
-    FROM orders GROUP BY 1
-),
+PAGE_HINKLEY_SQL = f"""
+WITH {daily_revenue_sql("CAST(o_orderdate AS DATE) AS d")},
 gstats AS (
     SELECT CAST(COUNT(*) AS BIGINT) AS n, SUM(r) AS sr, SUM(r * r) AS srr
     FROM daily
@@ -2181,10 +2110,7 @@ def q_pot_gpd_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums; the implied 10× rarer return level u + σ/ξ·(10^ξ − 1) checks
     the fit against intuition. One snapped formula each — deterministic.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(12,2)")).alias("r")
-    )
+    daily = daily_revenue(spark, sf_dir, F.to_date("o_orderdate").alias("d"))
     wv = Window.orderBy(F.desc("r"), "d")
     ranked = daily.select(
         "r",
@@ -2224,12 +2150,8 @@ def q_pot_gpd_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-POT_GPD_FIT_SQL = """
-WITH daily AS (
-    SELECT CAST(o_orderdate AS DATE) AS d,
-           SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS r
-    FROM orders GROUP BY 1
-),
+POT_GPD_FIT_SQL = f"""
+WITH {daily_revenue_sql("CAST(o_orderdate AS DATE) AS d")},
 ranked AS (
     SELECT r, ROW_NUMBER() OVER (ORDER BY r DESC, d) AS rk,
            COUNT(*) OVER () AS n_days

@@ -42,6 +42,21 @@ from pyspark.sql import functions as F
 from candyspark.functions.numeric import money, snap_round
 from candyspark.operators.text import char_hash32
 from candyspark.plans import QuerySpec
+from candyspark.plans.extensions import (
+    FIRST_CONVERSIONS_SQL,
+    TIME_TO_EVENT_SQL,
+    censored_conversions,
+    signup_times,
+    time_to_event,
+)
+from candyspark.plans.stats2 import (
+    SPLIT_CUMS_SQL,
+    SPLIT_TOTALS_SQL,
+    returned_vs_kept,
+    split_cums,
+    split_sql,
+    split_totals,
+)
 from candyspark.sources.readers import load_table
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -61,44 +76,16 @@ def _cox_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = earlier-cohort (signup in the first half of the signup span —
     deterministic from min/max, non-degenerate at every SF)."""
     e = load_table(spark, sf_dir, "events")
-    signups = (
-        e.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("signup_ts"))
-    )
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("pu"), F.col("ts").alias("p_ts")
-    )
+    signups = signup_times(e)
     bounds = signups.agg(
         F.min(F.unix_micros("signup_ts")).alias("lo"),
         F.max(F.unix_micros("signup_ts")).alias("hi"),
     )
-    horizon = e.agg(F.max("ts").alias("end_ts"))
     per_user = (
-        signups.join(
-            purchases,
-            (F.col("user_id") == F.col("pu")) & (F.col("p_ts") >= F.col("signup_ts")),
-            "left",
-        )
-        .groupBy("user_id", "signup_ts")
-        .agg(F.min("p_ts").alias("conv_ts"))
-        .crossJoin(F.broadcast(horizon))
+        censored_conversions(e, signups)
         .crossJoin(F.broadcast(bounds))
         .select(
-            F.when(
-                F.col("conv_ts").isNotNull(),
-                F.floor(
-                    (F.unix_micros("conv_ts") - F.unix_micros("signup_ts"))
-                    / F.lit(86400000000)
-                ),
-            )
-            .otherwise(
-                F.floor(
-                    (F.unix_micros("end_ts") - F.unix_micros("signup_ts"))
-                    / F.lit(86400000000)
-                )
-            )
-            .alias("t"),
+            time_to_event().alias("t"),
             F.when(F.col("conv_ts").isNotNull(), 1).otherwise(0).alias("event"),
             # earlier cohort: 2*signup <= lo+hi avoids the /2 rounding
             F.when(
@@ -259,31 +246,17 @@ b{k} AS (
 
 
 COX_PH_SQL = (
-    """
-WITH signups AS (
-    SELECT user_id, MIN(ts) AS signup_ts
-    FROM events WHERE event_type = 'signup' GROUP BY 1
-),
+    f"""
+WITH {FIRST_CONVERSIONS_SQL},
 bounds AS (
     SELECT MIN(epoch_us(signup_ts)) AS lo, MAX(epoch_us(signup_ts)) AS hi
     FROM signups
 ),
-horizon AS (SELECT MAX(ts) AS end_ts FROM events),
 per_user AS (
-    SELECT
-        CASE WHEN MIN(p.ts) IS NOT NULL
-             THEN CAST(FLOOR((epoch_us(MIN(p.ts)) - epoch_us(s.signup_ts))
-                  / 86400000000.0) AS BIGINT)
-             ELSE CAST(FLOOR((epoch_us(h.end_ts) - epoch_us(s.signup_ts))
-                  / 86400000000.0) AS BIGINT) END AS t,
-        CASE WHEN MIN(p.ts) IS NOT NULL THEN 1 ELSE 0 END AS event,
-        CASE WHEN epoch_us(s.signup_ts) * 2 <= b.lo + b.hi THEN 1 ELSE 0 END AS x
-    FROM signups s
-    CROSS JOIN horizon h
-    CROSS JOIN bounds b
-    LEFT JOIN (SELECT user_id, ts FROM events WHERE event_type = 'purchase') p
-      ON p.user_id = s.user_id AND p.ts >= s.signup_ts
-    GROUP BY s.user_id, s.signup_ts, h.end_ts, b.lo, b.hi
+    SELECT CAST({TIME_TO_EVENT_SQL} AS BIGINT) AS t,
+           CASE WHEN conv_ts IS NOT NULL THEN 1 ELSE 0 END AS event,
+           CASE WHEN epoch_us(signup_ts) * 2 <= lo + hi THEN 1 ELSE 0 END AS x
+    FROM conversions CROSS JOIN horizon CROSS JOIN bounds
 ),
 daily AS (
     SELECT t,
@@ -483,17 +456,7 @@ def q_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: one map-side-combined ≤50-row aggregate, then constants.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    per_v = (
-        li.select(
-            F.col("l_quantity").cast("long").alias("v"),
-            (F.col("l_returnflag") == "R").alias("is_a"),
-        )
-        .groupBy("v")
-        .agg(
-            F.sum(F.when(F.col("is_a"), 1).otherwise(0)).cast("long").alias("na_v"),
-            F.sum(F.when(F.col("is_a"), 0).otherwise(1)).cast("long").alias("nb_v"),
-        )
-    )
+    per_v = returned_vs_kept(li, F.col("l_quantity").cast("long"))
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     whole = Window.partitionBy()
     cums = per_v.select(
@@ -546,15 +509,8 @@ def q_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MOOD_MEDIAN_SQL = """
-WITH per_v AS (
-    SELECT CAST(l_quantity AS BIGINT) AS v,
-           CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT)
-               AS na_v,
-           CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 0 ELSE 1 END) AS BIGINT)
-               AS nb_v
-    FROM lineitem GROUP BY 1
-),
+MOOD_MEDIAN_SQL = f"""
+WITH {split_sql("CAST(l_quantity AS BIGINT)")},
 cums AS (
     SELECT v,
            CAST(SUM(na_v + nb_v) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING)
@@ -1956,27 +1912,9 @@ def q_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-size algebra — identical posture to ks_test.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    per_v = (
-        li.select(
-            F.round(F.col("l_discount") * 100, 0).cast("long").alias("v"),
-            (F.col("l_returnflag") == "R").alias("is_a"),
-        )
-        .groupBy("v")
-        .agg(
-            F.sum(F.when(F.col("is_a"), 1).otherwise(0)).cast("long").alias("na_v"),
-            F.sum(F.when(F.col("is_a"), 0).otherwise(1)).cast("long").alias("nb_v"),
-        )
-    )
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    cums = per_v.select(
-        (F.col("na_v") + F.col("nb_v")).alias("l"),
-        F.sum("na_v").over(w).alias("ca"),
-        F.sum("nb_v").over(w).alias("cb"),
-    )
-    totals = per_v.agg(
-        F.sum("na_v").cast("long").alias("n_a"),
-        F.sum("nb_v").cast("long").alias("n_b"),
-    )
+    per_v = returned_vs_kept(li, F.round(F.col("l_discount") * 100, 0).cast("long"))
+    cums = split_cums(per_v, (F.col("na_v") + F.col("nb_v")).alias("l"))
+    totals = split_totals(per_v)
     # gap algebra in DECIMAL end to end: the int64 products ca·n_b wrap
     # silently past pooled N ~ 3e9 (and x² already wraps past sf0.1)
     x = (
@@ -2010,24 +1948,10 @@ def q_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANDERSON_DARLING_SQL = """
-WITH per_v AS (
-    SELECT CAST(ROUND(l_discount * 100, 0) AS BIGINT) AS v,
-           CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS na_v,
-           CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 0 ELSE 1 END) AS BIGINT) AS nb_v
-    FROM lineitem
-    GROUP BY 1
-),
-cums AS (
-    SELECT na_v + nb_v AS l,
-           SUM(na_v) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS ca,
-           SUM(nb_v) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cb
-    FROM per_v
-),
-totals AS (
-    SELECT CAST(SUM(na_v) AS BIGINT) AS n_a, CAST(SUM(nb_v) AS BIGINT) AS n_b
-    FROM per_v
-),
+ANDERSON_DARLING_SQL = f"""
+WITH {split_sql("CAST(ROUND(l_discount * 100, 0) AS BIGINT)")},
+{SPLIT_CUMS_SQL},
+{SPLIT_TOTALS_SQL},
 a2 AS (
     SELECT n_a, n_b,
            CAST(SUM(CAST(ROUND(CAST(
@@ -2079,27 +2003,9 @@ def q_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤11-row aggregate, constant algebra after.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    per_v = (
-        li.select(
-            F.round(F.col("l_discount") * 100, 0).cast("long").alias("v"),
-            (F.col("l_returnflag") == "R").alias("is_a"),
-        )
-        .groupBy("v")
-        .agg(
-            F.sum(F.when(F.col("is_a"), 1).otherwise(0)).cast("long").alias("na_v"),
-            F.sum(F.when(F.col("is_a"), 0).otherwise(1)).cast("long").alias("nb_v"),
-        )
-    )
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    cums = per_v.select(
-        (F.col("na_v") + F.col("nb_v")).alias("l"),
-        F.sum("na_v").over(w).alias("ca"),
-        F.sum("nb_v").over(w).alias("cb"),
-    )
-    totals = per_v.agg(
-        F.sum("na_v").cast("long").alias("n_a"),
-        F.sum("nb_v").cast("long").alias("n_b"),
-    )
+    per_v = returned_vs_kept(li, F.round(F.col("l_discount") * 100, 0).cast("long"))
+    cums = split_cums(per_v, (F.col("na_v") + F.col("nb_v")).alias("l"))
+    totals = split_totals(per_v)
     # gap algebra in DECIMAL end to end (same int64-wrap hazard as
     # anderson_darling: ca·n_b wraps past pooled N ~ 3e9)
     x = (
@@ -2127,24 +2033,10 @@ def q_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CRAMER_VON_MISES_SQL = """
-WITH per_v AS (
-    SELECT CAST(ROUND(l_discount * 100, 0) AS BIGINT) AS v,
-           CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS na_v,
-           CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 0 ELSE 1 END) AS BIGINT) AS nb_v
-    FROM lineitem
-    GROUP BY 1
-),
-cums AS (
-    SELECT na_v + nb_v AS l,
-           SUM(na_v) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS ca,
-           SUM(nb_v) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cb
-    FROM per_v
-),
-totals AS (
-    SELECT CAST(SUM(na_v) AS BIGINT) AS n_a, CAST(SUM(nb_v) AS BIGINT) AS n_b
-    FROM per_v
-),
+CRAMER_VON_MISES_SQL = f"""
+WITH {split_sql("CAST(ROUND(l_discount * 100, 0) AS BIGINT)")},
+{SPLIT_CUMS_SQL},
+{SPLIT_TOTALS_SQL},
 agg AS (
     SELECT n_a, n_b,
            SUM(CAST(l AS HUGEINT)

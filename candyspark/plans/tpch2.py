@@ -34,15 +34,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from candyspark.functions.numeric import money, rate, round2, snap_round
+from candyspark.functions.numeric import money, rate, round2
 from candyspark.plans import QuerySpec
+from candyspark.plans.relational import _REV, _revenue
 from candyspark.sources.readers import load_table
-
-_REV = "CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(1 - l_discount AS DECIMAL(4,2))"
-
-
-def _revenue() -> F.Column:
-    return money("l_extendedprice") * rate(1 - F.col("l_discount"))
 
 
 # --- Q4 shape: EXISTS with a non-equi correlation ---------------------------

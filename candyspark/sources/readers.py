@@ -39,12 +39,6 @@ def load_json_array_files(
     return spark.read.json(path_glob, schema=schema, multiLine=True)
 
 
-def load_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet scan — the engine's preferred interchange format (columnar,
-    splittable, predicate-pushdown + partition-pruning capable)."""
-    return spark.read.parquet(path)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver testdata table (FIXTURES.md §B) from ``sf_dir``.
 

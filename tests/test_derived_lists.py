@@ -73,3 +73,53 @@ def test_rank_snap_lives_in_the_pagerank_kernel_only():
     ]
     assert "decimal(28,14)" in home.read_text()
     assert not offenders, offenders
+
+
+#: One Spark and one oracle-SQL signature per shared sub-plan, and the
+#: module whose builder owns it: each appears once there, in the builder. A
+#: second match is a hand copy of the sub-plan growing back.
+BUILDER_SIGNATURES = {
+    # BM25 corpus stats and scoring (doc_lengths, bm25_term, bm25_corpus_sql)
+    'F.size("toks").cast("long").alias("dl")': "plans/retrieval.py",
+    '9 * F.col("dl") * F.col("n_docs")': "plans/retrieval.py",
+    "CAST(len(toks) AS BIGINT) AS dl": "plans/retrieval.py",
+    "9 * dl * n_docs": "plans/retrieval.py",
+    # the daily revenue series (daily_revenue, daily_revenue_sql)
+    'F.sum(F.col("o_totalprice").cast("decimal(12,2)")).alias("r")': "plans/analytics.py",
+    "SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS r\n": "plans/analytics.py",
+    # the returned-vs-kept split (returned_vs_kept, split_sql)
+    '(F.col("l_returnflag") == "R").alias("is_a")': "plans/stats2.py",
+    "l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS na_v": "plans/stats2.py",
+    # first conversion after signup (first_conversions, FIRST_CONVERSIONS_SQL)
+    'F.min("p_ts").alias("conv_ts")': "plans/extensions.py",
+    "MIN(p.ts)": "plans/extensions.py",
+    # 10-word segments (word_segments, segments_sql)
+    '(F.col("pos") / 10)': "plans/corpus.py",
+    "CAST(pos // 10 AS BIGINT)": "plans/corpus.py",
+}
+
+
+def test_shared_sub_plans_have_one_builder():
+    offenders = []
+    for sig, home in BUILDER_SIGNATURES.items():
+        hits = {
+            str(path.relative_to(PKG)): path.read_text().count(sig)
+            for path in sorted(PKG.rglob("*.py"))
+        }
+        if hits.get(home, 0) != 1:
+            offenders.append(f"{sig!r}: {hits.get(home, 0)} matches in {home}, want 1")
+        offenders += [
+            f"{sig!r}: {n} copies in {rel} (use the builder in {home})"
+            for rel, n in hits.items()
+            if n and rel != home
+        ]
+    assert not offenders, "\n".join(offenders)
+
+
+def test_snap_round_has_one_definition():
+    defs = [
+        str(path.relative_to(PKG))
+        for path in sorted(PKG.rglob("*.py"))
+        for _ in re.finditer(r"^def snap_round\(", path.read_text(), re.M)
+    ]
+    assert defs == ["functions/numeric.py"], defs

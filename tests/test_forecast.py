@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 
 from candyspark.forecast import (
-    _linear_forecast,
+    _linear,
     forecast_many,
     forecast_sales_and_profits,
 )
@@ -19,12 +19,12 @@ from candyspark.forecast import (
 def test_linear_forecast_exact_trend():
     # y = 2x + 1 → next points continue the line exactly.
     vals = np.array([1.0, 3.0, 5.0, 7.0])
-    np.testing.assert_allclose(_linear_forecast(vals, 2), [9.0, 11.0], atol=1e-9)
+    np.testing.assert_allclose(_linear(None, vals, 2)[1], [9.0, 11.0], atol=1e-9)
 
 
 def test_linear_forecast_degenerate():
-    assert list(_linear_forecast(np.array([5.0]), 3)) == [5.0, 5.0, 5.0]
-    assert list(_linear_forecast(np.array([]), 2)) == [0.0, 0.0]
+    assert list(_linear(None, np.array([5.0]), 3)[1]) == [5.0, 5.0, 5.0]
+    assert list(_linear(None, np.array([]), 2)[1]) == [0.0, 0.0]
 
 
 def test_forecast_sales_and_profits(spark):
@@ -70,12 +70,12 @@ def test_forecast_many(spark):
 
 def test_forecast_linear_query_matches_numpy_ols(spark):
     """The closed-form decimal-sum OLS (plans/candy.forecast_linear) and the
-    numpy polyfit path (forecast._linear_forecast) are the same model — the
+    numpy polyfit path (forecast._linear) are the same model — the
     distributed scalar-agg form must agree with the driver-side fit."""
     import numpy as np
     import pandas as pd
 
-    from candyspark.forecast import _linear_forecast
+    from candyspark.forecast import _linear
     from candyspark.plans.candy import forecast_linear
     from candyspark.sources.readers import load_table
     from pyspark.sql import functions as F
@@ -97,14 +97,14 @@ def test_forecast_linear_query_matches_numpy_ols(spark):
     slope, intercept = np.polyfit(x, y, 1)
     want = intercept + slope * (x.max() + 1)
     assert abs(got.forecast_revenue.iloc[0] - round(want, 2)) < 0.05
-    assert _linear_forecast(y, 1).shape == (1,)
+    assert _linear(None, y, 1)[1].shape == (1,)
 
 
 def test_seasonal_forecast_recovers_weekday_pattern():
     """Pure trend + weekday offset data: the seasonal model must forecast
     the next days exactly (trend continues, each future day gets its own
     weekday's offset), where the linear model alone is off by the offset."""
-    from candyspark.forecast import _seasonal_forecast, forecast_series
+    from candyspark.forecast import _seasonal, forecast_series
 
     start = dt.date(2024, 1, 1)  # a Monday
     dates = [start + dt.timedelta(days=i) for i in range(14)]
@@ -116,7 +116,7 @@ def test_seasonal_forecast_recovers_weekday_pattern():
     vals = np.array(
         [100.0 + 2.0 * i + offs.get(d.weekday(), 0.0) for i, d in enumerate(dates)]
     )
-    got = _seasonal_forecast(pd_series(dates), vals, 7)
+    got = _seasonal(pd_series(dates), vals, 7)[1]
     want = np.array(
         [
             100.0 + 2.0 * (14 + i) + offs.get((start + dt.timedelta(days=14 + i)).weekday(), 0.0)
@@ -180,14 +180,14 @@ def test_holt_exact_on_linear_series():
     """On exactly linear data with b_0 = y_1 - y_0 the Holt recurrence is
     exact at every step (l_t = y_t, b_t = slope), so the forecast continues
     the line — the analytic fixed point, independent of alpha/beta."""
-    from candyspark.forecast import _holt_fit, _holt_forecast
+    from candyspark.forecast import _holt, _holt_fit
 
     vals = np.array([1.0, 3.0, 5.0, 7.0, 9.0])
     level, trend, preds = _holt_fit(vals)
     assert level == pytest.approx(9.0, abs=1e-12)
     assert trend == pytest.approx(2.0, abs=1e-12)
     np.testing.assert_allclose(preds, vals, atol=1e-12)
-    np.testing.assert_allclose(_holt_forecast(vals, 3), [11.0, 13.0, 15.0], atol=1e-12)
+    np.testing.assert_allclose(_holt(None, vals, 3)[1], [11.0, 13.0, 15.0], atol=1e-12)
 
 
 def test_holt_matches_independent_recurrence():
@@ -210,10 +210,10 @@ def test_holt_matches_independent_recurrence():
 
 
 def test_holt_degenerate_and_dispatch():
-    from candyspark.forecast import _holt_forecast, forecast_series
+    from candyspark.forecast import _holt, forecast_series
 
-    assert list(_holt_forecast(np.array([]), 2)) == [0.0, 0.0]
-    np.testing.assert_allclose(_holt_forecast(np.array([4.0]), 2), [4.0, 4.0])
+    assert list(_holt(None, np.array([]), 2)[1]) == [0.0, 0.0]
+    np.testing.assert_allclose(_holt(None, np.array([4.0]), 2)[1], [4.0, 4.0])
     import pandas as pd
 
     dates = pd.Series(pd.date_range("2024-02-01", periods=4))
@@ -295,7 +295,7 @@ def test_prophet_branch_is_date_anchored(monkeypatch):
     assert list(out) == [4.0, 5.0]
 
     # in-sample path predicts back over the TRAINING ds (metrics contract)
-    yhat = fc._in_sample_predictions(dates, values, method="prophet")
+    yhat = fc._fit(dates, values, 0, "prophet")[1]
     assert list(yhat) == [0.0, 1.0, 3.0]
     # 'auto' routes to prophet when importable
     assert list(fc.forecast_series(dates, values, 1, method="auto")) == [4.0]
@@ -309,7 +309,7 @@ def test_prophet_missing_raises_clear_error(monkeypatch):
     with pytest.raises(ImportError, match="prophet"):
         fc.forecast_series(dates, np.array([1.0, 2.0]), 1, method="prophet")
     with pytest.raises(ImportError, match="prophet"):
-        fc._in_sample_predictions(dates, np.array([1.0, 2.0]), method="prophet")
+        fc._fit(dates, np.array([1.0, 2.0]), 0, "prophet")
 
 
 @pytest.mark.skipif(
