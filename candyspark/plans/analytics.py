@@ -24,6 +24,7 @@ from pyspark.sql.window import Window
 
 from candyspark.operators import text as X
 from candyspark.plans import QuerySpec
+from candyspark.plans.candy import DAILY_SALES_SQL, daily_sales
 from candyspark.plans.extensions import _TOKS
 from candyspark.functions.numeric import money, round2, snap_round
 from candyspark.sources.readers import fan_out, load_table
@@ -1523,12 +1524,8 @@ def q_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     (round-2 verdict's vacuous-gate finding). The level series rises and
     falls for real, so the running-max/argmin-trough logic is exercised.
     """
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("y")
-    )
     w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
-    cum = daily.select("d", F.col("y").cast("decimal(24,2)").alias("c"))
+    cum = daily_sales(spark, sf_dir).select("d", F.col("y").cast("decimal(24,2)").alias("c"))
     peaks = cum.select(
         "d",
         "c",
@@ -1554,11 +1551,8 @@ def q_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MAX_DRAWDOWN_SQL = """
-WITH daily AS (
-    SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
-    FROM orders GROUP BY 1
-),
+MAX_DRAWDOWN_SQL = f"""
+WITH {DAILY_SALES_SQL},
 cum AS (
     SELECT d, CAST(y AS DECIMAL(24,2)) AS c
     FROM daily

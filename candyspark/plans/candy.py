@@ -8,9 +8,9 @@ compute it identically: ``(p_partkey % 10 + 1) * 100``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.window import Window, WindowSpec
 
 from candyspark.functions.numeric import snap_round
 from candyspark.operators.allocation import allocate_greedy
@@ -191,36 +191,170 @@ LEFT JOIN (SELECT l_partkey, SUM(fulfilled_qty) AS sold_qty FROM alloc GROUP BY 
 """
 
 
+# --- the daily sales series and its one-regressor trend fit -----------------
+
+
+def daily_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(d, y)``: one row per order date, ``y`` the day's o_totalprice
+    summed as exact DECIMAL(18,2) (DECIMAL(28,2) out). The sum is exact
+    and order-independent, so both engines derive identical doubles from
+    it. Scale: one map-side-combined aggregate over orders down to the
+    calendar-bounded series (~2.4k rows at any SF)."""
+    o = load_table(spark, sf_dir, "orders")
+    return o.groupBy(F.col("o_orderdate").alias("d")).agg(
+        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("y")
+    )
+
+
+def epoch_day() -> Column:
+    """Day ``d`` as days since 1970-01-01, a long: the ``x`` of every daily
+    trend fit."""
+    return F.datediff("d", F.lit("1970-01-01")).cast("long")
+
+
+def sales_xy(spark: SparkSession, sf_dir: str, *extra: Column | str) -> DataFrame:
+    """:func:`daily_sales` as ``(*extra, x, y)``: x the :func:`epoch_day`,
+    y narrowed to DECIMAL(18,2). ``extra`` columns (the date, day-order
+    windows) are evaluated over ``(d, y)``."""
+    return daily_sales(spark, sf_dir).select(
+        *extra,
+        epoch_day().alias("x"),
+        F.col("y").cast("decimal(18,2)").alias("y"),
+    )
+
+
+#: :func:`daily_sales`, DuckDB form: the ``daily`` CTE.
+DAILY_SALES_SQL = """daily AS (
+    SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
+    FROM orders GROUP BY 1
+)"""
+#: :func:`epoch_day`, DuckDB form.
+EPOCH_DAY_SQL = "CAST(date_diff('day', DATE '1970-01-01', d) AS BIGINT)"
+
+
+def sales_xy_sql(*extra: str) -> str:
+    """:func:`sales_xy`, DuckDB form: the ``daily`` and ``xy`` CTEs, with
+    the ``extra`` SELECT items first."""
+    cols = "".join(f"{c},\n           " for c in extra)
+    return f"""{DAILY_SALES_SQL},
+xy AS (
+    SELECT {cols}{EPOCH_DAY_SQL} AS x,
+           CAST(y AS DECIMAL(18,2)) AS y
+    FROM daily
+)"""
+
+
+_LINE_SUMS = ("n", "sx", "sy", "sxy", "sxx")
+
+
+def _line_moments(x: Column, y: Column) -> list[Column]:
+    return [F.count(F.lit(1)), F.sum(x), F.sum(y), F.sum(x * y), F.sum(x * x)]
+
+
+def line_sums(x: Column, y: Column) -> list[Column]:
+    """The sufficient statistics of the one-regressor OLS line y ~ a + b·x,
+    for the caller's ``agg``: n, Σx, Σy, Σxy and Σx², each summed exactly
+    (long / decimal, so order-independent) and cast to double once. Pass
+    x and y as exact types; the products are then exact too. The
+    closed-form fit over them is :func:`line_fit`."""
+    return [m.cast("double").alias(c) for m, c in zip(_line_moments(x, y), _LINE_SUMS)]
+
+
+def running_line_sums(x: Column, y: Column, w: WindowSpec) -> list[Column]:
+    """:func:`line_sums` as running window sums over ``w``: every row
+    carries the sums of its own prefix, so every prefix's fit assembles
+    from its own row, with no per-prefix refit and no re-scan."""
+    return [
+        m.over(w).cast("double").alias(c) for m, c in zip(_line_moments(x, y), _LINE_SUMS)
+    ]
+
+
+def line_fit() -> tuple[Column, Column]:
+    """``(slope, intercept)`` over the :func:`line_sums` columns:
+
+        slope = (n·Σxy − Σx·Σy) / (n·Σx² − Σx·Σx),  intercept = (Σy − slope·Σx) / n
+
+    Only this closed form runs in doubles, in the same textual order as
+    the SQL mirror (:func:`line_fit_sql`), so the engines agree bit for
+    bit. Both are NULL when the determinant is 0 (a single x value, e.g.
+    a one-day series), which is also what DuckDB's x/0 gives."""
+    n, sx, sy, sxy, sxx = (F.col(c) for c in _LINE_SUMS)
+    det = n * sxx - sx * sx
+    slope = F.when(det != 0, (n * sxy - sx * sy) / det)
+    return slope, (sy - slope * sx) / n
+
+
+def _line_sums_sql(x: str, y: str, over: str) -> str:
+    moments = ("COUNT(*)", f"SUM({x})", f"SUM({y})", f"SUM({x} * {y})", f"SUM({x} * {x})")
+    return ",\n           ".join(
+        f"CAST({m}{over} AS DOUBLE) AS {c}" for m, c in zip(moments, _LINE_SUMS)
+    )
+
+
+def line_sums_sql(x: str, y: str = "y") -> str:
+    """:func:`line_sums`, DuckDB form: the five SELECT items."""
+    return _line_sums_sql(x, y, "")
+
+
+def running_line_sums_sql(x: str, y: str, w: str) -> str:
+    """:func:`running_line_sums`, DuckDB form, over the named window ``w``."""
+    return _line_sums_sql(x, y, f" OVER {w}")
+
+
+def line_fit_sql(rel: str) -> str:
+    """:func:`line_fit`, DuckDB form: a subquery of ``rel`` (a CTE name or
+    a parenthesised query with the line-sums columns) with ``slope`` and
+    ``intercept`` appended."""
+    return f"""(
+    SELECT *, (sy - slope * sx) / n AS intercept
+    FROM (SELECT *, CASE WHEN n * sxx - sx * sx != 0
+                         THEN (n * sxy - sx * sy) / (n * sxx - sx * sx) END AS slope
+          FROM {rel})
+)"""
+
+
+def trend_sums() -> list[Column]:
+    """:func:`line_sums` of a daily trend: x the epoch day as DECIMAL(10,0),
+    so Σxy is an exact decimal product sum."""
+    return line_sums(F.col("x").cast("decimal(10,0)"), F.col("y"))
+
+
+#: :func:`trend_sums`, DuckDB form.
+TREND_SUMS_SQL = line_sums_sql("CAST(x AS DECIMAL(10,0))")
+
+
+def _snapped_line(xy: DataFrame) -> DataFrame:
+    """The one-row trend fit ``(b, a)`` over ``xy``: slope snapped at 8 dp
+    and intercept at 6 dp through DECIMAL(28,10), so the residuals that
+    follow start from identical doubles in both engines."""
+    slope, intercept = line_fit()
+    return xy.agg(*trend_sums()).select(
+        F.round(slope.cast("decimal(28,10)"), 8).cast("double").alias("b"),
+        F.round(intercept.cast("decimal(28,10)"), 6).cast("double").alias("a"),
+    )
+
+
+def _snapped_line_sql(rel: str) -> str:
+    """:func:`_snapped_line`, DuckDB form, over ``rel`` (a FROM target)."""
+    return f"""
+    SELECT CAST(ROUND(CAST(slope AS DECIMAL(28,10)), 8) AS DOUBLE) AS b,
+           CAST(ROUND(CAST(intercept AS DECIMAL(28,10)), 6) AS DOUBLE) AS a
+    FROM {line_fit_sql(f"(SELECT {TREND_SUMS_SQL} FROM {rel})")}
+"""
+
+
 def forecast_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Next-day revenue forecast via closed-form OLS over the daily revenue
     series (the oracle-checkable twin of candyspark.forecast's linear model;
     the reference's Prophet fit is irreproducible by construction —
     SURVEY.md §2.12 — so THIS is the pinned-value forecasting surface).
 
-    Determinism across engines: the sufficient statistics (n, Σx, Σy, Σxy,
-    Σxx) are exact (bigint / decimal) aggregations — order-independent —
-    and only the final slope/intercept arithmetic is double, in the same
-    textual expression order in both engines. One aggregation pass; at
-    scale this is a map-side-combined scalar agg, no window, no collect."""
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("y")
-    )
-    xy = daily.select(
-        F.datediff("d", F.lit("1970-01-01")).cast("long").alias("x"), "y"
-    )
-    s = xy.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("x").cast("double").alias("sx"),
-        F.sum("y").cast("double").alias("sy"),
-        F.sum(F.col("x").cast("decimal(10,0)") * F.col("y")).cast("double").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("double").alias("sxx"),
-        F.max("x").cast("double").alias("mx"),
-    )
-    slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
-    intercept = (F.col("sy") - slope * F.col("sx")) / F.col("n")
+    Determinism across engines: :func:`line_sums` and :func:`line_fit`.
+    One aggregation pass; at scale this is a map-side-combined scalar agg,
+    no window, no collect."""
+    xy = daily_sales(spark, sf_dir).select(epoch_day().alias("x"), "y")
+    s = xy.agg(*trend_sums(), F.max("x").cast("double").alias("mx"))
+    slope, intercept = line_fit()
     yhat = intercept + slope * (F.col("mx") + 1)
     return s.select(
         F.date_add(F.lit("1970-01-01").cast("date"), (F.col("mx") + 1).cast("int")).alias(
@@ -230,25 +364,16 @@ def forecast_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-FORECAST_LINEAR_SQL = """
-WITH daily AS (
-    SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
-    FROM orders GROUP BY 1
-),
-xy AS (SELECT date_diff('day', DATE '1970-01-01', d) AS x, y FROM daily),
-s AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-             CAST(SUM(x) AS DOUBLE) AS sx,
-             CAST(SUM(y) AS DOUBLE) AS sy,
-             CAST(SUM(CAST(x AS DECIMAL(10,0)) * y) AS DOUBLE) AS sxy,
-             CAST(SUM(x * x) AS DOUBLE) AS sxx,
+FORECAST_LINEAR_SQL = f"""
+WITH {DAILY_SALES_SQL},
+xy AS (SELECT {EPOCH_DAY_SQL} AS x, y FROM daily),
+s AS (SELECT {TREND_SUMS_SQL},
              CAST(MAX(x) AS DOUBLE) AS mx
       FROM xy)
 SELECT DATE '1970-01-01' + CAST(mx + 1 AS INT) AS date,
-       CAST(ROUND(CAST(
-           ((sy - ((n*sxy - sx*sy) / (n*sxx - sx*sx)) * sx) / n)
-           + ((n*sxy - sx*sy) / (n*sxx - sx*sx)) * (mx + 1)
+       CAST(ROUND(CAST(intercept + slope * (mx + 1)
            AS DECIMAL(28,8)), 2) AS DOUBLE) AS forecast_revenue
-FROM s
+FROM {line_fit_sql("s")}
 """
 
 
@@ -260,32 +385,18 @@ def forecast_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     reports unrounded MAE/MSE. Here the model is the same closed-form OLS
     as ``forecast_linear`` and the metrics are one aggregate over (y, ŷ).
 
-    Cross-engine determinism: the sufficient statistics are exact
-    (bigint/decimal) sums; slope/intercept/ŷ/residual are the same textual
-    double expressions in both engines, each per-day residual term is
-    snapped to DECIMAL before the exact (order-independent) sum, and only
-    the final mean division is double (mae snapped at 4 dp; mse at whole
-    units — see inline note on the mantissa bound). Scale: two scans
-    of the tiny daily aggregate (itself one map-side-combined pass over
-    orders); the 1-row stats broadcast — no window, no collect."""
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("y")
-    )
-    xy = daily.select(
-        F.datediff("d", F.lit("1970-01-01")).cast("long").alias("x"), "y"
+    Cross-engine determinism: the fit is :func:`line_fit`; ŷ/residual are
+    the same textual double expressions in both engines, each per-day
+    residual term is snapped to DECIMAL before the exact (order-independent)
+    sum, and only the final mean division is double (mae snapped at 4 dp;
+    mse at whole units — see inline note on the mantissa bound). Scale: two
+    scans of the tiny daily aggregate (itself one map-side-combined pass
+    over orders); the 1-row stats broadcast — no window, no collect."""
+    xy = daily_sales(spark, sf_dir).select(
+        epoch_day().alias("x"), "y"
     ).localCheckpoint()  # tiny (one row per day); feeds stats AND residuals
-    s = xy.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("x").cast("double").alias("sx"),
-        F.sum("y").cast("double").alias("sy"),
-        F.sum(F.col("x").cast("decimal(10,0)") * F.col("y")).cast("double").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("double").alias("sxx"),
-    )
-    slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
-    intercept = (F.col("sy") - slope * F.col("sx")) / F.col("n")
+    s = xy.agg(*trend_sums())
+    slope, intercept = line_fit()
     res = F.col("y").cast("double") - (intercept + slope * F.col("x"))
     return (
         xy.crossJoin(F.broadcast(s))
@@ -316,23 +427,13 @@ def forecast_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-FORECAST_METRICS_SQL = """
-WITH daily AS (
-    SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
-    FROM orders GROUP BY 1
-),
-xy AS (SELECT date_diff('day', DATE '1970-01-01', d) AS x, y FROM daily),
-s AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-             CAST(SUM(x) AS DOUBLE) AS sx,
-             CAST(SUM(y) AS DOUBLE) AS sy,
-             CAST(SUM(CAST(x AS DECIMAL(10,0)) * y) AS DOUBLE) AS sxy,
-             CAST(SUM(x * x) AS DOUBLE) AS sxx
-      FROM xy),
+FORECAST_METRICS_SQL = f"""
+WITH {DAILY_SALES_SQL},
+xy AS (SELECT {EPOCH_DAY_SQL} AS x, y FROM daily),
+s AS (SELECT {TREND_SUMS_SQL} FROM xy),
 r AS (
-    SELECT CAST(xy.y AS DOUBLE)
-           - (((sy - ((n*sxy - sx*sy) / (n*sxx - sx*sx)) * sx) / n)
-              + ((n*sxy - sx*sy) / (n*sxx - sx*sx)) * x) AS res
-    FROM xy CROSS JOIN s
+    SELECT CAST(xy.y AS DOUBLE) - (intercept + slope * x) AS res
+    FROM xy CROSS JOIN {line_fit_sql("s")}
 )
 SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
        CAST(ROUND(CAST(CAST(SUM(ROUND(CAST(ABS(res) AS DECIMAL(28,9)), 9))
@@ -516,6 +617,57 @@ ORDER BY d.l_partkey
 REGISTRY["fifo_allocation"] = QuerySpec(q_fifo_allocation, FIFO_ALLOCATION_SQL)
 
 
+def _one_step_ahead(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every origin day t past a 30-day burn-in that has a next day and a
+    lag-6 value, with ``yhat`` — the one-step-ahead prediction for t+1 of
+    the linear model fitted on days ≤ t only — and ``y_next``, ``y_lag6``.
+
+    The trick that makes ALL prefix fits ONE pass: the OLS sufficient
+    statistics become :func:`running_line_sums` over the daily series, so
+    every origin's closed-form fit assembles from its own row — no
+    per-origin refit loop, no data re-scan. The window is unpartitioned
+    but runs over the per-DAY aggregate (calendar-bounded: thousands of
+    rows at any SF — the drift_psi convention). Prefix sums are exact
+    (long / decimal); each origin's slope/intercept/prediction is one
+    double association."""
+    w = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
+    wl = Window.orderBy("x")
+    pref = sales_xy(spark, sf_dir).select(
+        *running_line_sums(F.col("x").cast("decimal(10,0)"), F.col("y"), w),
+        F.lead("x").over(wl).alias("x_next"),
+        F.lead("y").over(wl).alias("y_next"),
+        F.lag("y", 6).over(wl).alias("y_lag6"),
+    )
+    slope, intercept = line_fit()
+    return pref.filter(
+        (F.col("n") >= 30)
+        & F.col("x_next").isNotNull()
+        & F.col("y_lag6").isNotNull()
+    ).select(
+        (intercept + slope * F.col("x_next").cast("double")).alias("yhat"),
+        "y_next",
+        "y_lag6",
+    )
+
+
+#: :func:`_one_step_ahead`, DuckDB form: the ``daily``, ``xy``, ``pref`` and
+#: ``ahead`` CTEs.
+_ONE_STEP_AHEAD_SQL = f"""{sales_xy_sql()},
+pref AS (
+    SELECT {running_line_sums_sql("CAST(x AS DECIMAL(10,0))", "y", "wp")},
+           LEAD(x) OVER (ORDER BY x) AS x_next,
+           LEAD(y) OVER (ORDER BY x) AS y_next,
+           LAG(y, 6) OVER (ORDER BY x) AS y_lag6
+    FROM xy
+    WINDOW wp AS (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+),
+ahead AS (
+    SELECT intercept + slope * CAST(x_next AS DOUBLE) AS yhat, y_next, y_lag6
+    FROM {line_fit_sql("pref")}
+    WHERE n >= 30 AND x_next IS NOT NULL AND y_lag6 IS NOT NULL
+)"""
+
+
 def forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling-origin forecast backtesting — the evaluation harness that
     turns forecast_linear/forecast_metrics from 'a fit' into 'a validated
@@ -523,56 +675,15 @@ def forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     model on days ≤ t only and score its one-step-ahead prediction against
     day t+1; report MAE/RMSE over all origins plus MASE (error relative to
     the seasonal-naive lag-7 forecast — the scale-free skill score; MASE
-    < 1 beats the naive baseline).
+    < 1 beats the naive baseline). All prefix fits run in one pass
+    (:func:`_one_step_ahead`).
 
-    The trick that makes ALL prefix fits ONE pass: the OLS sufficient
-    statistics (n, Σx, Σy, Σxy, Σx²) become RUNNING window sums over the
-    daily series, so every origin's closed-form fit assembles from its
-    own row — no per-origin refit loop, no data re-scan. The window is
-    unpartitioned but runs over the per-DAY aggregate (calendar-bounded:
-    thousands of rows at any SF — the drift_psi convention).
-
-    Exactness: prefix sums are exact (long / decimal); each origin's
-    slope/intercept/prediction is one double association; per-origin
-    absolute errors snap to decimal so the MAE/RMSE sums are order-free;
-    final ratios snap once.
+    Exactness: per-origin absolute errors snap to decimal so the MAE/RMSE
+    sums are order-free; final ratios snap once.
     """
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("y")
-    )
-    xy = daily.select(
-        F.datediff("d", F.lit("1970-01-01")).cast("long").alias("x"),
-        F.col("y").cast("decimal(18,2)").alias("y"),
-    )
-    w = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
-    wl = Window.orderBy("x")
-    pref = xy.select(
-        "x",
-        "y",
-        F.count(F.lit(1)).over(w).cast("long").alias("n_c"),
-        F.sum("x").over(w).cast("long").alias("sx"),
-        F.sum("y").over(w).alias("sy"),
-        F.sum(F.col("y") * F.col("x").cast("decimal(10,0)")).over(w).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).over(w).cast("long").alias("sxx"),
-        F.lead("x").over(wl).alias("x_next"),
-        F.lead("y").over(wl).alias("y_next"),
-        F.lag("y", 6).over(wl).alias("y_lag6"),
-    )
-    n = F.col("n_c").cast("double")
-    sx = F.col("sx").cast("double")
-    sy = F.col("sy").cast("double")
-    sxy = F.col("sxy").cast("double")
-    sxx = F.col("sxx").cast("double")
-    slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-    yhat = (sy - slope * sx) / n + slope * F.col("x_next").cast("double")
-    origins = pref.filter(
-        (F.col("n_c") >= 30)
-        & F.col("x_next").isNotNull()
-        & F.col("y_lag6").isNotNull()
-    ).select(
+    origins = _one_step_ahead(spark, sf_dir).select(
         F.round(
-            F.abs(yhat - F.col("y_next").cast("double")).cast("decimal(28,6)"), 4
+            F.abs(F.col("yhat") - F.col("y_next").cast("double")).cast("decimal(28,6)"), 4
         )
         .cast("decimal(20,4)")
         .alias("err_ols"),
@@ -606,45 +717,14 @@ def forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-FORECAST_BACKTEST_SQL = """
-WITH daily AS (
-    SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
-    FROM orders GROUP BY 1
-),
-xy AS (SELECT CAST(date_diff('day', DATE '1970-01-01', d) AS BIGINT) AS x,
-              CAST(y AS DECIMAL(18,2)) AS y FROM daily),
-pref AS (
-    SELECT x, y,
-           CAST(COUNT(*) OVER wp AS BIGINT) AS n_c,
-           CAST(SUM(x) OVER wp AS BIGINT) AS sx,
-           SUM(y) OVER wp AS sy,
-           SUM(y * CAST(x AS DECIMAL(10,0))) OVER wp AS sxy,
-           CAST(SUM(x * x) OVER wp AS BIGINT) AS sxx,
-           LEAD(x) OVER (ORDER BY x) AS x_next,
-           LEAD(y) OVER (ORDER BY x) AS y_next,
-           LAG(y, 6) OVER (ORDER BY x) AS y_lag6
-    FROM xy
-    WINDOW wp AS (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-),
+FORECAST_BACKTEST_SQL = f"""
+WITH {_ONE_STEP_AHEAD_SQL},
 origins AS (
-    SELECT CAST(ROUND(CAST(ABS(
-               ((CAST(sy AS DOUBLE)
-                 - ((CAST(n_c AS DOUBLE) * CAST(sxy AS DOUBLE)
-                     - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                    / (CAST(n_c AS DOUBLE) * CAST(sxx AS DOUBLE)
-                       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
-                   * CAST(sx AS DOUBLE)) / CAST(n_c AS DOUBLE)
-                + ((CAST(n_c AS DOUBLE) * CAST(sxy AS DOUBLE)
-                    - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                   / (CAST(n_c AS DOUBLE) * CAST(sxx AS DOUBLE)
-                      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
-                  * CAST(x_next AS DOUBLE))
-               - CAST(y_next AS DOUBLE)) AS DECIMAL(28,6)), 4) AS DECIMAL(20,4))
-               AS err_ols,
+    SELECT CAST(ROUND(CAST(ABS(yhat - CAST(y_next AS DOUBLE)) AS DECIMAL(28,6)), 4)
+               AS DECIMAL(20,4)) AS err_ols,
            CAST(ROUND(CAST(ABS(CAST(y_lag6 - y_next AS DOUBLE))
                AS DECIMAL(28,6)), 4) AS DECIMAL(20,4)) AS err_snaive
-    FROM pref
-    WHERE n_c >= 30 AND x_next IS NOT NULL AND y_lag6 IS NOT NULL
+    FROM ahead
 )
 SELECT CAST(COUNT(*) AS BIGINT) AS n_origins,
        CAST(ROUND(CAST(CAST(SUM(err_ols) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
@@ -660,6 +740,25 @@ FROM origins
 
 
 REGISTRY["forecast_backtest"] = QuerySpec(forecast_backtest, FORECAST_BACKTEST_SQL)
+
+
+def _day_ranked_xy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`sales_xy` with each day's rank ``rn`` in date order and the
+    day count ``n_days``: the split points of the conformal queries derive
+    FROM the data."""
+    return sales_xy(
+        spark,
+        sf_dir,
+        F.row_number().over(Window.orderBy("d")).cast("long").alias("rn"),
+        F.count(F.lit(1)).over(Window.partitionBy()).cast("long").alias("n_days"),
+    )
+
+
+#: :func:`_day_ranked_xy`, DuckDB form: the ``daily`` and ``xy`` CTEs.
+_DAY_RANKED_XY_SQL = sales_xy_sql(
+    "CAST(ROW_NUMBER() OVER (ORDER BY d) AS BIGINT) AS rn",
+    "CAST(COUNT(*) OVER () AS BIGINT) AS n_days",
+)
 
 
 def conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -679,41 +778,8 @@ def conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the engine boundary (the percentile_disc discipline, no interpolation
     to drift). Windows run over the calendar-bounded daily aggregate.
     """
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("y")
-    )
-    wd = Window.orderBy("d")
-    xy = daily.select(
-        F.datediff("d", F.lit("1970-01-01")).cast("long").alias("x"),
-        F.col("y").cast("decimal(18,2)").alias("y"),
-        F.row_number().over(wd).cast("long").alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy()).cast("long").alias("n_days"),
-    ).localCheckpoint()
-    train = xy.filter(F.col("rn") * 10 <= F.col("n_days") * 7)
-    s = train.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("x").cast("double").alias("sx"),
-        F.sum("y").cast("double").alias("sy"),
-        F.sum(F.col("y") * F.col("x").cast("decimal(10,0)"))
-        .cast("double")
-        .alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("double").alias("sxx"),
-    )
-    slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
-    fit = s.select(
-        F.round(slope.cast("decimal(28,10)"), 8).cast("double").alias("b"),
-        F.round(
-            ((F.col("sy") - slope * F.col("sx")) / F.col("n")).cast(
-                "decimal(28,10)"
-            ),
-            6,
-        )
-        .cast("double")
-        .alias("a"),
-    )
+    xy = _day_ranked_xy(spark, sf_dir).localCheckpoint()
+    fit = _snapped_line(xy.filter(F.col("rn") * 10 <= F.col("n_days") * 7))
     cal = (
         xy.filter(F.col("rn") * 10 > F.col("n_days") * 7)
         .crossJoin(F.broadcast(fit))
@@ -768,33 +834,9 @@ def conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CONFORMAL_INTERVAL_SQL = """
-WITH daily AS (
-    SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
-    FROM orders GROUP BY 1
-),
-xy AS (
-    SELECT CAST(date_diff('day', DATE '1970-01-01', d) AS BIGINT) AS x,
-           CAST(y AS DECIMAL(18,2)) AS y,
-           CAST(ROW_NUMBER() OVER (ORDER BY d) AS BIGINT) AS rn,
-           CAST(COUNT(*) OVER () AS BIGINT) AS n_days
-    FROM daily
-),
-s AS (
-    SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-           CAST(SUM(x) AS DOUBLE) AS sx,
-           CAST(SUM(y) AS DOUBLE) AS sy,
-           CAST(SUM(y * CAST(x AS DECIMAL(10,0))) AS DOUBLE) AS sxy,
-           CAST(SUM(x * x) AS DOUBLE) AS sxx
-    FROM xy WHERE rn * 10 <= n_days * 7
-),
-fit AS (
-    SELECT CAST(ROUND(CAST((n * sxy - sx * sy) / (n * sxx - sx * sx)
-               AS DECIMAL(28,10)), 8) AS DOUBLE) AS b,
-           CAST(ROUND(CAST((sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n
-               AS DECIMAL(28,10)), 6) AS DOUBLE) AS a
-    FROM s
-),
+CONFORMAL_INTERVAL_SQL = f"""
+WITH {_DAY_RANKED_XY_SQL},
+fit AS ({_snapped_line_sql("xy WHERE rn * 10 <= n_days * 7")}),
 cal AS (
     SELECT CAST(ROUND(CAST(ABS(a + b * CAST(x AS DOUBLE) - CAST(y AS DOUBLE))
                AS DECIMAL(28,6)), 4) AS DECIMAL(20,4)) AS resid,
@@ -939,37 +981,8 @@ def durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lag pairing is a window over the calendar-bounded series; the two
     Σ's are exact decimal sums with one snapped ratio.
     """
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("y")
-    )
-    xy = daily.select(
-        F.datediff("d", F.lit("1970-01-01")).cast("long").alias("x"),
-        F.col("y").cast("decimal(18,2)").alias("y"),
-    ).localCheckpoint()
-    s = xy.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("x").cast("double").alias("sx"),
-        F.sum("y").cast("double").alias("sy"),
-        F.sum(F.col("y") * F.col("x").cast("decimal(10,0)"))
-        .cast("double")
-        .alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("double").alias("sxx"),
-    )
-    slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
-    fit = s.select(
-        F.round(slope.cast("decimal(28,10)"), 8).cast("double").alias("b"),
-        F.round(
-            ((F.col("sy") - slope * F.col("sx")) / F.col("n")).cast(
-                "decimal(28,10)"
-            ),
-            6,
-        )
-        .cast("double")
-        .alias("a"),
-    )
+    xy = sales_xy(spark, sf_dir).localCheckpoint()
+    fit = _snapped_line(xy)
     resid = xy.crossJoin(F.broadcast(fit)).select(
         "x",
         F.round(
@@ -999,28 +1012,9 @@ def durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DURBIN_WATSON_SQL = """
-WITH daily AS (
-    SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
-    FROM orders GROUP BY 1
-),
-xy AS (SELECT CAST(date_diff('day', DATE '1970-01-01', d) AS BIGINT) AS x,
-              CAST(y AS DECIMAL(18,2)) AS y FROM daily),
-s AS (
-    SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-           CAST(SUM(x) AS DOUBLE) AS sx,
-           CAST(SUM(y) AS DOUBLE) AS sy,
-           CAST(SUM(y * CAST(x AS DECIMAL(10,0))) AS DOUBLE) AS sxy,
-           CAST(SUM(x * x) AS DOUBLE) AS sxx
-    FROM xy
-),
-fit AS (
-    SELECT CAST(ROUND(CAST((n * sxy - sx * sy) / (n * sxx - sx * sx)
-               AS DECIMAL(28,10)), 8) AS DOUBLE) AS b,
-           CAST(ROUND(CAST((sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n
-               AS DECIMAL(28,10)), 6) AS DOUBLE) AS a
-    FROM s
-),
+DURBIN_WATSON_SQL = f"""
+WITH {sales_xy_sql()},
+fit AS ({_snapped_line_sql("xy")}),
 resid AS (
     SELECT x,
            CAST(ROUND(CAST(CAST(y AS DOUBLE) - (a + b * CAST(x AS DOUBLE))
@@ -1061,43 +1055,19 @@ def cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual, and D are scan-stage algebra with one snap each. Top-10 by
     D via TakeOrdered — at any SF the influential-day report is 10 rows.
     """
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("y")
-    )
-    xy = daily.select(
-        "d",
-        F.datediff("d", F.lit("1970-01-01")).cast("long").alias("x"),
-        F.col("y").cast("decimal(18,2)").alias("y"),
-    ).localCheckpoint()
-    s = xy.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("x").cast("double").alias("sx"),
-        F.sum("y").cast("double").alias("sy"),
-        F.sum(F.col("y") * F.col("x").cast("decimal(10,0)"))
-        .cast("double")
-        .alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("double").alias("sxx_raw"),
-        F.sum(F.col("y") * F.col("y")).cast("double").alias("syy_raw"),
-    )
-    slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx_raw") - F.col("sx") * F.col("sx")
-    )
-    a_ = (F.col("sy") - slope * F.col("sx")) / F.col("n")
-    sse = (
-        F.col("syy_raw")
-        - a_ * F.col("sy")
-        - slope * F.col("sxy")
-    )
+    xy = sales_xy(spark, sf_dir, "d").localCheckpoint()
+    s = xy.agg(*trend_sums(), F.sum(F.col("y") * F.col("y")).cast("double").alias("syy"))
+    slope, intercept = line_fit()
+    sse = F.col("syy") - intercept * F.col("sy") - slope * F.col("sxy")
     fit = s.select(
         F.round(slope.cast("decimal(28,10)"), 8).cast("double").alias("b"),
-        F.round(a_.cast("decimal(28,10)"), 6).cast("double").alias("a"),
+        F.round(intercept.cast("decimal(28,10)"), 6).cast("double").alias("a"),
         F.col("n"),
         F.round((F.col("sx") / F.col("n")).cast("decimal(28,10)"), 6)
         .cast("double")
         .alias("xbar"),
         F.round(
-            (F.col("sxx_raw") - F.col("sx") * F.col("sx") / F.col("n")).cast(
+            (F.col("sxx") - F.col("sx") * F.col("sx") / F.col("n")).cast(
                 "decimal(28,6)"
             ),
             4,
@@ -1127,38 +1097,23 @@ def cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-COOKS_DISTANCE_SQL = """
-WITH daily AS (
-    SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
-    FROM orders GROUP BY 1
-),
-xy AS (SELECT d, CAST(date_diff('day', DATE '1970-01-01', d) AS BIGINT) AS x,
-              CAST(y AS DECIMAL(18,2)) AS y FROM daily),
+COOKS_DISTANCE_SQL = f"""
+WITH {sales_xy_sql("d")},
 s AS (
-    SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-           CAST(SUM(x) AS DOUBLE) AS sx,
-           CAST(SUM(y) AS DOUBLE) AS sy,
-           CAST(SUM(y * CAST(x AS DECIMAL(10,0))) AS DOUBLE) AS sxy,
-           CAST(SUM(x * x) AS DOUBLE) AS sxx_raw,
-           CAST(SUM(y * y) AS DOUBLE) AS syy_raw
+    SELECT {TREND_SUMS_SQL},
+           CAST(SUM(y * y) AS DOUBLE) AS syy
     FROM xy
 ),
 fit AS (
-    SELECT CAST(ROUND(CAST((n * sxy - sx * sy) / (n * sxx_raw - sx * sx)
-               AS DECIMAL(28,10)), 8) AS DOUBLE) AS b,
-           CAST(ROUND(CAST((sy - ((n * sxy - sx * sy) / (n * sxx_raw - sx * sx)) * sx) / n
-               AS DECIMAL(28,10)), 6) AS DOUBLE) AS a,
+    SELECT CAST(ROUND(CAST(slope AS DECIMAL(28,10)), 8) AS DOUBLE) AS b,
+           CAST(ROUND(CAST(intercept AS DECIMAL(28,10)), 6) AS DOUBLE) AS a,
            n,
            CAST(ROUND(CAST(sx / n AS DECIMAL(28,10)), 6) AS DOUBLE) AS xbar,
-           CAST(ROUND(CAST(sxx_raw - sx * sx / n AS DECIMAL(28,6)), 4) AS DOUBLE)
+           CAST(ROUND(CAST(sxx - sx * sx / n AS DECIMAL(28,6)), 4) AS DOUBLE)
                AS sxx_c,
-           CAST(ROUND(CAST(
-               (syy_raw
-                - ((sy - ((n * sxy - sx * sy) / (n * sxx_raw - sx * sx)) * sx) / n) * sy
-                - ((n * sxy - sx * sy) / (n * sxx_raw - sx * sx)) * sxy)
-               / (n - 2.0)
+           CAST(ROUND(CAST((syy - intercept * sy - slope * sxy) / (n - 2.0)
                AS DECIMAL(28,6)), 4) AS DOUBLE) AS s2
-    FROM s
+    FROM {line_fit_sql("s")}
 )
 SELECT d,
        CAST(ROUND(CAST(CAST(y AS DOUBLE) - (a + b * CAST(x AS DOUBLE))
@@ -1188,45 +1143,12 @@ def _backtest_origins(spark: SparkSession, sf_dir: str) -> DataFrame:
     30-day burn-in, the running-sum OLS prediction for t+1 (snapped at
     4 dp), the realized value, and the snapped absolute errors of the OLS
     and seasonal-naive forecasters — the forecast_backtest construction
-    re-exposed at origin grain."""
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("y")
-    )
-    xy = daily.select(
-        F.datediff("d", F.lit("1970-01-01")).cast("long").alias("x"),
-        F.col("y").cast("decimal(18,2)").alias("y"),
-    )
-    w = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
-    wl = Window.orderBy("x")
-    pref = xy.select(
-        "x",
-        "y",
-        F.count(F.lit(1)).over(w).cast("long").alias("n_c"),
-        F.sum("x").over(w).cast("long").alias("sx"),
-        F.sum("y").over(w).alias("sy"),
-        F.sum(F.col("y") * F.col("x").cast("decimal(10,0)")).over(w).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).over(w).cast("long").alias("sxx"),
-        F.lead("x").over(wl).alias("x_next"),
-        F.lead("y").over(wl).alias("y_next"),
-        F.lag("y", 6).over(wl).alias("y_lag6"),
-    )
-    n = F.col("n_c").cast("double")
-    sx = F.col("sx").cast("double")
-    sy = F.col("sy").cast("double")
-    sxy = F.col("sxy").cast("double")
-    sxx = F.col("sxx").cast("double")
-    slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-    yhat = (sy - slope * sx) / n + slope * F.col("x_next").cast("double")
-    return pref.filter(
-        (F.col("n_c") >= 30)
-        & F.col("x_next").isNotNull()
-        & F.col("y_lag6").isNotNull()
-    ).select(
-        F.round(yhat.cast("decimal(28,4)"), 4).cast("decimal(20,4)").alias("p"),
+    (:func:`_one_step_ahead`) re-exposed at origin grain."""
+    return _one_step_ahead(spark, sf_dir).select(
+        F.round(F.col("yhat").cast("decimal(28,4)"), 4).cast("decimal(20,4)").alias("p"),
         F.col("y_next").cast("decimal(18,2)").alias("y_next"),
         F.round(
-            F.abs(yhat - F.col("y_next").cast("double")).cast("decimal(28,6)"), 4
+            F.abs(F.col("yhat") - F.col("y_next").cast("double")).cast("decimal(28,6)"), 4
         )
         .cast("decimal(18,4)")
         .alias("err_ols"),
@@ -1241,59 +1163,15 @@ def _backtest_origins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORIGINS_SQL = """
-daily AS (
-    SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
-    FROM orders GROUP BY 1
-),
-xy AS (SELECT CAST(date_diff('day', DATE '1970-01-01', d) AS BIGINT) AS x,
-              CAST(y AS DECIMAL(18,2)) AS y FROM daily),
-pref AS (
-    SELECT x, y,
-           CAST(COUNT(*) OVER wp AS BIGINT) AS n_c,
-           CAST(SUM(x) OVER wp AS BIGINT) AS sx,
-           SUM(y) OVER wp AS sy,
-           SUM(y * CAST(x AS DECIMAL(10,0))) OVER wp AS sxy,
-           CAST(SUM(x * x) OVER wp AS BIGINT) AS sxx,
-           LEAD(x) OVER (ORDER BY x) AS x_next,
-           LEAD(y) OVER (ORDER BY x) AS y_next,
-           LAG(y, 6) OVER (ORDER BY x) AS y_lag6
-    FROM xy
-    WINDOW wp AS (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-),
+_ORIGINS_SQL = f"""{_ONE_STEP_AHEAD_SQL},
 origins AS (
-    SELECT CAST(ROUND(CAST(
-               (CAST(sy AS DOUBLE)
-                - ((CAST(n_c AS DOUBLE) * CAST(sxy AS DOUBLE)
-                    - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                   / (CAST(n_c AS DOUBLE) * CAST(sxx AS DOUBLE)
-                      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
-                  * CAST(sx AS DOUBLE)) / CAST(n_c AS DOUBLE)
-               + ((CAST(n_c AS DOUBLE) * CAST(sxy AS DOUBLE)
-                   - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                  / (CAST(n_c AS DOUBLE) * CAST(sxx AS DOUBLE)
-                     - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
-                 * CAST(x_next AS DOUBLE)
-               AS DECIMAL(28,4)), 4) AS DECIMAL(20,4)) AS p,
+    SELECT CAST(ROUND(CAST(yhat AS DECIMAL(28,4)), 4) AS DECIMAL(20,4)) AS p,
            CAST(y_next AS DECIMAL(18,2)) AS y_next,
-           CAST(ROUND(CAST(ABS(
-               ((CAST(sy AS DOUBLE)
-                 - ((CAST(n_c AS DOUBLE) * CAST(sxy AS DOUBLE)
-                     - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                    / (CAST(n_c AS DOUBLE) * CAST(sxx AS DOUBLE)
-                       - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
-                   * CAST(sx AS DOUBLE)) / CAST(n_c AS DOUBLE)
-                + ((CAST(n_c AS DOUBLE) * CAST(sxy AS DOUBLE)
-                    - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                   / (CAST(n_c AS DOUBLE) * CAST(sxx AS DOUBLE)
-                      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
-                  * CAST(x_next AS DOUBLE))
-               - CAST(y_next AS DOUBLE)) AS DECIMAL(28,6)), 4) AS DECIMAL(18,4))
-               AS err_ols,
+           CAST(ROUND(CAST(ABS(yhat - CAST(y_next AS DOUBLE)) AS DECIMAL(28,6)), 4)
+               AS DECIMAL(18,4)) AS err_ols,
            CAST(ROUND(CAST(ABS(CAST(y_lag6 - y_next AS DOUBLE))
                AS DECIMAL(28,6)), 4) AS DECIMAL(18,4)) AS err_snaive
-    FROM pref
-    WHERE n_c >= 30 AND x_next IS NOT NULL AND y_lag6 IS NOT NULL
+    FROM ahead
 )
 """
 
@@ -1499,41 +1377,8 @@ def conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one keyed day aggregate, windows over the calendar-bounded
     relation, two 1-row broadcasts.
     """
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("y")
-    )
-    wd = Window.orderBy("d")
-    xy = daily.select(
-        F.datediff("d", F.lit("1970-01-01")).cast("long").alias("x"),
-        F.col("y").cast("decimal(18,2)").alias("y"),
-        F.row_number().over(wd).cast("long").alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy()).cast("long").alias("n_days"),
-    ).localCheckpoint()
-    train = xy.filter(F.col("rn") * 2 <= F.col("n_days"))
-    s = train.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("x").cast("double").alias("sx"),
-        F.sum("y").cast("double").alias("sy"),
-        F.sum(F.col("y") * F.col("x").cast("decimal(10,0)"))
-        .cast("double")
-        .alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("double").alias("sxx"),
-    )
-    slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
-    fit = s.select(
-        F.round(slope.cast("decimal(28,10)"), 8).cast("double").alias("b"),
-        F.round(
-            ((F.col("sy") - slope * F.col("sx")) / F.col("n")).cast(
-                "decimal(28,10)"
-            ),
-            6,
-        )
-        .cast("double")
-        .alias("a"),
-    )
+    xy = _day_ranked_xy(spark, sf_dir).localCheckpoint()
+    fit = _snapped_line(xy.filter(F.col("rn") * 2 <= F.col("n_days")))
     resid = F.round(
         F.abs(
             F.col("a") + F.col("b") * F.col("x").cast("double")
@@ -1594,34 +1439,9 @@ def conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CONFORMAL_COVERAGE_SQL = """
-WITH daily AS (
-    SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
-    FROM orders GROUP BY 1
-),
-xy AS (
-    SELECT CAST(date_diff('day', DATE '1970-01-01', d) AS BIGINT) AS x,
-           CAST(y AS DECIMAL(18,2)) AS y,
-           CAST(ROW_NUMBER() OVER (ORDER BY d) AS BIGINT) AS rn,
-           CAST(COUNT(*) OVER () AS BIGINT) AS n_days
-    FROM daily
-),
-fit AS (
-    SELECT CAST(ROUND(CAST(
-               (n * sxy - sx * sy) / (n * sxx - sx * sx)
-               AS DECIMAL(28,10)), 8) AS DOUBLE) AS b,
-           CAST(ROUND(CAST(
-               (sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n
-               AS DECIMAL(28,10)), 6) AS DOUBLE) AS a
-    FROM (
-        SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-               CAST(SUM(x) AS DOUBLE) AS sx,
-               CAST(SUM(y) AS DOUBLE) AS sy,
-               CAST(SUM(y * CAST(x AS DECIMAL(10,0))) AS DOUBLE) AS sxy,
-               CAST(SUM(x * x) AS DOUBLE) AS sxx
-        FROM xy WHERE rn * 2 <= n_days
-    )
-),
+CONFORMAL_COVERAGE_SQL = f"""
+WITH {_DAY_RANKED_XY_SQL},
+fit AS ({_snapped_line_sql("xy WHERE rn * 2 <= n_days")}),
 cal AS (
     SELECT CAST(ROUND(CAST(ABS(a + b * CAST(x AS DOUBLE) - CAST(y AS DOUBLE))
                AS DECIMAL(28,6)), 4) AS DECIMAL(20,4)) AS resid

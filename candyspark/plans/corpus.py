@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from candyspark.functions.numeric import snap_round
 from candyspark.operators.text import char_hash32
 from candyspark.plans import QuerySpec
+from candyspark.plans.candy import line_fit, line_fit_sql, line_sums, line_sums_sql
 from candyspark.sources.readers import load_table
 
 # --- chunking ----------------------------------------------------------------
@@ -994,22 +995,11 @@ def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = tf.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 1000)
     lx = F.round(F.log(F.col("rank").cast("double")).cast("decimal(28,9)"), 9)
     ly = F.round(F.log(F.col("freq").cast("double")).cast("decimal(28,9)"), 9)
-    s = top.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(lx).cast("double").alias("sx"),
-        F.sum(ly).cast("double").alias("sy"),
-        F.sum(lx * ly).cast("double").alias("sxy"),
-        F.sum(lx * lx).cast("double").alias("sxx"),
-    )
-    slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
-    return s.select(
+    slope, intercept = line_fit()
+    return top.agg(*line_sums(lx, ly)).select(
         F.col("n").cast("long").alias("n_terms"),
         snap_round(slope, 4).alias("zipf_slope"),
-        snap_round((F.col("sy") - slope * F.col("sx")) / F.col("n"), 4).alias(
-            "intercept"
-        ),
+        snap_round(intercept, 4).alias("intercept"),
     )
 
 
@@ -1032,20 +1022,11 @@ l AS (
            ROUND(CAST(LN(CAST(freq AS DOUBLE)) AS DECIMAL(28,9)), 9) AS ly
     FROM top
 ),
-s AS (
-    SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-           CAST(SUM(lx) AS DOUBLE) AS sx,
-           CAST(SUM(ly) AS DOUBLE) AS sy,
-           CAST(SUM(lx * ly) AS DOUBLE) AS sxy,
-           CAST(SUM(lx * lx) AS DOUBLE) AS sxx
-    FROM l
-)
+s AS (SELECT {line_sums_sql("lx", "ly")} FROM l)
 SELECT CAST(n AS BIGINT) AS n_terms,
-       CAST(ROUND(CAST((n*sxy - sx*sy) / (n*sxx - sx*sx) AS DECIMAL(28,8)), 4)
-            AS DOUBLE) AS zipf_slope,
-       CAST(ROUND(CAST((sy - ((n*sxy - sx*sy) / (n*sxx - sx*sx)) * sx) / n
-            AS DECIMAL(28,8)), 4) AS DOUBLE) AS intercept
-FROM s
+       CAST(ROUND(CAST(slope AS DECIMAL(28,8)), 4) AS DOUBLE) AS zipf_slope,
+       CAST(ROUND(CAST(intercept AS DECIMAL(28,8)), 4) AS DOUBLE) AS intercept
+FROM {line_fit_sql("s")}
 """
 
 REGISTRY["zipf_fit"] = QuerySpec(zipf_fit, ZIPF_FIT_SQL)
@@ -2178,22 +2159,11 @@ def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("decimal(20,8)")
         .alias("ly"),
     )
-    s = pts.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("lx").cast("double").alias("sx"),
-        F.sum("ly").cast("double").alias("sy"),
-        F.sum(F.col("lx") * F.col("ly")).cast("double").alias("sxy"),
-        F.sum(F.col("lx") * F.col("lx")).cast("double").alias("sxx"),
-    )
-    beta = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
-    return s.select(
+    beta, log_k = line_fit()
+    return pts.agg(*line_sums(F.col("lx"), F.col("ly"))).select(
         F.col("n").cast("long").alias("n_checkpoints"),
         snap_round(beta, 6).alias("heaps_beta"),
-        snap_round(
-            F.exp((F.col("sy") - beta * F.col("sx")) / F.col("n")), 4
-        ).alias("heaps_k"),
+        snap_round(F.exp(log_k), 4).alias("heaps_k"),
     )
 
 
@@ -2232,20 +2202,11 @@ pts AS (
     FROM grid
     WHERE (r * 16) % n_docs < 16 AND vocab > 0
 ),
-s AS (
-    SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-           CAST(SUM(lx) AS DOUBLE) AS sx,
-           CAST(SUM(ly) AS DOUBLE) AS sy,
-           CAST(SUM(lx * ly) AS DOUBLE) AS sxy,
-           CAST(SUM(lx * lx) AS DOUBLE) AS sxx
-    FROM pts
-)
+s AS (SELECT {line_sums_sql("lx", "ly")} FROM pts)
 SELECT CAST(n AS BIGINT) AS n_checkpoints,
-       CAST(ROUND(CAST((n * sxy - sx * sy) / (n * sxx - sx * sx)
-            AS DECIMAL(28,8)), 6) AS DOUBLE) AS heaps_beta,
-       CAST(ROUND(CAST(EXP((sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n)
-            AS DECIMAL(28,8)), 4) AS DOUBLE) AS heaps_k
-FROM s
+       CAST(ROUND(CAST(slope AS DECIMAL(28,8)), 6) AS DOUBLE) AS heaps_beta,
+       CAST(ROUND(CAST(EXP(intercept) AS DECIMAL(28,8)), 4) AS DOUBLE) AS heaps_k
+FROM {line_fit_sql("s")}
 """
 
 

@@ -2869,6 +2869,61 @@ TIME_TO_EVENT_SQL = """CASE WHEN conv_ts IS NOT NULL
            END"""
 
 
+def at_risk(left: Column) -> Column:
+    """Subjects still at risk on day t: everyone, minus those who left the
+    risk set on an EARLIER day (``left`` counts a day's leavers: events
+    plus censorings). Exact integers from a cumulative window in t order
+    over the calendar-bounded per-day frame."""
+    before = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
+    return F.sum(left).over(Window.partitionBy()) - F.coalesce(
+        F.sum(left).over(before), F.lit(0)
+    )
+
+
+def risk_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(t, d, c, n_risk)``: per day since signup, the users who converted
+    (d) and were censored (c) that day, and the :func:`at_risk` count —
+    the right-censored time-to-first-purchase relation under the survival
+    family (:func:`censored_conversions`, :func:`time_to_event`). Scale: two
+    user_id reductions and one keyed join; everything after is
+    calendar-bounded."""
+    e = load_table(spark, sf_dir, "events")
+    per_user = censored_conversions(e, signup_times(e)).select(
+        time_to_event().alias("t"),
+        F.when(F.col("conv_ts").isNotNull(), 1).otherwise(0).alias("event"),
+    )
+    daily = per_user.groupBy("t").agg(
+        F.sum("event").cast("long").alias("d"),
+        F.sum(1 - F.col("event")).cast("long").alias("c"),
+    )
+    return daily.withColumn("n_risk", at_risk(F.col("d") + F.col("c")))
+
+
+def at_risk_sql(left: str) -> str:
+    """:func:`at_risk`, DuckDB form."""
+    return f"""SUM({left}) OVER () - COALESCE(SUM({left}) OVER (ORDER BY t
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)"""
+
+
+#: :func:`risk_table`, DuckDB form: the conversion CTEs, ``per_user``,
+#: ``daily`` and ``risked`` (t, d, c, n_risk).
+RISK_TABLE_SQL = f"""{FIRST_CONVERSIONS_SQL},
+per_user AS (
+    SELECT user_id, {TIME_TO_EVENT_SQL} AS t,
+           CASE WHEN conv_ts IS NOT NULL THEN 1 ELSE 0 END AS event
+    FROM conversions CROSS JOIN horizon
+),
+daily AS (
+    SELECT t, CAST(SUM(event) AS BIGINT) AS d,
+           CAST(SUM(1 - event) AS BIGINT) AS c
+    FROM per_user GROUP BY t
+),
+risked AS (
+    SELECT t, d, c, {at_risk_sql("d + c")} AS n_risk
+    FROM daily
+)"""
+
+
 def q_conversion_lag_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-to-convert survival curve: of users who signed up, the share
     whose FIRST subsequent purchase landed within k days (k = 0..7) — the
@@ -3405,26 +3460,9 @@ def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     S(t) = Π_{event days ≤ t} (1 − d/n): the ordered product runs as
     exp(Σ ln(·)) over the ≤days-sized per-day aggregate with the per-day
     term snapped before the cumulative sum — identical doubles in both
-    engines at every step. At-risk counts are exact integers from a
-    cumulative window over the same tiny frame. Scale: two user_id
-    reductions and one keyed join; everything after is calendar-bounded.
+    engines at every step. At-risk counts and scale: :func:`risk_table`.
     """
-    e = load_table(spark, sf_dir, "events")
-    per_user = censored_conversions(e, signup_times(e)).select(
-        time_to_event().alias("t"),
-        F.when(F.col("conv_ts").isNotNull(), 1).otherwise(0).alias("event"),
-    )
-    daily = per_user.groupBy("t").agg(
-        F.sum("event").cast("long").alias("d"),
-        F.sum(1 - F.col("event")).cast("long").alias("c"),
-    )
-    whole = Window.partitionBy()
-    before = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
     upto = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-    at_risk = (
-        F.sum(F.col("d") + F.col("c")).over(whole)
-        - F.coalesce(F.sum(F.col("d") + F.col("c")).over(before), F.lit(0))
-    )
     term = F.when(
         (F.col("d") > 0) & (F.col("d") < F.col("n_risk")),
         snap_round(
@@ -3440,7 +3478,7 @@ def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("d") == F.col("n_risk"), 1).otherwise(0)
     ).over(upto)
     return (
-        daily.withColumn("n_risk", at_risk)
+        risk_table(spark, sf_dir)
         .withColumn("logterm", term)
         .withColumn(
             "survival",
@@ -3460,23 +3498,7 @@ def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 KAPLAN_MEIER_SQL = f"""
-WITH {FIRST_CONVERSIONS_SQL},
-per_user AS (
-    SELECT user_id, {TIME_TO_EVENT_SQL} AS t,
-           CASE WHEN conv_ts IS NOT NULL THEN 1 ELSE 0 END AS event
-    FROM conversions CROSS JOIN horizon
-),
-daily AS (
-    SELECT t, CAST(SUM(event) AS BIGINT) AS d,
-           CAST(SUM(1 - event) AS BIGINT) AS c
-    FROM per_user GROUP BY t
-),
-risked AS (
-    SELECT t, d, c,
-           SUM(d + c) OVER () - COALESCE(SUM(d + c) OVER (ORDER BY t
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_risk
-    FROM daily
-),
+WITH {RISK_TABLE_SQL},
 terms AS (
     SELECT *,
            CASE WHEN d > 0 AND d < n_risk THEN
@@ -4447,28 +4469,11 @@ def q_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-purchase → horizon-censor relation), so the two queries are
     column-to-column comparable.
 
-    Exactness: at-risk counts are exact integers from the same cumulative
-    window; each d/n term is ONE IEEE division snapped at 8 dp through
-    DECIMAL(28,8) (identical cast semantics both engines), the cumulative
-    sum runs in the SAME t-order on both sides, and outputs snap at 6 dp.
-    Scale: identical to KM — two user_id reductions, one keyed join, then
-    everything is calendar-bounded."""
-    e = load_table(spark, sf_dir, "events")
-    per_user = censored_conversions(e, signup_times(e)).select(
-        time_to_event().alias("t"),
-        F.when(F.col("conv_ts").isNotNull(), 1).otherwise(0).alias("event"),
-    )
-    daily = per_user.groupBy("t").agg(
-        F.sum("event").cast("long").alias("d"),
-        F.sum(1 - F.col("event")).cast("long").alias("c"),
-    )
-    whole = Window.partitionBy()
-    before = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
+    Exactness: at-risk counts and scale are :func:`risk_table`'s; each d/n
+    term is ONE IEEE division snapped at 8 dp through DECIMAL(28,8)
+    (identical cast semantics both engines), the cumulative sum runs in
+    the SAME t-order on both sides, and outputs snap at 6 dp."""
     upto = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-    at_risk = (
-        F.sum(F.col("d") + F.col("c")).over(whole)
-        - F.coalesce(F.sum(F.col("d") + F.col("c")).over(before), F.lit(0))
-    )
     term = F.when(
         F.col("d") > 0,
         snap_round(
@@ -4477,7 +4482,7 @@ def q_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.lit(0.0))
     cumhaz = F.sum("hterm").over(upto)
     return (
-        daily.withColumn("n_risk", at_risk)
+        risk_table(spark, sf_dir)
         .withColumn("hterm", term)
         .select(
             F.col("t").cast("int").alias("day"),
@@ -4492,23 +4497,7 @@ def q_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 NELSON_AALEN_SQL = f"""
-WITH {FIRST_CONVERSIONS_SQL},
-per_user AS (
-    SELECT user_id, {TIME_TO_EVENT_SQL} AS t,
-           CASE WHEN conv_ts IS NOT NULL THEN 1 ELSE 0 END AS event
-    FROM conversions CROSS JOIN horizon
-),
-daily AS (
-    SELECT t, CAST(SUM(event) AS BIGINT) AS d,
-           CAST(SUM(1 - event) AS BIGINT) AS c
-    FROM per_user GROUP BY t
-),
-risked AS (
-    SELECT t, d, c,
-           SUM(d + c) OVER () - COALESCE(SUM(d + c) OVER (ORDER BY t
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_risk
-    FROM daily
-),
+WITH {RISK_TABLE_SQL},
 terms AS (
     SELECT *,
            CASE WHEN d > 0 THEN

@@ -18,6 +18,14 @@ from pyspark.sql import types as T
 from candyspark.functions.numeric import snap_round
 from candyspark.operators.text import char_hash32
 from candyspark.plans import QuerySpec
+from candyspark.plans.candy import (
+    TREND_SUMS_SQL,
+    line_fit,
+    line_fit_sql,
+    sales_xy,
+    sales_xy_sql,
+    trend_sums,
+)
 from candyspark.session import job_description
 from candyspark.sources.readers import load_table
 
@@ -1283,15 +1291,9 @@ def q_ransac_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     All thresholds/comparisons run on snapped decimals so both engines
     vote identically.
     """
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("y")
-    )
     w = Window.orderBy("d")
-    series = daily.select(
-        (F.row_number().over(w) - 1).cast("long").alias("i"),
-        F.datediff("d", F.lit("1970-01-01")).cast("long").alias("x"),
-        F.col("y").cast("decimal(18,2)").alias("y"),
+    series = sales_xy(
+        spark, sf_dir, (F.row_number().over(w) - 1).cast("long").alias("i")
     ).localCheckpoint()
     stats = series.agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
@@ -1396,44 +1398,24 @@ def q_ransac_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         <= F.col("eps")
     )
     refit = inliers.agg(
-        F.max("n_inliers").cast("long").alias("n_inliers"),
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("x").cast("double").alias("sx"),
-        F.sum("y").cast("double").alias("sy"),
-        F.sum(F.col("y") * F.col("x").cast("decimal(10,0)"))
-        .cast("double")
-        .alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("double").alias("sxx"),
+        F.max("n_inliers").cast("long").alias("n_inliers"), *trend_sums()
     )
-    slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
+    slope, intercept = line_fit()
     return refit.select(
         "n_inliers",
         snap_round(slope, 6).alias("ransac_slope"),
-        snap_round((F.col("sy") - slope * F.col("sx")) / F.col("n"), 4).alias(
-            "ransac_intercept"
-        ),
+        snap_round(intercept, 4).alias("ransac_intercept"),
     )
 
 
-RANSAC_TREND_SQL = """
-WITH daily AS (
-    SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y
-    FROM orders GROUP BY 1
-),
-series AS (
-    SELECT CAST(ROW_NUMBER() OVER (ORDER BY d) - 1 AS BIGINT) AS i,
-           CAST(date_diff('day', DATE '1970-01-01', d) AS BIGINT) AS x,
-           CAST(y AS DECIMAL(18,2)) AS y
-    FROM daily
-),
+RANSAC_TREND_SQL = f"""
+WITH {sales_xy_sql("CAST(ROW_NUMBER() OVER (ORDER BY d) - 1 AS BIGINT) AS i")},
 stats AS (
     SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
            CAST(ROUND(CAST(CAST(percentile_disc(0.75) WITHIN GROUP (ORDER BY y)
                 - percentile_disc(0.25) WITHIN GROUP (ORDER BY y) AS DOUBLE) / 2.0
                 AS DECIMAL(28,4)), 2) AS DOUBLE) AS eps
-    FROM series
+    FROM xy
 ),
 cand AS (
     SELECT cid, eps, ia,
@@ -1456,14 +1438,14 @@ lines AS (
                     AS DOUBLE) AS b,
                pa.x AS xa, pa.y AS ya
         FROM cand
-        JOIN series pa ON pa.i = cand.ia
-        JOIN series pb ON pb.i = cand.ib
+        JOIN xy pa ON pa.i = cand.ia
+        JOIN xy pb ON pb.i = cand.ib
         WHERE pa.x != pb.x
     )
 ),
 scored AS (
     SELECT cid, a, b, eps, CAST(COUNT(*) AS BIGINT) AS n_inliers
-    FROM lines JOIN series
+    FROM lines JOIN xy
       ON ABS(CAST(y AS DOUBLE) - (a + b * CAST(x AS DOUBLE))) <= eps
     GROUP BY cid, a, b, eps
 ),
@@ -1474,25 +1456,19 @@ best AS (
     WHERE rk = 1
 ),
 inliers AS (
-    SELECT series.*, best.n_inliers
-    FROM series CROSS JOIN best
+    SELECT xy.*, best.n_inliers
+    FROM xy CROSS JOIN best
     WHERE ABS(CAST(y AS DOUBLE) - (a + b * CAST(x AS DOUBLE))) <= eps
 ),
 refit AS (
     SELECT CAST(MAX(n_inliers) AS BIGINT) AS n_inliers,
-           CAST(COUNT(*) AS DOUBLE) AS n,
-           CAST(SUM(x) AS DOUBLE) AS sx,
-           CAST(SUM(y) AS DOUBLE) AS sy,
-           CAST(SUM(y * CAST(x AS DECIMAL(10,0))) AS DOUBLE) AS sxy,
-           CAST(SUM(x * x) AS DOUBLE) AS sxx
+           {TREND_SUMS_SQL}
     FROM inliers
 )
 SELECT n_inliers,
-       CAST(ROUND(CAST((n * sxy - sx * sy) / (n * sxx - sx * sx)
-            AS DECIMAL(28,8)), 6) AS DOUBLE) AS ransac_slope,
-       CAST(ROUND(CAST((sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n
-            AS DECIMAL(28,8)), 4) AS DOUBLE) AS ransac_intercept
-FROM refit
+       CAST(ROUND(CAST(slope AS DECIMAL(28,8)), 6) AS DOUBLE) AS ransac_slope,
+       CAST(ROUND(CAST(intercept AS DECIMAL(28,8)), 4) AS DOUBLE) AS ransac_intercept
+FROM {line_fit_sql("refit")}
 """
 
 

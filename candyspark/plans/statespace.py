@@ -41,17 +41,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from candyspark.plans import QuerySpec
-from candyspark.sources.readers import load_table
+from candyspark.plans.candy import DAILY_SALES_SQL, daily_sales
 
 #: shared oracle CTE: the exact-decimal daily revenue series with a row
 #: number in day order (both engines' doubles derive from the SAME
 #: DECIMAL(18,2) sum, the forecast_linear discipline)
-_DAILY_RN_SQL = """daily AS (
-    SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS ydec
-    FROM orders GROUP BY 1
-),
+_DAILY_RN_SQL = f"""{DAILY_SALES_SQL},
 series AS (
-    SELECT d, CAST(ydec AS DOUBLE) AS y,
+    SELECT d, CAST(y AS DOUBLE) AS y,
            CAST(ROW_NUMBER() OVER (ORDER BY d) AS BIGINT) AS rn
     FROM daily
 )"""
@@ -60,12 +57,7 @@ series AS (
 def _daily_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per calendar day: (d, y) with y an exact-decimal revenue sum
     surfaced as double (unordered — callers sort; see ``_daily_series``)."""
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.groupBy(F.col("o_orderdate").alias("d"))
-        .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("ydec"))
-        .select("d", F.col("ydec").cast("double").alias("y"))
-    )
+    return daily_sales(spark, sf_dir).select("d", F.col("y").cast("double").alias("y"))
 
 
 def _day_sorted(df: DataFrame) -> DataFrame:
@@ -353,15 +345,7 @@ def q_hmm_regime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 HMM_REGIME_FILTER_SQL = f"""
-WITH RECURSIVE daily AS (
-    SELECT o_orderdate AS d, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS ydec
-    FROM orders GROUP BY 1
-),
-series AS (
-    SELECT d, CAST(ydec AS DOUBLE) AS y,
-           CAST(ROW_NUMBER() OVER (ORDER BY d) AS BIGINT) AS rn
-    FROM daily
-),
+WITH RECURSIVE {_DAILY_RN_SQL},
 params AS (
     SELECT CAST(ROUND(CAST(CAST(SUM(CAST(y AS DECIMAL(18,2))) AS DOUBLE)
                            / CAST(COUNT(*) AS DOUBLE)

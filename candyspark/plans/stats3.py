@@ -45,6 +45,8 @@ from candyspark.plans import QuerySpec
 from candyspark.plans.extensions import (
     FIRST_CONVERSIONS_SQL,
     TIME_TO_EVENT_SQL,
+    at_risk,
+    at_risk_sql,
     censored_conversions,
     signup_times,
     time_to_event,
@@ -101,29 +103,13 @@ def _cox_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((1 - F.col("event")) * F.col("x")).cast("long").alias("c1"),
         F.sum((1 - F.col("event")) * (1 - F.col("x"))).cast("long").alias("c0"),
     )
-    whole = Window.partitionBy()
-    before = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
     return (
         daily.select(
             "t",
             (F.col("d1") + F.col("d0")).alias("d"),
             F.col("d1").alias("s1"),
-            (
-                F.sum(F.col("d1") + F.col("c1")).over(whole)
-                - F.coalesce(
-                    F.sum(F.col("d1") + F.col("c1")).over(before), F.lit(0)
-                )
-            )
-            .cast("long")
-            .alias("r1"),
-            (
-                F.sum(F.col("d0") + F.col("c0")).over(whole)
-                - F.coalesce(
-                    F.sum(F.col("d0") + F.col("c0")).over(before), F.lit(0)
-                )
-            )
-            .cast("long")
-            .alias("r0"),
+            at_risk(F.col("d1") + F.col("c1")).cast("long").alias("r1"),
+            at_risk(F.col("d0") + F.col("c0")).cast("long").alias("r0"),
         )
         .filter(F.col("d") > 0)
     )
@@ -268,12 +254,8 @@ daily AS (
 ),
 risk AS (
     SELECT t, d1 + d0 AS d, d1 AS s1,
-           CAST(SUM(d1 + c1) OVER () - COALESCE(SUM(d1 + c1) OVER
-               (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS BIGINT) AS r1,
-           CAST(SUM(d0 + c0) OVER () - COALESCE(SUM(d0 + c0) OVER
-               (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS BIGINT) AS r0
+           CAST({at_risk_sql("d1 + c1")} AS BIGINT) AS r1,
+           CAST({at_risk_sql("d0 + c0")} AS BIGINT) AS r0
     FROM daily
 ),
 ev AS (SELECT * FROM risk WHERE d > 0),

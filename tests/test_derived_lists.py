@@ -96,6 +96,21 @@ BUILDER_SIGNATURES = {
     # 10-word segments (word_segments, segments_sql)
     '(F.col("pos") / 10)': "plans/corpus.py",
     "CAST(pos // 10 AS BIGINT)": "plans/corpus.py",
+    # the DECIMAL(18,2) daily sales series and its epoch-day x (daily_sales,
+    # epoch_day, DAILY_SALES_SQL, EPOCH_DAY_SQL)
+    'F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("y")': "plans/candy.py",
+    "SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS y\n": "plans/candy.py",
+    'F.datediff("d", F.lit("1970-01-01"))': "plans/candy.py",
+    "date_diff('day', DATE '1970-01-01', d)": "plans/candy.py",
+    # the one-regressor OLS line (line_fit, line_fit_sql)
+    "F.when(det != 0, (n * sxy - sx * sy) / det)": "plans/candy.py",
+    "THEN (n * sxy - sx * sy) / (n * sxx - sx * sx) END AS slope": "plans/candy.py",
+    # the co-purchase edges (_copurchase_edges, copurchase_edges_sql)
+    '.filter(F.col("n") >= min_orders)': "plans/graph.py",
+    "a.l_partkey < b.l_partkey\n    GROUP BY 1, 2 HAVING COUNT(*) >= 2": "plans/graph.py",
+    # the survival at-risk window (at_risk, at_risk_sql)
+    "F.sum(left).over(Window.partitionBy())": "plans/extensions.py",
+    "COALESCE(SUM({left}) OVER (ORDER BY t": "plans/extensions.py",
 }
 
 

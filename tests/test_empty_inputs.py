@@ -14,10 +14,16 @@ normalization), so the sweep exercises the exact ingest path.
 
 from __future__ import annotations
 
+import shutil
+
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 
 from candyspark.plans import collect_registry
 from candyspark.schemas import TESTDATA_TABLES
+
+from tests.oracle import compare_frames, duckdb_connection
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -41,3 +47,34 @@ def test_query_survives_empty_input(spark, empty_sf_dir, name):
     df = REGISTRY[name].fn(spark, empty_sf_dir)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
+
+
+@pytest.fixture(scope="module")
+def one_day_sf_dir(tmp_path_factory):
+    """The testdata with ``orders`` cut to its first order date: every
+    daily series over it has exactly one day, the degenerate case of a
+    trend fit (its x has no spread). Single parquet files, as DuckDB reads
+    them."""
+    root = tmp_path_factory.mktemp("one_day_sf")
+    for table in TESTDATA_TABLES:
+        src, dst = f"{SF_DIR}/{table}.parquet", root / f"{table}.parquet"
+        if table == "orders":
+            orders = pq.read_table(src)
+            first = pc.min(orders["o_orderdate"])
+            pq.write_table(orders.filter(pc.equal(orders["o_orderdate"], first)), dst)
+        else:
+            shutil.copy(src, dst)
+    return str(root)
+
+
+@pytest.mark.parametrize("name", ["forecast_linear", "forecast_metrics"])
+def test_one_day_series_matches_oracle(spark, one_day_sf_dir, name):
+    # the fit's determinant n·Σx² − (Σx)² is 0: slope and intercept are
+    # NULL in both engines, not a divide-by-zero error on the Spark side
+    spec = REGISTRY[name]
+    con = duckdb_connection(one_day_sf_dir)
+    try:
+        oracle_pdf = con.execute(spec.sql).df()
+    finally:
+        con.close()
+    compare_frames(spec.fn(spark, one_day_sf_dir).toPandas(), oracle_pdf, name)
