@@ -18,7 +18,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from candyspark.plans import collect_registry
-from candyspark.plans.relational import daily_summary
+from candyspark.plans.relational import q_daily_summary
 from candyspark.session import ship_package
 
 SF0001 = "/root/testdata/sf0.001"
@@ -29,7 +29,7 @@ def entry(spark: SparkSession) -> DataFrame:
     the daily-summary shape at the heart of the reference pipeline
     (/root/reference/src/data_processor.py:517-572)."""
     ship_package(spark)
-    return daily_summary(spark, SF0001)
+    return q_daily_summary(spark, SF0001)
 
 
 def _shipped(fn: Callable[[SparkSession, str], DataFrame]):

@@ -121,7 +121,7 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> int:
         & (F.col("n_tokens") >= args.min_tokens)
     )
     dedup_w = Window.partitionBy("norm").orderBy("doc_id")
-    # content-hash split (plans/corpus.dataset_split discipline): re-shard-proof,
+    # content-hash split (plans/corpus.q_dataset_split discipline): re-shard-proof,
     # no assignment table — the bucket is a pure function of the content id.
     bucket = X.char_hash32(F.col("doc_id").cast("string")) % 100
     survivors = (

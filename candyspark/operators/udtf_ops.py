@@ -1,7 +1,7 @@
 """Python UDTF surface (1-row → N-rows table functions).
 
 The engine's default 1→N shape is JVM-side ``explode`` over an array
-expression (plans/corpus.chunk_documents — whole-stage codegen, scan
+expression (plans/corpus.q_chunk_documents — whole-stage codegen, scan
 speed); ``mapInPandas`` covers Arrow-batched kernels (operators/
 multimodal.py). A declared UDTF is the third form: genuinely imperative
 per-row expansion logic with UDTF semantics (LATERAL join), for the cases

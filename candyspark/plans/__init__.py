@@ -1,15 +1,27 @@
 """Query plans: named, oracle-checked DataFrame programs.
 
-Each plan module exposes ``REGISTRY: dict[str, QuerySpec]``. A ``QuerySpec``
-pairs a PySpark query (``(spark, sf_dir) -> DataFrame``) with the equivalent
-ANSI SQL for the DuckDB oracle (``None`` for non-SQL-expressible operators —
-the driver then records a weaker rows-only check; SURVEY.md §5.2).
+The registry is derived from the plan modules by one naming rule:
+
+- a module-level function ``q_<name>`` defined in a plan module is the
+  query ``<name>``, a PySpark program ``(spark, sf_dir) -> DataFrame``;
+- its oracle is that module's ``<NAME>_SQL`` constant, the equivalent ANSI
+  SQL for DuckDB;
+- ``<NAME>_SQL = None`` declares a rows-only query (not SQL-expressible; the
+  driver then records a weaker rows-only check, SURVEY.md §5.2);
+- a ``q_`` function without that constant makes ``collect_registry()``
+  raise, so a missing oracle fails loudly instead of going rows-only.
+
+A ``QuerySpec`` pairs the two.
 """
 
 from __future__ import annotations
 
+import importlib
+import inspect
+import pkgutil
 from collections.abc import Callable
 from dataclasses import dataclass
+from types import ModuleType
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -26,8 +38,8 @@ class QuerySpec:
 #: driver's correctness gate evaluates only the first 50 registry entries,
 #: so this one list is that window: a round rotates its new and materially
 #: changed queries in by editing it (and drops as many), and the gate then
-#: certifies code no earlier round certified. Every other name follows in
-#: module order.
+#: certifies code no earlier round certified. Every other name follows by
+#: module name, then in definition order.
 FRONT = [
     "greedy_allocation",
     "ses_forecast",
@@ -83,67 +95,33 @@ FRONT = [
 
 
 def collect_registry() -> dict[str, QuerySpec]:
-    """Union of all plan modules' registries (stable names across rounds),
-    with FRONT promoted to the front."""
-    from candyspark.plans import (
-        analytics,
-        behavior,
-        candy,
-        corpus,
-        extensions,
-        geo,
-        graph,
-        inventory,
-        ml,
-        mutation,
-        outliers,
-        profiling,
-        quality,
-        relational,
-        retrieval,
-        retrieval2,
-        sequences,
-        sketches,
-        stats2,
-        stats3,
-        stats4,
-        statespace,
-        temporal,
-        tpch,
-        tpch2,
-    )
-
+    """Every plan module's queries by the naming rule (stable names across
+    rounds), with FRONT promoted to the front."""
     merged: dict[str, QuerySpec] = {}
-    for mod in (
-        relational,
-        candy,
-        extensions,
-        temporal,
-        analytics,
-        profiling,
-        corpus,
-        tpch,
-        tpch2,
-        mutation,
-        geo,
-        inventory,
-        ml,
-        quality,
-        graph,
-        retrieval,
-        retrieval2,
-        sketches,
-        outliers,
-        behavior,
-        sequences,
-        stats2,
-        stats3,
-        stats4,
-        statespace,
-    ):
-        overlap = merged.keys() & mod.REGISTRY.keys()
-        if overlap:
-            raise ValueError(f"duplicate query names: {sorted(overlap)}")
-        merged.update(mod.REGISTRY)
+    # imported here, not at module load: tracers patch the readers first
+    for info in pkgutil.iter_modules(__path__):
+        mod = importlib.import_module(f"{__name__}.{info.name}")
+        for name, spec in _module_queries(mod).items():
+            if name in merged:
+                raise ValueError(f"duplicate query name {name!r} in {mod.__name__}")
+            merged[name] = spec
     front = {n: merged[n] for n in FRONT if n in merged}
     return front | {n: s for n, s in merged.items() if n not in front}
+
+
+def _module_queries(mod: ModuleType) -> dict[str, QuerySpec]:
+    """One module's ``q_<name>`` functions, each with its ``<NAME>_SQL``."""
+    out: dict[str, QuerySpec] = {}
+    for attr, fn in vars(mod).items():
+        if not (attr.startswith("q_") and inspect.isfunction(fn)):
+            continue
+        if fn.__module__ != mod.__name__:  # imported from a sibling plan module
+            continue
+        name = attr[2:]
+        const = f"{name.upper()}_SQL"
+        if const not in vars(mod):
+            raise ValueError(
+                f"{mod.__name__}.{attr} has no {const} (set it to None for rows-only)"
+            )
+        out[name] = QuerySpec(fn, vars(mod)[const])
+    return out

@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from candyspark.operators import text as X
-from candyspark.plans import QuerySpec
 from candyspark.plans.candy import DAILY_SALES_SQL, daily_sales
 from candyspark.plans.extensions import _TOKS
 from candyspark.functions.numeric import money, round2, snap_round
@@ -32,7 +31,7 @@ from candyspark.sources.readers import fan_out, load_table
 # --- deterministic hash sampling -------------------------------------------
 
 
-def sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """~16% deterministic content sample of `documents`: keep rows whose
     md5(text) hex prefix sorts below the threshold. A pure scan-stage
     predicate — no shuffle, no RNG state, reproducible across engines, runs,
@@ -59,7 +58,7 @@ ORDER BY doc_id
 # --- pivot ------------------------------------------------------------------
 
 
-def pivot_linestatus(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_pivot_linestatus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot (long→wide aggregation): quantity by return flag × line status.
     The pivot value list is explicit — Spark otherwise runs a separate
     distinct-values job over the full input to discover columns, and the
@@ -93,7 +92,7 @@ ORDER BY l_returnflag
 # --- discrete percentiles ---------------------------------------------------
 
 
-def percentile_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_percentile_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group order statistics via PERCENTILE_DISC (SQL-standard WITHIN
     GROUP) — discrete quantiles return an actual data value, so Spark and
     DuckDB agree exactly (PERCENTILE_CONT interpolates in float and can
@@ -135,7 +134,7 @@ ORDER BY l_returnflag
 # --- set operations ---------------------------------------------------------
 
 
-def set_ops_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_set_ops_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT / EXCEPT (SURVEY.md §2.8: the reference only unions):
     customers with both urgent and high-priority orders, and urgent-only
     customers, tagged and unioned. Both set ops are distinct-semantics
@@ -169,11 +168,11 @@ ORDER BY op, o_custkey
 # --- cube -------------------------------------------------------------------
 
 
-def cube_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_cube_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full CUBE over (return flag, line status) — all 4 grouping sets in one
     pass (Spark expands to a single Expand + hash aggregate; no re-scan per
     set). grouping_id disambiguates subtotal NULLs from data NULLs, same as
-    plans/relational.grouping_rollup."""
+    plans/relational.q_grouping_rollup."""
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.cube("l_returnflag", "l_linestatus")
@@ -210,7 +209,7 @@ _QUALITY = """CAST(ROUND(CAST(
       AS DECIMAL(28,8)), 4) AS DOUBLE)"""
 
 
-def corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composite training-data cleaning pipeline (C4-style), one plan:
     quality gate (score ≥ 0.5) → length gate (≥ 10 tokens) → exact dedup on
     normalized text keeping the lowest doc_id. Filters and the score are
@@ -253,7 +252,7 @@ ORDER BY doc_id
 """
 
 
-def gap_fill_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_gap_fill_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calendar-spine gap filling: daily order counts on a COMPLETE date
     spine (missing days materialized), zero-filled and forward-filled —
     the resampling step every time-series consumer needs before modeling
@@ -307,7 +306,7 @@ ORDER BY day
 """
 
 
-def unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot/melt — the inverse of pivot_linestatus: the three lineitem
     measures melted to long format (orderkey, linenumber, measure, value).
     Scan-stage row expansion (3× rows, no shuffle); long format is what
@@ -334,7 +333,7 @@ ORDER BY l_orderkey, l_linenumber, measure
 """
 
 
-def window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution window functions — percent_rank / cume_dist /
     dense_rank per return flag under a pinned total order (quantity,
     orderkey, linenumber): deterministic rank-derived doubles, one window
@@ -367,7 +366,7 @@ ORDER BY l_returnflag, l_quantity, l_orderkey, l_linenumber
 """
 
 
-def rolling_weekly_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_rolling_weekly_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE-frame rolling window: per event_type daily totals with a
     trailing-7-day rolling sum and event count. RANGE (value-based) frames
     differ from ROWS frames exactly when days are missing — the frame spans
@@ -422,7 +421,7 @@ ORDER BY event_type, day
 """
 
 
-def salted_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_salted_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The hot-key aggregation pattern (operators/skew.salted_agg) as a
     driver-checked query: per-event-type totals computed via a two-phase
     (key, salt) partial → key combine. The oracle is the PLAIN single-phase
@@ -463,8 +462,7 @@ ORDER BY event_type
 """
 
 
-
-def nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ratio-to-report: each nation's share of its REGION's revenue — a
     window aggregate OVER an aggregate (sum-of-group / sum-over-partition),
     the reporting shape the reference never reaches (its shares are global
@@ -523,23 +521,7 @@ ORDER BY r_name, n_name
 """
 
 
-REGISTRY: dict[str, QuerySpec] = {
-    "nation_revenue_share": QuerySpec(nation_revenue_share, NATION_REVENUE_SHARE_SQL),
-    "sample_hash": QuerySpec(sample_hash, SAMPLE_HASH_SQL),
-    "pivot_linestatus": QuerySpec(pivot_linestatus, PIVOT_LINESTATUS_SQL),
-    "percentile_quantity": QuerySpec(percentile_quantity, PERCENTILE_QUANTITY_SQL),
-    "set_ops_customers": QuerySpec(set_ops_customers, SET_OPS_CUSTOMERS_SQL),
-    "cube_qty": QuerySpec(cube_qty, CUBE_QTY_SQL),
-    "corpus_clean": QuerySpec(corpus_clean, CORPUS_CLEAN_SQL),
-    "gap_fill_daily": QuerySpec(gap_fill_daily, GAP_FILL_DAILY_SQL),
-    "unpivot_measures": QuerySpec(unpivot_measures, UNPIVOT_MEASURES_SQL),
-    "window_distribution": QuerySpec(window_distribution, WINDOW_DISTRIBUTION_SQL),
-    "rolling_weekly_value": QuerySpec(rolling_weekly_value, ROLLING_WEEKLY_VALUE_SQL),
-    "salted_aggregation": QuerySpec(salted_aggregation, SALTED_AGGREGATION_SQL),
-}
-
-
-def pareto_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_pareto_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue concentration by customer decile (the Pareto / whale
     curve): customers bucketed into spend deciles, each decile's revenue
     and the cumulative share captured from the top down — the "top 10% of
@@ -619,12 +601,8 @@ FROM agg
 ORDER BY decile
 """
 
-REGISTRY["pareto_revenue_share"] = QuerySpec(
-    pareto_revenue_share, PARETO_REVENUE_SHARE_SQL
-)
 
-
-def segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer segment migration matrix: spend terciles (high/mid/low)
     in the first half of the order history vs the second half, with
     transition counts and row-shares — the churn/upsell movement table
@@ -736,10 +714,8 @@ GROUP BY seg_from, seg_to
 ORDER BY seg_from, seg_to
 """
 
-REGISTRY["segment_migration"] = QuerySpec(segment_migration, SEGMENT_MIGRATION_SQL)
 
-
-def skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skyline (Pareto-front) query: the parts no other part dominates —
     nobody is both cheaper AND at-least-as-large (minimize retail price,
     maximize size; strict in at least one dimension). The classic
@@ -812,10 +788,8 @@ WHERE NOT EXISTS (
 ORDER BY p_retailprice, p_partkey
 """
 
-REGISTRY["skyline_parts"] = QuerySpec(skyline_parts, SKYLINE_PARTS_SQL)
 
-
-def topk_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_topk_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-key top-k under key skew, two-phase (operators/skew.salted_topk):
     top-3 orders by price per order priority — only 5 priorities, so every
     key IS hot and the single-window form would sort 1/5 of the table per
@@ -850,10 +824,7 @@ ORDER BY o_orderpriority, rk
 """
 
 
-REGISTRY["topk_salted"] = QuerySpec(topk_salted, TOPK_SALTED_SQL)
-
-
-def rolling_median_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_rolling_median_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling MEDIAN smoothing: per event_type daily totals with the
     centered 7-day (±3) median — the robust twin of rolling_weekly_value's
     sum (one outlier day saturates a rolling mean/sum; the median shrugs
@@ -907,11 +878,6 @@ WINDOW w AS (PARTITION BY event_type ORDER BY epoch_day
              RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING)
 ORDER BY event_type, day
 """
-
-
-REGISTRY["rolling_median_value"] = QuerySpec(
-    rolling_median_value, ROLLING_MEDIAN_VALUE_SQL
-)
 
 
 # --- the daily revenue series ------------------------------------------------
@@ -1076,10 +1042,7 @@ ORDER BY lag
 """
 
 
-REGISTRY["acf_daily_revenue"] = QuerySpec(q_acf_daily_revenue, ACF_DAILY_REVENUE_SQL)
-
-
-def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The hot-key JOIN mitigation (operators/skew.salted_broadcast_left)
     as a driver-checked query, completing the skew family: salted
     aggregation (salted_aggregation) → salted per-key top-k (topk_salted)
@@ -1141,9 +1104,6 @@ FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
 GROUP BY p_brand
 ORDER BY brand
 """
-
-
-REGISTRY["skew_salted_join"] = QuerySpec(skew_salted_join, SKEW_SALTED_JOIN_SQL)
 
 
 def q_pacf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1305,11 +1265,6 @@ ORDER BY lag
 PACF_DAILY_REVENUE_SQL = _pacf_sql()
 
 
-REGISTRY["pacf_daily_revenue"] = QuerySpec(
-    q_pacf_daily_revenue, PACF_DAILY_REVENUE_SQL
-)
-
-
 def q_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Price-index numbers per year vs the 1996 base — Laspeyres (base-
     quantity weights), Paasche (current-quantity weights), and Fisher
@@ -1428,9 +1383,6 @@ ORDER BY year
 """
 
 
-REGISTRY["price_index"] = QuerySpec(q_price_index, PRICE_INDEX_SQL)
-
-
 def q_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Herfindahl-Hirschman market concentration per nation — how
     concentrated each nation's supplier market is: HHI = Σ share² over
@@ -1507,9 +1459,6 @@ ORDER BY nation
 """
 
 
-REGISTRY["hhi_concentration"] = QuerySpec(q_hhi_concentration, HHI_CONCENTRATION_SQL)
-
-
 def q_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximum drawdown of the daily-revenue LEVEL series — the
     risk-analytics member beside the trend/seasonality diagnostics: the
@@ -1570,9 +1519,6 @@ SELECT MIN(d) AS trough_date,
 FROM (SELECT d, dd, MAX(dd) OVER () AS max_dd FROM peaks)
 WHERE dd = max_dd
 """
-
-
-REGISTRY["max_drawdown"] = QuerySpec(q_max_drawdown, MAX_DRAWDOWN_SQL)
 
 
 def q_yule_walker_ar2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1677,8 +1623,6 @@ SELECT n_days, rho1, rho2,
 FROM rho
 """
 
-REGISTRY["yule_walker_ar2"] = QuerySpec(q_yule_walker_ar2, YULE_WALKER_AR2_SQL)
-
 
 # cos/sin of 2πk/7 as shortest-roundtrip literals — BOTH engines receive the
 # same IEEE double by construction (libm cos/sin may differ in the last ulp
@@ -1759,10 +1703,6 @@ SELECT n_days,
             AS DECIMAL(28,8)), 6) AS DOUBLE) AS variance_fraction
 FROM sums
 """
-
-REGISTRY["weekly_spectral_power"] = QuerySpec(
-    q_weekly_spectral_power, WEEKLY_SPECTRAL_POWER_SQL
-)
 
 
 def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1866,9 +1806,6 @@ SELECT CAST(n_days AS BIGINT) AS n_days,
             ELSE 'no_trend' END AS trend
 FROM zc
 """
-
-
-REGISTRY["mann_kendall"] = QuerySpec(q_mann_kendall, MANN_KENDALL_SQL)
 
 
 def q_chow_break_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2008,8 +1945,6 @@ SELECT CAST(n1 + n2 AS BIGINT) AS n_days,
        END AS structural_break
 FROM calc
 """
-
-REGISTRY["chow_break_test"] = QuerySpec(q_chow_break_test, CHOW_BREAK_TEST_SQL)
 
 
 def q_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2171,8 +2106,6 @@ SELECT CAST(ROUND(CAST(rs16 AS DECIMAL(28,8)), 6) AS DOUBLE) AS rs16,
             ELSE 'random_walk' END AS regime
 FROM fit
 """
-
-REGISTRY["hurst_exponent"] = QuerySpec(q_hurst_exponent, HURST_EXPONENT_SQL)
 
 
 def q_granger_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2386,8 +2319,6 @@ FROM rss
 ORDER BY direction
 """
 
-REGISTRY["granger_lead_lag"] = QuerySpec(q_granger_lead_lag, GRANGER_LEAD_LAG_SQL)
-
 
 def q_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hill estimator of the power-law tail index of order values — the
@@ -2471,8 +2402,6 @@ SELECT CAST(COUNT(*) AS BIGINT) AS k,
             AS DECIMAL(28,8)), 6) AS DOUBLE) AS hill_alpha
 FROM lr GROUP BY x_k1
 """
-
-REGISTRY["hill_tail_index"] = QuerySpec(q_hill_tail_index, HILL_TAIL_INDEX_SQL)
 
 
 def q_theil_inequality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2659,6 +2588,3 @@ SELECT nation, n_g, within_contrib, between_contrib,
            AS DOUBLE) AS theil_contrib
 FROM both_
 """
-
-
-REGISTRY["theil_inequality"] = QuerySpec(q_theil_inequality, THEIL_INEQUALITY_SQL)

@@ -36,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from candyspark.functions.numeric import snap_round
-from candyspark.plans import QuerySpec
 from candyspark.sources.readers import load_table
 
 
@@ -494,7 +493,7 @@ ORDER BY p.user_id
 def q_ab_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Experiment-analysis shape: users deterministically split into two
     arms (content-hash parity of user_id — the same re-shard-proof
-    assignment discipline as plans/corpus.dataset_split), per-arm
+    assignment discipline as plans/corpus.q_dataset_split), per-arm
     conversion rate (users with ≥1 purchase), and the 95% Wilson score
     interval. Wilson beats the normal approximation at small n and never
     leaves [0,1]; the math is sqrt/± in IEEE double (sqrt is
@@ -856,21 +855,6 @@ ORDER BY session_ordinal
 """
 
 
-REGISTRY: dict[str, QuerySpec] = {
-    "ab_conversion": QuerySpec(q_ab_conversion, AB_CONVERSION_SQL),
-    "basket_rules": QuerySpec(q_basket_rules, BASKET_RULES_SQL),
-    "session_stats": QuerySpec(q_session_stats, SESSION_STATS_SQL),
-    "interevent_gaps": QuerySpec(q_interevent_gaps, INTEREVENT_GAPS_SQL),
-    "user_event_profile": QuerySpec(q_user_event_profile, USER_EVENT_PROFILE_SQL),
-    "basket_pairs": QuerySpec(q_basket_pairs, BASKET_PAIRS_SQL),
-    "event_transitions": QuerySpec(q_event_transitions, EVENT_TRANSITIONS_SQL),
-    "peak_concurrency": QuerySpec(q_peak_concurrency, PEAK_CONCURRENCY_SQL),
-    "rfm_segments": QuerySpec(q_rfm_segments, RFM_SEGMENTS_SQL),
-    "fuzzy_part_pairs": QuerySpec(q_fuzzy_part_pairs, FUZZY_PART_PAIRS_SQL),
-    "chi2_independence": QuerySpec(q_chi2_independence, CHI2_INDEPENDENCE_SQL),
-}
-
-
 def q_info_gain_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Information gain of part brand on the return outcome — the
     decision-tree split-quality metric (entropy reduction), sibling of
@@ -938,8 +922,6 @@ SELECT CAST(ROUND(CAST(SUM(-(CAST(n_f AS DOUBLE) / n_tot) * LN(n_f / CAST(n_tot 
                        AS DECIMAL(28,8)), 6) AS DOUBLE) AS info_gain
 FROM t
 """
-
-REGISTRY["info_gain_brand"] = QuerySpec(q_info_gain_brand, INFO_GAIN_BRAND_SQL)
 
 
 def q_item_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1036,8 +1018,6 @@ FROM (
 WHERE rank <= 3
 ORDER BY part, rank
 """
-
-REGISTRY["item_jaccard_topk"] = QuerySpec(q_item_jaccard_topk, ITEM_JACCARD_TOPK_SQL)
 
 
 def q_fuzzy_qgram_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1154,8 +1134,6 @@ FROM names a JOIN names b
  AND levenshtein(a.p_name, b.p_name) <= 1
 ORDER BY name_a, name_b
 """
-
-REGISTRY["fuzzy_qgram_join"] = QuerySpec(q_fuzzy_qgram_join, FUZZY_QGRAM_JOIN_SQL)
 
 
 # --- Fellegi-Sunter entity-match scoring -------------------------------------
@@ -1294,11 +1272,6 @@ LIMIT 30
 ENTITY_MATCH_SCORES_SQL = _fs_sql()
 
 
-REGISTRY["entity_match_scores"] = QuerySpec(
-    q_entity_match_scores, ENTITY_MATCH_SCORES_SQL
-)
-
-
 def q_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cramér's V effect size for the event_type × ISO-weekday association
     — the EFFECT-SIZE companion to q_chi2_independence's significance
@@ -1409,9 +1382,6 @@ FROM v
 """
 
 
-REGISTRY["cramers_v"] = QuerySpec(q_cramers_v, CRAMERS_V_SQL)
-
-
 def q_g_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G-test of independence (log-likelihood ratio) for event_type ×
     ISO-weekday — the information-theoretic twin of q_chi2_independence:
@@ -1488,8 +1458,6 @@ SELECT CAST(ROUND(CAST(CAST(SUM(term) AS DOUBLE) AS DECIMAL(28,8)), 4) AS DOUBLE
 FROM terms
 GROUP BY n, nr, nc
 """
-
-REGISTRY["g_test"] = QuerySpec(q_g_test, G_TEST_SQL)
 
 
 def q_theil_u(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1578,8 +1546,6 @@ SELECT CAST(ROUND(CAST(h_r.h AS DECIMAL(28,8)), 6) AS DOUBLE) AS h_type,
 FROM h_r CROSS JOIN h_c CROSS JOIN h_j
 """
 
-REGISTRY["theil_u"] = QuerySpec(q_theil_u, THEIL_U_SQL)
-
 
 def q_markov2_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second-order Markov audit: top trigram contexts where the previous
@@ -1658,7 +1624,3 @@ WHERE p2g.ctx_n >= 20
 ORDER BY lift DESC, prev2, prev1, next_type
 LIMIT 20
 """
-
-REGISTRY["markov2_transitions"] = QuerySpec(
-    q_markov2_transitions, MARKOV2_TRANSITIONS_SQL
-)

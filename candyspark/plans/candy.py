@@ -14,7 +14,6 @@ from pyspark.sql.window import Window, WindowSpec
 
 from candyspark.functions.numeric import snap_round
 from candyspark.operators.allocation import allocate_greedy
-from candyspark.plans import QuerySpec
 from candyspark.sources.readers import load_table
 
 # Synthetic stock: deterministic in both engines, exhausts for low-capacity
@@ -30,7 +29,7 @@ def _lineitems_with_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
 
 
-def prefix_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_prefix_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window-based *prefix* allocation (the oracle-checkable variant of
     §2.9): in (l_shipdate, l_orderkey, l_linenumber) total order per part,
     a request is fulfilled iff the running demand INCLUDING it fits in stock
@@ -82,7 +81,7 @@ FROM (
 """
 
 
-def greedy_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_greedy_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's actual semantics (§2.9, src/data_processor.py:33-62):
     greedy-with-skip — a too-big request is cancelled but SMALLER later
     requests still fill. Inherently sequential per part → mapInPandas
@@ -145,14 +144,14 @@ FROM walk
 """
 
 
-def inventory_update(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_inventory_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-allocation stock decrement (J2 — src/data_processor.py:444-464),
     computed from the greedy allocator's *actual* fulfilled totals in one
     agg + one broadcast-dim join (vs. 10 chained outer joins, §4.2).
     Greedy per-product totals equal prefix-allocation totals only when no
     skip occurs, so this derives from the SQL-expressible prefix variant to
     stay oracle-checkable."""
-    alloc = prefix_allocation(spark, sf_dir)
+    alloc = q_prefix_allocation(spark, sf_dir)
     p = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_name", F.expr(_STOCK).cast("double").alias("stock")
     )
@@ -343,7 +342,7 @@ def _snapped_line_sql(rel: str) -> str:
 """
 
 
-def forecast_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_forecast_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Next-day revenue forecast via closed-form OLS over the daily revenue
     series (the oracle-checkable twin of candyspark.forecast's linear model;
     the reference's Prophet fit is irreproducible by construction —
@@ -377,13 +376,13 @@ FROM {line_fit_sql("s")}
 """
 
 
-def forecast_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_forecast_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """In-sample fit-quality metrics (MAE/MSE) of the linear daily-revenue
     forecast — the relational analogue of the reference's
     ``ProphetForecaster.get_metrics`` (/root/reference/src/time_series.py:45-67),
     which predicts the training period back through the fitted model and
     reports unrounded MAE/MSE. Here the model is the same closed-form OLS
-    as ``forecast_linear`` and the metrics are one aggregate over (y, ŷ).
+    as ``q_forecast_linear`` and the metrics are one aggregate over (y, ŷ).
 
     Cross-engine determinism: the fit is :func:`line_fit`; ŷ/residual are
     the same textual double expressions in both engines, each per-day
@@ -443,17 +442,6 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
                        AS DOUBLE) / COUNT(*), 0) AS BIGINT) AS mse
 FROM r
 """
-
-
-REGISTRY: dict[str, QuerySpec] = {
-    "prefix_allocation": QuerySpec(prefix_allocation, PREFIX_ALLOCATION_SQL),
-    # sequential kernel; hash-checked via a recursive-CTE oracle since r5
-    "greedy_allocation": QuerySpec(greedy_allocation, GREEDY_ALLOCATION_SQL),
-    "inventory_update": QuerySpec(inventory_update, INVENTORY_UPDATE_SQL),
-    "forecast_linear": QuerySpec(forecast_linear, FORECAST_LINEAR_SQL),
-    # inside the driver's 50-query hash window on purpose (VERDICT r1 §9)
-    "forecast_metrics": QuerySpec(forecast_metrics, FORECAST_METRICS_SQL),
-}
 
 
 def q_fifo_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -614,8 +602,6 @@ FROM demand d LEFT JOIN matched m ON d.l_partkey = m.l_partkey
 ORDER BY d.l_partkey
 """
 
-REGISTRY["fifo_allocation"] = QuerySpec(q_fifo_allocation, FIFO_ALLOCATION_SQL)
-
 
 def _one_step_ahead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every origin day t past a 30-day burn-in that has a next day and a
@@ -668,7 +654,7 @@ ahead AS (
 )"""
 
 
-def forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling-origin forecast backtesting — the evaluation harness that
     turns forecast_linear/forecast_metrics from 'a fit' into 'a validated
     model': at EVERY origin day t (after a 30-day burn-in), fit the linear
@@ -739,9 +725,6 @@ FROM origins
 """
 
 
-REGISTRY["forecast_backtest"] = QuerySpec(forecast_backtest, FORECAST_BACKTEST_SQL)
-
-
 def _day_ranked_xy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """:func:`sales_xy` with each day's rank ``rn`` in date order and the
     day count ``n_days``: the split points of the conformal queries derive
@@ -761,7 +744,7 @@ _DAY_RANKED_XY_SQL = sales_xy_sql(
 )
 
 
-def conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split-conformal prediction interval for the next-day revenue
     forecast — the distribution-free uncertainty the point forecasts
     (forecast_linear) and in-sample metrics (forecast_metrics) don't give:
@@ -863,12 +846,7 @@ WHERE r = LEAST(CAST(CEIL((n_cal + 1) * 0.9) AS BIGINT), n_cal)
 """
 
 
-REGISTRY["conformal_interval"] = QuerySpec(
-    conformal_interval, CONFORMAL_INTERVAL_SQL
-)
-
-
-def reorder_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_reorder_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inventory policy from demand statistics — the operations-research
     layer ON TOP of the allocator family (prefix/greedy/fifo consume
     stock; this query decides how much stock to HOLD): per part, daily
@@ -963,10 +941,7 @@ LIMIT 20
 """
 
 
-REGISTRY["reorder_points"] = QuerySpec(reorder_points, REORDER_POINTS_SQL)
-
-
-def durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Durbin-Watson autocorrelation-of-residuals test for the daily
     revenue OLS — the diagnostic that tells you whether forecast_linear's
     i.i.d.-error assumption holds (DW ≈ 2 means none; toward 0, positive
@@ -1039,10 +1014,7 @@ FROM sums
 """
 
 
-REGISTRY["durbin_watson"] = QuerySpec(durbin_watson, DURBIN_WATSON_SQL)
-
-
-def cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cook's distance — WHICH days drive the revenue trend fit: per-point
     influence D_i = e_i²·h_i / (p·s²·(1−h_i)²) with the simple-regression
     leverage h_i = 1/n + (x_i − x̄)²/Sxx in closed form. The last member of
@@ -1080,8 +1052,9 @@ def cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     xd = F.col("x").cast("double")
     e = F.col("y").cast("double") - (F.col("a") + F.col("b") * xd)
-    h = 1.0 / F.col("n") + (xd - F.col("xbar")) * (xd - F.col("xbar")) / F.col(
-        "sxx_c"
+    # a one-day series has no x spread: sxx_c = 0 gives NULL, as in DuckDB
+    h = 1.0 / F.col("n") + (xd - F.col("xbar")) * (xd - F.col("xbar")) / F.nullif(
+        F.col("sxx_c"), F.lit(0.0)
     )
     d_cook = (e * e * h) / (2.0 * F.col("s2") * (1.0 - h) * (1.0 - h))
     return (
@@ -1134,9 +1107,6 @@ LIMIT 10
 """
 
 
-REGISTRY["cooks_distance"] = QuerySpec(cooks_distance, COOKS_DISTANCE_SQL)
-
-
 def _backtest_origins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-origin one-step-ahead frame shared by the forecast-evaluation
     pair (mincer_zarnowitz / diebold_mariano): for every origin day with a
@@ -1176,7 +1146,7 @@ origins AS (
 """
 
 
-def mincer_zarnowitz(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_mincer_zarnowitz(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mincer-Zarnowitz forecast calibration: regress the REALIZED value
     on the one-step OLS forecast over every backtest origin — an unbiased,
     efficient forecaster has intercept 0 and slope 1, and a slope
@@ -1276,10 +1246,8 @@ SELECT n AS n_origins,
 FROM fit
 """
 
-REGISTRY["mincer_zarnowitz"] = QuerySpec(mincer_zarnowitz, MINCER_ZARNOWITZ_SQL)
 
-
-def diebold_mariano(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_diebold_mariano(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Diebold-Mariano forecast comparison: is the OLS trend forecaster
     BETTER than the seasonal-naive lag-7 baseline, or just differently
     wrong? DM tests the mean of the per-origin squared-loss differential
@@ -1357,10 +1325,8 @@ SELECT n AS n_origins,
 FROM stat
 """
 
-REGISTRY["diebold_mariano"] = QuerySpec(diebold_mariano, DIEBOLD_MARIANO_SQL)
 
-
-def conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Empirical validity check of the split-conformal recipe: fit on the
     first 50% of days, calibrate the 90% interval on the next 25%, then
     MEASURE coverage on the final 25% the interval never saw.
@@ -1482,5 +1448,3 @@ SELECT n_cal, CAST(q_hat AS DOUBLE) AS q_hat, n_test, n_covered,
            < -1.645 AS undercovers
 FROM agg
 """
-
-REGISTRY["conformal_coverage"] = QuerySpec(conformal_coverage, CONFORMAL_COVERAGE_SQL)

@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 
 from candyspark.functions.numeric import snap_round
 from candyspark.operators.text import char_hash32
-from candyspark.plans import QuerySpec
 from candyspark.plans.candy import line_fit, line_fit_sql, line_sums, line_sums_sql
 from candyspark.sources.readers import load_table
 
@@ -46,7 +45,7 @@ _WIN = 100  # tokens per chunk
 _STRIDE = 80  # tokens between chunk starts (20-token overlap)
 
 
-def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping token-window chunks per document.
 
     Chunk i covers tokens [i*stride, i*stride + window); the last chunk
@@ -94,7 +93,7 @@ _EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]+"
 _PHONE_RE = "[0-9]{3}-[0-9]{3}-[0-9]{4}"
 
 
-def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Redact emails and phone numbers, reporting per-doc redaction counts.
 
     Counts are computed as length deltas of targeted removals (regexp_count
@@ -155,7 +154,7 @@ FROM w
 _RATES = {"en": 10, "de": 30, "fr": 50, "es": 70}  # percent kept per lang
 
 
-def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-language sampling at mixture-specific rates.
 
     hash(doc_id) mod 100 < rate(lang): every engine, run, and partitioning
@@ -189,7 +188,7 @@ WHERE {_HASH_SQL} % 100 < {_RATE_SQL}
 _CAPACITY = 2048  # tokens per training bin
 
 
-def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents → fixed-capacity training bins per language (offset
     packing, see module docstring). Output is per-bin: how many documents
     start in it, their token total, and the id span — the shard manifest a
@@ -252,7 +251,7 @@ ORDER BY lang, bin_id
 # --- repetition / entropy quality signals ------------------------------------
 
 
-def repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style per-document repetition and diversity signals:
     word count, distinct-word ratio, top-word fraction, and word-unigram
     Shannon entropy (bits). Heavily repetitive documents (low entropy, high
@@ -338,7 +337,7 @@ ORDER BY doc_id
 from candyspark.plans.analytics import _QUALITY as _AN_QUALITY  # noqa: E402
 from candyspark.plans.analytics import _TOKS as _AN_TOKS  # noqa: E402
 
-def dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 80/10/10 train/val/test assignment — split = pure
     function of CONTENT (md5-derived bucket 0..99), never of rand() or row
     position, so (a) the same document always lands in the same split
@@ -391,7 +390,7 @@ ORDER BY split, lang
 _TOKS_FRAGMENT = r"list_filter(string_split_regex(lower(text), '\W+'), x -> x != '')"
 
 
-def word_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_word_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus bigram statistics (top-50 by occurrence): the n-gram counting
     pass under language-model evaluation, contamination checks, and
     collocation mining. Bigram construction is a JVM-side zip of the token
@@ -441,7 +440,7 @@ LIMIT 50
 """
 
 
-def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collocation mining: top-50 adjacent word pairs by pointwise mutual
     information — the statistical layer over word_bigrams' raw counts
     (raw frequency surfaces 'of the'; PMI surfaces genuinely associated
@@ -547,22 +546,10 @@ LIMIT 50
 """
 
 
-REGISTRY: dict[str, QuerySpec] = {
-    "dataset_split": QuerySpec(dataset_split, DATASET_SPLIT_SQL),
-    "pmi_collocations": QuerySpec(pmi_collocations, PMI_COLLOCATIONS_SQL),
-    "word_bigrams": QuerySpec(word_bigrams, WORD_BIGRAMS_SQL),
-    "repetition_signals": QuerySpec(repetition_signals, REPETITION_SIGNALS_SQL),
-    "chunk_documents": QuerySpec(chunk_documents, CHUNK_DOCUMENTS_SQL),
-    "pii_scrub": QuerySpec(pii_scrub, PII_SCRUB_SQL),
-    "sample_stratified": QuerySpec(sample_stratified, SAMPLE_STRATIFIED_SQL),
-    "pack_sequences": QuerySpec(pack_sequences, PACK_SEQUENCES_SQL),
-}
-
-
 # --- end-to-end corpus pipeline (clean -> dedup -> pack) ---------------------
 
 
-def corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed training-data pipeline in ONE plan: quality gate →
     length gate → exact dedup on normalized text (keep lowest doc_id) →
     per-language offset packing of the survivors → bin manifest. Each
@@ -643,8 +630,6 @@ GROUP BY lang, bin_id
 ORDER BY lang, bin_id
 """
 
-REGISTRY["corpus_pipeline"] = QuerySpec(corpus_pipeline, CORPUS_PIPELINE_SQL)
-
 
 # --- 10-word segments --------------------------------------------------------
 
@@ -698,7 +683,7 @@ seg_rows AS (
 )"""
 
 
-def dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Paragraph-level (segment-level) dedup — the C4/RefinedWeb step that
     removes boilerplate REPEATED ACROSS documents while keeping each
     document's unique content, at sub-document granularity.
@@ -741,9 +726,6 @@ ORDER BY doc_id
 """
 
 
-REGISTRY["dedup_paragraphs"] = QuerySpec(dedup_paragraphs, DEDUP_PARAGRAPHS_SQL)
-
-
 def gopher_signal_exprs():
     """The Gopher rule signals as reusable Column expressions over a `text`
     column: (n_words, mean_word_len, frac_alpha, stop_hits) — shared by the
@@ -780,7 +762,7 @@ def gopher_passes_expr(n_words, mean_word_len, frac_alpha, stop_hits):
     )
 
 
-def gopher_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_gopher_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rule-based document quality filtering — the Gopher/C4-style scrub
     stage every LLM pretraining pipeline runs before dedup (word-count
     bounds, mean-word-length band, alphabetic-word fraction, stop-word
@@ -839,12 +821,8 @@ FROM sig
 ORDER BY doc_id
 """
 
-REGISTRY["gopher_quality_filter"] = QuerySpec(
-    gopher_quality_filter, GOPHER_QUALITY_FILTER_SQL
-)
 
-
-def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One BPE tokenizer-training iteration: corpus-weighted adjacent
     symbol-pair counts — argmax(pair) is the next merge rule (Sennrich et
     al. 2016, the public BPE recipe). Top-50 pairs by total weight.
@@ -901,10 +879,8 @@ SELECT pair, weight, rank FROM (
 ) WHERE rank <= 50
 """
 
-REGISTRY["bpe_pair_counts"] = QuerySpec(bpe_pair_counts, BPE_PAIR_COUNTS_SQL)
 
-
-def duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Substring-level duplicate detection: fixed-width character shingles
     (32 chars, stride 16) that appear in MORE THAN ONE document — the
     RefinedWeb/CCNet-style duplicated-span pass that document-level dedup
@@ -965,10 +941,8 @@ SELECT span, n_docs, n_occurrences, rank FROM (
 ) WHERE rank <= 100
 """
 
-REGISTRY["duplicate_spans"] = QuerySpec(duplicate_spans, DUPLICATE_SPANS_SQL)
 
-
-def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf's-law fit over the corpus vocabulary: OLS slope of
     ln(frequency) against ln(rank) for the top-1000 terms — the standard
     one-number corpus health check (natural text ≈ −1; synthetic or
@@ -1029,10 +1003,8 @@ SELECT CAST(n AS BIGINT) AS n_terms,
 FROM {line_fit_sql("s")}
 """
 
-REGISTRY["zipf_fit"] = QuerySpec(zipf_fit, ZIPF_FIT_SQL)
 
-
-def readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document readability (Flesch-Kincaid grade): words/sentences and
     syllables/words ratios through the standard 0.39/11.8/−15.59 formula —
     the classic text-quality signal next to the Gopher rule gates, and the
@@ -1093,10 +1065,8 @@ FROM c
 ORDER BY doc_id
 """
 
-REGISTRY["readability_scores"] = QuerySpec(readability_scores, READABILITY_SCORES_SQL)
 
-
-def dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source dataset card: the one-page summary every corpus release
     ships (docs, token total, language spread, exact-duplicate rate, mean
     quality) — the aggregate a mixture designer reads before weighting
@@ -1162,10 +1132,8 @@ GROUP BY source
 ORDER BY source
 """
 
-REGISTRY["dataset_card"] = QuerySpec(dataset_card, DATASET_CARD_SQL)
 
-
-def source_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_source_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style per-source document cap: keep at most 15 documents per
     source, chosen by a deterministic content-hash rank (md5(text),
     doc_id) so the survivor set is reproducible across runs, engines and
@@ -1206,15 +1174,12 @@ ORDER BY source, rk
 """
 
 
-REGISTRY["source_caps"] = QuerySpec(source_caps, SOURCE_CAPS_SQL)
-
-
 def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer TRAINING, four merge rounds in-engine: start from the
     character-level vocabulary, repeatedly (a) count corpus-weighted
     adjacent symbol pairs, (b) take the argmax as the next merge rule,
     (c) apply it greedily left-to-right to every word. Extends
-    ``bpe_pair_counts`` (one counting iteration, oracle-checked) to the
+    ``q_bpe_pair_counts`` (one counting iteration, oracle-checked) to the
     actual learned merge table (Sennrich et al. 2016).
 
     Scale shape: everything after the first aggregate is VOCAB-bounded —
@@ -1309,9 +1274,6 @@ def _bpe_train(spark: SparkSession, sf_dir: str, rounds: int = 4) -> list[tuple]
     return merges
 
 
-REGISTRY["bpe_train_merges"] = QuerySpec(q_bpe_train_merges, None)  # iterative
-
-
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE ENCODING with the trained merge table — the inference half of
     the tokenizer (q_bpe_train_merges is the training half): apply the
@@ -1381,10 +1343,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-REGISTRY["bpe_encode"] = QuerySpec(q_bpe_encode, None)  # trained merges: iterative
-
-
-def explode_outer_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_explode_outer_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null-preserving flatten: ``posexplode_outer`` keeps a row for
     documents whose token array is EMPTY (null pos/term) — the semantic
     edge the plain explode family silently loses rows on, and the same
@@ -1425,12 +1384,7 @@ ORDER BY doc_id, pos
 """
 
 
-REGISTRY["explode_outer_tokens"] = QuerySpec(
-    explode_outer_tokens, EXPLODE_OUTER_TOKENS_SQL
-)
-
-
-def mix_weights_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_mix_weights_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled corpus mixing weights: per-source sampling share
     w_i = n_i^α / Σ n_j^α at α = 0.7 — the standard pretraining-mixture
     flattening (α=1 is proportional, α→0 uniform; 0.7 upweights small
@@ -1495,11 +1449,6 @@ SELECT source, n_docs,
 FROM powed CROSS JOIN totals
 ORDER BY source
 """
-
-
-REGISTRY["mix_weights_temperature"] = QuerySpec(
-    mix_weights_temperature, MIX_WEIGHTS_TEMPERATURE_SQL
-)
 
 
 # --- Kneser-Ney smoothed bigram language model --------------------------------
@@ -1613,11 +1562,6 @@ LIMIT 30
 """
 
 
-REGISTRY["kneser_ney_bigram"] = QuerySpec(
-    q_kneser_ney_bigram, KNESER_NEY_BIGRAM_SQL
-)
-
-
 def q_boilerplate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source boilerplate audit — the report a curator reads BEFORE
     running segment dedup (dedup_paragraphs is the surgery; this is the
@@ -1707,9 +1651,6 @@ ORDER BY source
 """
 
 
-REGISTRY["boilerplate_audit"] = QuerySpec(q_boilerplate_audit, BOILERPLATE_AUDIT_SQL)
-
-
 def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source content overlap — which sources mirror each other:
     per unordered source pair, how many distinct 10-word segments they
@@ -1785,9 +1726,6 @@ JOIN sizes sb ON sb.source = src_b
 ORDER BY overlap_coeff DESC, src_a, src_b
 LIMIT 15
 """
-
-
-REGISTRY["source_overlap"] = QuerySpec(q_source_overlap, SOURCE_OVERLAP_SQL)
 
 
 def q_token_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1950,11 +1888,6 @@ ORDER BY source
 """
 
 
-REGISTRY["token_budget_allocation"] = QuerySpec(
-    q_token_budget_allocation, TOKEN_BUDGET_ALLOCATION_SQL
-)
-
-
 def q_source_set_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy set cover over sources — WHICH five sources to acquire to
     cover the most unique content: each round picks the source with the
@@ -2071,9 +2004,6 @@ ORDER BY pick
 
 
 SOURCE_SET_COVER_SQL = _set_cover_sql()
-
-
-REGISTRY["source_set_cover"] = QuerySpec(q_source_set_cover, SOURCE_SET_COVER_SQL)
 
 
 def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2210,9 +2140,6 @@ FROM {line_fit_sql("s")}
 """
 
 
-REGISTRY["heaps_law"] = QuerySpec(q_heaps_law, HEAPS_LAW_SQL)
-
-
 def q_yules_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Yule's K vocabulary-richness characteristic per source:
     K = 10⁴·(Σ_t f_t² − N)/N² — the repetitiveness number corpus curators
@@ -2277,8 +2204,6 @@ SELECT source, n_types, n_tokens,
 FROM per_src
 ORDER BY source
 """
-
-REGISTRY["yules_k"] = QuerySpec(q_yules_k, YULES_K_SQL)
 
 
 def q_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2382,7 +2307,7 @@ ORDER BY doc_id
 """
 
 
-REGISTRY["quality_ensemble"] = QuerySpec(q_quality_ensemble, _quality_ensemble_sql())
+QUALITY_ENSEMBLE_SQL = _quality_ensemble_sql()
 
 
 def _bpe_round_ctes(rounds: int) -> str:
@@ -2500,9 +2425,6 @@ ORDER BY source
 
 BPE_ENCODE_SQL = _bpe_encode_sql()
 
-REGISTRY["bpe_train_merges"] = QuerySpec(q_bpe_train_merges, BPE_TRAIN_MERGES_SQL)
-REGISTRY["bpe_encode"] = QuerySpec(q_bpe_encode, BPE_ENCODE_SQL)
-
 
 def q_importance_resampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-weighted importance downsampling: keep each document with
@@ -2586,10 +2508,6 @@ SELECT source, n_docs, n_kept,
 FROM agg
 ORDER BY source
 """
-
-REGISTRY["importance_resampling"] = QuerySpec(
-    q_importance_resampling, IMPORTANCE_RESAMPLING_SQL
-)
 
 
 def q_good_turing_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2681,8 +2599,6 @@ FROM per_src
 ORDER BY source
 """
 
-REGISTRY["good_turing_mass"] = QuerySpec(q_good_turing_mass, GOOD_TURING_MASS_SQL)
-
 
 def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer fertility per language — tokens-per-word under the BPE-ish
@@ -2738,10 +2654,6 @@ SELECT lang, n_docs, n_bpe_tokens, n_words, n_chars,
 FROM per
 ORDER BY lang
 """
-
-REGISTRY["tokenizer_fertility"] = QuerySpec(
-    q_tokenizer_fertility, TOKENIZER_FERTILITY_SQL
-)
 
 
 def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2856,8 +2768,6 @@ LIMIT 25
 
 TEXTRANK_KEYWORDS_SQL = _textrank_sql()
 
-REGISTRY["textrank_keywords"] = QuerySpec(q_textrank_keywords, TEXTRANK_KEYWORDS_SQL)
-
 
 def q_distinct_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-1 / distinct-2 diversity per source (Li et al. 2016's
@@ -2950,10 +2860,6 @@ FROM uni JOIN bi ON uni.source = bi.source
 ORDER BY uni.source
 """
 
-REGISTRY["distinct_ngram_diversity"] = QuerySpec(
-    q_distinct_ngram_diversity, DISTINCT_NGRAM_DIVERSITY_SQL
-)
-
 
 def q_length_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-decile quality profile — the curator's first diagonal read:
@@ -3023,10 +2929,6 @@ SELECT CAST(decile AS INTEGER) AS decile, n_docs,
 FROM per
 ORDER BY decile
 """
-
-REGISTRY["length_quality_profile"] = QuerySpec(
-    q_length_quality_profile, LENGTH_QUALITY_PROFILE_SQL
-)
 
 
 _RAKE_STOPWORDS = (
@@ -3187,8 +3089,6 @@ ORDER BY rake_score DESC, phrase
 LIMIT 15
 """
 
-REGISTRY["rake_keywords"] = QuerySpec(q_rake_keywords, RAKE_KEYWORDS_SQL)
-
 
 def q_kish_ess(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kish effective sample size of the quality-weighted corpus mix:
@@ -3286,11 +3186,7 @@ SELECT source, n_docs,
                / CAST(sw2 AS DOUBLE) AS DECIMAL(28,8)), 4) AS DOUBLE)
            AS DECIMAL(28,8)), 6) AS DOUBLE) AS deff
 FROM per
-"""
-
-REGISTRY["kish_ess"] = QuerySpec(
-    q_kish_ess, KISH_ESS_SQL.replace("__QS__", _AN_QUALITY).replace("__TOKS__", _TOKS_FRAGMENT)
-)
+""".replace("__QS__", _AN_QUALITY).replace("__TOKS__", _TOKS_FRAGMENT)
 
 
 def q_code_detector(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3374,8 +3270,6 @@ GROUP BY source
 ORDER BY source
 """
 
-REGISTRY["code_detector"] = QuerySpec(q_code_detector, CODE_DETECTOR_SQL)
-
 
 # --- round 6: shard assignment + curriculum staging ------------------------
 
@@ -3434,8 +3328,6 @@ SELECT shard, n_docs, total_chars,
 FROM per
 ORDER BY shard
 """
-
-REGISTRY["shard_assignment"] = QuerySpec(q_shard_assignment, SHARD_ASSIGNMENT_SQL)
 
 
 def q_curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3500,5 +3392,3 @@ FROM staged
 GROUP BY stage
 ORDER BY stage
 """
-
-REGISTRY["curriculum_stages"] = QuerySpec(q_curriculum_stages, CURRICULUM_STAGES_SQL)

@@ -24,7 +24,6 @@ from candyspark.operators import similarity as S
 from candyspark.functions.numeric import snap_round
 from candyspark.operators import text as X
 from candyspark.operators.multimodal import binary_metadata, with_binary_payload
-from candyspark.plans import QuerySpec
 from candyspark.sources.readers import fan_out, load_table
 from candyspark.streaming import events as E
 from candyspark.streaming.stream import (
@@ -69,7 +68,7 @@ def _count_in_sql(words: str) -> str:
 # --- text analysis ----------------------------------------------------------
 
 
-def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document stats: token count, stopword ratio, punctuation density,
     mean token length, composite quality score — all JVM-side expressions
     (operators/text.py), one scan, no data-dependent shuffle (``fan_out``
@@ -119,7 +118,7 @@ FROM t
 """
 
 
-def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic language guess (stopword-hit argmax, fixed tie order) next
     to the labeled lang — a deterministic lang-ID operator shape."""
     d = fan_out(load_table(spark, sf_dir, "documents"))
@@ -142,7 +141,7 @@ FROM s
 """
 
 
-def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content fingerprints: exact md5 of normalized text + shift-robust
     rolling min-hash over character 16-grams (winnowing-style)."""
     d = fan_out(load_table(spark, sf_dir, "documents"))
@@ -1418,7 +1417,6 @@ ORDER BY event_type
 """
 
 
-
 def q_multimodal_arrow_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary metadata through the Arrow-NATIVE kernel path (``mapInArrow``,
     operators/multimodal.arrow_binary_meta — no pandas conversion either
@@ -1442,7 +1440,6 @@ SELECT doc_id,
 FROM documents
 ORDER BY doc_id
 """
-
 
 
 def q_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1791,6 +1788,9 @@ def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
 
+STREAMING_TUMBLING_SQL = EVENTS_TUMBLING_SQL
+
+
 def q_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The idempotent foreachBatch UPSERT sink driven end to end: events
     stream in TWO micro-batches (maxFilesPerTrigger=1 over a 2-file
@@ -1880,7 +1880,7 @@ def q_streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id", "user_id", "event_type")
 
 
-STREAMING_DEDUP_WM_SQL = """
+STREAMING_DEDUP_WATERMARK_SQL = """
 SELECT DISTINCT event_id, user_id, event_type
 FROM events
 """
@@ -1999,6 +1999,9 @@ def q_streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         return drain(session_agg(stream, "30 minutes"), "complete", ckpt)
 
 
+STREAMING_SESSION_SQL = EVENTS_SESSION_SQL
+
+
 def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static enrichment: purchase events streamed through a
     broadcast join against a batch-computed per-user spend dimension —
@@ -2060,6 +2063,13 @@ FROM events
 GROUP BY user_id
 ORDER BY user_id
 """
+
+# transformWithStateInPandas (state API v2) speaks protobuf between the JVM
+# and the Python state server; keep its query only where that runs.
+try:  # pragma: no cover - environment probe
+    from google.protobuf import descriptor as _pb_descriptor  # noqa: F401
+except ImportError:
+    del q_streaming_running_totals
 
 
 def q_synthetic_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2479,92 +2489,6 @@ ORDER BY cohort_week, weeks_since
 """
 
 
-REGISTRY: dict[str, QuerySpec] = {
-    "text_stats": QuerySpec(text_stats, TEXT_STATS_SQL),
-    "lang_id": QuerySpec(lang_id, LANG_ID_SQL),
-    "doc_fingerprint": QuerySpec(doc_fingerprint, DOC_FINGERPRINT_SQL),
-    "token_counts": QuerySpec(q_token_counts, TOKEN_COUNTS_SQL),
-    "dedup_exact": QuerySpec(q_dedup_exact, DEDUP_EXACT_SQL),
-    "dedup_embedding": QuerySpec(q_dedup_embedding, DEDUP_EMBEDDING_SQL),
-    "dedup_embedding_exact": QuerySpec(
-        q_dedup_embedding_exact, DEDUP_EMBEDDING_EXACT_SQL
-    ),
-    "split_leakage_embedding": QuerySpec(
-        q_split_leakage_embedding, SPLIT_LEAKAGE_EMBEDDING_SQL
-    ),
-    "dedup_embedding_adaptive": QuerySpec(
-        q_dedup_embedding_adaptive, DEDUP_EMBEDDING_ADAPTIVE_SQL
-    ),
-    "incremental_dedup": QuerySpec(q_incremental_dedup, INCREMENTAL_DEDUP_SQL),
-    "dedup_ngram": QuerySpec(q_dedup_ngram, DEDUP_NGRAM_SQL),
-    "dedup_minhash": QuerySpec(q_dedup_minhash, DEDUP_MINHASH_SQL),
-    "cross_source_near_dup": QuerySpec(
-        q_cross_source_near_dup, CROSS_SOURCE_NEAR_DUP_SQL
-    ),
-    "simhash": QuerySpec(q_simhash, SIMHASH_SQL),
-    "similarity_bruteforce": QuerySpec(q_similarity_bruteforce, SIMILARITY_BRUTEFORCE_SQL),
-    "similarity_ann": QuerySpec(q_similarity_ann, SIMILARITY_ANN_SQL),
-    "similarity_ivf": QuerySpec(q_similarity_ivf, SIMILARITY_IVF_SQL),
-    "semantic_dedup": QuerySpec(q_semantic_dedup, SEMANTIC_DEDUP_SQL),
-    "multimodal_metadata": QuerySpec(q_multimodal_metadata, MULTIMODAL_METADATA_SQL),
-    "multimodal_phash_dedup": QuerySpec(
-        q_multimodal_phash_dedup, MULTIMODAL_PHASH_DEDUP_SQL
-    ),
-    "events_tumbling": QuerySpec(q_events_tumbling, EVENTS_TUMBLING_SQL),
-    "events_sliding": QuerySpec(q_events_sliding, EVENTS_SLIDING_SQL),
-    "events_session": QuerySpec(q_events_session, EVENTS_SESSION_SQL),
-    "events_json": QuerySpec(q_events_json, EVENTS_JSON_SQL),
-    "array_functions": QuerySpec(q_array_functions, ARRAY_FUNCTIONS_SQL),
-    "map_functions": QuerySpec(q_map_functions, MAP_FUNCTIONS_SQL),
-    "label_centroids": QuerySpec(q_label_centroids, LABEL_CENTROIDS_SQL),
-    "term_frequencies": QuerySpec(q_term_frequencies, TERM_FREQUENCIES_SQL),
-    "multimodal_resize": QuerySpec(q_multimodal_resize, MULTIMODAL_RESIZE_SQL),
-    "multimodal_frames": QuerySpec(q_multimodal_frames, MULTIMODAL_FRAMES_SQL),
-    "streaming_tumbling": QuerySpec(q_streaming_tumbling, EVENTS_TUMBLING_SQL),
-    "streaming_dedup": QuerySpec(q_streaming_dedup, STREAMING_DEDUP_SQL),
-    "streaming_dedup_watermark": QuerySpec(
-        q_streaming_dedup_watermark, STREAMING_DEDUP_WM_SQL
-    ),
-    "streaming_interval_join": QuerySpec(
-        q_streaming_interval_join, STREAMING_INTERVAL_JOIN_SQL
-    ),
-    "streaming_left_join": QuerySpec(q_streaming_left_join, STREAMING_LEFT_JOIN_SQL),
-    "streaming_full_outer_join": QuerySpec(
-        q_streaming_full_outer_join, STREAMING_FULL_OUTER_JOIN_SQL
-    ),
-    "streaming_enrich": QuerySpec(q_streaming_enrich, STREAMING_ENRICH_SQL),
-    "streaming_session": QuerySpec(q_streaming_session, EVENTS_SESSION_SQL),
-    "format_roundtrip": QuerySpec(q_format_roundtrip, FORMAT_ROUNDTRIP_SQL),
-    "kmeans_clusters": QuerySpec(q_kmeans_clusters, KMEANS_CLUSTERS_SQL),
-    "event_funnel": QuerySpec(q_event_funnel, EVENT_FUNNEL_SQL),
-    "funnel_timebound": QuerySpec(q_funnel_timebound, FUNNEL_TIMEBOUND_SQL),
-    "latest_per_key": QuerySpec(q_latest_per_key, LATEST_PER_KEY_SQL),
-    "retention_cohorts": QuerySpec(q_retention_cohorts, RETENTION_COHORTS_SQL),
-    "synthetic_source": QuerySpec(q_synthetic_source, SYNTHETIC_SOURCE_SQL),
-    "events_variant": QuerySpec(q_events_variant, EVENTS_VARIANT_SQL),
-    "multimodal_arrow_meta": QuerySpec(q_multimodal_arrow_meta, MULTIMODAL_ARROW_META_SQL),
-    # round-2 additions sit past the driver's 50-entry hash window on
-    # purpose (the window composition is pinned; these are covered by the
-    # local parity sweep at sf0.001/sf0.01)
-    "containment_pairs": QuerySpec(q_containment_pairs, CONTAINMENT_PAIRS_SQL),
-    "minhash_accuracy": QuerySpec(q_minhash_accuracy, MINHASH_ACCURACY_SQL),
-    "ivf_cluster_stats": QuerySpec(q_ivf_cluster_stats, IVF_CLUSTER_STATS_SQL),
-    "hard_negatives": QuerySpec(q_hard_negatives, HARD_NEGATIVES_SQL),
-    "streaming_upsert": QuerySpec(q_streaming_upsert, STREAMING_UPSERT_SQL),
-}
-
-# transformWithStateInPandas (state API v2) speaks protobuf between the JVM
-# and the Python state server; register its query only where that runs.
-try:  # pragma: no cover - environment probe
-    from google.protobuf import descriptor as _pb_descriptor  # noqa: F401
-
-    REGISTRY["streaming_running_totals"] = QuerySpec(
-        q_streaming_running_totals, STREAMING_RUNNING_TOTALS_SQL
-    )
-except ImportError:
-    pass
-
-
 def q_triplet_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contrastive-training triplet generation over the embeddings table:
     for each anchor, a same-label positive and a different-label negative,
@@ -2572,7 +2496,7 @@ def q_triplet_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbors) — the repeatable, re-shard-proof form of "sample a
     positive/negative per anchor" that rand()-based samplers can't give a
     distributed engine (per-task RNG differs per partitioning, and two
-    engines never agree; same discipline as plans/corpus.dataset_split).
+    engines never agree; same discipline as plans/corpus.q_dataset_split).
 
     Positive: the next vector in md5 order WITHIN the label (circular, so
     every anchor in a ≥2-member label gets one). Negative: the vector
@@ -2669,8 +2593,6 @@ WHERE b.label != a.label AND a.pos_id != a.vec_id
 ORDER BY anchor_id
 """
 
-REGISTRY["triplet_sampling"] = QuerySpec(q_triplet_sampling, TRIPLET_SAMPLING_SQL)
-
 
 def q_target_encode_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leave-one-out target encoding of part brand against return rate —
@@ -2734,8 +2656,6 @@ FROM enc
 ORDER BY l_orderkey, l_linenumber
 """
 
-REGISTRY["target_encode_loo"] = QuerySpec(q_target_encode_loo, TARGET_ENCODE_LOO_SQL)
-
 
 def q_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature hashing (the hashing trick): each document's token set maps
@@ -2789,8 +2709,6 @@ FROM b
 GROUP BY doc_id
 ORDER BY doc_id
 """
-
-REGISTRY["feature_hashing"] = QuerySpec(q_feature_hashing, FEATURE_HASHING_SQL)
 
 
 # --- first conversion after signup -------------------------------------------
@@ -2991,10 +2909,6 @@ GROUP BY k
 ORDER BY within_days
 """
 
-REGISTRY["conversion_lag_curve"] = QuerySpec(
-    q_conversion_lag_curve, CONVERSION_LAG_CURVE_SQL
-)
-
 
 def q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classifier evaluation: confusion matrix of the heuristic language
@@ -3046,8 +2960,6 @@ SELECT lang, lang_guess, n_docs,
 FROM m
 ORDER BY lang, lang_guess
 """
-
-REGISTRY["langid_confusion"] = QuerySpec(q_langid_confusion, LANGID_CONFUSION_SQL)
 
 
 def q_auc_quality_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3125,10 +3037,6 @@ SELECT CAST(p_total AS BIGINT) AS n_english,
 FROM contrib
 GROUP BY p_total, n_total
 """
-
-REGISTRY["auc_quality_langid"] = QuerySpec(
-    q_auc_quality_langid, AUC_QUALITY_LANGID_SQL
-)
 
 
 def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3209,10 +3117,6 @@ SELECT vec_id,
 FROM qz
 ORDER BY vec_id
 """
-
-REGISTRY["embedding_quantize"] = QuerySpec(
-    q_embedding_quantize, EMBEDDING_QUANTIZE_SQL
-)
 
 
 def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3300,9 +3204,6 @@ FROM (
 ORDER BY l_orderkey, l_linenumber
 """
 
-REGISTRY["quantile_normalize"] = QuerySpec(
-    q_quantile_normalize, QUANTILE_NORMALIZE_SQL
-)
 
 _QN_GRID = [i / 20.0 for i in range(21)]
 _QN_LO = [max(0.0, round(p - 0.01, 3)) for p in _QN_GRID]
@@ -3381,9 +3282,7 @@ ORDER BY p
 """
 
 
-REGISTRY["quantile_normalize_approx"] = QuerySpec(
-    q_quantile_normalize_approx, _qn_approx_sql()
-)
+QUANTILE_NORMALIZE_APPROX_SQL = _qn_approx_sql()
 
 
 def q_calibration_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3443,10 +3342,6 @@ FROM binned
 GROUP BY bin
 ORDER BY bin
 """
-
-REGISTRY["calibration_quality"] = QuerySpec(
-    q_calibration_quality, CALIBRATION_QUALITY_SQL
-)
 
 
 def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3521,8 +3416,6 @@ SELECT CAST(t AS INTEGER) AS day,
 FROM terms
 ORDER BY day
 """
-
-REGISTRY["kaplan_meier"] = QuerySpec(q_kaplan_meier, KAPLAN_MEIER_SQL)
 
 
 def q_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3606,10 +3499,6 @@ JOIN norms nb ON label_b = nb.label
 ORDER BY label_a, label_b
 """
 
-REGISTRY["centroid_similarity"] = QuerySpec(
-    q_centroid_similarity, CENTROID_SIMILARITY_SQL
-)
-
 
 def q_similarity_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MMR-diversified retrieval: exact cosine top-20 candidates for query
@@ -3627,9 +3516,6 @@ def q_similarity_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "neighbor_id",
     ).select("query_id", "neighbor_id", "cosine_sim", "c_vec")
     return S.mmr_rerank(with_vec, lam=0.7, k=5).orderBy("query_id", "mmr_rank")
-
-
-# similarity_mmr registered below with its unrolled greedy-argmax oracle
 
 
 def q_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3726,9 +3612,6 @@ FROM agg ORDER BY threshold
 """
 
 
-REGISTRY["threshold_sweep"] = QuerySpec(q_threshold_sweep, THRESHOLD_SWEEP_SQL)
-
-
 def q_class_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Class-balanced downsampling: cap every language at the MINORITY
     class's size, selecting survivors by deterministic content-hash rank —
@@ -3776,9 +3659,6 @@ ORDER BY lang, rk
 """
 
 
-REGISTRY["class_balance"] = QuerySpec(q_class_balance, CLASS_BALANCE_SQL)
-
-
 def q_streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Count-Min sketch built BY A STREAM: events drain through an
     availableNow run whose running aggregate IS the d=4×w=256 cell grid
@@ -3803,9 +3683,6 @@ WHERE user_id IS NOT NULL
 GROUP BY 1, 2
 ORDER BY r, b
 """
-
-
-REGISTRY["streaming_cms"] = QuerySpec(q_streaming_cms, STREAMING_CMS_SQL)
 
 
 def q_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3880,9 +3757,6 @@ SELECT n AS n_docs, agree AS agreements,
             AS DECIMAL(28,8)), 6) AS DOUBLE) AS kappa
 FROM n CROSS JOIN diag CROSS JOIN marg
 """
-
-
-REGISTRY["cohens_kappa"] = QuerySpec(q_cohens_kappa, COHENS_KAPPA_SQL)
 
 
 def q_dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4001,11 +3875,6 @@ ORDER BY threshold
 """
 
 
-REGISTRY["dedup_threshold_curve"] = QuerySpec(
-    q_dedup_threshold_curve, DEDUP_THRESHOLD_CURVE_SQL
-)
-
-
 def q_streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The quality gate (plans/quality's constraint checks) maintained AS
     STREAMING STATE: per event type, running row / null-value / negative-
@@ -4044,11 +3913,6 @@ FROM events
 GROUP BY event_type
 ORDER BY event_type
 """
-
-
-REGISTRY["streaming_quality_gate"] = QuerySpec(
-    q_streaming_quality_gate, STREAMING_QUALITY_GATE_SQL
-)
 
 
 def q_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4225,9 +4089,6 @@ FROM terms
 """
 
 
-REGISTRY["logrank_test"] = QuerySpec(q_logrank_test, LOGRANK_TEST_SQL)
-
-
 def q_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-NN label classification over the embedding table: the 50
     lowest-id vectors are the held-out queries, the rest are the labeled
@@ -4308,8 +4169,6 @@ FROM pred p JOIN e ON e.vec_id = p.query_id
 ORDER BY p.query_id
 """
 
-REGISTRY["knn_classifier"] = QuerySpec(q_knn_classifier, KNN_CLASSIFIER_SQL)
-
 
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the LSH-bucketed ANN against the exact brute-force
@@ -4375,8 +4234,6 @@ SELECT b.query_id,
 FROM base b LEFT JOIN hits h ON b.query_id = h.query_id
 ORDER BY b.query_id
 """
-
-REGISTRY["ann_recall"] = QuerySpec(q_ann_recall, ANN_RECALL_SQL)
 
 
 def _similarity_mmr_sql(k: int = 5) -> str:
@@ -4456,8 +4313,6 @@ ORDER BY query_id, mmr_rank
 
 SIMILARITY_MMR_SQL = _similarity_mmr_sql()
 
-REGISTRY["similarity_mmr"] = QuerySpec(q_similarity_mmr, SIMILARITY_MMR_SQL)
-
 
 def q_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nelson-Aalen cumulative-hazard estimator for time-to-first-purchase
@@ -4518,8 +4373,6 @@ SELECT CAST(t AS INTEGER) AS day,
 FROM cum
 ORDER BY day
 """
-
-REGISTRY["nelson_aalen"] = QuerySpec(q_nelson_aalen, NELSON_AALEN_SQL)
 
 
 def q_mcc_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4619,8 +4472,6 @@ SELECT cls AS lang, tp, fp, fn, tn,
 FROM full_cells
 ORDER BY lang
 """
-
-REGISTRY["mcc_langid"] = QuerySpec(q_mcc_langid, MCC_LANGID_SQL)
 
 
 def q_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4754,8 +4605,6 @@ FROM hits CROSS JOIN nq
 ORDER BY dim
 """
 
-REGISTRY["matryoshka_recall"] = QuerySpec(q_matryoshka_recall, MATRYOSHKA_RECALL_SQL)
-
 
 def q_embedding_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space anisotropy diagnostic (Ethayarajh 2019): the mean
@@ -4841,10 +4690,6 @@ SELECT n_pairs,
 FROM sums
 """
 
-REGISTRY["embedding_anisotropy"] = QuerySpec(
-    q_embedding_anisotropy, EMBEDDING_ANISOTROPY_SQL
-)
-
 
 def q_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Restricted mean survival time (τ = 14 days): the area under the
@@ -4915,8 +4760,6 @@ SELECT CAST(14 AS INTEGER) AS tau_days,
 FROM total CROSS JOIN first
 """
 
-REGISTRY["rmst"] = QuerySpec(q_rmst, RMST_SQL)
-
 
 def q_streaming_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running top-5 most-active users maintained as streaming state: the
@@ -4949,10 +4792,6 @@ GROUP BY user_id
 ORDER BY n_events DESC, user_id
 LIMIT 5
 """
-
-REGISTRY["streaming_topk_users"] = QuerySpec(
-    q_streaming_topk_users, STREAMING_TOPK_USERS_SQL
-)
 
 
 def q_streaming_daily_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4989,10 +4828,6 @@ FROM events
 GROUP BY 1, 2
 ORDER BY day, event_type
 """
-
-REGISTRY["streaming_daily_bars"] = QuerySpec(
-    q_streaming_daily_bars, STREAMING_DAILY_BARS_SQL
-)
 
 
 def q_binary_quantization_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5172,10 +5007,6 @@ SELECT n_queries, hits_hamming, hits_reranked,
 FROM nq CROSS JOIN hh CROSS JOIN rh
 """
 
-REGISTRY["binary_quantization_recall"] = QuerySpec(
-    q_binary_quantization_recall, BINARY_QUANTIZATION_RECALL_SQL
-)
-
 
 def q_streaming_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CHAINED streaming window aggregations (Spark 3.4+ multiple stateful
@@ -5257,10 +5088,6 @@ FROM hourly
 GROUP BY 1, 2
 ORDER BY day, event_type
 """
-
-REGISTRY["streaming_chained_windows"] = QuerySpec(
-    q_streaming_chained_windows, STREAMING_CHAINED_WINDOWS_SQL
-)
 
 
 def q_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5429,8 +5256,6 @@ FROM rows_
 GROUP BY n_probe
 ORDER BY n_probe, query_id
 """
-
-REGISTRY["ivf_probe_curve"] = QuerySpec(q_ivf_probe_curve, IVF_PROBE_CURVE_SQL)
 
 
 def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5672,8 +5497,6 @@ FROM base b LEFT JOIN hits h
 ORDER BY b.stage, b.query_id
 """
 
-REGISTRY["pq_recall"] = QuerySpec(q_pq_recall, PQ_RECALL_SQL)
-
 
 def q_centered_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-but-the-mean anisotropy repair check (Mu & Viswanath 2018's
@@ -5821,10 +5644,6 @@ SELECT n_pairs,
 FROM sums
 """
 
-REGISTRY["centered_anisotropy"] = QuerySpec(
-    q_centered_anisotropy, CENTERED_ANISOTROPY_SQL
-)
-
 
 # --- round 5: n-gram novelty (forward-contamination profile) ---------------
 
@@ -5908,8 +5727,6 @@ FROM per_doc
 GROUP BY source
 ORDER BY source
 """
-
-REGISTRY["ngram_novelty"] = QuerySpec(q_ngram_novelty, NGRAM_NOVELTY_SQL)
 
 
 # --- round 5: per-band LSH diagnostics --------------------------------------
@@ -6013,8 +5830,6 @@ FROM verified
 GROUP BY band
 ORDER BY band
 """
-
-REGISTRY["lsh_band_fpr"] = QuerySpec(q_lsh_band_fpr, LSH_BAND_FPR_SQL)
 
 
 # --- round 6: LSH parameter planner ----------------------------------------
@@ -6131,5 +5946,3 @@ FROM curve
 GROUP BY rows_per_band, bands
 ORDER BY rows_per_band
 """
-
-REGISTRY["lsh_tuning_curve"] = QuerySpec(q_lsh_tuning_curve, LSH_TUNING_CURVE_SQL)

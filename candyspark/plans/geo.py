@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 
 from candyspark.functions.numeric import snap_round
 from candyspark.operators.text import md5_prefix_int
-from candyspark.plans import QuerySpec
 from candyspark.sources.readers import load_table
 
 EARTH_RADIUS_KM = 6371.0088
@@ -171,13 +170,6 @@ ORDER BY nation
 """
 
 
-REGISTRY: dict[str, QuerySpec] = {
-    "geo_supplier_distance": QuerySpec(
-        q_geo_supplier_distance, GEO_SUPPLIER_DISTANCE_SQL
-    ),
-}
-
-
 def q_geo_grid_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spatial hotspot detection on an integer grid — the second geo
     operator: bin customer coordinates into 10°×10° cells (pure integer
@@ -277,6 +269,3 @@ FROM smoothed s LEFT JOIN cells c ON c.gy = s.ny AND c.gx = s.nx
 ORDER BY n_smoothed DESC, cell_lat, cell_lon
 LIMIT 15
 """
-
-
-REGISTRY["geo_grid_density"] = QuerySpec(q_geo_grid_density, GEO_GRID_DENSITY_SQL)

@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from candyspark.operators import dedup as D
 from candyspark.operators.components import checkpoint_observed, dedup_clusters
-from candyspark.plans import QuerySpec
 from candyspark.plans.extensions import DEDUP_MINHASH_SQL
 from candyspark.sources.readers import load_table
 
@@ -435,16 +434,6 @@ def q_part_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-REGISTRY: dict[str, QuerySpec] = {
-    "dedup_clusters": QuerySpec(q_dedup_clusters, DEDUP_CLUSTERS_SQL),
-    "dedup_survivors": QuerySpec(q_dedup_survivors, DEDUP_SURVIVORS_SQL),
-    "dedup_keep_best": QuerySpec(q_dedup_keep_best, DEDUP_KEEP_BEST_SQL),
-    # pagerank_parts registered below with its unrolled power-iteration oracle
-    "triangle_count": QuerySpec(q_triangle_count, TRIANGLE_COUNT_SQL),
-    "part_reachability": QuerySpec(q_part_reachability, PART_REACHABILITY_SQL),
-}
-
-
 def q_link_prediction_aa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link prediction on the co-purchase graph: top-25 NON-adjacent part
     pairs by Adamic-Adar score (Σ over common neighbors of 1/ln(degree))
@@ -525,10 +514,6 @@ ORDER BY adamic_adar DESC, p.u, p.v
 LIMIT 25
 """
 
-REGISTRY["link_prediction_aa"] = QuerySpec(
-    q_link_prediction_aa, LINK_PREDICTION_AA_SQL
-)
-
 
 def kcore_decompose(
     edges: DataFrame, k: int, max_rounds: int = 20
@@ -588,9 +573,6 @@ def q_kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≥2-order edge set (:func:`copurchase_edges_sql` in the oracle), so an
     sf0.1 bench of this query times peeling down to an empty result."""
     return kcore_decompose(_copurchase_edges(spark, sf_dir), k=3)
-
-
-# kcore_parts registered below with its unrolled peeling oracle
 
 
 def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -690,9 +672,6 @@ GROUP BY m
 """
 
 
-REGISTRY["graph_modularity"] = QuerySpec(q_graph_modularity, GRAPH_MODULARITY_SQL)
-
-
 def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity of the co-purchase graph: the Pearson
     correlation of endpoint degrees over the SYMMETRIZED edge list (each
@@ -778,11 +757,6 @@ SELECT CAST(n / 2 AS BIGINT) AS m_edges,
             AS DECIMAL(28,8)), 6) AS DOUBLE) AS assortativity
 FROM sums
 """
-
-
-REGISTRY["graph_assortativity"] = QuerySpec(
-    q_graph_assortativity, GRAPH_ASSORTATIVITY_SQL
-)
 
 
 def q_hits_customers_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -901,9 +875,7 @@ LIMIT 25
 """
 
 
-HITS_SQL = _hits_sql()
-
-REGISTRY["hits_customers_parts"] = QuerySpec(q_hits_customers_parts, HITS_SQL)
+HITS_CUSTOMERS_PARTS_SQL = _hits_sql()
 
 
 def q_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -984,11 +956,6 @@ LIMIT 30
 """
 
 
-REGISTRY["clustering_coefficient"] = QuerySpec(
-    q_clustering_coefficient, CLUSTERING_COEFFICIENT_SQL
-)
-
-
 def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection over the co-purchase graph via synchronous
     label propagation (operators/lpa.py) — the density-clustering answer
@@ -1017,10 +984,6 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("n_members"), "community")
         .limit(20)
     )
-
-
-# label_propagation registered below with its unrolled 5-round oracle
-# (single-threaded parity + repartition-determinism additionally in tests)
 
 
 def _label_propagation_sql(rounds: int = 5) -> str:
@@ -1069,10 +1032,6 @@ LIMIT 20
 
 LABEL_PROPAGATION_SQL = _label_propagation_sql()
 
-REGISTRY["label_propagation"] = QuerySpec(
-    q_label_propagation, LABEL_PROPAGATION_SQL
-)
-
 
 def _pagerank_parts_sql(iterations: int = 8) -> str:
     """Unrolled power-iteration oracle for q_pagerank_parts: one
@@ -1120,8 +1079,6 @@ LIMIT 50
 
 PAGERANK_PARTS_SQL = _pagerank_parts_sql()
 
-REGISTRY["pagerank_parts"] = QuerySpec(q_pagerank_parts, PAGERANK_PARTS_SQL)
-
 
 def _kcore_parts_sql(k: int = 3, rounds: int = 12) -> str:
     """Unrolled peeling oracle for q_kcore_parts: each round drops edges
@@ -1159,8 +1116,6 @@ ORDER BY core_degree DESC, vertex
 
 
 KCORE_PARTS_SQL = _kcore_parts_sql()
-
-REGISTRY["kcore_parts"] = QuerySpec(q_kcore_parts, KCORE_PARTS_SQL)
 
 
 def q_bfs_hop_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1258,7 +1213,6 @@ ORDER BY hop
 
 BFS_HOP_HISTOGRAM_SQL = _bfs_hop_histogram_sql()
 
-REGISTRY["bfs_hop_histogram"] = QuerySpec(q_bfs_hop_histogram, BFS_HOP_HISTOGRAM_SQL)
 
 def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PERSONALIZED PageRank over the co-purchase graph: the teleport
@@ -1386,10 +1340,6 @@ LIMIT 50
 
 PERSONALIZED_PAGERANK_SQL = _personalized_pagerank_sql()
 
-REGISTRY["personalized_pagerank"] = QuerySpec(
-    q_personalized_pagerank, PERSONALIZED_PAGERANK_SQL
-)
-
 
 # ---------------------------------------------------------------------------
 # Katz centrality (exact-decimal unrolled iteration)
@@ -1515,5 +1465,3 @@ FROM x{_KATZ_ROUNDS}
 QUALIFY rank <= 25
 """
 )
-
-REGISTRY["katz_centrality"] = QuerySpec(q_katz_centrality, KATZ_CENTRALITY_SQL)

@@ -25,10 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from candyspark.functions.numeric import money, snap_round
-from candyspark.plans import QuerySpec
 from candyspark.sources.readers import load_table
-
-REGISTRY: dict[str, QuerySpec] = {}
 
 
 def q_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -238,9 +235,6 @@ ORDER BY 1, 2
 """
 
 
-REGISTRY["abc_xyz"] = QuerySpec(q_abc_xyz, ABC_XYZ_SQL)
-
-
 def q_newsvendor_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newsvendor stocking level per brand: the profit-maximizing daily
     stock for perishable candy is the critical fractile of daily demand,
@@ -363,8 +357,6 @@ SELECT brand,
 FROM out_
 ORDER BY brand
 """
-
-REGISTRY["newsvendor_stock"] = QuerySpec(q_newsvendor_stock, NEWSVENDOR_STOCK_SQL)
 
 
 def q_pinball_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -506,5 +498,3 @@ SELECT brand, n AS active_days, s_q80, s_mean,
 FROM agg
 ORDER BY brand
 """
-
-REGISTRY["pinball_loss"] = QuerySpec(q_pinball_loss, PINBALL_LOSS_SQL)

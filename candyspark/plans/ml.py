@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from candyspark.functions.numeric import snap_round
 from candyspark.operators import text as X
-from candyspark.plans import QuerySpec
 from candyspark.plans.extensions import _TOKS, TEXT_STATS_SQL
 from candyspark.sources.readers import fan_out, load_table
 
@@ -408,12 +407,6 @@ FROM range(1, 65) r(i), fin, sgn, eig, tv
 """
 
 
-REGISTRY: dict[str, QuerySpec] = {
-    "naive_bayes_langid": QuerySpec(q_naive_bayes_langid, NAIVE_BAYES_LANGID_SQL),
-    "pca_top_component": QuerySpec(q_pca_top_component, PCA_TOP_COMPONENT_SQL),
-}
-
-
 def q_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perplexity-based corpus filtering (the CCNet recipe): a Laplace-
     smoothed bigram language model trained on the 80% content-hash split
@@ -542,8 +535,6 @@ SELECT doc_id, n_bigrams,
 FROM per_doc CROSS JOIN vocab
 ORDER BY doc_id
 """
-
-REGISTRY["perplexity_filter"] = QuerySpec(q_perplexity_filter, PERPLEXITY_FILTER_SQL)
 
 
 _CHANNELS = ("click", "signup", "view")
@@ -811,10 +802,6 @@ SELECT * FROM ({selects}) ORDER BY channel
 
 MARKOV_ATTRIBUTION_SQL = _markov_attribution_sql()
 
-REGISTRY["markov_attribution"] = QuerySpec(
-    q_markov_attribution, MARKOV_ATTRIBUTION_SQL
-)
-
 
 def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isotonic calibration of the quality score per source: within each
@@ -945,10 +932,6 @@ ORDER BY b.source, b.bin
 """
 
 ISOTONIC_CALIBRATION_SQL = ISOTONIC_CALIBRATION_SQL.format(text_stats=TEXT_STATS_SQL)
-
-REGISTRY["isotonic_calibration"] = QuerySpec(
-    q_isotonic_calibration, ISOTONIC_CALIBRATION_SQL
-)
 
 
 def _ols2(x1: Column, x2: Column, y: Column, snap: int | None = None):
@@ -1125,9 +1108,6 @@ FROM ({_ols2_sql(f"(SELECT {_PRICE_XY_SQL} FROM lineitem)")})
 """
 
 
-REGISTRY["ols_price_model"] = QuerySpec(q_ols_price_model, OLS_PRICE_MODEL_SQL)
-
-
 # --- pairwise feature correlation matrix -------------------------------------
 
 _CORR_FEATS: list[tuple[str, str, str]] = [
@@ -1233,11 +1213,6 @@ def _corr_sql() -> str:
 CORRELATION_MATRIX_SQL = _corr_sql()
 
 
-REGISTRY["correlation_matrix"] = QuerySpec(
-    q_correlation_matrix, CORRELATION_MATRIX_SQL
-)
-
-
 def q_ols_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPED closed-form OLS — one regression PER BRAND from a single
     map-side-combined aggregate: the many-models shape (per-segment price
@@ -1288,9 +1263,6 @@ FROM ({_ols2_sql(
 )})
 ORDER BY brand
 """
-
-
-REGISTRY["ols_by_brand"] = QuerySpec(q_ols_by_brand, OLS_BY_BRAND_SQL)
 
 
 def q_embedding_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1392,11 +1364,6 @@ FROM scored
 GROUP BY label
 ORDER BY label
 """
-
-
-REGISTRY["embedding_projection"] = QuerySpec(
-    q_embedding_projection, EMBEDDING_PROJECTION_SQL
-)
 
 
 def q_logistic_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1615,9 +1582,6 @@ GROUP BY b0, b1
 
 
 LOGISTIC_NEWTON_SQL = _logistic_sql()
-
-
-REGISTRY["logistic_newton"] = QuerySpec(q_logistic_newton, LOGISTIC_NEWTON_SQL)
 
 
 def q_gradient_boost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1927,11 +1891,6 @@ FROM final
 """
 
 
-REGISTRY["gradient_boost_stumps"] = QuerySpec(
-    q_gradient_boost_stumps, GRADIENT_BOOST_STUMPS_SQL
-)
-
-
 def q_eb_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Empirical-Bayes shrinkage of per-brand return rates — the
     small-sample correction that ranks entities HONESTLY: a brand with
@@ -2052,9 +2011,6 @@ SELECT p_brand AS brand,
 FROM rates CROSS JOIN prior
 ORDER BY brand
 """
-
-
-REGISTRY["eb_shrinkage"] = QuerySpec(q_eb_shrinkage, EB_SHRINKAGE_SQL)
 
 
 def q_logistic_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2275,9 +2231,6 @@ FROM (
 LOGISTIC_HOLDOUT_SQL = _logistic_holdout_sql()
 
 
-REGISTRY["logistic_holdout"] = QuerySpec(q_logistic_holdout, LOGISTIC_HOLDOUT_SQL)
-
-
 def q_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decile lift & cumulative-gains table for the quality score as an
     English-document classifier — the model-eval artifact next to
@@ -2367,8 +2320,6 @@ SELECT decile, n_docs, n_pos,
 FROM cum
 ORDER BY decile
 """
-
-REGISTRY["decile_lift"] = QuerySpec(q_decile_lift, DECILE_LIFT_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2508,8 +2459,6 @@ SELECT CAST(n AS BIGINT) AS n_rows,
 FROM dets
 """
 
-REGISTRY["vif_collinearity"] = QuerySpec(q_vif_collinearity, VIF_COLLINEARITY_SQL)
-
 
 # ---------------------------------------------------------------------------
 # Breusch-Pagan heteroskedasticity test on the price model
@@ -2597,8 +2546,6 @@ SELECT CAST(n AS BIGINT) AS n_rows, lm AS lm_stat,
 FROM stat
 """
 
-REGISTRY["breusch_pagan"] = QuerySpec(q_breusch_pagan, BREUSCH_PAGAN_SQL)
-
 
 # ---------------------------------------------------------------------------
 # Nested-model F-test (does a regressor add signal?)
@@ -2668,8 +2615,6 @@ SELECT n_rows,
        f_stat > 3.841 AS discount_adds_signal
 FROM stat
 """
-
-REGISTRY["nested_f_test"] = QuerySpec(q_nested_f_test, NESTED_F_TEST_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2860,5 +2805,3 @@ FROM v3 p JOIN raters USING (i_id) CROSS JOIN rmse
 ORDER BY item_factor DESC, partkey
 LIMIT 20
 """
-
-REGISTRY["als_rank1"] = QuerySpec(q_als_rank1, ALS_RANK1_SQL)

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from candyspark.operators.mutation import merge_upsert, scd2_history, snapshot_diff
 from candyspark.operators.text import char_hash32
-from candyspark.plans import QuerySpec
 from candyspark.sources.readers import load_table
 
 
@@ -154,7 +153,6 @@ ORDER BY user_id, valid_from, event_type
 """
 
 
-
 def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apply an ordered change-data-capture log with DELETE semantics —
     the op merge_upsert/scd2_history don't cover: the events stream is
@@ -225,13 +223,6 @@ FROM ranked
 WHERE rn = 1 AND op = 'upsert'
 ORDER BY user_id
 """
-
-REGISTRY: dict[str, QuerySpec] = {
-    "merge_upsert": QuerySpec(q_merge_upsert, MERGE_UPSERT_SQL),
-    "snapshot_diff": QuerySpec(q_snapshot_diff, SNAPSHOT_DIFF_SQL),
-    "scd2_history": QuerySpec(q_scd2_history, SCD2_HISTORY_SQL),
-    "cdc_apply": QuerySpec(q_cdc_apply, CDC_APPLY_SQL),
-}
 
 
 def q_idempotency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -307,5 +298,3 @@ FROM per_id
 GROUP BY event_type
 ORDER BY event_type
 """
-
-REGISTRY["idempotency_audit"] = QuerySpec(q_idempotency_audit, IDEMPOTENCY_AUDIT_SQL)

@@ -17,7 +17,6 @@ from pyspark.sql import types as T
 
 from candyspark.functions.numeric import snap_round
 from candyspark.operators.text import char_hash32
-from candyspark.plans import QuerySpec
 from candyspark.plans.candy import (
     TREND_SUMS_SQL,
     line_fit,
@@ -360,7 +359,7 @@ def q_udaf_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     for a median, which is holistic anyway; built-in percentile_disc has the
     same buffer bound). The documented 100-TB swap-in is approx_percentile
     (mergeable t-digest, map-side combined), same tradeoff as
-    plans/analytics.percentile_quantity; the UDAF form exists for statistics
+    plans/analytics.q_percentile_quantity; the UDAF form exists for statistics
     Spark has no builtin for (trimmed means, custom M-estimators), where the
     kernel body changes but this plumbing stays."""
     from candyspark.functions.udaf import group_size, median_disc
@@ -703,19 +702,6 @@ ORDER BY nation
 """
 
 
-REGISTRY: dict[str, QuerySpec] = {
-    "seasonal_anomaly": QuerySpec(q_seasonal_anomaly, SEASONAL_ANOMALY_SQL),
-    "gini_by_nation": QuerySpec(q_gini_by_nation, GINI_BY_NATION_SQL),
-    "weighted_median": QuerySpec(q_weighted_median, WEIGHTED_MEDIAN_SQL),
-    "udaf_median_price": QuerySpec(q_udaf_median_price, UDAF_MEDIAN_PRICE_SQL),
-    "winsorized_mean": QuerySpec(q_winsorized_mean, WINSORIZED_MEAN_SQL),
-    "weighted_sample": QuerySpec(q_weighted_sample, WEIGHTED_SAMPLE_SQL),
-    "zscore_outliers": QuerySpec(q_zscore_outliers, ZSCORE_OUTLIERS_SQL),
-    "trend_per_type": QuerySpec(q_trend_per_type, TREND_PER_TYPE_SQL),
-    "robust_stats": QuerySpec(q_robust_stats, ROBUST_STATS_SQL),
-}
-
-
 _POIS_CDF = [
     (0, 0.36787944117144233),
     (1, 0.7357588823428847),
@@ -849,8 +835,6 @@ SELECT n_orders, point_mean, boot_p05, boot_median, boot_p95
 FROM point CROSS JOIN ci
 """
 
-REGISTRY["bootstrap_ci_mean"] = QuerySpec(q_bootstrap_ci_mean, BOOTSTRAP_CI_MEAN_SQL)
-
 
 def q_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust (modified z-score) outlier detection: lines whose
@@ -915,8 +899,6 @@ WHERE ABS(CAST(ROUND(CAST(0.6745 * (l_extendedprice - med) / mad
                           AS DECIMAL(28,8)), 4) AS DOUBLE)) > 1.3
 ORDER BY l_orderkey, l_linenumber
 """
-
-REGISTRY["robust_outliers"] = QuerySpec(q_robust_outliers, ROBUST_OUTLIERS_SQL)
 
 
 def q_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1020,9 +1002,6 @@ SELECT (SELECT COUNT(*) FROM days) AS n_days,
            AS intercept
 FROM resid GROUP BY slope
 """
-
-
-REGISTRY["theilsen_trend"] = QuerySpec(q_theilsen_trend, THEILSEN_TREND_SQL)
 
 
 def q_huber_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1158,9 +1137,6 @@ FROM mu3
 HUBER_MEAN_SQL = _huber_sql()
 
 
-REGISTRY["huber_mean"] = QuerySpec(q_huber_mean, HUBER_MEAN_SQL)
-
-
 def q_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lorenz curve of customer spend — the per-decile table behind the
     Gini coefficient (q_gini_by_nation) and the Pareto share
@@ -1269,9 +1245,6 @@ SELECT decile, n_customers,
 FROM per_decile
 ORDER BY decile
 """
-
-
-REGISTRY["lorenz_curve"] = QuerySpec(q_lorenz_curve, LORENZ_CURVE_SQL)
 
 
 def q_ransac_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1472,9 +1445,6 @@ FROM {line_fit_sql("refit")}
 """
 
 
-REGISTRY["ransac_trend"] = QuerySpec(q_ransac_trend, RANSAC_TREND_SQL)
-
-
 # ---------------------------------------------------------------------------
 # robust_stats_approx — the 100-TB approx_percentile swap-in, as CODE
 # ---------------------------------------------------------------------------
@@ -1573,7 +1543,3 @@ FROM lineitem
 GROUP BY l_returnflag
 ORDER BY l_returnflag
 """
-
-REGISTRY["robust_stats_approx"] = QuerySpec(
-    q_robust_stats_approx, ROBUST_STATS_APPROX_SQL
-)

@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from candyspark.functions.numeric import money, round2, snap_round
-from candyspark.plans import QuerySpec
 from candyspark.plans.relational import _revenue
 from candyspark.session import remove_at_exit
 from candyspark.sources.readers import load_table
@@ -58,7 +57,7 @@ def _dec_mean_sql(col: str) -> str:
 # --- window family: lag / lead / moving average / ntile ----------------------
 
 
-def window_lag_movavg(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_window_lag_movavg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer order history: previous/next order value (lag/lead),
     3-order moving average (ROWS frame), and spend quartile (ntile).
 
@@ -109,7 +108,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
 # --- approximate aggregates (sketches) ---------------------------------------
 
 
-def approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL distinct + approximate median per order priority, verified
     in-plan against their exact counterparts.
 
@@ -187,7 +186,7 @@ ORDER BY o_orderpriority
 _PROFILE_COLS = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
 
 
-def profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column profile (non-null count, distinct count, min, max, mean) for
     four lineitem measures — ONE aggregate, ONE scan, then ``stack`` to
     unpivot metrics into rows.
@@ -195,7 +194,7 @@ def profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     The multiple exact count-distincts cost one Expand (4× row multiply
     pre-shuffle); that is the price of exact profiling — the approximate
     profiler would swap them for approx_count_distinct (see
-    ``approx_aggregates`` for how sketches stay oracle-checkable).
+    ``q_approx_aggregates`` for how sketches stay oracle-checkable).
 
     Round 6: the scan is fanned out first — the compact parquet lands in
     ~3 byte-sized splits, serializing the 5× Expand + partial aggregation
@@ -235,13 +234,6 @@ PROFILE_LINEITEM_SQL = "\nUNION ALL\n".join(
 FROM lineitem"""
     for c in _PROFILE_COLS
 ) + "\nORDER BY column_name"
-
-
-REGISTRY: dict[str, QuerySpec] = {
-    "window_lag_movavg": QuerySpec(window_lag_movavg, WINDOW_LAG_MOVAVG_SQL),
-    "approx_aggregates": QuerySpec(approx_aggregates, APPROX_AGGREGATES_SQL),
-    "profile_lineitem": QuerySpec(profile_lineitem, PROFILE_LINEITEM_SQL),
-}
 
 
 def q_join_size_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -311,8 +303,6 @@ SELECT n_join_keys, predicted_pairs, actual_pairs,
                        AS DECIMAL(28,8)), 6) AS DOUBLE) AS max_key_share
 FROM pred CROSS JOIN actual
 """
-
-REGISTRY["join_size_profile"] = QuerySpec(q_join_size_profile, JOIN_SIZE_PROFILE_SQL)
 
 
 def q_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -435,10 +425,6 @@ WITH edge AS (
 )
 SELECT * FROM edge ORDER BY fk_edge
 """
-
-REGISTRY["referential_integrity"] = QuerySpec(
-    q_referential_integrity, REFERENTIAL_INTEGRITY_SQL
-)
 
 
 def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -570,9 +556,6 @@ ORDER BY zfile
 """
 
 
-REGISTRY["zorder_layout"] = QuerySpec(q_zorder_layout, ZORDER_LAYOUT_SQL)
-
-
 # --- functional-dependency audit ---------------------------------------------
 
 _FD_CANDIDATES: list[tuple[str, str, str]] = [
@@ -664,9 +647,6 @@ def _fd_sql() -> str:
 FD_VIOLATIONS_SQL = _fd_sql()
 
 
-REGISTRY["fd_violations"] = QuerySpec(q_fd_violations, FD_VIOLATIONS_SQL)
-
-
 def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-files compaction planning — the lakehouse maintenance operator
     next to q_zorder_layout: given a file inventory (one row per file with
@@ -745,9 +725,6 @@ FROM binned
 GROUP BY bin_id
 ORDER BY bin_id
 """
-
-
-REGISTRY["compaction_plan"] = QuerySpec(q_compaction_plan, COMPACTION_PLAN_SQL)
 
 
 def q_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -849,9 +826,6 @@ SELECT table_name, key_col, n_keys, n_rows, top1_cnt, p50_cnt, p99_cnt,
 FROM profs
 ORDER BY table_name
 """
-
-
-REGISTRY["skew_profile"] = QuerySpec(q_skew_profile, SKEW_PROFILE_SQL)
 
 
 def q_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -958,8 +932,6 @@ FROM terms
 GROUP BY col, n_total, k
 ORDER BY col
 """
-
-REGISTRY["entropy_profile"] = QuerySpec(q_entropy_profile, ENTROPY_PROFILE_SQL)
 
 
 def q_mi_feature_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1085,10 +1057,6 @@ FROM scored
 ORDER BY rank
 """
 
-REGISTRY["mi_feature_ranking"] = QuerySpec(
-    q_mi_feature_ranking, MI_FEATURE_RANKING_SQL
-)
-
 
 # ---------------------------------------------------------------------------
 # bucketed co-located join — the shuffle-free fact-fact join layout
@@ -1163,7 +1131,7 @@ def q_bucketed_join_no_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-BUCKETED_JOIN_SQL = """
+BUCKETED_JOIN_NO_SHUFFLE_SQL = """
 SELECT o_orderpriority,
        CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
             * CAST(1 - l_discount AS DECIMAL(4,2))), 2) AS DOUBLE) AS revenue,
@@ -1172,10 +1140,6 @@ FROM lineitem JOIN orders ON l_orderkey = o_orderkey
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
 """
-
-REGISTRY["bucketed_join_no_shuffle"] = QuerySpec(
-    q_bucketed_join_no_shuffle, BUCKETED_JOIN_SQL
-)
 
 
 # ---------------------------------------------------------------------------
@@ -1240,10 +1204,6 @@ WHERE strftime(o_orderdate, '%Y-%m') = m.target
 GROUP BY 1
 ORDER BY 1
 """
-
-REGISTRY["partitioned_scan_pruning"] = QuerySpec(
-    q_partitioned_scan_pruning, PARTITIONED_SCAN_PRUNING_SQL
-)
 
 
 # ---------------------------------------------------------------------------
@@ -1359,5 +1319,3 @@ SELECT stratum, n_rows,
 FROM w2 CROSS JOIN totals
 ORDER BY stratum
 """
-
-REGISTRY["neyman_allocation"] = QuerySpec(q_neyman_allocation, NEYMAN_ALLOCATION_SQL)

@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 
 from candyspark.functions.numeric import snap_round
 from candyspark.operators.text import char_hash32, md5_prefix_int
-from candyspark.plans import QuerySpec
 from candyspark.plans.stats2 import (
     MIDRANK2_SQL,
     doubled_midrank,
@@ -199,7 +198,7 @@ ORDER BY l_returnflag
 
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS — the arbitrary-set form beyond ROLLUP/CUBE
-    (plans/relational.grouping_rollup, plans/analytics.cube_qty): revenue
+    (plans/relational.q_grouping_rollup, plans/analytics.q_cube_qty): revenue
     by (returnflag, linestatus), by (returnflag), and grand total, but NOT
     by (linestatus) — the set list CUBE can't express without waste.
     Expressed through spark.sql, the engine's SQL front door. One expand +
@@ -390,15 +389,6 @@ SELECT digit, n_orders,
 FROM digits
 ORDER BY digit
 """
-
-
-REGISTRY: dict[str, QuerySpec] = {
-    "quality_report": QuerySpec(q_quality_report, QUALITY_REPORT_SQL),
-    "stats_moments": QuerySpec(q_stats_moments, STATS_MOMENTS_SQL),
-    "grouping_sets": QuerySpec(q_grouping_sets, GROUPING_SETS_SQL),
-    "drift_psi": QuerySpec(q_drift_psi, DRIFT_PSI_SQL),
-    "benford_digits": QuerySpec(q_benford_digits, BENFORD_DIGITS_SQL),
-}
 
 
 def q_distribution_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -709,15 +699,6 @@ DISTRIBUTION_DISTANCE_APPROX_SQL = (
     + ",\n       TRUE AS w1_in_bound,\n       TRUE AS ks_in_bound\nFROM g\n"
 )
 
-REGISTRY["distribution_distance_approx"] = QuerySpec(
-    q_distribution_distance_approx, DISTRIBUTION_DISTANCE_APPROX_SQL
-)
-
-REGISTRY["distribution_distance"] = QuerySpec(
-    q_distribution_distance, DISTRIBUTION_DISTANCE_SQL
-)
-REGISTRY["ab_ztest"] = QuerySpec(q_ab_ztest, AB_ZTEST_SQL)
-
 
 def q_mask_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-governance masking: the customer dimension published for
@@ -759,8 +740,6 @@ FROM customer
 ORDER BY customer_token
 """
 
-REGISTRY["mask_customers"] = QuerySpec(q_mask_customers, MASK_CUSTOMERS_SQL)
-
 
 def q_price_quantiles_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated deciles of lineitem price through the
@@ -792,10 +771,6 @@ SELECT (i - 1) / 10.0 AS p,
 FROM g CROSS JOIN (SELECT unnest(range(1, 12)) AS i) idx
 ORDER BY p
 """
-
-REGISTRY["price_quantiles_distributed"] = QuerySpec(
-    q_price_quantiles_distributed, PRICE_QUANTILES_DISTRIBUTED_SQL
-)
 
 
 def q_quartiles_by_flag_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -831,10 +806,6 @@ SELECT l_returnflag,
 FROM g CROSS JOIN (SELECT unnest([1, 2, 3]) AS i) idx
 ORDER BY l_returnflag, p
 """
-
-REGISTRY["quartiles_by_flag_distributed"] = QuerySpec(
-    q_quartiles_by_flag_distributed, QUARTILES_BY_FLAG_DISTRIBUTED_SQL
-)
 
 
 def q_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -917,9 +888,6 @@ SELECT CAST(k AS INT) AS k, nn AS n,
             AS DECIMAL(28,8)), 6) AS DOUBLE) AS f_stat
 FROM tot
 """
-
-
-REGISTRY["anova_oneway"] = QuerySpec(q_anova_oneway, ANOVA_ONEWAY_SQL)
 
 
 def q_spearman_orders_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1005,11 +973,6 @@ SELECT n AS n_days,
             AS DECIMAL(28,8)), 6) AS DOUBLE) AS spearman_rho
 FROM sums
 """
-
-
-REGISTRY["spearman_orders_revenue"] = QuerySpec(
-    q_spearman_orders_revenue, SPEARMAN_ORDERS_REVENUE_SQL
-)
 
 
 def q_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1176,9 +1139,6 @@ FROM derived
 """
 
 
-REGISTRY["ab_cuped"] = QuerySpec(q_ab_cuped, AB_CUPED_SQL)
-
-
 def q_quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile treatment effects: the per-decile gap between the A and B
     arms' user-outcome distributions — where in the distribution the
@@ -1247,11 +1207,6 @@ FROM pivoted ORDER BY p
 """
 
 
-REGISTRY["quantile_treatment_effect"] = QuerySpec(
-    q_quantile_treatment_effect, QUANTILE_TREATMENT_EFFECT_SQL
-)
-
-
 def q_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Differentially-private counts via the Laplace mechanism, with
     DETERMINISTIC noise: per-nation customer counts + Laplace(1/eps)
@@ -1316,9 +1271,6 @@ SELECT nation, true_count,
 FROM noised
 ORDER BY nation
 """
-
-
-REGISTRY["dp_noisy_counts"] = QuerySpec(q_dp_noisy_counts, DP_NOISY_COUNTS_SQL)
 
 
 def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1412,9 +1364,6 @@ SELECT COUNT(*) AS n_classes,
        SUM(CASE WHEN n_sensitive < 2 THEN 1 ELSE 0 END) = 0 AS l2_diverse
 FROM classes
 """
-
-
-REGISTRY["k_anonymity"] = QuerySpec(q_k_anonymity, K_ANONYMITY_SQL)
 
 
 def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1513,9 +1462,6 @@ SELECT n_a, n_b,
            AS DECIMAL(28,8)), 6) AS DOUBLE)) > 1.96 AS significant
 FROM sums
 """
-
-
-REGISTRY["mann_whitney"] = QuerySpec(q_mann_whitney, MANN_WHITNEY_SQL)
 
 
 def q_jsd_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1620,9 +1566,6 @@ FROM terms
 GROUP BY source, n_s
 ORDER BY jsd DESC, source
 """
-
-
-REGISTRY["jsd_source_drift"] = QuerySpec(q_jsd_source_drift, JSD_SOURCE_DRIFT_SQL)
 
 
 def q_bh_fdr_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1769,9 +1712,6 @@ ORDER BY rank
 """
 
 
-REGISTRY["bh_fdr_brands"] = QuerySpec(q_bh_fdr_brands, BH_FDR_BRANDS_SQL)
-
-
 def q_ips_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverse-propensity-score ATE — the observational-causal estimate
     that closes the experimentation family's gap: ab_ztest/ab_cuped assume
@@ -1910,9 +1850,6 @@ FROM sums
 """
 
 
-REGISTRY["ips_ate"] = QuerySpec(q_ips_ate, IPS_ATE_SQL)
-
-
 def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kendall's τ-b between discount and quantity — the rank-correlation
     twin of q_spearman_orders_revenue, with the tie correction that
@@ -2007,9 +1944,6 @@ SELECT CAST(n_tot AS BIGINT) AS n_rows,
            AS DECIMAL(28,8)), 6) AS DOUBLE) AS tau_b
 FROM cd CROSS JOIN n1s CROSS JOIN n2s
 """
-
-
-REGISTRY["kendall_tau"] = QuerySpec(q_kendall_tau, KENDALL_TAU_SQL)
 
 
 def q_aipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2136,9 +2070,6 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_users,
             AS DECIMAL(28,8)), 4) AS DOUBLE) AS ate_aipw
 FROM terms
 """
-
-
-REGISTRY["aipw_ate"] = QuerySpec(q_aipw_ate, AIPW_ATE_SQL)
 
 
 def q_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2275,9 +2206,6 @@ FROM totals
 """
 
 
-REGISTRY["brown_forsythe"] = QuerySpec(q_brown_forsythe, BROWN_FORSYTHE_SQL)
-
-
 def q_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Difference-in-differences — the panel-causal estimator completing
     the family (randomized: ab_ztest/ab_cuped; observational cross-
@@ -2396,9 +2324,6 @@ SELECT CAST(SUM(n_users) AS BIGINT) AS n_user_periods,
            AS DECIMAL(28,8)), 4) AS DOUBLE) AS did_estimate
 FROM cells
 """
-
-
-REGISTRY["diff_in_diff"] = QuerySpec(q_diff_in_diff, DIFF_IN_DIFF_SQL)
 
 
 def q_sequential_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2532,9 +2457,6 @@ ORDER BY look
 """
 
 
-REGISTRY["sequential_ab"] = QuerySpec(q_sequential_ab, SEQUENTIAL_AB_SQL)
-
-
 def q_regression_discontinuity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sharp regression discontinuity — the fourth causal design,
     completing randomized (ab_*) → observational (ips/aipw) → panel
@@ -2652,11 +2574,6 @@ CROSS JOIN (SELECT * FROM fits WHERE NOT right_side) l
 """
 
 
-REGISTRY["regression_discontinuity"] = QuerySpec(
-    q_regression_discontinuity, REGRESSION_DISCONTINUITY_SQL
-)
-
-
 def q_ucb_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UCB1 bandit allocation — which arm an adaptive experimenter pulls
     NEXT given the data so far: score(arm) = mean reward + √(2·ln N / n),
@@ -2729,9 +2646,6 @@ SELECT arm, n_pulls, mean_reward, ucb_score,
 FROM scored
 ORDER BY ucb_score DESC, arm
 """
-
-
-REGISTRY["ucb_allocation"] = QuerySpec(q_ucb_allocation, UCB_ALLOCATION_SQL)
 
 
 def q_overdispersion_check(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2807,11 +2721,6 @@ ORDER BY event_type
 """
 
 
-REGISTRY["overdispersion_check"] = QuerySpec(
-    q_overdispersion_check, OVERDISPERSION_CHECK_SQL
-)
-
-
 def q_propensity_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positivity / overlap diagnostic for the observational estimators —
     the check that DECIDES whether ips_ate/aipw_ate are trustworthy (the
@@ -2884,11 +2793,6 @@ SELECT stratum, n_all, propensity,
 FROM flagged
 ORDER BY stratum
 """
-
-
-REGISTRY["propensity_overlap"] = QuerySpec(
-    q_propensity_overlap, PROPENSITY_OVERLAP_SQL
-)
 
 
 def q_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2982,9 +2886,6 @@ SELECT na, nb,
            AS DECIMAL(28,8)), 6) AS DOUBLE) AS mde_relative
 FROM sums
 """
-
-
-REGISTRY["power_analysis"] = QuerySpec(q_power_analysis, POWER_ANALYSIS_SQL)
 
 
 def q_simpsons_check(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3111,9 +3012,6 @@ FROM per_brand CROSS JOIN pooled
 """
 
 
-REGISTRY["simpsons_check"] = QuerySpec(q_simpsons_check, SIMPSONS_CHECK_SQL)
-
-
 def q_mediation_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mediation analysis (difference method) — HOW MUCH of the discount→
     return-rate effect flows THROUGH quantity: the total effect (the
@@ -3222,11 +3120,6 @@ SELECT n AS n_rows, total_effect, direct_effect,
             AS DECIMAL(28,8)), 6) AS DOUBLE) AS mediated_share
 FROM fx
 """
-
-
-REGISTRY["mediation_analysis"] = QuerySpec(
-    q_mediation_analysis, MEDIATION_ANALYSIS_SQL
-)
 
 
 def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3363,8 +3256,6 @@ SELECT CAST(n_A + n_N + n_R AS BIGINT) AS n_total, n_A, n_N, n_R,
 FROM calc
 """
 
-REGISTRY["kruskal_wallis"] = QuerySpec(q_kruskal_wallis, KRUSKAL_WALLIS_SQL)
-
 
 def q_iv_2sls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Instrumental-variables estimate (single instrument ⇒ the Wald/2SLS
@@ -3485,8 +3376,6 @@ SELECT n AS n_users,
        CAST(ROUND(CAST(cov_xy / var_x AS DECIMAL(28,8)), 6) AS DOUBLE) AS ols_beta
 FROM c
 """
-
-REGISTRY["iv_2sls"] = QuerySpec(q_iv_2sls, IV_2SLS_SQL)
 
 
 def q_jackknife_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3612,8 +3501,6 @@ SELECT g AS n_groups, n_all AS n_orders,
 FROM spread
 """
 
-REGISTRY["jackknife_variance"] = QuerySpec(q_jackknife_variance, JACKKNIFE_VARIANCE_SQL)
-
 
 def q_partial_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partial correlation of order quantity and order value CONTROLLING
@@ -3720,10 +3607,6 @@ SELECT n_orders,
 FROM rs
 """
 
-REGISTRY["partial_correlation"] = QuerySpec(
-    q_partial_correlation, PARTIAL_CORRELATION_SQL
-)
-
 
 def q_rr_frequency_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Randomized-response frequency estimation (Warner 1965, forced-
@@ -3810,10 +3693,6 @@ SELECT n_users,
                        AS DECIMAL(28,8)), 6) AS DOUBLE) AS abs_error
 FROM agg
 """
-
-REGISTRY["rr_frequency_estimate"] = QuerySpec(
-    q_rr_frequency_estimate, RR_FREQUENCY_ESTIMATE_SQL
-)
 
 
 def q_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3906,8 +3785,6 @@ SELECT n_rows, skewness, kurtosis_excess,
 FROM mom
 """
 
-REGISTRY["jarque_bera"] = QuerySpec(q_jarque_bera, JARQUE_BERA_SQL)
-
 
 def q_evalue_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E-value sensitivity analysis (VanderWeele & Ding 2017) for the
@@ -3974,10 +3851,6 @@ SELECT n_exposed, n_unexposed, risk_exposed, risk_unexposed, risk_ratio,
                        AS DECIMAL(28,8)), 6) AS DOUBLE) AS e_value
 FROM star
 """
-
-REGISTRY["evalue_sensitivity"] = QuerySpec(
-    q_evalue_sensitivity, EVALUE_SENSITIVITY_SQL
-)
 
 
 def q_raking_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4107,8 +3980,6 @@ ORDER BY seg, bkt
 
 RAKING_WEIGHTS_SQL = _raking_sql()
 
-REGISTRY["raking_weights"] = QuerySpec(q_raking_weights, RAKING_WEIGHTS_SQL)
-
 
 def q_negative_binomial_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Method-of-moments negative-binomial fit of per-day event counts,
@@ -4183,10 +4054,6 @@ SELECT event_type, n_days,
 FROM mom
 ORDER BY event_type
 """
-
-REGISTRY["negative_binomial_fit"] = QuerySpec(
-    q_negative_binomial_fit, NEGATIVE_BINOMIAL_FIT_SQL
-)
 
 
 def q_mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4284,8 +4151,6 @@ SELECT both_yes, click_only, buy_only, both_no,
        END AS significant
 FROM cells
 """
-
-REGISTRY["mcnemar_test"] = QuerySpec(q_mcnemar_test, MCNEMAR_TEST_SQL)
 
 
 def q_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4429,10 +4294,6 @@ SELECT n AS n_pairs,
 FROM sums
 """
 
-REGISTRY["wilcoxon_signed_rank"] = QuerySpec(
-    q_wilcoxon_signed_rank, WILCOXON_SIGNED_RANK_SQL
-)
-
 
 def q_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cronbach's alpha — internal-consistency reliability of a k-item
@@ -4554,8 +4415,6 @@ SELECT 5 AS k_items, n_users,
            AS DECIMAL(28,8)), 6) AS DOUBLE) AS cronbach_alpha
 FROM sums
 """
-
-REGISTRY["cronbach_alpha"] = QuerySpec(q_cronbach_alpha, CRONBACH_ALPHA_SQL)
 
 
 def q_matching_att(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4697,8 +4556,6 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_matched,
            AS mean_covariate_gap
 FROM matched WHERE ctrl_spend IS NOT NULL
 """
-
-REGISTRY["matching_att"] = QuerySpec(q_matching_att, MATCHING_ATT_SQL)
 
 
 def q_fisher_exact_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4922,8 +4779,6 @@ SELECT (SELECT n FROM cells) AS n,
 FROM summed
 """
 
-REGISTRY["fisher_exact_test"] = QuerySpec(q_fisher_exact_test, FISHER_EXACT_TEST_SQL)
-
 
 def q_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Murphy decomposition of the Brier score — the diagnostic BEHIND the
@@ -5113,10 +4968,6 @@ SELECT n,
            AS DECIMAL(28,8)), 6) AS DOUBLE) AS check
 FROM sums CROSS JOIN resn
 """
-
-REGISTRY["brier_decomposition"] = QuerySpec(
-    q_brier_decomposition, BRIER_DECOMPOSITION_SQL
-)
 
 
 def q_randomization_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5333,10 +5184,6 @@ SELECT obs.n,
 FROM counted CROSS JOIN obs
 """
 
-REGISTRY["randomization_inference"] = QuerySpec(
-    q_randomization_inference, RANDOMIZATION_INFERENCE_SQL
-)
-
 
 def q_randomization_inference_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CORPUS-SCALE swap-in for `randomization_inference` (round-5
@@ -5485,10 +5332,6 @@ SELECT obs.n,
            AS DECIMAL(28,8)), 6) AS DOUBLE) AS p_value
 FROM counted CROSS JOIN obs
 """
-
-REGISTRY["randomization_inference_bernoulli"] = QuerySpec(
-    q_randomization_inference_bernoulli, RANDOMIZATION_INFERENCE_BERNOULLI_SQL
-)
 
 
 def q_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5665,8 +5508,6 @@ SELECT '__summary__', '', CAST(COUNT(*) AS BIGINT),
 FROM rows_
 """
 
-REGISTRY["t_closeness"] = QuerySpec(q_t_closeness, T_CLOSENESS_SQL)
-
 
 def q_hosmer_lemeshow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hosmer-Lemeshow goodness-of-fit for the activity-bin purchase
@@ -5813,8 +5654,6 @@ SELECT g AS n_bins, CAST(df AS BIGINT) AS df, hl_stat,
 FROM stat
 """
 
-REGISTRY["hosmer_lemeshow"] = QuerySpec(q_hosmer_lemeshow, HOSMER_LEMESHOW_SQL)
-
 
 def q_uplift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uplift by activity decile: the md5-split experiment's treatment
@@ -5932,8 +5771,6 @@ SELECT decile, n_t, x_t, n_c, x_c,
 FROM both_
 ORDER BY decile
 """
-
-REGISTRY["uplift_deciles"] = QuerySpec(q_uplift_deciles, UPLIFT_DECILES_SQL)
 
 
 def q_did_placebo(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6097,5 +5934,3 @@ SELECT
         AS DECIMAL(28,8)), 6) AS DOUBLE)) / 4.0 AS pretrend_ok
 FROM agg
 """
-
-REGISTRY["did_placebo"] = QuerySpec(q_did_placebo, DID_PLACEBO_SQL)

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from candyspark.functions.numeric import money, rate, round2
-from candyspark.plans import QuerySpec
 from candyspark.sources.readers import load_table
 
 
@@ -40,7 +39,7 @@ _REV = "CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(1 - l_discount AS DECIMAL(
 # --- flagship (SURVEY.md §7.1) ----------------------------------------------
 
 
-def daily_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_daily_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: per-day order count + revenue — the direct analogue of the
     reference's ``create_daily_summary`` (src/data_processor.py:517-572:
     J5/J6 joins + A3 countDistinct + A4 sum/round + O1 sort), explode-less.
@@ -81,7 +80,7 @@ ORDER BY 1
 # --- aggregations (A1-A4) ---------------------------------------------------
 
 
-def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped hash aggregation battery (A1/A4-class: sum/avg/count/round —
     src/data_processor.py:452-454,551-556), TPC-H-Q1-shaped. Partial
     aggregation (map-side combine) makes the shuffle carry one row per
@@ -126,7 +125,7 @@ ORDER BY l_returnflag, l_linestatus
 """
 
 
-def order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-order totals joined back to the order header (A2 + J3 —
     src/data_processor.py:489-513): sum + line count per order, left join,
     then the reference's deliberate ``na.drop()`` semantics (P5, :508) that
@@ -172,7 +171,7 @@ WHERE total_amount IS NOT NULL
 # --- projections / filters / scalars (P1-P8, §2.10) -------------------------
 
 
-def filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Projection + rename + comparison filters + cast + arithmetic (P1, P3,
     P4, P8 — src/data_processor.py:327-332,358-360,393-395; src/main.py:103).
     Both predicates and the 4-column projection reach the parquet scan
@@ -197,7 +196,7 @@ WHERE l_quantity > 25 AND l_discount >= 0.02
 """
 
 
-def null_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_null_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null semantics battery (P2, P5-P7 — src/data_processor.py:333,380-385,
     395,508): nulls are manufactured with ``nullif`` (the testdata has none),
     then handled with isNotNull / when-otherwise / coalesce exactly as the
@@ -224,7 +223,7 @@ WHERE o_orderkey IS NOT NULL
 """
 
 
-def scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's complete scalar surface (§2.10: round / when / coalesce
     / to_date / format_string — src/data_processor.py:481,340,565-570) plus
     the string/date functions any practical pipeline needs (concat, substring,
@@ -259,7 +258,7 @@ FROM orders
 """
 
 
-def distinct_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_distinct_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct on a projection (P9 — src/data_processor.py:398,501,540).
     Physically a partial+final hash aggregate over the projected columns."""
     o = load_table(spark, sf_dir, "orders")
@@ -272,7 +271,7 @@ DISTINCT_PROJECTION_SQL = "SELECT DISTINCT o_custkey, o_orderstatus FROM orders"
 # --- flatten / lateral (F1) -------------------------------------------------
 
 
-def explode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_explode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nest-then-flatten: collect_list(struct) per order, then explode +
     struct-field projection — the reference's items-array flattening
     (F1, src/data_processor.py:326-332,366-374) exercised as an identity so
@@ -301,7 +300,7 @@ EXPLODE_ROUNDTRIP_SQL = (
 # --- joins (J1-J6) ----------------------------------------------------------
 
 
-def join_left_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_join_left_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact ⟕ dimension with an explicit broadcast hint (J1/J4 —
     src/data_processor.py:388-390,523-527; the reference imports ``broadcast``
     and never calls it, :13). At 100 TB the part dim (~2M rows/GB-scale) still
@@ -327,7 +326,7 @@ FROM lineitem LEFT JOIN part ON l_partkey = p_partkey
 """
 
 
-def join_outer_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_join_outer_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-outer join + null-default — the reference's inventory decrement
     (J2 + P6/P7, src/data_processor.py:444-464), done ONCE against a single
     pre-aggregated sold total instead of the reference's 10 chained outer
@@ -356,7 +355,7 @@ FULL OUTER JOIN (
 """
 
 
-def region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-hop star join (J-class chain): lineitem ⨝ orders ⨝ customer ⨝
     nation ⨝ region, revenue per region — written aggregate-then-join:
     revenue is pre-summed per orderkey BEFORE the join chain, so (a) the
@@ -402,7 +401,7 @@ ORDER BY r_name
 """
 
 
-def join_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_join_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi/anti joins — absent from the reference (§2.4 'no semi/anti') but
     part of a complete join surface: customers WITH orders (semi) tagged
     against customers WITHOUT (anti), unioned. Semi/anti avoid materializing
@@ -430,7 +429,7 @@ FROM customer WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
 # --- windows (§2.6 — imported-but-unused in the reference) ------------------
 
 
-def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running sum + row_number per partition — the window form of the
     reference's sequential allocator (§2.9/§2.6): cumulative demand per part
     in (l_shipdate, l_orderkey, l_linenumber) total order. The explicit ROWS
@@ -467,7 +466,7 @@ FROM lineitem
 """
 
 
-def window_rank_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_window_rank_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group top-N via rank window: top-3 orders per customer by total
     price. At scale this is the shuffle-once pattern for per-key top-k
     (vs. the reference's global sorts, O1)."""
@@ -498,7 +497,7 @@ SELECT * FROM (
 # --- sorts / limits / sets (O1-O2, U1) --------------------------------------
 
 
-def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-k with deterministic tiebreak (O1+O2). Spark plans
     ``orderBy+limit`` as TakeOrderedAndProject — per-partition top-k then a
     k-row merge on the driver, no global sort shuffle."""
@@ -516,7 +515,7 @@ FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10
 """
 
 
-def union_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_union_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Union-then-aggregate (U1 — the reference's per-day union loop,
     src/data_processor.py:433-436, as ``unionByName``; §4.2 notes the loop
     itself is the anti-pattern). Two priority slices unioned, counted per
@@ -549,7 +548,7 @@ ORDER BY o_orderstatus
 """
 
 
-def grouping_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_grouping_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rollup (grouping-sets family) — a cheap Spark-native extension the
     reference lacks (§2.5 'no grouping sets'): revenue by (year, status) with
     subtotals and a grand total. ``grouping_id`` disambiguates NULL-as-subtotal
@@ -577,7 +576,7 @@ ORDER BY gid, order_year, o_orderstatus
 """
 
 
-def sql_daily_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_sql_daily_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship query through the ``spark.sql`` entry point: the SAME
     ANSI SQL string the DuckDB oracle runs, parsed by Catalyst over temp
     views. Proves the engine's SQL surface — a user can address every table
@@ -589,23 +588,4 @@ def sql_daily_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(DAILY_SUMMARY_SQL)
 
 
-REGISTRY: dict[str, QuerySpec] = {
-    "daily_summary": QuerySpec(daily_summary, DAILY_SUMMARY_SQL),
-    "sql_daily_summary": QuerySpec(sql_daily_summary, DAILY_SUMMARY_SQL),
-    "pricing_summary": QuerySpec(pricing_summary, PRICING_SUMMARY_SQL),
-    "order_totals": QuerySpec(order_totals, ORDER_TOTALS_SQL),
-    "filter_project": QuerySpec(filter_project, FILTER_PROJECT_SQL),
-    "null_handling": QuerySpec(null_handling, NULL_HANDLING_SQL),
-    "scalar_functions": QuerySpec(scalar_functions, SCALAR_FUNCTIONS_SQL),
-    "distinct_projection": QuerySpec(distinct_projection, DISTINCT_PROJECTION_SQL),
-    "explode_roundtrip": QuerySpec(explode_roundtrip, EXPLODE_ROUNDTRIP_SQL),
-    "join_left_broadcast": QuerySpec(join_left_broadcast, JOIN_LEFT_BROADCAST_SQL),
-    "join_outer_inventory": QuerySpec(join_outer_inventory, JOIN_OUTER_INVENTORY_SQL),
-    "region_revenue": QuerySpec(region_revenue, REGION_REVENUE_SQL),
-    "join_semi_anti": QuerySpec(join_semi_anti, JOIN_SEMI_ANTI_SQL),
-    "window_running_sum": QuerySpec(window_running_sum, WINDOW_RUNNING_SUM_SQL),
-    "window_rank_topn": QuerySpec(window_rank_topn, WINDOW_RANK_TOPN_SQL),
-    "topk_orders": QuerySpec(topk_orders, TOPK_ORDERS_SQL),
-    "union_segments": QuerySpec(union_segments, UNION_SEGMENTS_SQL),
-    "grouping_rollup": QuerySpec(grouping_rollup, GROUPING_ROLLUP_SQL),
-}
+SQL_DAILY_SUMMARY_SQL = DAILY_SUMMARY_SQL

@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from candyspark.functions.numeric import snap_round
 from candyspark.operators.text import tokens, word_shingles
-from candyspark.plans import QuerySpec
 from candyspark.plans.extensions import _TOKS
 from candyspark.sources.readers import fan_out, load_table
 
@@ -227,7 +226,6 @@ def q_lang_summary_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
 from candyspark.plans.analytics import _QUALITY as _RL_QUALITY  # noqa: E402
 from candyspark.plans.analytics import _TOKS as _RL_TOKS  # noqa: E402
 
@@ -282,15 +280,6 @@ SELECT doc_id, toks[1] AS word_1, toks[2] AS word_2, toks[3] AS word_3
 FROM t
 ORDER BY doc_id
 """
-
-
-REGISTRY: dict[str, QuerySpec] = {
-    "tfidf_top_terms": QuerySpec(q_tfidf_top_terms, TFIDF_TOP_TERMS_SQL),
-    "contamination_check": QuerySpec(q_contamination_check, CONTAMINATION_CHECK_SQL),
-    "sentences_udtf": QuerySpec(q_sentences_udtf, SENTENCES_UDTF_SQL),
-    "lang_summary_udtf": QuerySpec(q_lang_summary_udtf, LANG_SUMMARY_UDTF_SQL),
-    "first_words_udtf": QuerySpec(q_first_words_udtf, FIRST_WORDS_UDTF_SQL),
-}
 
 
 def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -348,9 +337,6 @@ SELECT term, n, rnk, cum_share
 FROM ranked WHERE rnk <= 50
 ORDER BY rnk
 """
-
-
-REGISTRY["vocab_coverage"] = QuerySpec(q_vocab_coverage, VOCAB_COVERAGE_SQL)
 
 
 def q_doc_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -467,9 +453,6 @@ JOIN norms nb ON doc_b = nb.doc_id
 ORDER BY cosine DESC, doc_a, doc_b
 LIMIT 50
 """
-
-
-REGISTRY["doc_cosine_pairs"] = QuerySpec(q_doc_cosine_pairs, DOC_COSINE_PAIRS_SQL)
 
 
 #: The 4-term query every single-query ranker here (and plans/retrieval2)
@@ -644,9 +627,6 @@ LIMIT 20
 """
 
 
-REGISTRY["bm25_topk"] = QuerySpec(q_bm25_topk, BM25_TOPK_SQL)
-
-
 def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal-rank fusion of two retrieval rankers (BM25 and smooth
     TF-IDF) for the same 4-term query: rrf(d) = Σ_r 1/(60 + rank_r(d)) —
@@ -776,9 +756,6 @@ FROM ra FULL OUTER JOIN rb ON ra.doc_id = rb.doc_id
 ORDER BY rrf_score DESC, COALESCE(ra.doc_id, rb.doc_id)
 LIMIT 20
 """
-
-
-REGISTRY["rrf_fusion"] = QuerySpec(q_rrf_fusion, RRF_FUSION_SQL)
 
 
 def q_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -912,9 +889,6 @@ FROM dcg CROSS JOIN idcg
 """
 
 
-REGISTRY["ndcg_eval"] = QuerySpec(q_ndcg_eval, NDCG_EVAL_SQL)
-
-
 def q_substring_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index-accelerated substring search — the pg_trgm / code-search
     (trigram index) design as a checkable query: find every document
@@ -973,9 +947,6 @@ FROM documents
 WHERE contains(text, 'stream join')
 ORDER BY doc_id
 """
-
-
-REGISTRY["substring_search"] = QuerySpec(q_substring_search, SUBSTRING_SEARCH_SQL)
 
 
 def q_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1074,9 +1045,6 @@ FROM (
 WHERE rank <= 3
 ORDER BY source, rank
 """
-
-
-REGISTRY["distinctive_terms"] = QuerySpec(q_distinctive_terms, DISTINCTIVE_TERMS_SQL)
 
 
 def q_sentiment_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1183,9 +1151,6 @@ ORDER BY source
 """
 
 
-REGISTRY["sentiment_lexicon"] = QuerySpec(q_sentiment_lexicon, SENTIMENT_LEXICON_SQL)
-
-
 def q_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Term burstiness — HOW a term distributes across documents, the
     corpus-linguistics complement to distinctive_terms' WHERE: for the
@@ -1258,9 +1223,6 @@ SELECT term, sc AS total_count, df,
 FROM top
 ORDER BY total_count DESC, term
 """
-
-
-REGISTRY["term_burstiness"] = QuerySpec(q_term_burstiness, TERM_BURSTINESS_SQL)
 
 
 def q_batch_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1336,9 +1298,6 @@ FROM (
 WHERE rank <= 5
 ORDER BY qid, rank
 """
-
-
-REGISTRY["batch_retrieval"] = QuerySpec(q_batch_retrieval, BATCH_RETRIEVAL_SQL)
 
 
 def q_query_expansion_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1444,10 +1403,6 @@ FROM (
 ORDER BY rank
 """
 
-REGISTRY["query_expansion_prf"] = QuerySpec(
-    q_query_expansion_prf, QUERY_EXPANSION_PRF_SQL
-)
-
 
 def q_qld_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Query-likelihood retrieval with Dirichlet smoothing (μ = 300,
@@ -1539,5 +1494,3 @@ CROSS JOIN c_const
 ORDER BY ql_score DESC, dl.doc_id
 LIMIT 10
 """
-
-REGISTRY["qld_retrieval"] = QuerySpec(q_qld_retrieval, QLD_RETRIEVAL_SQL)

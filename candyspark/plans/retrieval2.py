@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from candyspark.functions.numeric import snap_round
 from candyspark.operators.text import tokens
-from candyspark.plans import QuerySpec
 from candyspark.plans.retrieval import (
     HITS_SQL,
     QUERY_TERMS,
@@ -37,8 +36,6 @@ from candyspark.plans.retrieval import (
     scored_hits,
 )
 from candyspark.sources.readers import fan_out, load_table
-
-REGISTRY: dict[str, QuerySpec] = {}
 
 
 def _corpus(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -194,8 +191,6 @@ SELECT '__mean__' AS term,
 FROM rows_
 """
 
-REGISTRY["mrr_eval"] = QuerySpec(q_mrr_eval, MRR_EVAL_SQL)
-
 
 def q_err_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Expected Reciprocal Rank @10 (Chapelle 2009): the cascade-model
@@ -304,8 +299,6 @@ SELECT '__mean__' AS term,
            AS DECIMAL(28,8)), 6) AS DOUBLE) AS err_10
 FROM per_term
 """
-
-REGISTRY["err_eval"] = QuerySpec(q_err_eval, ERR_EVAL_SQL)
 
 
 def q_rbo_rank_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -437,11 +430,6 @@ SELECT '__mean__' AS term,
            AS DECIMAL(28,8)), 6) AS DOUBLE) AS rbo
 FROM per_term
 """
-
-
-REGISTRY["rbo_rank_agreement"] = QuerySpec(
-    q_rbo_rank_agreement, RBO_RANK_AGREEMENT_SQL
-)
 
 
 def q_interleave_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -588,8 +576,6 @@ SELECT '__wins__' AS term,
 FROM rows_
 """
 
-REGISTRY["interleave_eval"] = QuerySpec(q_interleave_eval, INTERLEAVE_EVAL_SQL)
-
 
 def q_average_precision_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mean Average Precision @10 over the 4-term query set: AP averages
@@ -671,7 +657,7 @@ def q_average_precision_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rows.unionByName(mean_row)
 
 
-AVERAGE_PRECISION_SQL = f"""
+AVERAGE_PRECISION_EVAL_SQL = f"""
 WITH {_RANKED_SQL},
 rel_total AS (
     SELECT term, CAST(COUNT(*) AS BIGINT) AS r_total
@@ -711,7 +697,3 @@ SELECT '__mean__' AS term,
            AS DECIMAL(28,8)), 6) AS DOUBLE) AS ap
 FROM rows_
 """
-
-REGISTRY["average_precision_eval"] = QuerySpec(
-    q_average_precision_eval, AVERAGE_PRECISION_SQL
-)

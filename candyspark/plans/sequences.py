@@ -50,7 +50,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from candyspark.functions.numeric import money, round2, snap_round
-from candyspark.plans import QuerySpec
 from candyspark.sources.readers import load_table
 
 
@@ -425,18 +424,6 @@ ORDER BY d
 """
 
 
-REGISTRY: dict[str, QuerySpec] = {
-    "activity_streaks": QuerySpec(q_activity_streaks, ACTIVITY_STREAKS_SQL),
-    "new_vs_returning": QuerySpec(q_new_vs_returning, NEW_VS_RETURNING_SQL),
-    "mom_growth": QuerySpec(q_mom_growth, MOM_GROWTH_SQL),
-    "linear_attribution": QuerySpec(q_linear_attribution, LINEAR_ATTRIBUTION_SQL),
-    "mv_incremental_refresh": QuerySpec(
-        q_mv_incremental_refresh, MV_INCREMENTAL_REFRESH_SQL
-    ),
-    "event_path_match": QuerySpec(q_event_path_match, EVENT_PATH_MATCH_SQL),
-}
-
-
 # --- conditional-reset runs --------------------------------------------------
 
 
@@ -496,9 +483,6 @@ FROM runs
 GROUP BY user_id
 ORDER BY user_id
 """
-
-
-REGISTRY["error_free_runs"] = QuerySpec(q_error_free_runs, ERROR_FREE_RUNS_SQL)
 
 
 # --- rolling active-user windows ---------------------------------------------
@@ -570,10 +554,6 @@ SELECT DATE '1970-01-01' + CAST(d AS INTEGER) AS day, dau, wau,
 FROM dau JOIN wau ON d = day
 ORDER BY day
 """
-
-REGISTRY["active_user_windows"] = QuerySpec(
-    q_active_user_windows, ACTIVE_USER_WINDOWS_SQL
-)
 
 
 # --- position-based (U-shaped) attribution -----------------------------------
@@ -666,10 +646,6 @@ FROM credited
 GROUP BY channel
 ORDER BY channel
 """
-
-REGISTRY["position_attribution"] = QuerySpec(
-    q_position_attribution, POSITION_ATTRIBUTION_SQL
-)
 
 
 # --- cohort LTV curves -------------------------------------------------------
@@ -767,8 +743,6 @@ SELECT DATE '1970-01-05' + CAST(cohort_m * 7 AS INTEGER) AS cohort_week,
 FROM cum JOIN sizes USING (cohort_m)
 ORDER BY cohort_week, age_weeks
 """
-
-REGISTRY["cohort_ltv"] = QuerySpec(q_cohort_ltv, COHORT_LTV_SQL)
 
 
 def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -937,11 +911,6 @@ ORDER BY channel
 """
 
 
-REGISTRY["shapley_attribution"] = QuerySpec(
-    q_shapley_attribution, SHAPLEY_ATTRIBUTION_SQL
-)
-
-
 def q_timedecay_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-decay multi-touch attribution — the third rule-based model
     completing the trio (linear → position → time-decay, with Markov and
@@ -1046,11 +1015,6 @@ ORDER BY channel
 """
 
 
-REGISTRY["timedecay_attribution"] = QuerySpec(
-    q_timedecay_attribution, TIMEDECAY_ATTRIBUTION_SQL
-)
-
-
 def q_mv_join_delta_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental maintenance of a JOIN view — the bilinear delta rule
     Δ(L ⋈ O) = ΔL⋈O₀ ∪ L₀⋈ΔO ∪ ΔL⋈ΔO applied to the per-priority revenue
@@ -1121,7 +1085,3 @@ FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
 GROUP BY o.o_orderpriority
 ORDER BY o.o_orderpriority
 """
-
-REGISTRY["mv_join_delta_refresh"] = QuerySpec(
-    q_mv_join_delta_refresh, MV_JOIN_DELTA_REFRESH_SQL
-)

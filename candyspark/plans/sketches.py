@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 
 from candyspark.functions.numeric import snap_round
 from candyspark.operators.text import char_hash32, md5_prefix_int, tokens
-from candyspark.plans import QuerySpec
 from candyspark.sources.readers import load_table
 
 
@@ -47,6 +46,18 @@ def q_hll_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
         "num_events",
     )
     return typed.unionByName(merged).orderBy("event_type")
+
+
+# Rows-only by documented impossibility (round-6 verdict item 7): the HLL /
+# theta estimates come from Spark's built-in Apache DataSketches aggregates.
+# DuckDB's approx_count_distinct is a DIFFERENT HLL (different hash +
+# estimator), so no DuckDB SQL can hash-match these by construction, and
+# datasketches-python (the only independent same-format implementation) is
+# not installed in this environment. Coverage instead: exact-error-bound
+# tests (test_sketches.py, 3σ at each sketch's published RSE) + a
+# cross-impl deserialize test that activates wherever datasketches IS
+# importable (test_hll_sketch_bytes_cross_impl).
+HLL_SKETCHES_SQL = None
 
 
 def q_histogram_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -252,6 +263,9 @@ def q_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+THETA_SET_OPS_SQL = None  # approximate; tests pin error
+
+
 def q_ordered_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic aggregation-to-string: per lang, the sorted id list of
     a hash-thinned document sample, joined with commas. collect_list alone
@@ -284,26 +298,6 @@ WHERE doc_id % 97 = 0
 GROUP BY lang
 ORDER BY lang
 """
-
-
-# Rows-only by documented impossibility (round-6 verdict item 7): the HLL /
-# theta estimates come from Spark's built-in Apache DataSketches aggregates.
-# DuckDB's approx_count_distinct is a DIFFERENT HLL (different hash +
-# estimator), so no DuckDB SQL can hash-match these by construction, and
-# datasketches-python (the only independent same-format implementation) is
-# not installed in this environment. Coverage instead: exact-error-bound
-# tests (test_sketches.py, 3σ at each sketch's published RSE) + a
-# cross-impl deserialize test that activates wherever datasketches IS
-# importable (test_hll_sketch_bytes_cross_impl).
-REGISTRY: dict[str, QuerySpec] = {
-    "hll_sketches": QuerySpec(q_hll_sketches, None),  # approximate; tests pin error
-    "histogram_prices": QuerySpec(q_histogram_prices, HISTOGRAM_PRICES_SQL),
-    "histogram_equidepth": QuerySpec(q_histogram_equidepth, HISTOGRAM_EQUIDEPTH_SQL),
-    "ohlc_bars": QuerySpec(q_ohlc_bars, OHLC_BARS_SQL),
-    "bitmap_distinct": QuerySpec(q_bitmap_distinct, BITMAP_DISTINCT_SQL),
-    "theta_set_ops": QuerySpec(q_theta_set_ops, None),  # approximate; tests pin error
-    "ordered_listagg": QuerySpec(q_ordered_listagg, ORDERED_LISTAGG_SQL),
-}
 
 
 def q_sliding_hll_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -347,7 +341,7 @@ def q_sliding_hll_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-REGISTRY["sliding_hll_wau"] = QuerySpec(q_sliding_hll_wau, None)  # approximate
+SLIDING_HLL_WAU_SQL = None  # approximate, like HLL_SKETCHES_SQL
 
 
 def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -427,9 +421,6 @@ FROM probes JOIN cells USING (r, b)
 GROUP BY l_partkey, exact_cnt
 ORDER BY exact_cnt DESC, l_partkey
 """
-
-
-REGISTRY["cms_heavy_hitters"] = QuerySpec(q_cms_heavy_hitters, CMS_HEAVY_HITTERS_SQL)
 
 
 def q_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -539,9 +530,6 @@ FROM hits LEFT JOIN members m ON hits.c_custkey = m.o_custkey
 GROUP BY c_mktsegment
 ORDER BY c_mktsegment
 """
-
-
-REGISTRY["bloom_membership"] = QuerySpec(q_bloom_membership, BLOOM_MEMBERSHIP_SQL)
 
 
 def q_kmv_set_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -684,11 +672,6 @@ FROM est
 """
 
 
-REGISTRY["kmv_set_cardinality"] = QuerySpec(
-    q_kmv_set_cardinality, KMV_SET_CARDINALITY_SQL
-)
-
-
 def q_hll_md5_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog built from first principles with md5-derived hashes —
     the FULLY ORACLE-CHECKED counterpart of q_hll_sketches (whose built-in
@@ -822,9 +805,6 @@ ORDER BY o_orderpriority
 """
 
 
-REGISTRY["hll_md5_registers"] = QuerySpec(q_hll_md5_registers, HLL_MD5_REGISTERS_SQL)
-
-
 def q_ams_f2_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AMS (Alon-Matias-Szegedy 1996) second-frequency-moment sketch over
     the corpus token distribution, audited against the exact F2 = Σ_t tf_t²
@@ -915,5 +895,3 @@ SELECT CAST(f2_exact AS DOUBLE) AS f2_exact,
            AS DECIMAL(28,8)), 6) AS DOUBLE) AS rel_error
 FROM med CROSS JOIN exact
 """
-
-REGISTRY["ams_f2_sketch"] = QuerySpec(q_ams_f2_sketch, AMS_F2_SKETCH_SQL)

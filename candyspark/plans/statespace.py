@@ -40,7 +40,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from candyspark.plans import QuerySpec
 from candyspark.plans.candy import DAILY_SALES_SQL, daily_sales
 
 #: shared oracle CTE: the exact-decimal daily revenue series with a row
@@ -403,14 +402,6 @@ SELECT d, y, a_high AS p_high FROM walk
 """
 
 
-REGISTRY: dict[str, QuerySpec] = {
-    "ses_forecast": QuerySpec(q_ses_forecast, SES_FORECAST_SQL),
-    "holt_forecast": QuerySpec(q_holt_forecast, HOLT_FORECAST_SQL),
-    "kalman_local_level": QuerySpec(q_kalman_local_level, KALMAN_LOCAL_LEVEL_SQL),
-    "hmm_regime_filter": QuerySpec(q_hmm_regime_filter, HMM_REGIME_FILTER_SQL),
-}
-
-
 # ---------------------------------------------------------------------------
 # EWMA volatility (RiskMetrics lambda = 0.94)
 # ---------------------------------------------------------------------------
@@ -468,5 +459,3 @@ walk AS (
 )
 SELECT d, y, ret, ewma_var, SQRT(ewma_var) AS ewma_vol FROM walk
 """
-
-REGISTRY["ewma_volatility"] = QuerySpec(q_ewma_volatility, EWMA_VOLATILITY_SQL)

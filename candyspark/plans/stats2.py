@@ -30,7 +30,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from candyspark.functions.numeric import snap_round
-from candyspark.plans import QuerySpec
 from candyspark.plans.analytics import (
     CENTRED_SERIES_SQL,
     centred_series,
@@ -40,8 +39,6 @@ from candyspark.plans.analytics import (
     snap_term,
 )
 from candyspark.sources.readers import load_table
-
-REGISTRY: dict[str, QuerySpec] = {}
 
 
 # --- the returned-vs-kept split ----------------------------------------------
@@ -226,8 +223,6 @@ SELECT n_a, n_b,
 FROM stat
 """
 
-REGISTRY["ks_test"] = QuerySpec(q_ks_test, KS_TEST_SQL)
-
 
 def q_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bartlett's test of variance homogeneity for l_extendedprice across
@@ -347,8 +342,6 @@ SELECT k, n_total,
            < 0.05 AS significant
 FROM sums
 """
-
-REGISTRY["bartlett_test"] = QuerySpec(q_bartlett_test, BARTLETT_TEST_SQL)
 
 
 def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -490,8 +483,6 @@ SELECT n_above, n_below, runs,
 FROM sums
 """
 
-REGISTRY["runs_test"] = QuerySpec(q_runs_test, RUNS_TEST_SQL)
-
 
 def q_effect_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Effect-size panel for returned-vs-kept line-item quantity: Cohen's d
@@ -603,8 +594,6 @@ SELECT n_a, n_b,
        END AS magnitude
 FROM stat
 """
-
-REGISTRY["effect_sizes"] = QuerySpec(q_effect_sizes, EFFECT_SIZES_SQL)
 
 
 def q_linear_cka(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -786,8 +775,6 @@ SELECT n,
 FROM fxy CROSS JOIN fxx CROSS JOIN fyy CROSS JOIN n_row
 """
 
-REGISTRY["linear_cka"] = QuerySpec(q_linear_cka, LINEAR_CKA_SQL)
-
 
 def q_frechet_embedding_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Diagonal-covariance Fréchet distance between the embedding
@@ -915,10 +902,6 @@ SELECT n_a AS n_vec_a,
 FROM summed
 """
 
-REGISTRY["frechet_embedding_distance"] = QuerySpec(
-    q_frechet_embedding_distance, FRECHET_EMBEDDING_DISTANCE_SQL
-)
-
 
 def q_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ljung-Box portmanteau test on the daily order-revenue series:
@@ -1035,8 +1018,6 @@ SELECT n AS n_days,
 FROM stat
 """
 
-REGISTRY["ljung_box"] = QuerySpec(q_ljung_box, LJUNG_BOX_SQL)
-
 
 def q_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Permutation entropy (Bandt-Pompe 2002, order 3) of daily order
@@ -1150,10 +1131,6 @@ SELECT n_triples, n_patterns,
            AS DECIMAL(28,8)), 6) AS DOUBLE) AS top_pattern_share
 FROM summed
 """
-
-REGISTRY["permutation_entropy"] = QuerySpec(
-    q_permutation_entropy, PERMUTATION_ENTROPY_SQL
-)
 
 
 def q_oaxaca_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1286,10 +1263,6 @@ SELECT n_a, n_b,
        CAST(ROUND(CAST(beta_b AS DECIMAL(28,8)), 6) AS DOUBLE) AS slope_other
 FROM j
 """
-
-REGISTRY["oaxaca_decomposition"] = QuerySpec(
-    q_oaxaca_decomposition, OAXACA_DECOMPOSITION_SQL
-)
 
 
 def q_cumulative_incidence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1507,10 +1480,6 @@ WHERE d1 + d2 > 0
 ORDER BY hours_since_signup
 """
 
-REGISTRY["cumulative_incidence"] = QuerySpec(
-    q_cumulative_incidence, CUMULATIVE_INCIDENCE_SQL
-)
-
 
 def q_event_study(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-study (dynamic treatment-effect) curve around each user's
@@ -1654,8 +1623,6 @@ GROUP BY r
 ORDER BY relative_day
 """
 
-REGISTRY["event_study"] = QuerySpec(q_event_study, EVENT_STUDY_SQL)
-
 
 def q_wasserstein_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-D Wasserstein (earth-mover) distance between the returned and kept
@@ -1746,10 +1713,6 @@ SELECT n_a, n_b,
 FROM summed
 """
 
-REGISTRY["wasserstein_distance"] = QuerySpec(
-    q_wasserstein_distance, WASSERSTEIN_DISTANCE_SQL
-)
-
 
 def q_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Székely's energy distance between the returned and kept quantity
@@ -1833,8 +1796,6 @@ SELECT n_a, n_b,
            AS DECIMAL(28,8)), 6) AS DOUBLE) AS t_stat
 FROM sums CROSS JOIN totals
 """
-
-REGISTRY["energy_distance"] = QuerySpec(q_energy_distance, ENERGY_DISTANCE_SQL)
 
 
 def q_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1954,8 +1915,6 @@ SELECT n_users,
            AS significant
 FROM stat
 """
-
-REGISTRY["cochran_q"] = QuerySpec(q_cochran_q, COCHRAN_Q_SQL)
 
 
 def q_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2093,8 +2052,6 @@ SELECT n_days,
 FROM summed
 """
 
-REGISTRY["page_hinkley"] = QuerySpec(q_page_hinkley, PAGE_HINKLEY_SQL)
-
 
 def q_pot_gpd_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Peaks-over-threshold Generalized Pareto fit to the upper tail of
@@ -2197,8 +2154,6 @@ SELECT threshold, n_exc, xi_shape, sigma_scale,
        xi_shape < 0.5 AS finite_variance_tail
 FROM fit
 """
-
-REGISTRY["pot_gpd_fit"] = QuerySpec(q_pot_gpd_fit, POT_GPD_FIT_SQL)
 
 
 def q_synthetic_control(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2406,8 +2361,6 @@ WHERE NOT is_pre
 ORDER BY month
 """
 
-REGISTRY["synthetic_control"] = QuerySpec(q_synthetic_control, SYNTHETIC_CONTROL_SQL)
-
 
 def q_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entropy rate of the per-user event-type Markov chain: H = −Σ_s π̂(s)
@@ -2515,10 +2468,6 @@ SELECT n AS n_transitions,
             AS DECIMAL(28,8)), 6) AS DOUBLE) AS predictability_gain
 FROM h CROSS JOIN h0
 """
-
-REGISTRY["markov_entropy_rate"] = QuerySpec(
-    q_markov_entropy_rate, MARKOV_ENTROPY_RATE_SQL
-)
 
 
 def q_woe_information_value(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2641,10 +2590,6 @@ SELECT CAST(band * 10 + 1 AS BIGINT) AS band_lo,
 FROM terms CROSS JOIN iv
 ORDER BY band_lo
 """
-
-REGISTRY["woe_information_value"] = QuerySpec(
-    q_woe_information_value, WOE_INFORMATION_VALUE_SQL
-)
 
 
 def q_poisson_rate_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2816,8 +2761,6 @@ SELECT (SELECT n FROM counts) AS n_errors,
            < -2.995732273553991 AS significant
 FROM summed
 """
-
-REGISTRY["poisson_rate_test"] = QuerySpec(q_poisson_rate_test, POISSON_RATE_TEST_SQL)
 
 
 def q_stl_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3004,8 +2947,6 @@ SELECT n AS n_days,
 FROM with_tr
 """
 
-REGISTRY["stl_strength"] = QuerySpec(q_stl_strength, STL_STRENGTH_SQL)
-
 
 def q_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rich-club coefficient of the part co-purchase graph: φ(k) = density
@@ -3120,8 +3061,6 @@ FROM ks LEFT JOIN n_club ON ks.k = n_club.k
 LEFT JOIN e_club ON ks.k = e_club.k
 ORDER BY degree_threshold
 """
-
-REGISTRY["rich_club"] = QuerySpec(q_rich_club, RICH_CLUB_SQL)
 
 
 def q_poisson_rate_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3242,10 +3181,6 @@ SELECT n1 AS n_urgent, n0 AS n_other,
 FROM j
 """
 
-REGISTRY["poisson_rate_ratio"] = QuerySpec(
-    q_poisson_rate_ratio, POISSON_RATE_RATIO_SQL
-)
-
 
 def q_weibull_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weibull fit of per-user inter-event gaps via the Gumbel moment
@@ -3342,5 +3277,3 @@ SELECT n AS n_gaps, shape_k, scale_lambda_hours,
        shape_k < 1.0 AS decreasing_hazard
 FROM fit2
 """
-
-REGISTRY["weibull_fit"] = QuerySpec(q_weibull_fit, WEIBULL_FIT_SQL)

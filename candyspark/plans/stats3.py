@@ -41,7 +41,6 @@ from pyspark.sql import functions as F
 
 from candyspark.functions.numeric import money, snap_round
 from candyspark.operators.text import char_hash32
-from candyspark.plans import QuerySpec
 from candyspark.plans.extensions import (
     FIRST_CONVERSIONS_SQL,
     TIME_TO_EVENT_SQL,
@@ -60,8 +59,6 @@ from candyspark.plans.stats2 import (
     split_totals,
 )
 from candyspark.sources.readers import load_table
-
-REGISTRY: dict[str, QuerySpec] = {}
 
 
 # ---------------------------------------------------------------------------
@@ -288,8 +285,6 @@ FROM b{_COX_ROUNDS}
 """
 )
 
-REGISTRY["cox_ph"] = QuerySpec(q_cox_ph, COX_PH_SQL)
-
 
 # ---------------------------------------------------------------------------
 # Friedman repeated-measures rank test
@@ -411,8 +406,6 @@ SELECT n_blocks, q_stat,
 FROM stat
 """
 
-REGISTRY["friedman_test"] = QuerySpec(q_friedman_test, FRIEDMAN_TEST_SQL)
-
 
 # ---------------------------------------------------------------------------
 # Mood's median test
@@ -491,7 +484,7 @@ def q_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MOOD_MEDIAN_SQL = f"""
+MOOD_MEDIAN_TEST_SQL = f"""
 WITH {split_sql("CAST(l_quantity AS BIGINT)")},
 cums AS (
     SELECT v,
@@ -530,8 +523,6 @@ SELECT median_quantity,
            AS DECIMAL(28,8)), 6) AS DOUBLE) > 3.841 AS significant
 FROM cells
 """
-
-REGISTRY["mood_median_test"] = QuerySpec(q_mood_median_test, MOOD_MEDIAN_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -635,8 +626,6 @@ SELECT n_docs,
             ELSE 'slight' END AS agreement
 FROM terms
 """
-
-REGISTRY["fleiss_kappa"] = QuerySpec(q_fleiss_kappa, FLEISS_KAPPA_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -768,8 +757,6 @@ SELECT na, nb,
                  AS DOUBLE)) > 1.645 AS equivalent
 FROM terms
 """
-
-REGISTRY["tost_equivalence"] = QuerySpec(q_tost_equivalence, TOST_EQUIVALENCE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -931,8 +918,6 @@ SELECT g1, g2, n1 AS n_g1, n2 AS n_g2,
 FROM pairs
 ORDER BY g1, g2
 """
-
-REGISTRY["dunn_posthoc"] = QuerySpec(q_dunn_posthoc, DUNN_POSTHOC_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1118,10 +1103,6 @@ SELECT n_days, dcov2_cents, dvar_orders, dvar_revenue_cents,
             END AS dcor
 FROM stats
 """
-
-REGISTRY["distance_correlation"] = QuerySpec(
-    q_distance_correlation, DISTANCE_CORRELATION_SQL
-)
 
 
 # ---------------------------------------------------------------------------
@@ -1370,8 +1351,6 @@ SELECT n_a, x_a, n_b, x_b, p_b_beats_a, posterior_mean_lift,
 FROM final
 """
 
-REGISTRY["bayesian_ab_beta"] = QuerySpec(q_bayesian_ab_beta, BAYESIAN_AB_BETA_SQL)
-
 
 # ---------------------------------------------------------------------------
 # Dickey-Fuller unit-root test
@@ -1504,8 +1483,6 @@ SELECT n AS n_days,
             ) AS DECIMAL(28,8)), 4) AS DOUBLE) < -2.86 END AS stationary_5pct
 FROM stat
 """
-
-REGISTRY["dickey_fuller"] = QuerySpec(q_dickey_fuller, DICKEY_FULLER_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1654,8 +1631,6 @@ SELECT n AS n_days,
             END AS level_stationary_5pct
 FROM agg
 """
-
-REGISTRY["kpss_test"] = QuerySpec(q_kpss_test, KPSS_TEST_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1863,8 +1838,6 @@ FROM p{_BT_ROUNDS} p JOIN wins w ON p.a = w.a
 """
 )
 
-REGISTRY["bradley_terry"] = QuerySpec(q_bradley_terry, BRADLEY_TERRY_SQL)
-
 
 # ---------------------------------------------------------------------------
 # Two-sample Anderson-Darling (tail-weighted CDF equality)
@@ -1956,8 +1929,6 @@ SELECT n_a, n_b,
 FROM a2
 """
 
-REGISTRY["anderson_darling"] = QuerySpec(q_anderson_darling, ANDERSON_DARLING_SQL)
-
 
 # ---------------------------------------------------------------------------
 # Two-sample Cramér-von Mises (integrated squared CDF gap)
@@ -2040,8 +2011,6 @@ SELECT n_a, n_b,
            AS DECIMAL(28,8)), 6) AS DOUBLE) > 0.461 AS significant
 FROM agg
 """
-
-REGISTRY["cramer_von_mises"] = QuerySpec(q_cramer_von_mises, CRAMER_VON_MISES_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2310,10 +2279,6 @@ FROM final
 """
 )
 
-REGISTRY["quantile_regression"] = QuerySpec(
-    q_quantile_regression, QUANTILE_REGRESSION_SQL
-)
-
 
 # ---------------------------------------------------------------------------
 # Tukey-Kramer HSD — parametric pairwise post-hoc
@@ -2436,5 +2401,3 @@ FROM m a CROSS JOIN m b CROSS JOIN tot
 WHERE a.flag < b.flag
 ORDER BY flag_a, flag_b
 """
-
-REGISTRY["tukey_hsd"] = QuerySpec(q_tukey_hsd, TUKEY_HSD_SQL)

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from candyspark.functions.numeric import snap_round
-from candyspark.plans import QuerySpec
 from candyspark.sources.readers import load_table
 
 
@@ -216,7 +215,7 @@ def q_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-JONCKHEERE_SQL = """
+JONCKHEERE_TERPSTRA_SQL = """
 WITH cells AS (
     SELECT CAST(ROUND(l_discount * 100, 0) AS BIGINT) AS g,
            CAST(ROUND(l_quantity, 0) AS BIGINT) AS v,
@@ -525,11 +524,3 @@ SELECT m AS n_months,
            AS DECIMAL(28,8)), 4) AS DOUBLE) > 19.675 AS significant
 FROM s
 """
-
-
-REGISTRY: dict[str, QuerySpec] = {
-    "cochran_armitage": QuerySpec(q_cochran_armitage, COCHRAN_ARMITAGE_SQL),
-    "jonckheere_terpstra": QuerySpec(q_jonckheere_terpstra, JONCKHEERE_SQL),
-    "mantel_haenszel": QuerySpec(q_mantel_haenszel, MANTEL_HAENSZEL_SQL),
-    "kendall_w": QuerySpec(q_kendall_w, KENDALL_W_SQL),
-}

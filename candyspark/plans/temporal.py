@@ -15,7 +15,6 @@ from candyspark.operators.temporal import (
     range_join_banded,
 )
 from candyspark.functions.numeric import snap_round
-from candyspark.plans import QuerySpec
 from candyspark.sources.readers import load_table
 
 
@@ -48,7 +47,7 @@ def q_asof_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ASOF_CLICK_SQL = """
+ASOF_CLICK_ATTRIBUTION_SQL = """
 WITH u AS (
     SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, 0 AS side, event_id,
            event_id AS r_id, CAST(ts AS TIMESTAMP) AS r_ts
@@ -96,7 +95,7 @@ def q_range_join_error_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("purchase_id", "purchase_ts", "user_id", "error_id", "error_start")
 
 
-RANGE_JOIN_SQL = """
+RANGE_JOIN_ERROR_WINDOW_SQL = """
 SELECT p.event_id AS purchase_id,
        CAST(p.ts AS TIMESTAMP) AS purchase_ts,
        p.user_id AS user_id,
@@ -140,6 +139,9 @@ def q_asof_cogroup_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("click_event_id").alias("click_id"),
         F.col("click_ts").alias("click_ts"),
     )
+
+
+ASOF_COGROUP_ATTRIBUTION_SQL = ASOF_CLICK_ATTRIBUTION_SQL
 
 
 def q_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -186,7 +188,7 @@ def q_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EWMA_USER_SQL = """
+EWMA_USER_VALUE_SQL = """
 WITH r AS (
     SELECT user_id, value,
            row_number() OVER (PARTITION BY user_id
@@ -205,14 +207,6 @@ FROM t
 GROUP BY user_id
 ORDER BY user_id
 """
-
-
-REGISTRY: dict[str, QuerySpec] = {
-    "asof_click_attribution": QuerySpec(q_asof_click_attribution, ASOF_CLICK_SQL),
-    "asof_cogroup_attribution": QuerySpec(q_asof_cogroup_attribution, ASOF_CLICK_SQL),
-    "range_join_error_window": QuerySpec(q_range_join_error_window, RANGE_JOIN_SQL),
-    "ewma_user_value": QuerySpec(q_ewma_user_value, EWMA_USER_SQL),
-}
 
 
 def q_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -271,11 +265,6 @@ FROM held WHERE dur_ms IS NOT NULL
 GROUP BY user_id, d
 ORDER BY user_id, d
 """
-
-
-REGISTRY["time_weighted_value"] = QuerySpec(
-    q_time_weighted_value, TIME_WEIGHTED_VALUE_SQL
-)
 
 
 def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -381,10 +370,6 @@ FROM detr LEFT JOIN dow_means ON (d + 4) % 7 = dow
 ORDER BY day
 """
 
-REGISTRY["seasonal_decompose"] = QuerySpec(
-    q_seasonal_decompose, SEASONAL_DECOMPOSE_SQL
-)
-
 
 def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM changepoint detection over daily event volume: the day where
@@ -461,10 +446,6 @@ FROM scored
 ORDER BY cusum_peak DESC, changepoint_day
 LIMIT 1
 """
-
-REGISTRY["cusum_changepoint"] = QuerySpec(
-    q_cusum_changepoint, CUSUM_CHANGEPOINT_SQL
-)
 
 
 def q_leadlag_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -560,10 +541,6 @@ FROM sums
 ORDER BY lag_days
 """
 
-REGISTRY["leadlag_correlation"] = QuerySpec(
-    q_leadlag_correlation, LEADLAG_CORRELATION_SQL
-)
-
 
 def q_interval_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge overlapping per-user activity intervals (each event opens a
@@ -640,9 +617,6 @@ SELECT user_id, COUNT(*) AS n_merged,
 FROM merged GROUP BY user_id
 ORDER BY user_id
 """
-
-
-REGISTRY["interval_merge"] = QuerySpec(q_interval_merge, INTERVAL_MERGE_SQL)
 
 
 def q_cep_no_error_between(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -753,8 +727,3 @@ SELECT user_id,
 FROM (SELECT DISTINCT user_id FROM paired) t
 ORDER BY user_id
 """
-
-
-REGISTRY["cep_no_error_between"] = QuerySpec(
-    q_cep_no_error_between, CEP_NO_ERROR_BETWEEN_SQL
-)

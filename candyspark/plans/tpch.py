@@ -34,16 +34,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from candyspark.functions.numeric import money, rate, round2, snap_round
-from candyspark.plans import QuerySpec
 from candyspark.plans.relational import _REV, _revenue
 from candyspark.sources.readers import load_table
-
 
 
 # --- Q3 shape: 3-table join chain + grouped top-k ---------------------------
 
 
-def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: customer ⨝ orders ⨝ lineitem with selective filters on
     every table, grouped revenue, deterministic top-10.
 
@@ -96,7 +94,7 @@ LIMIT 10
 # --- Q14 shape: conditional aggregation (promo share per month) -------------
 
 
-def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: monthly PROMO-part share of revenue — conditional
     aggregation (SUM(CASE WHEN ...)) computed in one pass, no second scan.
 
@@ -142,7 +140,7 @@ ORDER BY 1
 # --- Q8 flavor: 6-table chain, same-nation trade share per year -------------
 
 
-def local_trade_share(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_local_trade_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 flavor: per order-year, the revenue share of 'local' trade
     (customer nation == supplier nation). Six relations — lineitem, orders,
     customer, supplier, nation twice (self-aliased) — the widest join chain
@@ -205,7 +203,7 @@ ORDER BY 1
 # --- Q13 shape: outer join + aggregate-of-aggregate -------------------------
 
 
-def customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: distribution of customers by how many orders they
     placed — LEFT OUTER join (customers with zero orders must survive) into
     a per-customer count, then a second aggregation over the counts.
@@ -245,7 +243,7 @@ ORDER BY num_customers DESC, order_count DESC
 # --- Q17 shape: correlated scalar subquery as aggregate-join ----------------
 
 
-def small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape: revenue from lines whose quantity is below 20% of
     that part's average quantity. The correlated scalar subquery
     (SELECT avg(l_quantity) WHERE l_partkey = outer.l_partkey) is expressed
@@ -293,7 +291,7 @@ WHERE CAST(l_quantity AS DECIMAL(12,2)) * 5 * cnt < sum_qty
 # --- Q18 shape: HAVING-filtered semi-join back to headers -------------------
 
 
-def large_order_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_large_order_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: orders whose total quantity exceeds 150, joined back
     to customer+orders headers. The IN-(grouped HAVING) subquery becomes an
     aggregate + inner join on orderkey.
@@ -345,7 +343,7 @@ LIMIT 100
 # --- Q15 shape: aggregate equal to the aggregate's max ----------------------
 
 
-def top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: supplier(s) with the maximum revenue in a quarter —
     an aggregate compared against the max OF that same aggregate (scalar
     subquery → cross-join of a 1-row broadcast).
@@ -391,7 +389,7 @@ ORDER BY s_suppkey
 # --- Q22 flavor: anti-join + global-scalar predicate ------------------------
 
 
-def dormant_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_dormant_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 flavor: customers with above-average account balance and NO
     order in the final 7 months of the data — an anti-join plus a global
     scalar aggregate predicate.
@@ -438,7 +436,7 @@ ORDER BY c_custkey
 # --- scalar function families (§2.10 gap: string + date surface) ------------
 
 
-def string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String-function family over customer — upper/lower, substring,
     concat, length, trim-pad, replace, regexp_extract, split-count. The
     reference touches NO string functions (SURVEY.md §2.10: 'no string
@@ -472,7 +470,7 @@ ORDER BY c_custkey
 """
 
 
-def date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date/temporal-function family over orders — extract, trunc, offset
     arithmetic, diffs, month boundaries. The reference's only temporal
     function is ``to_date`` (SURVEY.md §2.10); this covers the rest of the
@@ -512,7 +510,7 @@ ORDER BY o_orderkey
 """
 
 
-def discount_revenue_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_discount_revenue_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q6 shape: revenue forgone to discounts in a year-long band filter —
     the canonical full-pushdown aggregate. No join, no groupBy key: every
     predicate (shipdate year, discount band, quantity cap) reaches the
@@ -548,24 +546,7 @@ WHERE l_shipdate >= '1997-01-01' AND l_shipdate < '1998-01-01'
 """
 
 
-REGISTRY: dict[str, QuerySpec] = {
-    "discount_revenue_lift": QuerySpec(discount_revenue_lift, DISCOUNT_REVENUE_LIFT_SQL),
-    "shipping_priority": QuerySpec(shipping_priority, SHIPPING_PRIORITY_SQL),
-    "promo_revenue_share": QuerySpec(promo_revenue_share, PROMO_REVENUE_SHARE_SQL),
-    "local_trade_share": QuerySpec(local_trade_share, LOCAL_TRADE_SHARE_SQL),
-    "customer_order_distribution": QuerySpec(
-        customer_order_distribution, CUSTOMER_ORDER_DISTRIBUTION_SQL
-    ),
-    "small_quantity_revenue": QuerySpec(small_quantity_revenue, SMALL_QUANTITY_REVENUE_SQL),
-    "large_order_customers": QuerySpec(large_order_customers, LARGE_ORDER_CUSTOMERS_SQL),
-    "top_supplier_revenue": QuerySpec(top_supplier_revenue, TOP_SUPPLIER_REVENUE_SQL),
-    "dormant_rich_customers": QuerySpec(dormant_rich_customers, DORMANT_RICH_CUSTOMERS_SQL),
-    "string_functions": QuerySpec(string_functions, STRING_FUNCTIONS_SQL),
-    "date_functions": QuerySpec(date_functions, DATE_FUNCTIONS_SQL),
-}
-
-
-def shipping_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_shipping_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-to-ship latency SLA per order priority: exact p50/p90 of the
     integer day latency plus the share shipped within 7 days — the
     fulfillment-operations KPI the reference's daily summary never
@@ -626,5 +607,3 @@ FROM lat
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
 """
-
-REGISTRY["shipping_sla"] = QuerySpec(shipping_sla, SHIPPING_SLA_SQL)

@@ -35,7 +35,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from candyspark.functions.numeric import money, rate, round2
-from candyspark.plans import QuerySpec
 from candyspark.plans.relational import _REV, _revenue
 from candyspark.sources.readers import load_table
 
@@ -43,7 +42,7 @@ from candyspark.sources.readers import load_table
 # --- Q4 shape: EXISTS with a non-equi correlation ---------------------------
 
 
-def order_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_order_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: per-priority count of 1997 orders that have at least
     one line shipped more than 60 days after the order date. The testdata
     lacks commitdate/receiptdate (FIXTURES.md §B), so the Q4 correlation
@@ -92,7 +91,7 @@ ORDER BY o_orderpriority
 # --- Q7 shape: bilateral nation-pair volume ---------------------------------
 
 
-def bilateral_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_bilateral_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: yearly shipped revenue between NATION_18 and
     NATION_19 in BOTH directions — the OR-of-two-pairs predicate
     ``(supp=N1 AND cust=N2) OR (supp=N2 AND cust=N1)``. The pair is
@@ -155,7 +154,7 @@ ORDER BY 1, 2, 3
 # --- Q9 shape: profit by nation/year with LIKE filter -----------------------
 
 
-def product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape: per supplier-nation per year, profit on widget
     parts. The testdata has no partsupp/ps_supplycost, so cost is modeled
     as 10% of ``p_retailprice`` per unit — the substitution keeps Q9's
@@ -206,7 +205,7 @@ ORDER BY 1, 2 DESC
 # --- Q10 shape: returned-item losses, grouped top-k -------------------------
 
 
-def returned_item_losses(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_returned_item_losses(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: the 20 customers with the highest revenue on
     RETURNED lines (l_returnflag = 'R') for orders placed in 1997 Q1 —
     4-table join, per-customer aggregate, deterministic top-k.
@@ -257,7 +256,7 @@ LIMIT 20
 # --- Q11 shape: per-key share vs global aggregate ---------------------------
 
 
-def important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape: parts whose total traded value exceeds 1.5× the
     AVERAGE part value. The scalar subquery (global SUM + part count)
     becomes a single-row broadcast cross join; the compare stays exact
@@ -315,7 +314,7 @@ ORDER BY part_value DESC, l_partkey
 # --- Q12 shape: conditional priority counts over a join ---------------------
 
 
-def priority_line_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_priority_line_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape: per line status (standing in for the absent
     l_shipmode — FIXTURES.md §B), how many 1998-shipped lines belong to
     critical (1-URGENT/2-HIGH) vs normal-priority orders — the
@@ -358,7 +357,7 @@ ORDER BY l_linestatus
 # --- Q16 shape: COUNT(DISTINCT) with anti-joined exclusion ------------------
 
 
-def supplier_diversity_by_part(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_supplier_diversity_by_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: per (p_type, p_size) for small sizes, how many
     DISTINCT suppliers shipped that part class — excluding a denylist of
     suppliers (here: negative account balance, standing in for Q16's
@@ -397,7 +396,7 @@ ORDER BY supplier_count DESC, p_type, p_size
 # --- Q19 shape: disjunctive multi-column predicate --------------------------
 
 
-def disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: one revenue scalar over lineitem ⨝ part where the
     predicate is an OR of three (brand, size-range, quantity-range)
     conjunctions — the canonical disjunctive-pushdown stress.
@@ -439,7 +438,7 @@ WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 1 
 # --- Q21 shape: semi + anti self-joins (exclusive fault) --------------------
 
 
-def exclusive_return_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_exclusive_return_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape: suppliers who were the ONLY supplier with returned
     lines (l_returnflag = 'R', standing in for Q21's receipt-after-commit
     lateness — FIXTURES.md §B) in an order: EXISTS (own returned line) +
@@ -499,7 +498,7 @@ LIMIT 10
 # --- Q2 shape: correlated MIN subquery as window/top-1 ----------------------
 
 
-def cheapest_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_cheapest_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: per part (small sizes), the supplier with the LOWEST
     total traded value for it. The correlated MIN subquery becomes one
     aggregate + one per-part top-1 window — no re-execution per part. The
@@ -557,7 +556,7 @@ ORDER BY p_partkey
 # --- Q20 shape: volume-share semi join --------------------------------------
 
 
-def dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape: suppliers that shipped MORE THAN A FIFTH of some
     part's total quantity — a per-(part,supplier) aggregate compared
     against its per-part total, then rolled up per supplier. The share
@@ -640,7 +639,7 @@ ORDER BY r.r_name, top.revenue DESC, top.n_name
 """
 
 
-def lateral_top_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_lateral_top_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-2 nations per region through a correlated LATERAL subquery with
     ORDER BY + LIMIT — the SQL-standard per-group top-n shape, executed
     from the IDENTICAL string in both engines (like sql_daily_summary, the
@@ -649,27 +648,3 @@ def lateral_top_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in ("lineitem", "orders", "customer", "nation", "region"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(LATERAL_TOP_NATIONS_SQL)
-
-
-REGISTRY: dict[str, QuerySpec] = {
-    "lateral_top_nations": QuerySpec(lateral_top_nations, LATERAL_TOP_NATIONS_SQL),
-    "order_priority_check": QuerySpec(order_priority_check, ORDER_PRIORITY_CHECK_SQL),
-    "bilateral_trade_volume": QuerySpec(bilateral_trade_volume, BILATERAL_TRADE_VOLUME_SQL),
-    "product_type_profit": QuerySpec(product_type_profit, PRODUCT_TYPE_PROFIT_SQL),
-    "returned_item_losses": QuerySpec(returned_item_losses, RETURNED_ITEM_LOSSES_SQL),
-    "important_part_value": QuerySpec(important_part_value, IMPORTANT_PART_VALUE_SQL),
-    "priority_line_distribution": QuerySpec(
-        priority_line_distribution, PRIORITY_LINE_DISTRIBUTION_SQL
-    ),
-    "supplier_diversity_by_part": QuerySpec(
-        supplier_diversity_by_part, SUPPLIER_DIVERSITY_BY_PART_SQL
-    ),
-    "disjunctive_revenue": QuerySpec(disjunctive_revenue, DISJUNCTIVE_REVENUE_SQL),
-    "exclusive_return_suppliers": QuerySpec(
-        exclusive_return_suppliers, EXCLUSIVE_RETURN_SUPPLIERS_SQL
-    ),
-    "cheapest_supplier_per_part": QuerySpec(
-        cheapest_supplier_per_part, CHEAPEST_SUPPLIER_PER_PART_SQL
-    ),
-    "dominant_suppliers": QuerySpec(dominant_suppliers, DOMINANT_SUPPLIERS_SQL),
-}

@@ -43,12 +43,16 @@ def canonicalize(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def _canon_obj(v):
-    if v is None or isinstance(v, str):
+    if isinstance(v, str):
         return v
-    if isinstance(v, (_dt.datetime, _dt.date)):
-        return pd.Timestamp(v).strftime("%Y-%m-%dT%H:%M:%S.%f")
     if isinstance(v, (list, np.ndarray)):
         return tuple(np.asarray(v, dtype="float64").round(6).tolist())
+    # one NULL: Spark's all-NULL boolean reads as None, DuckDB's as NaN, and
+    # both print empty in the driver's CSV
+    if v is None or (pd.api.types.is_scalar(v) and pd.isna(v)):
+        return None
+    if isinstance(v, (_dt.datetime, _dt.date)):
+        return pd.Timestamp(v).strftime("%Y-%m-%dT%H:%M:%S.%f")
     return str(v)
 
 

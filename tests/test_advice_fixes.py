@@ -484,7 +484,7 @@ def test_jonckheere_fractional_quantity_snap(spark, tmp_path):
         "l_extendedprice double, l_discount double, l_shipdate date",
     ).write.mode("overwrite").parquet(str(tmp_path / "lineitem.parquet"))
 
-    from candyspark.plans.stats4 import JONCKHEERE_SQL, q_jonckheere_terpstra
+    from candyspark.plans.stats4 import JONCKHEERE_TERPSTRA_SQL, q_jonckheere_terpstra
 
     got = q_jonckheere_terpstra(spark, str(tmp_path)).toPandas()
     con = duckdb.connect()
@@ -492,7 +492,7 @@ def test_jonckheere_fractional_quantity_snap(spark, tmp_path):
         "CREATE VIEW lineitem AS SELECT * FROM "
         f"read_parquet('{tmp_path}/lineitem.parquet/*.parquet')"
     )
-    want = con.execute(JONCKHEERE_SQL).df()
+    want = con.execute(JONCKHEERE_TERPSTRA_SQL).df()
     con.close()
     from tests.oracle import compare_frames
 

@@ -5,9 +5,12 @@ from __future__ import annotations
 
 import pathlib
 import re
+import types
+
+import pytest
 
 import bench
-from candyspark.plans import FRONT, collect_registry
+from candyspark.plans import FRONT, _module_queries, collect_registry
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "candyspark"
 
@@ -31,6 +34,68 @@ def test_front_is_the_first_50_registry_names():
     assert len(FRONT) == len(set(FRONT)) == 50
     assert set(FRONT) <= set(registry)
     assert list(registry)[:50] == FRONT
+
+
+def _plan_module(**attrs) -> types.ModuleType:
+    """A synthetic plan module; functions passed in count as defined there
+    unless their ``__module__`` says otherwise."""
+    mod = types.ModuleType("candyspark.plans.synthetic")
+    for attr, value in attrs.items():
+        if isinstance(value, types.FunctionType) and value.__module__ == __name__:
+            value.__module__ = mod.__name__
+        setattr(mod, attr, value)
+    return mod
+
+
+def test_registry_rule_pairs_q_functions_with_their_sql():
+    def q_alpha(spark, sf_dir):
+        return None
+
+    def q_beta(spark, sf_dir):
+        return None
+
+    def helper(spark, sf_dir):
+        return None
+
+    def q_gamma(spark, sf_dir):
+        return None
+
+    q_gamma.__module__ = "candyspark.plans.elsewhere"  # imported, not defined here
+    mod = _plan_module(
+        q_alpha=q_alpha, ALPHA_SQL="SELECT 1", q_beta=q_beta, BETA_SQL=None,
+        helper=helper, q_gamma=q_gamma, q_limit=10,
+    )
+    specs = _module_queries(mod)
+    assert list(specs) == ["alpha", "beta"]
+    assert specs["alpha"].fn is q_alpha and specs["alpha"].sql == "SELECT 1"
+    assert specs["beta"].sql is None
+
+
+def test_registry_rule_rejects_a_query_without_sql():
+    def q_orphan(spark, sf_dir):
+        return None
+
+    with pytest.raises(ValueError, match=r"candyspark\.plans\.synthetic\.q_orphan.*ORPHAN_SQL"):
+        _module_queries(_plan_module(q_orphan=q_orphan))
+
+
+def test_every_query_is_its_q_function():
+    registry = collect_registry()
+    assert [n for n, s in registry.items() if s.fn.__name__ != f"q_{n}"] == []
+
+
+def test_no_hand_kept_registry_in_plan_modules():
+    # the registry is derived (plans/__init__.py); a table kept beside the
+    # naming rule would drift from it
+    offenders = []
+    for path in sorted((PKG / "plans").glob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        src = path.read_text()
+        for m in re.finditer(r"^REGISTRY\b.*=|QuerySpec\(", src, re.M):
+            line = src.count("\n", 0, m.start()) + 1
+            offenders.append(f"{path.relative_to(PKG.parent)}:{line}: {m.group(0)}")
+    assert not offenders, "\n".join(offenders)
 
 
 def _call_args(src: str, start: int) -> str:

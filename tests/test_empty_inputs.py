@@ -67,10 +67,25 @@ def one_day_sf_dir(tmp_path_factory):
     return str(root)
 
 
-@pytest.mark.parametrize("name", ["forecast_linear", "forecast_metrics"])
+#: the fits over the daily sales series (plans/candy.py)
+DAILY_SERIES_FITS = [
+    "forecast_linear",
+    "forecast_metrics",
+    "forecast_backtest",
+    "conformal_interval",
+    "conformal_coverage",
+    "durbin_watson",
+    "cooks_distance",
+    "mincer_zarnowitz",
+    "diebold_mariano",
+]
+
+
+@pytest.mark.parametrize("name", DAILY_SERIES_FITS)
 def test_one_day_series_matches_oracle(spark, one_day_sf_dir, name):
-    # the fit's determinant n·Σx² − (Σx)² is 0: slope and intercept are
-    # NULL in both engines, not a divide-by-zero error on the Spark side
+    # the fit's determinant n·Σx² − (Σx)² is 0: slope, intercept and the
+    # leverage are NULL in both engines, not a divide-by-zero error on the
+    # Spark side
     spec = REGISTRY[name]
     con = duckdb_connection(one_day_sf_dir)
     try:

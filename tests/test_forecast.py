@@ -69,19 +69,19 @@ def test_forecast_many(spark):
 
 
 def test_forecast_linear_query_matches_numpy_ols(spark):
-    """The closed-form decimal-sum OLS (plans/candy.forecast_linear) and the
+    """The closed-form decimal-sum OLS (plans/candy.q_forecast_linear) and the
     numpy polyfit path (forecast._linear) are the same model — the
     distributed scalar-agg form must agree with the driver-side fit."""
     import numpy as np
     import pandas as pd
 
     from candyspark.forecast import _linear
-    from candyspark.plans.candy import forecast_linear
+    from candyspark.plans.candy import q_forecast_linear
     from candyspark.sources.readers import load_table
     from pyspark.sql import functions as F
 
     sf = "/root/testdata/sf0.001"
-    got = forecast_linear(spark, sf).toPandas()
+    got = q_forecast_linear(spark, sf).toPandas()
     daily = (
         load_table(spark, sf, "orders")
         .groupBy("o_orderdate")

@@ -8,6 +8,8 @@ import glob
 import os
 import tempfile
 
+import numpy as np
+import pandas as pd
 import pytest
 
 from candyspark.plans import collect_registry
@@ -79,3 +81,17 @@ def test_contract_shape():
     q, o = e.queries(), e.oracle_sql()
     assert set(o) <= set(q)
     assert all(callable(f) for f in q.values())
+
+
+def test_compare_frames_reads_every_null_as_one_value():
+    # Spark's all-NULL boolean column reaches pandas as None (object),
+    # DuckDB's as NaN; the driver's CSV prints both empty
+    spark_pdf = pd.DataFrame({"d": [1, 2], "flag": [None, True]})
+    compare_frames(spark_pdf, pd.DataFrame({"d": [1, 2], "flag": [np.nan, True]}), "nulls")
+    compare_frames(
+        pd.DataFrame({"flag": [None]}), pd.DataFrame({"flag": [np.nan]}), "all_null"
+    )
+    with pytest.raises(AssertionError):
+        compare_frames(
+            pd.DataFrame({"flag": [None]}), pd.DataFrame({"flag": [True]}), "null_vs_true"
+        )

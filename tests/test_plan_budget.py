@@ -31,8 +31,8 @@ REGISTRY = collect_registry()
 
 @pytest.mark.parametrize("name", sorted(BUDGET))
 def test_plan_stays_within_budget(spark, name):
-    if name not in REGISTRY:  # budget entry for a renamed/removed query
-        pytest.skip(f"{name} no longer registered")
+    # a stale entry means a query was renamed or lost: its pin would vanish
+    assert name in REGISTRY, f"{name}: budgeted but not registered"
     df = REGISTRY[name].fn(spark, SF)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -77,8 +77,8 @@ EXEC_BUDGET = json.loads(
 
 @pytest.mark.parametrize("name", sorted(EXEC_BUDGET))
 def test_executed_work_stays_within_budget(spark, name):
-    if name not in REGISTRY:
-        pytest.skip(f"{name} no longer registered")
+    # a stale entry means a query was renamed or lost: its pin would vanish
+    assert name in REGISTRY, f"{name}: budgeted but not registered"
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     tag = f"exec-budget-{name}"

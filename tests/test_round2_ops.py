@@ -67,9 +67,9 @@ def test_duplicate_spans_finds_boilerplate(spark, tmp_path):
     texts = [f"unique document body number {i} with its own words. {boiler}" for i in range(4)]
     texts.append("a completely unrelated page with no shared content at all whatsoever")
     sf = _docs(spark, tmp_path, texts)
-    from candyspark.plans.corpus import duplicate_spans
+    from candyspark.plans.corpus import q_duplicate_spans
 
-    out = duplicate_spans(spark, sf).collect()
+    out = q_duplicate_spans(spark, sf).collect()
     assert out, "shared boilerplate must produce duplicated spans"
     # every reported span must truly occur in >= n_docs distinct docs
     for r in out:
@@ -122,9 +122,9 @@ def test_gopher_rule_boundaries(spark, tmp_path):
         " ".join(f"word{i} thing{i}" for i in range(30)),  # stop_hits < 2
     ]
     sf = _docs(spark, tmp_path, texts)
-    from candyspark.plans.corpus import gopher_quality_filter
+    from candyspark.plans.corpus import q_gopher_quality_filter
 
-    rows = {r["doc_id"]: r for r in gopher_quality_filter(spark, sf).collect()}
+    rows = {r["doc_id"]: r for r in q_gopher_quality_filter(spark, sf).collect()}
     assert rows[0]["passes"] is True
     assert rows[1]["passes"] is False and rows[1]["n_words"] < 10
     assert rows[2]["passes"] is False and rows[2]["mean_word_len"] > 10
@@ -135,9 +135,9 @@ def test_gopher_rule_boundaries(spark, tmp_path):
 def test_bpe_pair_counts_brute_force(spark, tmp_path):
     texts = ["low lower lowest", "new newer newest wide wider", "low low new"]
     sf = _docs(spark, tmp_path, texts)
-    from candyspark.plans.corpus import bpe_pair_counts
+    from candyspark.plans.corpus import q_bpe_pair_counts
 
-    got = {r["pair"]: r["weight"] for r in bpe_pair_counts(spark, sf).collect()}
+    got = {r["pair"]: r["weight"] for r in q_bpe_pair_counts(spark, sf).collect()}
     freq = collections.Counter(
         tok for t in texts for tok in t.lower().split()
     )
@@ -158,9 +158,9 @@ def test_zipf_fit_recovers_unit_slope(spark, tmp_path):
     # one doc per 50 words to keep rows realistic
     texts = [" ".join(words[i : i + 50]) for i in range(0, len(words), 50)]
     sf = _docs(spark, tmp_path, texts)
-    from candyspark.plans.corpus import zipf_fit
+    from candyspark.plans.corpus import q_zipf_fit
 
-    row = zipf_fit(spark, sf).collect()[0]
+    row = q_zipf_fit(spark, sf).collect()[0]
     assert row["n_terms"] == len(vocab)
     assert row["zipf_slope"] == pytest.approx(-1.0, abs=0.05)
 

@@ -1172,14 +1172,11 @@ def test_randomization_inference_bernoulli_agrees(spark, tmp_path):
 
 def test_round6_curation_ops_properties(spark):
     """Round-6 curation additions: policy semantics beyond hash parity."""
-    from candyspark.plans.corpus import REGISTRY as CR
-    from candyspark.plans.graph import REGISTRY as GR
-    from candyspark.plans.extensions import REGISTRY as ER
 
     # dedup_keep_best: kept doc is its cluster's longest (tie: lowest id),
     # and chars_dropped + kept_chars accounts for the whole cluster's mass
-    kb = GR["dedup_keep_best"].fn(spark, SF1).toPandas()
-    cl = GR["dedup_clusters"].fn(spark, SF1).toPandas()
+    kb = REGISTRY["dedup_keep_best"].fn(spark, SF1).toPandas()
+    cl = REGISTRY["dedup_clusters"].fn(spark, SF1).toPandas()
     docs = spark.read.parquet(f"{SF1}/documents.parquet").select("doc_id", "n_chars").toPandas()
     merged = cl.merge(docs, on="doc_id")
     for _, row in kb.iterrows():
@@ -1192,7 +1189,7 @@ def test_round6_curation_ops_properties(spark):
 
     # shard_assignment: 64 shards (hash may leave a shard empty only if
     # docs < shards), load factors average 1 over present shards' mass
-    sa = CR["shard_assignment"].fn(spark, SF1).toPandas()
+    sa = REGISTRY["shard_assignment"].fn(spark, SF1).toPandas()
     assert sa.shard.between(0, 63).all()
     assert (sa.n_docs > 0).all()
     total = sa.total_chars.sum()
@@ -1200,7 +1197,7 @@ def test_round6_curation_ops_properties(spark):
 
     # curriculum_stages: 4 stages, difficulty bands non-overlapping and
     # increasing, doc counts near-equal (ntile property)
-    cs = CR["curriculum_stages"].fn(spark, SF1).toPandas().sort_values("stage")
+    cs = REGISTRY["curriculum_stages"].fn(spark, SF1).toPandas().sort_values("stage")
     assert list(cs.stage) == [1, 2, 3, 4]
     assert (cs.min_difficulty.values <= cs.max_difficulty.values).all()
     assert (cs.max_difficulty.values[:-1] <= cs.min_difficulty.values[1:] + 1e-12).all()
@@ -1208,7 +1205,7 @@ def test_round6_curation_ops_properties(spark):
 
     # split_leakage_embedding: rates in [0,1]; every leaked eval item has a
     # genuine >=tau train neighbour per the exact all-pairs verifier
-    sl = ER["split_leakage_embedding"].fn(spark, SF1).toPandas()
+    sl = REGISTRY["split_leakage_embedding"].fn(spark, SF1).toPandas()
     assert (sl.n_leaked <= sl.n_eval).all() and (sl.leak_rate <= 1.0).all()
     assert sl.n_eval.sum() > 0
 
@@ -1217,11 +1214,10 @@ def test_incremental_dedup_asymmetry(spark):
     """Incremental dedup only flags INCOMING docs, its dup set is a subset
     of the full self-join dedup's pair membership, and totals reconcile
     with the split."""
-    from candyspark.plans.extensions import REGISTRY as ER
     from candyspark.operators.text import char_hash32
     import pyspark.sql.functions as SF
 
-    out = ER["incremental_dedup"].fn(spark, SF1).toPandas()
+    out = REGISTRY["incremental_dedup"].fn(spark, SF1).toPandas()
     docs = spark.read.parquet(f"{SF1}/documents.parquet")
     incoming = docs.filter(SF.pmod(char_hash32(SF.col("text")), SF.lit(10)) >= 8)
     per_lang = {r["lang"]: r["cnt"] for r in
@@ -1232,7 +1228,7 @@ def test_incremental_dedup_asymmetry(spark):
         assert 0 <= row.n_dup <= row.n_incoming
     # every flagged incoming doc is a member of some full-corpus minhash
     # pair (the asymmetric join can't invent pairs the self-join lacks)
-    pairs = ER["dedup_minhash"].fn(spark, SF1).toPandas()
+    pairs = REGISTRY["dedup_minhash"].fn(spark, SF1).toPandas()
     paired = set(pairs.doc_a) | set(pairs.doc_b)
     assert out.n_dup.sum() <= len(paired)
 
@@ -1243,9 +1239,8 @@ def test_lsh_tuning_curve_scurve_properties(spark):
     expected recall ∈ (0, 1], and the (8 bands × 4 rows) row must sit near
     the operator's own measured recall regime (its pairs ARE the ones the
     8×4 banding found, so p(cand) at their similarities is high)."""
-    from candyspark.plans.extensions import REGISTRY as ER
 
-    out = ER["lsh_tuning_curve"].fn(spark, SF1).toPandas().sort_values("rows_per_band")
+    out = REGISTRY["lsh_tuning_curve"].fn(spark, SF1).toPandas().sort_values("rows_per_band")
     assert list(out.rows_per_band) == [2, 4, 8, 16]
     assert (out.expected_recall > 0).all() and (out.expected_recall <= 1).all()
     assert out.expected_recall.is_monotonic_decreasing

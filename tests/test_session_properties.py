@@ -106,7 +106,7 @@ def brute_skyline(points):
 @given(points=SKY_POINTS)
 @_SETTINGS
 def test_skyline_matches_brute_force(spark, points):
-    """The distributed bucketed skyline (plans/analytics.skyline_parts) must
+    """The distributed bucketed skyline (plans/analytics.q_skyline_parts) must
     equal the O(n²) dominance definition on random point sets — duplicate
     points, same-price ties, and bucket-boundary prices included (prices
     scaled by 60 so points land in different floor(price/100) buckets)."""
@@ -122,7 +122,7 @@ def test_skyline_matches_brute_force(spark, points):
     with mock.patch.object(A, "load_table", lambda _s, _d, _t: df):
         got = sorted(
             (int(r["p_retailprice"]) // 60, r["p_size"])
-            for r in A.skyline_parts(spark, "unused").collect()
+            for r in A.q_skyline_parts(spark, "unused").collect()
         )
     assert got == brute_skyline(points)
 
