@@ -7,7 +7,7 @@ from the reference driver, on purpose (SURVEY.md §4.2):
 
 - one SparkSession, dims loaded once (reference loads products 4×);
 - no count()/show() actions as control flow — flow metrics ride the output
-  jobs via ``--observe`` (df.observe accumulators, zero extra scans);
+  jobs (df.observe accumulators, zero extra scans) and are printed;
 - configuration via flags with environment fallbacks (CANDYSPARK_DATA_DIR,
   CANDYSPARK_OUTPUT_DIR — the reference's .env/load_dotenv role); DB
   connector settings remain deployment concerns passed to the session
@@ -45,26 +45,17 @@ def main(argv: list[str] | None = None) -> int:
         help="deterministic forecaster (the reference's Prophet fit is "
         "run-date-anchored and unreproducible — SURVEY.md §2.12)",
     )
-    p.add_argument(
-        "--observe",
-        action="store_true",
-        help="attach flow metrics to the output jobs and print them",
-    )
     args = p.parse_args(argv)
 
     from candyspark.forecast import forecast_sales_and_profits
-    from candyspark.pipeline import run_pipeline, run_pipeline_observed, save_outputs
+    from candyspark.pipeline import run_pipeline, save_outputs
     from candyspark.session import get_spark
     from candyspark.sources.sinks import save_single_csv
 
     t0 = time.time()
     spark = get_spark(app_name="candyspark-pipeline")
     try:
-        if args.observe:
-            outputs, obs = run_pipeline_observed(spark, args.data_dir)
-        else:
-            outputs, obs = run_pipeline(spark, args.data_dir), None
-
+        outputs, obs = run_pipeline(spark, args.data_dir)
         save_outputs(outputs, args.output_dir)
 
         forecast = forecast_sales_and_profits(
@@ -74,9 +65,8 @@ def main(argv: list[str] | None = None) -> int:
         )
         save_single_csv(forecast, args.output_dir, "sales_profit_forecast.csv")
 
-        if obs is not None:
-            for stage, ob in obs.items():
-                print(f"[metrics] {stage}: {ob.get}")
+        for stage, ob in obs.items():
+            print(f"[metrics] {stage}: {ob.get}")
         print(f"[done] 5 outputs in {args.output_dir} ({time.time() - t0:.1f}s)")
         return 0
     finally:

@@ -143,9 +143,7 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> int:
         from candyspark.operators.components import dedup_clusters
         from candyspark.operators.dedup import minhash_lsh_pairs
 
-        pairs = minhash_lsh_pairs(
-            survivors, "text", "doc_id", num_hashes=32, bands=8, k=3, threshold=0.5
-        )
+        pairs = minhash_lsh_pairs(survivors, "text", "doc_id")
         clusters = dedup_clusters(pairs)
         drop = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select(
             "doc_id"

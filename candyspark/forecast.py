@@ -78,10 +78,13 @@ def _seasonal(
     return fit[:n], fit[n:]
 
 
-def _holt_fit(
-    values: np.ndarray, alpha: float = 0.5, beta: float = 0.3
-) -> tuple[float, float, np.ndarray]:
-    """Holt's linear-trend (double exponential) smoothing:
+#: Holt smoothing weights of the level (a) and the trend (b)
+HOLT_ALPHA, HOLT_BETA = 0.5, 0.3
+
+
+def _holt_fit(values: np.ndarray) -> tuple[float, float, np.ndarray]:
+    """Holt's linear-trend (double exponential) smoothing, with
+    a = HOLT_ALPHA and b = HOLT_BETA:
 
         l_t = a*y_t + (1-a)*(l_{t-1} + b_{t-1})
         b_t = b*(l_t - l_{t-1}) + (1-b)*b_{t-1}
@@ -105,8 +108,8 @@ def _holt_fit(
     for t in range(1, n):
         preds[t] = level + trend
         prev_level = level
-        level = alpha * values[t] + (1.0 - alpha) * (level + trend)
-        trend = beta * (level - prev_level) + (1.0 - beta) * trend
+        level = HOLT_ALPHA * values[t] + (1.0 - HOLT_ALPHA) * (level + trend)
+        trend = HOLT_BETA * (level - prev_level) + (1.0 - HOLT_BETA) * trend
     return float(level), float(trend), preds
 
 
@@ -210,18 +213,18 @@ def forecast_sales_and_profits(
     return daily_summary.sparkSession.createDataFrame(pa.table(cols), _FORECAST_SCHEMA)
 
 
+#: days ``forecast_many`` forecasts past each series' last date
+MANY_HORIZON = 2
+
+
 def forecast_many(
-    df: DataFrame,
-    key_cols: list[str],
-    date_col: str,
-    value_col: str,
-    horizon: int = 1,
-    method: str = "auto",
+    df: DataFrame, key_cols: list[str], date_col: str, value_col: str
 ) -> DataFrame:
-    """Many-series variant: one forecast per key group via applyInPandas —
-    the distributed path when there are millions of series (per-product,
-    per-region, ...). Each group's history must fit one task (time series are
-    short relative to cluster memory)."""
+    """Many-series variant: one linear-trend forecast of the next
+    ``MANY_HORIZON`` days per key group via applyInPandas — the distributed
+    path when there are millions of series (per-product, per-region, ...).
+    Each group's history must fit one task (time series are short relative
+    to cluster memory)."""
     fields = {f.name: f.dataType for f in df.schema.fields}
     out_schema = T.StructType(
         [T.StructField(k, fields[k]) for k in key_cols]
@@ -234,11 +237,11 @@ def forecast_many(
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(date_col)
         values = pdf[value_col].to_numpy(dtype=float)
-        preds = forecast_series(pdf[date_col], values, horizon, method)
+        preds = forecast_series(pdf[date_col], values, MANY_HORIZON, "linear")
         last = pd.to_datetime(pdf[date_col].iloc[-1])
         out = pd.DataFrame(
             {
-                "date": [(last + pd.Timedelta(days=i + 1)).date() for i in range(horizon)],
+                "date": [(last + pd.Timedelta(days=i + 1)).date() for i in range(MANY_HORIZON)],
                 "forecast": np.round(preds, 2),
             }
         )

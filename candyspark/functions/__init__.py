@@ -4,7 +4,7 @@ One importable namespace (the engine-level analogue of
 ``pyspark.sql.functions``) gathering every reusable Column-expression builder:
 
 - numeric/money discipline (``money``, ``rate``, ``round2``, ``snap_round``,
-  ``safe_div``, ``pct``) — see :mod:`candyspark.functions.numeric` for why
+  ``safe_div``) — see :mod:`candyspark.functions.numeric` for why
   money is decimal-exact end to end;
 - text analysis (tokenization, stopword/quality/language scoring,
   fingerprints, shingles) — implemented in :mod:`candyspark.operators.text`;
@@ -22,7 +22,6 @@ from __future__ import annotations
 
 from candyspark.functions.numeric import (
     money,
-    pct,
     rate,
     round2,
     safe_div,
@@ -51,7 +50,6 @@ __all__ = [
     "round2",
     "snap_round",
     "safe_div",
-    "pct",
     "dot",
     "norm",
     "cosine",

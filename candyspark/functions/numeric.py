@@ -51,8 +51,3 @@ def safe_div(num: Column, den: Column) -> Column:
     """NULL-on-zero division (both engines return NULL for x/0 in ANSI-off
     Spark only sometimes — make it explicit)."""
     return F.when(den != 0, num / den)
-
-
-def pct(part: Column, whole: Column, digits: int = 4) -> Column:
-    """Percentage with the cross-engine rounding discipline applied."""
-    return snap_round(safe_div(part * 100.0, whole), digits)

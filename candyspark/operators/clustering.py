@@ -29,14 +29,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from candyspark.operators.similarity import l2sq
+from candyspark.operators.similarity import ID_COL, VEC_COL, l2sq
 
 
-def assign_clusters(
-    vectors: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
+def assign_clusters(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """Nearest centroid per vector (L2, ties → lowest cluster_id).
-    Centroids broadcast; output (id, vec, cluster_id).
+    Centroids broadcast; output (vec_id, embedding, cluster_id).
 
     Round-7 form: the centroid table folds into ONE broadcast array row and
     the argmin is a scan-stage `aggregate` + `least` over
@@ -67,19 +65,19 @@ def assign_clusters(
         lambda acc, c: F.least(
             acc,
             F.struct(
-                l2sq(F.col(vec_col), c["c_vec"]).alias("d2"),
+                l2sq(F.col(VEC_COL), c["c_vec"]).alias("d2"),
                 c["cluster_id"].alias("cid"),
             ),
         ),
     )
     return (
-        vectors.select(id_col, vec_col)
+        vectors.select(ID_COL, VEC_COL)
         .crossJoin(F.broadcast(cents))
-        .select(id_col, vec_col, best["cid"].alias("cluster_id"))
+        .select(ID_COL, VEC_COL, best["cid"].alias("cluster_id"))
     )
 
 
-def _recompute_centroids(assigned: DataFrame, vec_col: str) -> DataFrame:
+def _recompute_centroids(assigned: DataFrame) -> DataFrame:
     """Per-dimension mean per cluster, folded back into arrays (JVM-side:
     posexplode → exact-sum mean → array_sort(collect_list(struct)) →
     transform).
@@ -94,7 +92,7 @@ def _recompute_centroids(assigned: DataFrame, vec_col: str) -> DataFrame:
     — this is what makes the whole iterated pipeline hash-checkable
     against the SQL oracle (KMEANS_CLUSTERS_SQL) and repartition-stable.
     """
-    dims = assigned.select("cluster_id", F.posexplode(vec_col).alias("pos", "val"))
+    dims = assigned.select("cluster_id", F.posexplode(VEC_COL).alias("pos", "val"))
     means = dims.groupBy("cluster_id", "pos").agg(
         F.sum(F.round(F.col("val").cast("decimal(28,12)"), 10)).alias("s"),
         F.count(F.lit(1)).alias("m"),
@@ -113,21 +111,14 @@ def _recompute_centroids(assigned: DataFrame, vec_col: str) -> DataFrame:
     )
 
 
-def kmeans(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 8,
-    max_iter: int = 5,
-) -> tuple[DataFrame, DataFrame]:
+def kmeans(vectors: DataFrame, k: int, max_iter: int) -> tuple[DataFrame, DataFrame]:
     """Lloyd's algorithm: returns (assignments, centroids). Deterministic
     seeding (k lowest-id vectors) and tie-breaks — same inputs, same
     clusters, on any partitioning."""
-    centroids = vectors.filter(F.col(id_col) < k).select(
-        F.col(id_col).cast("int").alias("cluster_id"), F.col(vec_col).alias("c_vec")
+    centroids = vectors.filter(F.col(ID_COL) < k).select(
+        F.col(ID_COL).cast("int").alias("cluster_id"), F.col(VEC_COL).alias("c_vec")
     )
-    assigned = None
     for _ in range(max_iter):
-        assigned = assign_clusters(vectors, centroids, id_col, vec_col)
-        centroids = _recompute_centroids(assigned, vec_col).localCheckpoint()
-    return assign_clusters(vectors, centroids, id_col, vec_col), centroids
+        assigned = assign_clusters(vectors, centroids)
+        centroids = _recompute_centroids(assigned).localCheckpoint()
+    return assign_clusters(vectors, centroids), centroids

@@ -59,9 +59,12 @@ def checkpoint_observed(df: DataFrame, metric: Column) -> tuple[DataFrame, Any]:
     return out, obs.get["n"]
 
 
-def connected_components(
-    edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 50
-) -> DataFrame:
+#: label-propagation rounds before connected_components gives up; each round
+#: moves a label one hop, so this bounds the component diameter it handles
+MAX_ROUNDS = 50
+
+
+def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Labels every node that appears in ``edges`` with the minimum node id
     of its connected component. Returns ``(node, component)``.
 
@@ -76,7 +79,7 @@ def connected_components(
         .withColumn("component", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         # min neighbor label per node, one hop
         nbr_min = (
             und.join(labels, und["b"] == labels["node"])
@@ -96,7 +99,7 @@ def connected_components(
         labels = labels.drop("prev")
         if not changed:
             return labels
-    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+    raise RuntimeError(f"connected_components did not converge in {MAX_ROUNDS} rounds")
 
 
 def dedup_clusters(

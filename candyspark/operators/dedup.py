@@ -6,14 +6,16 @@ Scale design (the point of each algorithm):
 - **exact**: one hash-aggregate on the normalized-text key. At 100 TB,
   group on ``md5(normalized)`` (fixed 32-byte shuffle key) rather than the
   text itself so the shuffle carries digests, not documents.
-- **n-gram Jaccard**: exact pairwise similarity is O(n²) — only ever run it
-  inside a blocking key (here: ``lang``). The blocked self-join shuffles
-  each block once; skew in a block is AQE-split.
+- **n-gram Jaccard**: exact pairwise similarity within a blocking key
+  (here: ``lang``), generated from an inverted index so only pairs that
+  share a shingle meet — posting-list-bounded, not O(|block|²).
 - **MinHash+LSH**: the scale path for all-pairs near-dup. Signatures are a
   per-row expression (no shuffle); candidate generation is a self-join on
   (band, band-signature) — documents only meet if they collide in ≥1 band —
   then candidates are verified with true Jaccard. Tuning (H hashes, b bands)
-  trades recall vs. candidate count; H=32, b=8 targets J≳0.5.
+  trades recall vs. candidate count; H=32, b=8 targets J≳0.5 (``NUM_HASHES``,
+  ``BANDS``: every near-dup query uses them, and the oracle SQL embeds the
+  same values).
 - **SimHash**: 32-bit near-dup digest; Hamming-distance buckets via
   (digest >> k) prefixes. One expression per row, join on prefix.
 
@@ -28,6 +30,17 @@ from pyspark.sql import functions as F
 
 from candyspark.operators.text import char_hash32, normalized_text, word_shingles
 from candyspark.sources.readers import fan_out
+
+#: word-shingle width of every dedup measure
+SHINGLE_K = 3
+#: n-gram Jaccard floor of ``ngram_jaccard_pairs``
+NGRAM_THRESHOLD = 0.6
+#: MinHash signature length and LSH band count (8 bands of 4 rows)
+NUM_HASHES = 32
+BANDS = 8
+#: verified-similarity floor of the LSH pairs: Jaccard for
+#: ``minhash_lsh_pairs``, either containment direction for ``containment_pairs``
+LSH_THRESHOLD = 0.5
 
 
 def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -55,32 +68,24 @@ def jaccard(a: Column, b: Column) -> Column:
     ).cast("double")
 
 
-def ngram_jaccard_pairs_inverted(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    block_col: str,
-    k: int = 3,
-    threshold: float = 0.6,
+def ngram_jaccard_pairs(
+    df: DataFrame, text_col: str, id_col: str, block_col: str
 ) -> DataFrame:
-    """Word-k-gram Jaccard pairs >= threshold via an INVERTED INDEX: only
-    pairs that SHARE a shingle materialize (posting-list self-join on
-    (block, shingle)); |A∩B| is the pair's join count, |A∪B| follows by
-    inclusion-exclusion from per-doc shingle counts, and the division +
-    4-dp snap mirror ``jaccard`` exactly. For any threshold > 0 the result
-    is IDENTICAL to ``ngram_jaccard_pairs`` (zero-overlap pairs have
-    J = 0) while the cost is posting-list-bounded instead of |block|² —
-    the rewrite that took dedup_threshold_curve 14.7 s -> ~3 s and
-    dedup_ngram 8.6 -> ~2 s at sf0.1. Prefer this form whenever the
-    block key is low-cardinality; the all-pairs verifier below remains
-    for pre-blocked candidate sets where every pair must be scored,
-    including J = 0 ones."""
+    """Word-3-gram Jaccard pairs >= ``NGRAM_THRESHOLD`` within ``block_col``
+    via an INVERTED INDEX: only pairs that SHARE a shingle materialize
+    (posting-list self-join on (block, shingle)); |A∩B| is the pair's join
+    count, |A∪B| follows by inclusion-exclusion from per-doc shingle counts,
+    and the division + 4-dp snap mirror ``jaccard`` exactly. The result is
+    the blocked all-pairs one (a threshold > 0 drops every zero-overlap
+    pair, J = 0) while the cost is posting-list-bounded instead of
+    |block|² — the rewrite that took dedup_threshold_curve 14.7 s -> ~3 s
+    and dedup_ngram 8.6 -> ~2 s at sf0.1."""
     sh = (
         fan_out(df)
         .select(
             F.col(id_col).alias("doc_id"),
             F.col(block_col).alias("block"),
-            F.explode(F.array_distinct(word_shingles(text_col, k))).alias("s"),
+            F.explode(F.array_distinct(word_shingles(text_col, SHINGLE_K))).alias("s"),
         )
         .localCheckpoint()  # feeds sizes AND the posting self-join
     )
@@ -109,71 +114,7 @@ def ngram_jaccard_pairs_inverted(
         inter.join(F.broadcast(sa), "doc_a")
         .join(F.broadcast(sb), "doc_b")
         .select("doc_a", "doc_b", jac.alias("jaccard_sim"))
-        .filter(F.col("jaccard_sim") >= threshold)
-    )
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    block_col: str,
-    k: int = 3,
-    threshold: float = 0.6,
-    max_block_rows: int | None = 10_000,
-) -> DataFrame:
-    """Blocked exact near-dup: word-k-gram Jaccard over all pairs sharing
-    ``block_col``; emits pairs with similarity ≥ threshold.
-
-    CONTRACT — this is a candidates-only VERIFIER, not a corpus scrubber:
-    the self-join is O(rows²) inside each block, so the input must be a
-    pre-blocked candidate set (MinHash-LSH buckets, cluster ids, …) or
-    carry a high-cardinality block key. A low-cardinality key like a
-    language column is demo-grade — all-pairs within 'en' detonates on a
-    raw corpus. ``max_block_rows`` enforces this: the largest block is
-    measured up front (one tiny per-block count aggregate) and a block
-    beyond the cap raises instead of silently launching a quadratic job.
-    Pass ``None`` to skip the check (the one extra scan) on inputs already
-    known to be bounded."""
-    if max_block_rows is not None:
-        biggest = (
-            df.groupBy(block_col)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n"))
-            .first()[0]
-        )
-        if biggest is not None and biggest > max_block_rows:
-            raise ValueError(
-                f"ngram_jaccard_pairs: largest {block_col!r} block has "
-                f"{biggest} rows (cap {max_block_rows}) — the within-block "
-                "self-join is quadratic; use minhash_lsh_pairs to generate "
-                "candidates, or pass a higher-cardinality block key "
-                "(max_block_rows=None overrides)"
-            )
-    df = fan_out(df)
-    shingled = df.select(
-        F.col(id_col).alias("doc_a"),
-        F.col(block_col).alias("block"),
-        word_shingles(text_col, k).alias("sh_a"),
-    )
-    other = shingled.select(
-        F.col("doc_a").alias("doc_b"),
-        F.col("block"),
-        F.col("sh_a").alias("sh_b"),
-    )
-    pairs = shingled.join(other, "block").filter(F.col("doc_a") < F.col("doc_b"))
-    # Real-corpus knob, deliberately NOT applied here: a length-ratio
-    # prefilter (keep pairs with min(|Da|,|Db|) ≥ (t − 1e-4)·max(…), the
-    # 1e-4 covering the 4-dp output snap) is a NECESSARY condition for
-    # J ≥ t and skips the O(|sh|) intersection for size-mismatched pairs.
-    # On length-varied corpora it prunes most of the quadratic block; on
-    # this benchmark's fixed-length synthetic docs it prunes nothing and
-    # only bills the extra size columns (measured +tens of % — which is
-    # why it stays a documented knob, not a default).
-    sim = jaccard(F.col("sh_a"), F.col("sh_b"))
-    return (
-        pairs.select("doc_a", "doc_b", sim.alias("jaccard_sim"))
-        .filter(F.col("jaccard_sim") >= threshold)
+        .filter(F.col("jaccard_sim") >= NGRAM_THRESHOLD)
     )
 
 
@@ -209,38 +150,38 @@ def perm_consts(num_hashes: int) -> list[tuple[int, int]]:
     ]
 
 
-def shingle_hashes(text_col: str, k: int = 3) -> Column:
+def shingle_hashes(text_col: str) -> Column:
     """Each shingle md5-hashed ONCE to a value < p. MinHash then derives all
     H signature slots by arithmetic permutation of these — H× less md5 than
     hashing (i, shingle) pairs, the difference between scan-speed and
     CPU-bound at 100 TB."""
     return F.transform(
-        word_shingles(text_col, k), lambda s: char_hash32(s) % MINHASH_PRIME
+        word_shingles(text_col, SHINGLE_K), lambda s: char_hash32(s) % MINHASH_PRIME
     )
 
 
-def minhash_signature(hashed_col: Column, num_hashes: int = 32) -> Column:
+def minhash_signature(hashed_col: Column) -> Column:
     """MinHash signature over a hashed shingle array: slot i is min over
     shingle hashes h of (a_i*h + b_i) mod p.
 
     Expressed as ONE ``F.aggregate`` fold over the hash array, zip-minning a
-    ``num_hashes``-slot accumulator per shingle — not as a transform over
+    ``NUM_HASHES``-slot accumulator per shingle — not as a transform over
     slots with an inner scan. The slot-major form re-evaluates its input
     array once per slot (Catalyst's CollapseProject counts a projected
     column as a single reference and happily inlines the md5 subtree into
-    the lambda, making signatures ``num_hashes``× more expensive — measured
+    the lambda, making signatures ``NUM_HASHES``× more expensive — measured
     108 s vs 2 s at sf0.1). A fold's input array is evaluated exactly once
     per row no matter what the optimizer inlines."""
-    consts = perm_consts(num_hashes)
+    consts = perm_consts(NUM_HASHES)
     a_arr = F.array(*[F.lit(a) for a, _ in consts])
     b_arr = F.array(*[F.lit(b) for _, b in consts])
-    init = F.array(*[F.lit(MINHASH_PRIME).cast("bigint")] * num_hashes)
+    init = F.array(*[F.lit(MINHASH_PRIME).cast("bigint")] * NUM_HASHES)
     return F.aggregate(
         hashed_col,
         init,
         lambda acc, h: F.zip_with(
             acc,
-            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
+            F.sequence(F.lit(0), F.lit(NUM_HASHES - 1)),
             lambda m, i: F.least(
                 m,
                 (h * F.element_at(a_arr, i + 1) + F.element_at(b_arr, i + 1))
@@ -250,9 +191,11 @@ def minhash_signature(hashed_col: Column, num_hashes: int = 32) -> Column:
     )
 
 
-def band_keys(sig_col: Column, bands: int, rows_per_band: int) -> Column:
-    """array<struct<band, band_key>>: md5 digest per signature band (fixed
-    32-byte join key regardless of band width)."""
+def band_keys(sig_col: Column, bands: int) -> Column:
+    """array<struct<band, band_key>>: md5 digest per signature band of
+    ``NUM_HASHES // bands`` rows (fixed 32-byte join key regardless of band
+    width)."""
+    rows_per_band = NUM_HASHES // bands
     return F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
         lambda b: F.struct(
@@ -270,38 +213,25 @@ def band_keys(sig_col: Column, bands: int, rows_per_band: int) -> Column:
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    k: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """MinHash-LSH near-dup pairs: banded signature collision → candidate
     pairs → exact-Jaccard verification. Returns (doc_a, doc_b, jaccard_sim ≥
-    threshold).
+    ``LSH_THRESHOLD``).
 
     Shuffle discipline: the band self-join carries only (doc_id, band_key) —
     16-ish bytes per row per band, never the shingle arrays; candidate pairs
     (a tiny relation after LSH) then re-join the shingle table for
     verification. Carrying shingles through the band shuffle would multiply
     shuffle volume by bands × document size."""
-    verified = minhash_candidate_shingles(df, text_col, id_col, num_hashes, bands, k)
+    verified = minhash_candidate_shingles(df, text_col, id_col)
     sim = jaccard(F.col("sh_a"), F.col("sh_b"))
     return verified.select("doc_a", "doc_b", sim.alias("jaccard_sim")).filter(
-        F.col("jaccard_sim") >= threshold
+        F.col("jaccard_sim") >= LSH_THRESHOLD
     )
 
 
 def minhash_candidate_shingles(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    k: int = 3,
+    df: DataFrame, text_col: str, id_col: str, bands: int = BANDS
 ) -> DataFrame:
     """The shared LSH candidate stage: banded signature collision →
     (doc_a, doc_b, sh_a, sh_b) with both sides' shingle arrays re-joined
@@ -309,7 +239,6 @@ def minhash_candidate_shingles(
     ``containment_pairs`` (asymmetric containment) differ only in the
     measure they verify with."""
     df = fan_out(df)  # shingle hashing is CPU-bound; don't serialize on 1 split
-    rows_per_band = num_hashes // bands
     # tokenize + shingle ONCE and materialize (round 6): the signature side
     # and BOTH verify-side joins previously re-derived word_shingles from
     # text — the band self-join's exchange is deduped by ReuseExchange but
@@ -318,17 +247,16 @@ def minhash_candidate_shingles(
     # relation feeds all three; signature hashes derive from the same
     # arrays (transform(sh, char_hash32 % p) ≡ shingle_hashes(text)).
     sh_tbl = df.select(
-        F.col(id_col).alias("doc_id"), word_shingles(text_col, k).alias("sh")
+        F.col(id_col).alias("doc_id"), word_shingles(text_col, SHINGLE_K).alias("sh")
     ).localCheckpoint()
     sigs = sh_tbl.select(
         "doc_id",
         minhash_signature(
-            F.transform(F.col("sh"), lambda s: char_hash32(s) % MINHASH_PRIME),
-            num_hashes,
+            F.transform(F.col("sh"), lambda s: char_hash32(s) % MINHASH_PRIME)
         ).alias("sig"),
     )
     banded = sigs.select(
-        "doc_id", F.explode(band_keys(F.col("sig"), bands, rows_per_band)).alias("bk")
+        "doc_id", F.explode(band_keys(F.col("sig"), bands)).alias("bk")
     ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
     cand = (
         banded.alias("x")
@@ -347,23 +275,17 @@ def minhash_candidate_shingles(
 
 
 def containment_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    k: int = 3,
-    threshold: float = 0.5,
+    df: DataFrame, text_col: str, id_col: str, bands: int = BANDS
 ) -> DataFrame:
     """Asymmetric shingle CONTAINMENT on LSH candidates: |A∩B| / |A| (and
     /|B|) — the doc-inside-doc detector (quotes, boilerplate wrappers,
     near-supersets) that symmetric Jaccard under-scores whenever sizes
     differ: a page fully embedded in one 10× larger scores J ≈ 0.1 but
-    containment 1.0. Emits pairs where EITHER direction ≥ threshold.
+    containment 1.0. Emits pairs where EITHER direction ≥ ``LSH_THRESHOLD``.
     Same candidate economics as minhash_lsh_pairs (containment ≥ Jaccard
     always, so candidates recalled for J ≥ t cover containment ≥ t when
     size ratios are moderate; for extreme ratios lower the band width)."""
-    verified = minhash_candidate_shingles(df, text_col, id_col, num_hashes, bands, k)
+    verified = minhash_candidate_shingles(df, text_col, id_col, bands)
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double")
 
     def cont(side: str):
@@ -381,7 +303,7 @@ def containment_pairs(
         jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard_sim"),
     )
     return out.filter(
-        F.greatest(F.col("containment_a"), F.col("containment_b")) >= threshold
+        F.greatest(F.col("containment_a"), F.col("containment_b")) >= LSH_THRESHOLD
     )
 
 

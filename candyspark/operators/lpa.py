@@ -29,9 +29,9 @@ Scale design (the connected-components discipline, operators/components.py):
   the vote aggregate also yields each node's old label, and an
   ``observe()`` metric counts the CHANGED labels (``checkpoint_observed``,
   the connected-components pattern) — one driver action per round.
-- Rounds are bounded (default 5): LPA converges in a handful of sweeps on
+- Rounds are bounded (``ROUNDS``): LPA converges in a handful of sweeps on
   modular graphs, and a fixed bound keeps worst-case behavior predictable
-  at 100 TB (the components max_iter argument, same reasoning).
+  at 100 TB (the components ``MAX_ROUNDS``, same reasoning).
 """
 
 from __future__ import annotations
@@ -41,10 +41,11 @@ from pyspark.sql import functions as F
 
 from candyspark.operators.components import checkpoint_observed, symmetrize
 
+#: synchronous vote rounds; the oracle SQL of label_propagation unrolls as many
+ROUNDS = 5
 
-def label_propagation(
-    edges: DataFrame, src: str = "src", dst: str = "dst", max_rounds: int = 5
-) -> DataFrame:
+
+def label_propagation(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Synchronous LPA over an undirected view of ``edges``.
 
     Returns ``(node, label)`` — nodes sharing a label form one community.
@@ -58,7 +59,7 @@ def label_propagation(
         .withColumn("label", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_rounds):
+    for _ in range(ROUNDS):
         neighbor_votes = und.join(
             labels.select(F.col("node").alias("b"), "label"), "b"
         ).select(F.col("a").alias("node"), "label", F.lit(False).alias("own"))

@@ -8,11 +8,10 @@ UDF signature, batch shape:
 - media travels as ``binary`` + a metadata struct, never decoded in the JVM;
 - per-batch Python work happens in ``mapInPandas`` (one Arrow batch in, one
   out — constant memory per task, no per-row pickling);
-- decode/resize/frame-sample kernels are STUBS here (this container has no
-  image/audio libraries): ``decode_image`` raises ``NotImplementedError``
-  with the dependency named, and ``fake_feature_extract`` is the
-  deterministic stand-in the tests pin. Swapping in Pillow/torchaudio later
-  changes ONE function, not the plan.
+- the decode+featurize kernel is a stand-in (no image/audio library is a
+  dependency): ``fake_feature_extract`` is the deterministic kernel the
+  tests pin. Swapping in Pillow/torchaudio later changes ONE function, not
+  the plan.
 
 At 100 TB: binary payloads dominate I/O — store them in their own parquet
 column (parquet keeps column pages separate, so metadata-only queries never
@@ -39,15 +38,6 @@ BINARY_META_SCHEMA = T.StructType(
         T.StructField("checksum", T.LongType()),
     ]
 )
-
-
-def decode_image(payload: bytes) -> object:
-    """Stub: real implementation needs an image library (e.g. Pillow),
-    which is deliberately not vendored here."""
-    raise NotImplementedError(
-        "image decode requires an image library (e.g. Pillow); "
-        "install one and replace this kernel — the Spark plan is unchanged"
-    )
 
 
 def fake_feature_extract(payload: bytes) -> tuple[int, str, int]:
@@ -78,11 +68,11 @@ def binary_metadata(df: DataFrame, id_col: str, bin_col: str) -> DataFrame:
     ).mapInPandas(kernel, schema=BINARY_META_SCHEMA)
 
 
-def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Test/demo helper: manufacture a binary payload column from text (the
-    testdata ships no true media bytes); real pipelines read binary columns
-    straight from parquet."""
-    return df.withColumn("payload", F.encode(F.col(text_col), "utf-8"))
+def with_binary_payload(df: DataFrame) -> DataFrame:
+    """Test/demo helper: manufacture a binary payload column from the
+    ``text`` column (the testdata ships no true media bytes); real pipelines
+    read binary columns straight from parquet."""
+    return df.withColumn("payload", F.encode(F.col("text"), "utf-8"))
 
 
 try:  # pragma: no cover - optional dependency, not in this container

@@ -263,13 +263,12 @@ def exact_quantiles(
     value_col: str,
     probs: list[float],
     n_buckets: int = 4096,
-    out_prob: str = "p",
     out_value: str = "value",
     discrete: bool = False,
 ) -> DataFrame:
     """Interpolated exact quantiles of ``df[value_col]`` at ``probs``.
 
-    Returns a DataFrame (prob double, value double) with one row per prob,
+    Returns a DataFrame (p double, value double) with one row per prob,
     equal to ``F.percentile(value_col, probs)`` / DuckDB ``quantile_cont``.
     NULLs are excluded (both references do the same); NaNs are excluded too
     (they would poison the min/max bucket bounds — callers that need
@@ -279,7 +278,7 @@ def exact_quantiles(
     rows = exact_quantiles_rows(spark, df, value_col, probs, n_buckets, discrete)
     schema = T.StructType(
         [
-            T.StructField(out_prob, T.DoubleType(), False),
+            T.StructField("p", T.DoubleType(), False),
             T.StructField(out_value, T.DoubleType(), True),
         ]
     )
@@ -294,7 +293,6 @@ def exact_quantiles_grouped_rows(
     probs: list[float],
     n_buckets: int = 4096,
     discrete: bool = False,
-    bounds_df: DataFrame | None = None,
     bounds_rows: list | None = None,
 ) -> list[tuple]:
     """``exact_quantiles_grouped`` returning plain Python rows
@@ -303,8 +301,7 @@ def exact_quantiles_grouped_rows(
     ``bounds_rows``: pre-collected per-group bounds — rows with fields
     (grp, lo, hi, n) — so multi-extraction consumers share ONE bounds
     collect across calls (lo/hi may over-cover; n MUST be the exact
-    non-null count, ranks derive from it). ``bounds_df`` is the same
-    contract as a DataFrame (collected here)."""
+    non-null count, ranks derive from it)."""
     g = F.col(group_col).alias("grp")
     vals = df.select(g, F.col(value_col).cast("double").alias("v")).filter(
         F.col("v").isNotNull() & ~F.isnan("v")
@@ -314,18 +311,6 @@ def exact_quantiles_grouped_rows(
             {"grp": r["grp"], "lo": float(r["lo"]), "hi": float(r["hi"]), "n": int(r["n"])}
             for r in bounds_rows
         ]
-    elif bounds_df is not None:
-        # caller-supplied (group, lo, hi, n): skips this function's bounds
-        # scan entirely. lo/hi may over-cover ([lo, hi] ⊇ the true value
-        # range keeps the bucket key monotone, just coarser); n MUST equal
-        # the exact non-null count — ranks derive from it.
-        with job_description(spark, "exact_quantiles_grouped: caller bounds"):
-            bounds_rows = bounds_df.select(
-                F.col(group_col).alias("grp"),
-                F.col("lo").cast("double"),
-                F.col("hi").cast("double"),
-                F.col("n").cast("long"),
-            ).collect()
     else:
         with job_description(spark, "exact_quantiles_grouped: bounds"):
             bounds_rows = (
@@ -367,32 +352,28 @@ def exact_quantiles_grouped(
     value_col: str,
     probs: list[float],
     n_buckets: int = 4096,
-    out_prob: str = "p",
     out_value: str = "value",
     discrete: bool = False,
-    bounds_df: DataFrame | None = None,
-    bounds_rows: list | None = None,
 ) -> DataFrame:
     """Per-GROUP distributed exact quantiles: the grouped generalization of
     ``exact_quantiles`` — every step gains the group key, nothing else
-    changes. Per-group bounds come from one aggregate (or the caller, see
-    ``exact_quantiles_grouped_rows``); buckets key on (group, bucket);
+    changes. Per-group bounds come from one aggregate (callers that share
+    them use ``exact_quantiles_grouped_rows``); buckets key on (group, bucket);
     extraction picks ranks within (group, bucket). No task ever buffers
     more than one (group, bucket) — the per-group holistic ``percentile``
     instead buffers each group's ENTIRE column in the task that finalizes
     it (robust_stats' documented cost).
 
-    Returns (group, prob, value), equal per group to F.percentile /
+    Returns (group, p, value), equal per group to F.percentile /
     quantile_cont. EAGER: executes on call, returns a literal snapshot.
     """
     rows = exact_quantiles_grouped_rows(
-        spark, df, group_col, value_col, probs, n_buckets, discrete,
-        bounds_df=bounds_df, bounds_rows=bounds_rows,
+        spark, df, group_col, value_col, probs, n_buckets, discrete
     )
     out_schema = T.StructType(
         [
             T.StructField(group_col, df.schema[group_col].dataType, True),
-            T.StructField(out_prob, T.DoubleType(), False),
+            T.StructField("p", T.DoubleType(), False),
             T.StructField(out_value, T.DoubleType(), True),
         ]
     )

@@ -25,6 +25,18 @@ from pyspark.sql.window import Window
 from candyspark.operators.text import char_hash32
 from candyspark.sources.readers import fan_out
 
+#: the embeddings table's id and vector columns, and the vector length
+ID_COL, VEC_COL, DIM = "vec_id", "embedding", 64
+#: neighbours each ANN search keeps per query
+TOPK = 10
+#: IVF: the lowest-id vectors seed this many inverted lists, and a query
+#: probes its IVF_PROBES nearest
+IVF_CENTROIDS, IVF_PROBES = 16, 4
+#: hyperplane-LSH ANN: planes per signature, hash tables
+ANN_PLANES, ANN_TABLES = 5, 6
+#: embedding near-dup pairs: the cosine floor, and the LSH form's hash tables
+DUP_THRESHOLD, DUP_TABLES = 0.4, 8
+
 
 def _fold_sum(arr: Column) -> Column:
     """Sequential left fold Σ — same order as DuckDB list_reduce."""
@@ -58,25 +70,19 @@ def cosine_given_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
     return F.round((dot(a, b) / (na * nb)).cast("decimal(28,10)"), 6).cast("double")
 
 
-def brute_force_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = TOPK) -> DataFrame:
     """Exact top-k neighbours for every query vector (excluding self):
     (query_id, neighbor_id, rank, cosine_sim). Deterministic tiebreak:
     (sim desc, neighbor_id asc)."""
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_n"),
+        F.col(ID_COL).alias("query_id"),
+        F.col(VEC_COL).alias("q_vec"),
+        norm(F.col(VEC_COL)).alias("q_n"),
     )
     c = fan_out(embeddings).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_n"),
+        F.col(ID_COL).alias("neighbor_id"),
+        F.col(VEC_COL).alias("c_vec"),
+        norm(F.col(VEC_COL)).alias("c_n"),
     )
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -109,16 +115,10 @@ def l2sq(a: Column, b: Column) -> Column:
     )
 
 
-def ivf_assign(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_probe: int = 1,
-) -> DataFrame:
+def ivf_assign(vectors: DataFrame, centroids: DataFrame, n_probe: int = 1) -> DataFrame:
     """Assign each vector to its ``n_probe`` nearest centroids (L2):
     broadcast the (small) centroid table, score, keep rank ≤ n_probe.
-    Output: (id_col, vec_col, cluster_id, crank). ``n_probe=1`` is index
+    Output: (vec_id, embedding, cluster_id, crank). ``n_probe=1`` is index
     build; >1 is query-time multi-probe.
 
     The n_probe=1 (index-build) path aggregates ``min(struct(d2, cluster))``
@@ -126,61 +126,54 @@ def ivf_assign(
     (distance, id-tiebreak) argmin but gets map-side partial aggregation —
     at corpus scale the build shuffles one pre-combined row per vector
     rather than window-sorting every (vector × centroid) pair."""
-    scored = vectors.select(id_col, vec_col).crossJoin(F.broadcast(centroids))
-    scored = scored.withColumn("__d2", l2sq(F.col(vec_col), F.col("c_vec")))
+    scored = vectors.select(ID_COL, VEC_COL).crossJoin(F.broadcast(centroids))
+    scored = scored.withColumn("__d2", l2sq(F.col(VEC_COL), F.col("c_vec")))
     if n_probe == 1:
-        best = scored.groupBy(id_col).agg(
+        best = scored.groupBy(ID_COL).agg(
             F.min(F.struct(F.col("__d2"), F.col("cluster_id"))).alias("__m"),
-            F.any_value(F.col(vec_col)).alias(vec_col),  # 1:1 with id_col
+            F.any_value(F.col(VEC_COL)).alias(VEC_COL),  # 1:1 with the id
         )
         return best.select(
-            id_col,
-            vec_col,
+            ID_COL,
+            VEC_COL,
             F.col("__m.cluster_id").alias("cluster_id"),
             F.lit(1).alias("crank"),
         )
-    w = Window.partitionBy(id_col).orderBy(F.asc("__d2"), F.asc("cluster_id"))
+    w = Window.partitionBy(ID_COL).orderBy(F.asc("__d2"), F.asc("cluster_id"))
     return (
         scored.withColumn("crank", F.row_number().over(w))
         .filter(F.col("crank") <= n_probe)
-        .select(id_col, vec_col, "cluster_id", "crank")
+        .select(ID_COL, VEC_COL, "cluster_id", "crank")
     )
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF ANN top-k: the coarse-quantizer scale path. Centroids are the
-    ``n_centroids`` lowest-id vectors (deterministic seeds — production runs
-    Lloyd iterations on a sample; the *partitioned-search* structure is the
-    point here): every vector lands in 1 inverted list, each query probes
-    its ``n_probe`` nearest lists and scores only those candidates. Search
-    cost drops from O(N) to O(N·n_probe/n_centroids) per query; recall is
-    tuned by n_probe (measured against the exact baseline in tests).
+def ivf_topk(embeddings: DataFrame, queries: DataFrame) -> DataFrame:
+    """IVF ANN top-``TOPK``: the coarse-quantizer scale path. Centroids are
+    the ``IVF_CENTROIDS`` lowest-id vectors (deterministic seeds — production
+    runs Lloyd iterations on a sample; the *partitioned-search* structure is
+    the point here): every vector lands in 1 inverted list, each query
+    probes its ``IVF_PROBES`` nearest lists and scores only those
+    candidates. Search cost drops from O(N) to O(N·probes/centroids) per
+    query; recall is tuned by the probe count (measured against the exact
+    baseline in tests).
 
     Same output shape as ``brute_force_topk``; self-matches excluded."""
     embeddings = fan_out(embeddings)
     centroids = F.broadcast(
-        embeddings.filter(F.col(id_col) < n_centroids).select(
-            F.col(id_col).alias("cluster_id"), F.col(vec_col).alias("c_vec")
+        embeddings.filter(F.col(ID_COL) < IVF_CENTROIDS).select(
+            F.col(ID_COL).alias("cluster_id"), F.col(VEC_COL).alias("c_vec")
         )
     )
-    lists = ivf_assign(embeddings, centroids, id_col, vec_col, n_probe=1).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_n"),
+    lists = ivf_assign(embeddings, centroids).select(
+        F.col(ID_COL).alias("neighbor_id"),
+        F.col(VEC_COL).alias("c_vec"),
+        norm(F.col(VEC_COL)).alias("c_n"),
         "cluster_id",
     )
-    probes = ivf_assign(queries, centroids, id_col, vec_col, n_probe=n_probe).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_n"),
+    probes = ivf_assign(queries, centroids, n_probe=IVF_PROBES).select(
+        F.col(ID_COL).alias("query_id"),
+        F.col(VEC_COL).alias("q_vec"),
+        norm(F.col(VEC_COL)).alias("q_n"),
         "cluster_id",
     )
     scored = (
@@ -197,19 +190,14 @@ def ivf_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
         .select("query_id", "neighbor_id", "rank", "cosine_sim")
     )
 
 
-def embedding_dup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def embedding_dup_pairs(embeddings: DataFrame) -> DataFrame:
     """Embedding-cosine near-dup pairs: (vec_a, vec_b, cosine_sim ≥
-    threshold), vec_a < vec_b — the exact all-pairs verifier.
+    ``DUP_THRESHOLD``), vec_a < vec_b — the exact all-pairs verifier.
 
     O(n²) by construction: run it as-is only inside a blocking key or on a
     candidate set. At corpus scale, generate candidates with the
@@ -218,14 +206,14 @@ def embedding_dup_pairs(
     candidates→verify split in ``operators/dedup.py``."""
     embeddings = fan_out(embeddings)
     a = embeddings.select(
-        F.col(id_col).alias("vec_a"),
-        F.col(vec_col).alias("va"),
-        norm(F.col(vec_col)).alias("na"),
+        F.col(ID_COL).alias("vec_a"),
+        F.col(VEC_COL).alias("va"),
+        norm(F.col(VEC_COL)).alias("na"),
     )
     b = embeddings.select(
-        F.col(id_col).alias("vec_b"),
-        F.col(vec_col).alias("vb"),
-        norm(F.col(vec_col)).alias("nb"),
+        F.col(ID_COL).alias("vec_b"),
+        F.col(VEC_COL).alias("vb"),
+        norm(F.col(VEC_COL)).alias("nb"),
     )
     return (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
@@ -236,21 +224,14 @@ def embedding_dup_pairs(
                 F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
             ).alias("cosine_sim"),
         )
-        .filter(F.col("cosine_sim") >= threshold)
+        .filter(F.col("cosine_sim") >= DUP_THRESHOLD)
     )
 
 
-def embedding_dup_pairs_lsh(
-    embeddings: DataFrame,
-    threshold: float = 0.4,
-    planes: int = 4,
-    tables: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def embedding_dup_pairs_lsh(embeddings: DataFrame, planes: int = 4) -> DataFrame:
     """Embedding-cosine near-dup pairs, LSH-bucketed — the 100-TB scale
     path (round-5 verdict item 2). Candidates = id pairs meeting in the
-    same random-hyperplane bucket in ANY of ``tables`` hash tables (the
+    same random-hyperplane bucket in ANY of ``DUP_TABLES`` hash tables (the
     exact candidates→verify split MinHash-LSH uses in operators/dedup.py);
     each candidate is then verified with the EXACT cosine, so output pairs
     are a subset of ``embedding_dup_pairs`` with identical cosine values —
@@ -266,9 +247,7 @@ def embedding_dup_pairs_lsh(
     AT the threshold angle (66°); production near-dup thresholds
     (τ ≥ 0.85 ⇒ angle ≤ 32° ⇒ per-plane collision ≥ 0.82) clear 0.95
     recall with the same parameters."""
-    b = _with_buckets(
-        fan_out(embeddings), "vid", "vec", id_col, vec_col, tables, planes, dim=64
-    )
+    b = _with_buckets(fan_out(embeddings), "vid", "vec", DUP_TABLES, planes)
     a = b.select(
         "tbl",
         "bucket",
@@ -295,7 +274,7 @@ def embedding_dup_pairs_lsh(
                 F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
             ).alias("cosine_sim"),
         )
-        .filter(F.col("cosine_sim") >= threshold)
+        .filter(F.col("cosine_sim") >= DUP_THRESHOLD)
     )
 
 
@@ -317,10 +296,9 @@ def signature_from_matrix(vec: Column, matrix: Column, planes: int) -> Column:
     """Hyperplane-LSH bucket id of ``vec`` against a planes×dim ``matrix``
     column: per-plane projection (zip_with then SEQUENTIAL fold — the
     order the DuckDB oracle's list_reduce mirrors), sign bit, powers-of-two
-    fold to one int. The ONE copy of the signature float math — both the
-    literal-matrix form (hyperplane_signature) and the broadcast-matrix
-    form (_with_buckets) delegate here, so the oracle-critical expression
-    cannot silently fork."""
+    fold to one int. ``_with_buckets`` ships the matrices as a broadcast
+    DataFrame and evaluates this against its ``matrix`` column; the DuckDB
+    oracle recomputes the same planes in SQL (plans/extensions ``_PLANE``)."""
     bits = F.transform(
         matrix,
         lambda comp: F.when(
@@ -337,38 +315,14 @@ def signature_from_matrix(vec: Column, matrix: Column, planes: int) -> Column:
     ).cast("int")
 
 
-def hyperplane_signature(
-    vec: Column, table: int, planes: int = 5, dim: int = 64
-) -> Column:
-    """Random-hyperplane LSH bucket id for one hash table — zero shipped
-    state, reproducible on any cluster. The plane matrix depends only on
-    (table, plane, dim), so it is derived ONCE driver-side; the signature
-    math itself lives in ``signature_from_matrix``. NB the literal-matrix
-    form here is the API-surface convenience: at 2k literal nodes per
-    table Catalyst analysis+codegen dominates small queries, which is why
-    the engine's own ANN path (_with_buckets) ships the matrices as a
-    broadcast DataFrame instead — same expression, matrices as DATA.
-    (History: v1 recomputed the md5 derivation per ROW — 320 hashes per
-    vector per table; v2 emitted one fold PER PLANE — 30 compiled loops
-    whose codegen dominated; v3 is the single indexed-transform lambda.)"""
-    matrix = F.array(
-        *[
-            F.array(*[F.lit(c) for c in _plane_components(table, p, dim)])
-            for p in range(planes)
-        ]
-    )
-    return signature_from_matrix(vec, matrix, planes)
-
-
 def _with_buckets(
-    df: DataFrame, id_alias: str, vec_alias: str, id_col: str, vec_col: str,
-    tables: int, planes: int, dim: int,
+    df: DataFrame, id_alias: str, vec_alias: str, tables: int, planes: int
 ) -> DataFrame:
     """One row per (vector, table) with that table's bucket id.
 
     The plane matrices ride in as a ``tables``-row broadcast DataFrame
     rather than literal arrays inside the expression: an inlined form
-    (tables × planes × dim ≈ 2k literal nodes, duplicated on both the
+    (tables × planes × DIM ≈ 2k literal nodes, duplicated on both the
     corpus and query sides) made Catalyst analysis + codegen the dominant
     cost of the whole ANN query on small inputs — the signature math
     (same zip_with → sequential fold per plane, same integer bit-weights)
@@ -376,43 +330,32 @@ def _with_buckets(
     spark = df.sparkSession
     planes_df = spark.createDataFrame(
         [
-            (t, [_plane_components(t, p, dim) for p in range(planes)])
+            (t, [_plane_components(t, p, DIM) for p in range(planes)])
             for t in range(tables)
         ],
         "tbl int, matrix array<array<double>>",
     )
-    bucket = signature_from_matrix(F.col(vec_col), F.col("matrix"), planes)
+    bucket = signature_from_matrix(F.col(VEC_COL), F.col("matrix"), planes)
     return (
         df.crossJoin(F.broadcast(planes_df))
         .select(
-            F.col(id_col).alias(id_alias),
-            F.col(vec_col).alias(vec_alias),
+            F.col(ID_COL).alias(id_alias),
+            F.col(VEC_COL).alias(vec_alias),
             "tbl",
             bucket.alias("bucket"),
         )
     )
 
 
-def lsh_bucketed_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    planes: int = 5,
-    tables: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN top-k: candidates = vectors sharing the query's bucket in ANY of
-    ``tables`` independent hash tables (multi-table LSH — one table alone
+def lsh_bucketed_topk(embeddings: DataFrame, queries: DataFrame) -> DataFrame:
+    """ANN top-``TOPK``: candidates = vectors sharing the query's bucket (of
+    ``ANN_PLANES`` planes) in ANY of ``ANN_TABLES`` independent hash tables (multi-table LSH — one table alone
     splits true neighbours across bucket boundaries; the union restores
     recall at candidate cost ≈ tables × corpus/2^planes per query). Same
     output shape as ``brute_force_topk``; recall < 1 by construction (tests
     measure it against the exact baseline)."""
-    dim = 64
-    c = _with_buckets(
-        fan_out(embeddings), "neighbor_id", "c_vec", id_col, vec_col, tables, planes, dim
-    )
-    q = _with_buckets(queries, "query_id", "q_vec", id_col, vec_col, tables, planes, dim)
+    c = _with_buckets(fan_out(embeddings), "neighbor_id", "c_vec", ANN_TABLES, ANN_PLANES)
+    q = _with_buckets(queries, "query_id", "q_vec", ANN_TABLES, ANN_PLANES)
     scored = (
         c.withColumn("c_n", norm(F.col("c_vec")))
         .join(
@@ -433,7 +376,7 @@ def lsh_bucketed_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
         .select("query_id", "neighbor_id", "rank", "cosine_sim")
     )
 

@@ -14,6 +14,9 @@ from pyspark.sql import functions as F
 
 from candyspark.operators.text import char_hash32
 
+#: Count-Min grid: CMS_ROWS md5-salted rows of CMS_WIDTH buckets
+CMS_ROWS, CMS_WIDTH = 4, 256
+
 
 def cms_row_hash(key: Column, i: int, width: int) -> Column:
     """Row i's bucket for ``key`` in a width-``width`` Count-Min row:
@@ -26,21 +29,19 @@ def cms_row_hash(key: Column, i: int, width: int) -> Column:
     )
 
 
-def cms_hash_pairs(key: Column, d_rows: int, width: int) -> Column:
+def cms_hash_pairs(key: Column) -> Column:
     """Array of (r, b) structs — one per CMS row — for ``key``."""
     return F.array(
         *[
-            F.struct(F.lit(i).alias("r"), cms_row_hash(key, i, width).alias("b"))
-            for i in range(d_rows)
+            F.struct(F.lit(i).alias("r"), cms_row_hash(key, i, CMS_WIDTH).alias("b"))
+            for i in range(CMS_ROWS)
         ]
     )
 
 
-def cms_cells(
-    df: DataFrame, key_col: str, d_rows: int = 4, width: int = 256
-) -> DataFrame:
-    """The d×w Count-Min cell grid for ``df[key_col]``: (r, b, cnt), at
-    most d·width rows whatever the input size. Works unchanged as a
+def cms_cells(df: DataFrame, key_col: str) -> DataFrame:
+    """The CMS_ROWS × CMS_WIDTH Count-Min cell grid for ``df[key_col]``:
+    (r, b, cnt), at most 1,024 rows whatever the input size. Works unchanged as a
     streaming aggregate (complete mode): per-batch partials merge by
     cell-wise sum — the sketch's mergeability is exactly what Structured
     Streaming exploits. NULL keys are excluded (a NULL key would hash to
@@ -49,7 +50,7 @@ def cms_cells(
     the source)."""
     return (
         df.filter(F.col(key_col).isNotNull())
-        .select(F.explode(cms_hash_pairs(F.col(key_col), d_rows, width)).alias("rb"))
+        .select(F.explode(cms_hash_pairs(F.col(key_col))).alias("rb"))
         .groupBy(F.col("rb.r").alias("r"), F.col("rb.b").alias("b"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

@@ -59,9 +59,8 @@ def salted_broadcast_left(
     left_unique_col: str,
     hot_keys: DataFrame,
     buckets: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join with the hot-key slice of ``right`` replicated ``buckets``×.
+    """Inner equi-join with the hot-key slice of ``right`` replicated ``buckets``×.
 
     ``hot_keys`` is a (small, broadcastable) DataFrame of the skewed key
     values — at scale, produce it from a sampled count (e.g. keys above
@@ -91,7 +90,7 @@ def salted_broadcast_left(
         .withColumn("__salt", F.explode("__salts"))
         .drop("__salts", "__hot")
     )
-    return lsalted.join(rsalted, key_cols + ["__salt"], how).drop("__salt")
+    return lsalted.join(rsalted, key_cols + ["__salt"]).drop("__salt")
 
 
 def salted_topk(

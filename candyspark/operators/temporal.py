@@ -22,6 +22,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+#: cogroup buckets of ``asof_join_cogrouped`` (>= cluster cores, so AQE can
+#: spread them; raise it when one bucket outgrows executor memory)
+ASOF_BUCKETS = 64
+
 
 def asof_join(
     left: DataFrame,
@@ -107,7 +111,6 @@ def asof_join_cogrouped(
     right_vals: list[str],
     seq_col: str,
     prefix: str = "asof_",
-    n_buckets: int = 64,
 ) -> DataFrame:
     """The SAME contract as ``asof_join``, executed as
     ``cogroup().applyInPandas``. This is the cogrouped-map escape hatch
@@ -118,7 +121,7 @@ def asof_join_cogrouped(
     the window form stays the JVM-side fast path; keeping both behind one
     contract lets tests pin strategy equivalence.
 
-    The cogroup key is ``hash(by) % n_buckets``, NOT the raw key: with
+    The cogroup key is ``hash(by) % ASOF_BUCKETS``, NOT the raw key: with
     many tiny key groups, per-GROUP kernel-invocation overhead dominates
     (the per-user form measured ~13 s at sf0.1 for 60k users vs ~0.8 s
     for the window form). Bucketing amortizes it — one kernel call per
@@ -126,8 +129,7 @@ def asof_join_cogrouped(
     vectorized inside — measured 13.5 s → 5.6 s on that workload, and the
     bucket count (not key cardinality) now sets the invocation cost. Both sides
     hash identically, so buckets are co-partitioned; per-task memory is
-    O(rows-per-bucket) — size n_buckets ≥ cluster cores so AQE can spread
-    them, and higher when individual buckets outgrow executor memory.
+    O(rows-per-bucket).
 
     Ties mirror the window form: a same-instant right row IS visible, and
     among right ties the higher ``seq_col`` wins (merge_asof takes the
@@ -199,12 +201,12 @@ def asof_join_cogrouped(
         return out[out_cols]
 
     left_b = left.withColumn(
-        bucket, F.pmod(F.hash(*by), F.lit(n_buckets))
+        bucket, F.pmod(F.hash(*by), F.lit(ASOF_BUCKETS))
     )
     mangled = right.select(
         [F.col(c).alias(f"__r_{c}") for c in right.columns]
     ).withColumn(
-        bucket, F.pmod(F.hash(*[f"__r_{k}" for k in by]), F.lit(n_buckets))
+        bucket, F.pmod(F.hash(*[f"__r_{k}" for k in by]), F.lit(ASOF_BUCKETS))
     )
     return (
         left_b.groupBy(bucket)
@@ -213,37 +215,30 @@ def asof_join_cogrouped(
     )
 
 
-def merge_intervals(
-    df: DataFrame,
-    key_col: str = "user_id",
-    start_col: str = "s",
-    end_col: str = "e",
-    seq_col: str = "event_id",
-) -> DataFrame:
-    """Merge overlapping per-key intervals (the interval-union sweep behind
-    plans/temporal.q_interval_merge, factored for direct fuzzing): island
-    detection over the pinned (start, seq) total order — a row opens a new
-    island iff its start exceeds the running max of all PRECEDING ends
-    (rows-between frame, never range) — then min(start)/max(end) per
-    island. Returns (key, island, ms, me). Touching intervals
-    (start == previous end) MERGE: the predicate is strict ``>``.
+def merge_intervals(df: DataFrame) -> DataFrame:
+    """Merge overlapping per-user intervals ``(user_id, s, e, event_id)``
+    (the interval-union sweep behind plans/temporal.q_interval_merge,
+    factored for direct fuzzing): island detection over the pinned
+    (s, event_id) total order — a row opens a new island iff its start
+    exceeds the running max of all PRECEDING ends (rows-between frame,
+    never range) — then min(s)/max(e) per island. Returns (user_id, island,
+    ms, me). Touching intervals (start == previous end) MERGE: the predicate
+    is strict ``>``.
 
-    One exchange on the key serves both window passes and the island
+    One exchange on the user serves both window passes and the island
     aggregate; integer inputs stay exact end to end."""
-    order = Window.partitionBy(key_col).orderBy(start_col, seq_col)
-    prev_max_end = F.max(end_col).over(
+    order = Window.partitionBy("user_id").orderBy("s", "event_id")
+    prev_max_end = F.max("e").over(
         order.rowsBetween(Window.unboundedPreceding, -1)
     )
     flagged = df.withColumn(
         "__new",
-        F.when(
-            prev_max_end.isNull() | (F.col(start_col) > prev_max_end), 1
-        ).otherwise(0),
+        F.when(prev_max_end.isNull() | (F.col("s") > prev_max_end), 1).otherwise(0),
     )
     islands = flagged.withColumn(
         "island",
         F.sum("__new").over(order.rowsBetween(Window.unboundedPreceding, 0)),
     )
-    return islands.groupBy(key_col, "island").agg(
-        F.min(start_col).alias("ms"), F.max(end_col).alias("me")
+    return islands.groupBy("user_id", "island").agg(
+        F.min("s").alias("ms"), F.max("e").alias("me")
     )

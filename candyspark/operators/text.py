@@ -70,8 +70,10 @@ def _count_in(toks: Column, words: list[str]) -> Column:
     )
 
 
-def stopword_count(text: Column | str, lang: str = "en") -> Column:
-    return _count_in(tokens(text), STOPWORDS[lang])
+def stopword_count(text: Column | str) -> Column:
+    """English stopword tokens in ``text`` (``lang_scores`` counts every
+    language's list)."""
+    return _count_in(tokens(text), STOPWORDS["en"])
 
 
 def md5_prefix_int(s: Column, hex_digits: int) -> Column:
@@ -99,14 +101,18 @@ def fingerprint_md5(text: Column | str) -> Column:
     return F.md5(normalized_text(text))
 
 
-def rolling_min_hash(text: Column | str, gram: int = 16) -> Column:
+#: character n-gram width of ``rolling_min_hash`` (its oracle SQL uses it too)
+ROLLING_GRAM = 16
+
+
+def rolling_min_hash(text: Column | str) -> Column:
     """Shift-robust content fingerprint: minimum 32-bit hash over all
-    character ``gram``-grams of the normalized text (winnowing-style).
-    Short texts (< gram chars) fall back to the whole-string hash."""
+    character ``ROLLING_GRAM``-grams of the normalized text
+    (winnowing-style). Short texts fall back to the whole-string hash."""
     norm = normalized_text(text)
     grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(norm) - (gram - 1), F.lit(1))),
-        lambda i: norm.substr(i, F.lit(gram)),
+        F.sequence(F.lit(1), F.greatest(F.length(norm) - (ROLLING_GRAM - 1), F.lit(1))),
+        lambda i: norm.substr(i, F.lit(ROLLING_GRAM)),
     )
     return F.array_min(F.transform(grams, char_hash32))
 

@@ -205,24 +205,15 @@ def build_final_outputs(
     )
 
 
-def run_pipeline(spark: SparkSession, data_dir: str) -> CandyOutputs:
-    """The whole batch pipeline: load → prepare → allocate → finalize."""
-    _customers, products, transactions = load_inputs(spark, data_dir)
-    line_items = prepare_line_items(transactions)
-    allocated = allocate_inventory(line_items, products)
-    return build_final_outputs(allocated, line_items, products)
+def run_pipeline(spark: SparkSession, data_dir: str) -> tuple[CandyOutputs, dict]:
+    """The whole batch pipeline: load → prepare → allocate → finalize, with
+    flow metrics attached via ``df.observe()`` — the engine's answer to the
+    reference's count()-as-control-flow anti-pattern (A5, SURVEY.md
+    §2.5/§4.2: 17+ extra jobs, each a full re-scan). Observations are
+    accumulator-backed: they ride the SAME jobs that materialize the
+    allocation and the orders, costing no extra job at any SF.
 
-
-def run_pipeline_observed(
-    spark: SparkSession, data_dir: str
-) -> tuple[CandyOutputs, dict]:
-    """``run_pipeline`` with flow metrics attached via ``df.observe()`` —
-    the engine's answer to the reference's count()-as-control-flow
-    anti-pattern (A5, SURVEY.md §2.5/§4.2: 17+ extra jobs, each a full
-    re-scan). Observations are accumulator-backed: they ride the SAME job
-    that materializes the outputs, costing zero extra scans at any SF.
-
-    Returns the outputs plus {stage: Observation}; call ``.get`` on an
+    Returns the outputs plus {stage: Observation}; read ``.get`` on an
     Observation AFTER an action has run the corresponding frame (it
     blocks until the metrics exist)."""
     from pyspark.sql import Observation
@@ -242,17 +233,10 @@ def run_pipeline_observed(
     )
     allocated = allocate_inventory(line_items, products)
     outputs = build_final_outputs(allocated, line_items, products)
-    outputs = CandyOutputs(
-        orders=outputs.orders.observe(
-            obs["orders"],
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("total_amount").cast("decimal(14,2)"))
-            .cast("double")
-            .alias("total_sales"),
-        ),
-        order_line_items=outputs.order_line_items,
-        products_updated=outputs.products_updated,
-        daily_summary=outputs.daily_summary,
+    outputs.orders = outputs.orders.observe(
+        obs["orders"],
+        F.count(F.lit(1)).alias("n_orders"),
+        F.sum(F.col("total_amount").cast("decimal(14,2)")).cast("double").alias("total_sales"),
     )
     return outputs, obs
 
@@ -281,7 +265,7 @@ def save_outputs(outputs: CandyOutputs, out_dir: str) -> None:
 
     # sort via the sink's sort_cols (single-partition sort): a global orderBy
     # would add a RangePartitioner sampling job per output, and double-fire
-    # observe() metrics on the observed variant
+    # the observe() metrics run_pipeline attaches to the orders
     sinks = [
         (
             outputs.order_line_items.select(

@@ -979,7 +979,8 @@ def q_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("e") * F.col("e")).alias("see"),
         F.sum(F.col("de") * F.col("de")).alias("sdd"),
     )
-    dw = F.col("sdd").cast("double") / F.col("see").cast("double")
+    # a two-day series fits exactly: see = 0 gives NULL, as in DuckDB
+    dw = F.col("sdd").cast("double") / F.nullif(F.col("see").cast("double"), F.lit(0.0))
     return sums.select(
         "n_days",
         snap_round(dw, 6).alias("durbin_watson"),
@@ -1046,17 +1047,20 @@ def q_cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("double")
         .alias("sxx_c"),
-        F.round((sse / (F.col("n") - 2.0)).cast("decimal(28,6)"), 4)
+        F.round((sse / F.nullif(F.col("n") - 2.0, F.lit(0.0))).cast("decimal(28,6)"), 4)
         .cast("double")
         .alias("s2"),
     )
     xd = F.col("x").cast("double")
     e = F.col("y").cast("double") - (F.col("a") + F.col("b") * xd)
-    # a one-day series has no x spread: sxx_c = 0 gives NULL, as in DuckDB
+    # a zero divisor gives NULL, as in DuckDB: sxx_c = 0 on a one-day series
+    # (no x spread); on a two-day one n - 2 = 0 and each point's h is 1
     h = 1.0 / F.col("n") + (xd - F.col("xbar")) * (xd - F.col("xbar")) / F.nullif(
         F.col("sxx_c"), F.lit(0.0)
     )
-    d_cook = (e * e * h) / (2.0 * F.col("s2") * (1.0 - h) * (1.0 - h))
+    d_cook = (e * e * h) / F.nullif(
+        2.0 * F.col("s2") * (1.0 - h) * (1.0 - h), F.lit(0.0)
+    )
     return (
         xy.crossJoin(F.broadcast(fit))
         .select(

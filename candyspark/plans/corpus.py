@@ -1197,7 +1197,7 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests recompute the merge table with an independent Counter-based
     trainer.
     """
-    merges = _bpe_train(spark, sf_dir, rounds=4)
+    merges = _bpe_train(spark, sf_dir)
     return spark.createDataFrame(
         merges, "merge_rank int, left string, right string, merged string, weight long"
     ).orderBy("merge_rank")
@@ -1234,9 +1234,13 @@ def _bpe_fold(left: str, right: str) -> "F.Column":
     )
 
 
-def _bpe_train(spark: SparkSession, sf_dir: str, rounds: int = 4) -> list[tuple]:
+#: merge rounds the BPE trainer runs; its oracle CTE chain unrolls as many
+BPE_ROUNDS = 4
+
+
+def _bpe_train(spark: SparkSession, sf_dir: str) -> list[tuple]:
     """The training loop shared by q_bpe_train_merges (which reports the
-    merge table) and q_bpe_encode (which applies it): per round one
+    merge table) and q_bpe_encode (which applies it): per round (``BPE_ROUNDS``) one
     vocab-bounded pair count, a 1-row argmax collect, and the greedy fold.
     Returns [(rank, left, right, merged, weight), ...]."""
     from candyspark.operators.text import tokens
@@ -1250,7 +1254,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str, rounds: int = 4) -> list[tuple]
         .localCheckpoint()
     )
     merges: list[tuple] = []
-    for r in range(1, rounds + 1):
+    for r in range(1, BPE_ROUNDS + 1):
         pairs = words.filter(F.size("syms") >= 2).select(
             "freq",
             F.explode(
@@ -1294,7 +1298,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from candyspark.operators.text import tokens
 
-    merges = _bpe_train(spark, sf_dir, rounds=4)
+    merges = _bpe_train(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
     vocab = (
         d.select(F.explode(tokens("text")).alias("word"))
@@ -2310,7 +2314,7 @@ ORDER BY doc_id
 QUALITY_ENSEMBLE_SQL = _quality_ensemble_sql()
 
 
-def _bpe_round_ctes(rounds: int) -> str:
+def _bpe_round_ctes() -> str:
     """Shared CTE chain for the BPE oracles: w0 = (freq, char-syms) per
     distinct word; per round r, b{r} = argmax pair (weight DESC, l, r —
     the trainer's exact total order) and w{r} = the merge applied.
@@ -2331,7 +2335,7 @@ def _bpe_round_ctes(rounds: int) -> str:
     GROUP BY word
 )"""
     ]
-    for r in range(1, rounds + 1):
+    for r in range(1, BPE_ROUNDS + 1):
         parts.append(
             f"""b{r} AS MATERIALIZED (
     SELECT l, r, CAST(SUM(freq) AS BIGINT) AS weight FROM (
@@ -2358,26 +2362,26 @@ def _bpe_round_ctes(rounds: int) -> str:
     return ",\n".join(parts)
 
 
-def _bpe_train_merges_sql(rounds: int = 4) -> str:
+def _bpe_train_merges_sql() -> str:
     selects = " UNION ALL ".join(
         f"SELECT {r} AS merge_rank, l AS \"left\", r AS \"right\", "
         f"l || r AS merged, weight FROM b{r}"
-        for r in range(1, rounds + 1)
+        for r in range(1, BPE_ROUNDS + 1)
     )
-    return f"WITH {_bpe_round_ctes(rounds)}\n{selects} ORDER BY merge_rank"
+    return f"WITH {_bpe_round_ctes()}\n{selects} ORDER BY merge_rank"
 
 
 BPE_TRAIN_MERGES_SQL = _bpe_train_merges_sql()
 
 
-def _bpe_encode_sql(rounds: int = 4) -> str:
+def _bpe_encode_sql() -> str:
     vocab_parts = [
         f"""v0 AS (
     SELECT word, list_transform(range(1, len(word) + 1), i -> word[i]) AS syms
     FROM (SELECT DISTINCT unnest({_TOKS_FRAGMENT}) AS word FROM documents)
 )"""
     ]
-    for r in range(1, rounds + 1):
+    for r in range(1, BPE_ROUNDS + 1):
         vocab_parts.append(
             f"""v{r} AS MATERIALIZED (
     SELECT word,
@@ -2391,12 +2395,12 @@ def _bpe_encode_sql(rounds: int = 4) -> str:
         )
     vocab_ctes = ",\n".join(vocab_parts)
     return f"""
-WITH {_bpe_round_ctes(rounds)},
+WITH {_bpe_round_ctes()},
 {vocab_ctes},
 encoded AS (
     SELECT word, CAST(len(word) AS INTEGER) AS n_chars,
            CAST(len(syms) AS INTEGER) AS n_syms
-    FROM v{rounds}
+    FROM v{BPE_ROUNDS}
 ),
 psw AS (
     SELECT source, word, CAST(COUNT(*) AS BIGINT) AS freq
@@ -2656,6 +2660,10 @@ ORDER BY lang
 """
 
 
+#: weighted-PageRank rounds of q_textrank_keywords and its unrolled oracle
+TEXTRANK_ROUNDS = 6
+
+
 def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TextRank keyword extraction (Mihalcea & Tarau 2004) — weighted
     PageRank over the word co-occurrence graph: adjacent-token pairs
@@ -2703,7 +2711,7 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = edges.select(F.col("u").alias("s"), F.col("v").alias("t"), "w").unionByName(
         edges.select(F.col("v").alias("s"), F.col("u").alias("t"), "w")
     )
-    ranks = pagerank(und, "s", "t", iterations=6, weight=F.col("w"))
+    ranks = pagerank(und, "s", "t", iterations=TEXTRANK_ROUNDS, weight=F.col("w"))
     return (
         ranks.orderBy(F.desc("rank"), "node")
         .limit(25)
@@ -2711,7 +2719,7 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _textrank_sql(iterations: int = 6) -> str:
+def _textrank_sql() -> str:
     """Unrolled weighted-PageRank oracle for q_textrank_keywords — one
     (weighted-contribution-sum, rank-update) CTE pair per round; the
     rank·w/strength quotient is the identical left-associated IEEE
@@ -2737,7 +2745,7 @@ def _textrank_sql(iterations: int = 6) -> str:
         """nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes)""",
         """r0 AS (SELECT node, 1.0 / n AS rank FROM nodes CROSS JOIN nn)""",
     ]
-    for r in range(1, iterations + 1):
+    for r in range(1, TEXTRANK_ROUNDS + 1):
         parts.append(
             f"""m{r} AS MATERIALIZED (
     SELECT und.t AS node,
@@ -2760,7 +2768,7 @@ def _textrank_sql(iterations: int = 6) -> str:
     return f"""
 WITH {','.join(parts)}
 SELECT node AS term, rank
-FROM r{iterations}
+FROM r{TEXTRANK_ROUNDS}
 ORDER BY rank DESC, term
 LIMIT 25
 """

@@ -27,16 +27,15 @@ from candyspark.operators.multimodal import binary_metadata, with_binary_payload
 from candyspark.sources.readers import fan_out, load_table
 from candyspark.streaming import events as E
 from candyspark.streaming.stream import (
+    WATERMARK,
     drain,
     merged_table_path,
     read_events_stream,
     run_foreach_batch_merge,
+    streaming_click_error_join,
     streaming_cms_cells,
     streaming_dedup,
     streaming_dedup_within_watermark,
-    streaming_full_outer_join,
-    streaming_interval_join,
-    streaming_left_join,
     streaming_static_enrich,
     streaming_tumbling_agg,
 )
@@ -77,7 +76,7 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = X.tokens("text")
     n = F.size(toks)
     total_len = F.aggregate(F.transform(toks, F.length), F.lit(0), lambda a, x: a + x)
-    sw = X.stopword_count("text", "en")
+    sw = X.stopword_count("text")
     return d.select(
         "doc_id",
         n.alias("n_tokens"),
@@ -148,7 +147,7 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         X.fingerprint_md5("text").alias("fp_md5"),
-        X.rolling_min_hash("text", 16).alias("fp_rolling"),
+        X.rolling_min_hash("text").alias("fp_rolling"),
     )
 
 
@@ -156,8 +155,8 @@ DOC_FINGERPRINT_SQL = f"""
 WITH t AS (SELECT doc_id, array_to_string({_TOKS}, ' ') AS norm FROM documents)
 SELECT doc_id,
        md5(norm) AS fp_md5,
-       list_min(list_transform(range(1, greatest(length(norm) - 15, 1) + 1),
-                i -> {_HASH32.format(s="substr(norm, i, 16)")})) AS fp_rolling
+       list_min(list_transform(range(1, greatest(length(norm) - {X.ROLLING_GRAM - 1}, 1) + 1),
+                i -> {_HASH32.format(s=f"substr(norm, i, {X.ROLLING_GRAM})")})) AS fp_rolling
 FROM t
 """
 
@@ -205,15 +204,11 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     INVERTED-INDEX pair generator (round 5 — previously the all-pairs
     within-block verifier at 8.6 s/sf0.1): only shingle-sharing pairs
     materialize, |∩| by posting-join count, |∪| by inclusion-exclusion;
-    identical output for any threshold > 0 (zero-overlap pairs have
-    J = 0). The posting-list bound, not |block|², is what survives a
-    low-cardinality block key at 100 TB; the all-pairs form remains in
-    operators/dedup for pre-blocked candidate sets that must score
-    J = 0 pairs too."""
+    identical output to the all-pairs form the oracle runs (zero-overlap
+    pairs have J = 0). The posting-list bound, not |block|², is what
+    survives a low-cardinality block key at 100 TB."""
     d = load_table(spark, sf_dir, "documents")
-    return D.ngram_jaccard_pairs_inverted(
-        d, "text", "doc_id", "lang", k=3, threshold=0.6
-    )
+    return D.ngram_jaccard_pairs(d, "text", "doc_id", "lang")
 
 
 DEDUP_NGRAM_SQL = f"""
@@ -233,15 +228,15 @@ SELECT * FROM (
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(32) + LSH(8 bands) candidate pairs verified at Jaccard ≥ 0.5."""
     d = load_table(spark, sf_dir, "documents")
-    return D.minhash_lsh_pairs(d, "text", "doc_id", num_hashes=32, bands=8, k=3, threshold=0.5)
+    return D.minhash_lsh_pairs(d, "text", "doc_id")
 
 
 from candyspark.operators.dedup import perm_consts as _perm_consts  # noqa: E402
 
 # the md5-derived (a_i, b_i) constants as SQL list literals — the oracle
 # uses the exact integers the engine embeds (operators/dedup.perm_consts)
-_MINHASH_A = "[" + ", ".join(str(a) for a, _ in _perm_consts(32)) + "]"
-_MINHASH_B = "[" + ", ".join(str(b) for _, b in _perm_consts(32)) + "]"
+_MINHASH_A = "[" + ", ".join(str(a) for a, _ in _perm_consts(D.NUM_HASHES)) + "]"
+_MINHASH_B = "[" + ", ".join(str(b) for _, b in _perm_consts(D.NUM_HASHES)) + "]"
 
 # the LSH candidate stage (tokenize → shingle → hash-once → 32-slot
 # signature → 8 banded keys → colliding id pairs), shared by the Jaccard
@@ -252,14 +247,14 @@ hh AS (SELECT doc_id,
               list_transform(sh, sh_el -> {_HASH32.format(s="sh_el")} % 2147483647) AS shh
        FROM s),
 sig AS (SELECT doc_id,
-               list_transform(range(0, 32), i -> list_min(list_transform(shh,
+               list_transform(range(0, {D.NUM_HASHES}), i -> list_min(list_transform(shh,
                    h -> ({_MINHASH_A}[CAST(i + 1 AS INTEGER)] * h
                          + {_MINHASH_B}[CAST(i + 1 AS INTEGER)]) % 2147483647))) AS sig
         FROM hh),
 bands AS (SELECT doc_id, r.b AS band,
                  md5(array_to_string(list_transform(list_slice(sig, r.b * 4 + 1, r.b * 4 + 4),
                      h -> CAST(h AS VARCHAR)), ',')) AS band_key
-          FROM sig, range(0, 8) r(b)),
+          FROM sig, range(0, {D.BANDS}) r(b)),
 cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
          FROM bands x JOIN bands y
            ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id)"""
@@ -305,12 +300,12 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = tagged.select(
         "doc_id",
         "is_existing",
-        D.minhash_signature(D.shingle_hashes("text", 3), 32).alias("sig"),
+        D.minhash_signature(D.shingle_hashes("text")).alias("sig"),
     )
     bands = sigs.select(
         "doc_id",
         "is_existing",
-        F.explode(D.band_keys(F.col("sig"), 8, 4)).alias("bk"),
+        F.explode(D.band_keys(F.col("sig"), D.BANDS)).alias("bk"),
     ).select("doc_id", "is_existing", "bk.band", "bk.band_key")
     inc = bands.filter(~F.col("is_existing")).select(
         F.col("doc_id").alias("inc_id"), "band", "band_key"
@@ -356,14 +351,14 @@ hh AS (SELECT doc_id, is_existing,
               list_transform(sh, sh_el -> {_HASH32.format(s="sh_el")} % 2147483647) AS shh
        FROM s),
 sig AS (SELECT doc_id, is_existing,
-               list_transform(range(0, 32), i -> list_min(list_transform(shh,
+               list_transform(range(0, {D.NUM_HASHES}), i -> list_min(list_transform(shh,
                    h -> ({_MINHASH_A}[CAST(i + 1 AS INTEGER)] * h
                          + {_MINHASH_B}[CAST(i + 1 AS INTEGER)]) % 2147483647))) AS sig
         FROM hh),
 bands AS (SELECT doc_id, is_existing, r.b AS band,
                  md5(array_to_string(list_transform(list_slice(sig, r.b * 4 + 1, r.b * 4 + 4),
                      h -> CAST(h AS VARCHAR)), ',')) AS band_key
-          FROM sig, range(0, 8) r(b)),
+          FROM sig, range(0, {D.BANDS}) r(b)),
 cand AS (SELECT DISTINCT x.doc_id AS inc_id, y.doc_id AS ex_id
          FROM bands x JOIN bands y
            ON x.band = y.band AND x.band_key = y.band_key
@@ -406,9 +401,7 @@ def q_cross_source_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tiny) verified-pair relation back to doc sources plus one bounded
     ≤|sources|² aggregate."""
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    pairs = D.minhash_lsh_pairs(
-        d, "text", "doc_id", num_hashes=32, bands=8, k=3, threshold=0.5
-    )
+    pairs = D.minhash_lsh_pairs(d, "text", "doc_id")
     src = d.select("doc_id", "source")
     labeled = (
         pairs.join(src.withColumnRenamed("source", "src_a"), pairs.doc_a == src.doc_id)
@@ -477,9 +470,7 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-inside-doc / boilerplate-superset detector Jaccard under-scores
     (operators/dedup.containment_pairs)."""
     d = load_table(spark, sf_dir, "documents")
-    return D.containment_pairs(
-        d, "text", "doc_id", num_hashes=32, bands=8, k=3, threshold=0.5
-    )
+    return D.containment_pairs(d, "text", "doc_id")
 
 
 CONTAINMENT_PAIRS_SQL = f"""
@@ -540,7 +531,7 @@ def q_similarity_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-10 for query vectors vec_id < 5 (the ANN ground
     truth baseline)."""
     e = load_table(spark, sf_dir, "embeddings")
-    return S.brute_force_topk(e, e.filter(F.col("vec_id") < 5), k=10)
+    return S.brute_force_topk(e, e.filter(F.col("vec_id") < 5))
 
 
 SIMILARITY_BRUTEFORCE_SQL = f"""
@@ -555,7 +546,7 @@ SELECT query_id, neighbor_id, rank, cosine_sim FROM (
     SELECT *, CAST(ROW_NUMBER() OVER (
         PARTITION BY query_id ORDER BY cosine_sim DESC, neighbor_id) AS INT) AS rank
     FROM scored
-) WHERE rank <= 10
+) WHERE rank <= {S.TOPK}
 """
 
 
@@ -566,18 +557,18 @@ def q_similarity_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle below; recall vs. the brute-force baseline is
     additionally pinned in tests."""
     e = load_table(spark, sf_dir, "embeddings")
-    return S.lsh_bucketed_topk(e, e.filter(F.col("vec_id") < 5), k=10, planes=5, tables=6)
+    return S.lsh_bucketed_topk(e, e.filter(F.col("vec_id") < 5))
 
 
 # plane component p·d for table t: pseudo-uniform in [-1, 1] from md5 —
-# the SQL twin of operators/similarity.hyperplane_signature
+# the SQL twin of operators/similarity._plane_components
 _PLANE = (
     "((CAST(concat('0x', substr(md5(concat(CAST({t} AS VARCHAR), ':', "
     "CAST(p AS VARCHAR), ':', CAST(i - 1 AS VARCHAR))), 1, 8)) AS BIGINT) "
     "% 2001 - 1000) / 1000.0)"
 )
 _ANN_SIG = (
-    "CAST(list_sum(list_transform(range(0, 5), p -> "
+    f"CAST(list_sum(list_transform(range(0, {S.ANN_PLANES}), p -> "
     "CASE WHEN list_reduce(list_transform(range(1, 65), "
     f"i -> v[i] * {_PLANE.format(t='t.t')}), (a, b) -> a + b) > 0 "
     "THEN (1 << p) ELSE 0 END)) AS INTEGER)"
@@ -587,7 +578,7 @@ SIMILARITY_ANN_SQL = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 buckets AS (
     SELECT vec_id, v, t.t AS tbl, {_ANN_SIG} AS bucket
-    FROM e CROSS JOIN range(0, 6) t(t)
+    FROM e CROSS JOIN range(0, {S.ANN_TABLES}) t(t)
 ),
 qb AS (SELECT vec_id AS query_id, tbl, bucket FROM buckets WHERE vec_id < 5),
 cand AS (
@@ -606,7 +597,7 @@ SELECT query_id, neighbor_id, rank, cosine_sim FROM (
     SELECT *, CAST(ROW_NUMBER() OVER (
         PARTITION BY query_id ORDER BY cosine_sim DESC, neighbor_id) AS INT) AS rank
     FROM scored
-) WHERE rank <= 10
+) WHERE rank <= {S.TOPK}
 """
 
 
@@ -617,9 +608,7 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     are all hash-checked against the DuckDB oracle; recall vs. the exact
     baseline is additionally pinned in tests."""
     e = load_table(spark, sf_dir, "embeddings")
-    return S.ivf_topk(
-        e, e.filter(F.col("vec_id") < 5), k=10, n_centroids=16, n_probe=4
-    )
+    return S.ivf_topk(e, e.filter(F.col("vec_id") < 5))
 
 
 # sequential-fold squared L2 — the SQL twin of operators/similarity.l2sq
@@ -699,7 +688,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized once: three consumers (both pair sides + the verdict
     # join) would otherwise re-derive the assignment shuffle each
     assigned = (
-        S.ivf_assign(e, cents, "vec_id", "embedding", n_probe=1)
+        S.ivf_assign(e, cents)
         .select("vec_id", "embedding", "cluster_id")
         .localCheckpoint()
     )
@@ -774,10 +763,10 @@ def q_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed for free there, and the tiny candidate relation makes the true
     Jaccard affordable."""
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    cand = D.minhash_candidate_shingles(d, "text", "doc_id", 32, 8, 3)
+    cand = D.minhash_candidate_shingles(d, "text", "doc_id")
     sigs = d.select(
-        F.col("doc_id"), D.shingle_hashes("text", 3).alias("shh")
-    ).select("doc_id", D.minhash_signature(F.col("shh"), 32).alias("sig"))
+        F.col("doc_id"), D.shingle_hashes("text").alias("shh")
+    ).select("doc_id", D.minhash_signature(F.col("shh")).alias("sig"))
     est = (
         F.size(
             F.filter(
@@ -849,7 +838,7 @@ def q_ivf_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("cluster_id"), F.col("embedding").alias("c_vec")
         )
     )
-    lists = S.ivf_assign(e, cents, "vec_id", "embedding", n_probe=1)
+    lists = S.ivf_assign(e, cents)
     return (
         lists.groupBy("cluster_id")
         .agg(
@@ -954,7 +943,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned separately in tests (~0.80 on these fixtures, whose pairs all
     sit AT the threshold angle — production τ≥0.85 clears 0.95)."""
     e = load_table(spark, sf_dir, "embeddings")
-    return S.embedding_dup_pairs_lsh(e, threshold=0.4, planes=4, tables=8)
+    return S.embedding_dup_pairs_lsh(e)
 
 
 def q_dedup_embedding_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -962,7 +951,7 @@ def q_dedup_embedding_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     VERIFIER for `dedup_embedding` (ground truth for its recall test; run
     at scale only inside a blocking key or on a candidate set)."""
     e = load_table(spark, sf_dir, "embeddings")
-    return S.embedding_dup_pairs(e, threshold=0.4)
+    return S.embedding_dup_pairs(e)
 
 
 # 4-plane signature (the dedup variant; _ANN_SIG is the 5-plane ANN one)
@@ -977,7 +966,7 @@ DEDUP_EMBEDDING_SQL = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 buckets AS (
     SELECT vec_id, t.t AS tbl, {_DUP_SIG} AS bucket
-    FROM e CROSS JOIN range(0, 8) t(t)
+    FROM e CROSS JOIN range(0, {S.DUP_TABLES}) t(t)
 ),
 cand AS (
     SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
@@ -990,7 +979,7 @@ SELECT * FROM (
     FROM cand
     JOIN e ea ON ea.vec_id = cand.vec_a
     JOIN e eb ON eb.vec_id = cand.vec_b
-) WHERE cosine_sim >= 0.4
+) WHERE cosine_sim >= {S.DUP_THRESHOLD}
 """
 
 DEDUP_EMBEDDING_EXACT_SQL = f"""
@@ -999,7 +988,7 @@ SELECT * FROM (
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
            {_COS_SQL.replace("q_vec", "a.v").replace("c_vec", "b.v")} AS cosine_sim
     FROM e a JOIN e b ON a.vec_id < b.vec_id
-) WHERE cosine_sim >= 0.4
+) WHERE cosine_sim >= {S.DUP_THRESHOLD}
 """
 
 
@@ -1027,7 +1016,7 @@ def q_dedup_embedding_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n = e.count()
     planes = max(4, math.ceil(math.log2(max(n, 1) / 32.0)))
-    return S.embedding_dup_pairs_lsh(e, threshold=0.4, planes=planes, tables=8)
+    return S.embedding_dup_pairs_lsh(e, planes=planes)
 
 
 def _dup_sig_adaptive() -> str:
@@ -1048,7 +1037,7 @@ np AS (
 ),
 buckets AS (
     SELECT vec_id, t.t AS tbl, {_dup_sig_adaptive()} AS bucket
-    FROM e CROSS JOIN range(0, 8) t(t)
+    FROM e CROSS JOIN range(0, {S.DUP_TABLES}) t(t)
 ),
 cand AS (
     SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
@@ -1061,7 +1050,7 @@ SELECT * FROM (
     FROM cand
     JOIN e ea ON ea.vec_id = cand.vec_a
     JOIN e eb ON eb.vec_id = cand.vec_b
-) WHERE cosine_sim >= 0.4
+) WHERE cosine_sim >= {S.DUP_THRESHOLD}
 """
 
 
@@ -1084,10 +1073,7 @@ def q_split_leakage_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged = e.select(
         "vec_id", "embedding", "label", (bucket100 < 90).alias("is_train")
     )
-    b = S._with_buckets(
-        fan_out(tagged), "vid", "vec", "vec_id", "embedding", tables=8, planes=4,
-        dim=64,
-    )
+    b = S._with_buckets(fan_out(tagged), "vid", "vec", S.DUP_TABLES, planes=4)
     sides = b.join(
         tagged.select(F.col("vec_id").alias("vid"), "is_train"), "vid"
     )
@@ -1180,7 +1166,7 @@ def q_multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column plumbing: payload bytes → Arrow-batched mapInPandas
     kernel → (n_bytes, header_hex, checksum). The oracle recomputes the
     kernel's outputs in SQL (ASCII text payloads ⇒ byte = codepoint)."""
-    d = with_binary_payload(load_table(spark, sf_dir, "documents"), "text")
+    d = with_binary_payload(load_table(spark, sf_dir, "documents"))
     return binary_metadata(d, "doc_id", "payload")
 
 
@@ -1220,7 +1206,7 @@ def q_multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet; only the Spark kernel path applies there."""
     from candyspark.operators.multimodal import phash_codes
 
-    d = with_binary_payload(load_table(spark, sf_dir, "documents"), "text")
+    d = with_binary_payload(load_table(spark, sf_dir, "documents"))
     ph = phash_codes(d, "doc_id", "payload").localCheckpoint()
     bands = ph.select(
         "doc_id",
@@ -1308,11 +1294,11 @@ ORDER BY doc_a, doc_b
 
 
 def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return E.tumbling_agg(load_table(spark, sf_dir, "events"), "1 hour")
+    return E.tumbling_agg(load_table(spark, sf_dir, "events"))
 
 
-EVENTS_TUMBLING_SQL = """
-SELECT time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP)) AS window_start,
+EVENTS_TUMBLING_SQL = f"""
+SELECT time_bucket(INTERVAL '{E.WINDOW}', CAST(ts AS TIMESTAMP)) AS window_start,
        event_type,
        COUNT(*) AS num_events,
        CAST(ROUND(SUM(CAST(value AS DECIMAL(12,2))), 2) AS DOUBLE) AS total_value
@@ -1322,7 +1308,7 @@ GROUP BY 1, 2
 
 
 def q_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return E.sliding_agg(load_table(spark, sf_dir, "events"), "1 hour", "30 minutes")
+    return E.sliding_agg(load_table(spark, sf_dir, "events"))
 
 
 EVENTS_SLIDING_SQL = """
@@ -1343,7 +1329,7 @@ GROUP BY 1, 2
 
 
 def q_events_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return E.session_agg(load_table(spark, sf_dir, "events"), "30 minutes")
+    return E.session_agg(load_table(spark, sf_dir, "events"))
 
 
 EVENTS_SESSION_SQL = """
@@ -1782,7 +1768,7 @@ def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     with _landed(events) as (src, ckpt):
         return drain(
-            streaming_tumbling_agg(read_events_stream(spark, src), "1 hour", "2 hours"),
+            streaming_tumbling_agg(read_events_stream(spark, src)),
             "complete",
             ckpt,
         )
@@ -1895,7 +1881,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = read_events_stream(spark, src)
         clicks = stream.filter(F.col("event_type") == "click")
         errors = stream.filter(F.col("event_type") == "error")
-        out = drain(streaming_interval_join(clicks, errors), "append", ckpt)
+        out = drain(streaming_click_error_join(clicks, errors, "inner"), "append", ckpt)
     return out.select("c_user", "click_ts", "click_id", "error_ts", "error_id")
 
 
@@ -1928,7 +1914,7 @@ def q_streaming_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = read_events_stream(spark, src)
         clicks = stream.filter(F.col("event_type") == "click")
         errors = stream.filter(F.col("event_type") == "error")
-        out = drain(streaming_left_join(clicks, errors), "append", ckpt)
+        out = drain(streaming_click_error_join(clicks, errors, "leftOuter"), "append", ckpt)
     return out.filter(F.col("c_user") >= 0).select(
         "c_user", "click_ts", "click_id", "error_ts", "error_id"
     )
@@ -1964,7 +1950,7 @@ def q_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = read_events_stream(spark, src)
         clicks = stream.filter(F.col("event_type") == "click")
         errors = stream.filter(F.col("event_type") == "error")
-        out = drain(streaming_full_outer_join(clicks, errors), "append", ckpt)
+        out = drain(streaming_click_error_join(clicks, errors, "fullOuter"), "append", ckpt)
     user = F.coalesce(F.col("c_user"), F.col("e_user"))
     return out.filter(user >= 0).select(
         user.alias("user"), "click_ts", "click_id", "error_ts", "error_id"
@@ -1991,12 +1977,10 @@ def q_streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow run so the watermark cannot drop sessions (multi-batch
     session merging is the state store's concern; batch equivalence is the
     contract here)."""
-    from candyspark.streaming.events import session_agg
-
     events = load_table(spark, sf_dir, "events")
     with _landed(events) as (src, ckpt):
-        stream = read_events_stream(spark, src).withWatermark("ts", "2 hours")
-        return drain(session_agg(stream, "30 minutes"), "complete", ckpt)
+        stream = read_events_stream(spark, src).withWatermark("ts", WATERMARK)
+        return drain(E.session_agg(stream), "complete", ckpt)
 
 
 STREAMING_SESSION_SQL = EVENTS_SESSION_SQL
@@ -2168,6 +2152,10 @@ ORDER BY lang, source
 """
 
 
+#: k-means clusters and Lloyd rounds, for the query and its unrolled oracle
+KMEANS_K, KMEANS_ITERS = 8, 3
+
+
 def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed Lloyd k-means over the embeddings table (k=8, 3
     iterations, deterministic seeding/tie-breaks — operators/clustering).
@@ -2185,7 +2173,7 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from candyspark.operators.similarity import norm
 
     emb = fan_out(load_table(spark, sf_dir, "embeddings"))
-    assigned, centroids = kmeans(emb, k=8, max_iter=3)
+    assigned, centroids = kmeans(emb, k=KMEANS_K, max_iter=KMEANS_ITERS)
     sizes = assigned.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("num_vectors"))
     return (
         sizes.join(centroids, "cluster_id")
@@ -2198,7 +2186,7 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kmeans_clusters_sql(k: int = 8, iters: int = 3) -> str:
+def _kmeans_clusters_sql() -> str:
     """Unrolled Lloyd oracle: one (assign, mean) CTE pair per iteration,
     mirroring operators/clustering step for step — the same quantized
     decimal sums, the same single division, the same float32 (REAL) snap,
@@ -2206,10 +2194,10 @@ def _kmeans_clusters_sql(k: int = 8, iters: int = 3) -> str:
     parts = [
         "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)",
         f"cents_0 AS (SELECT vec_id AS cluster_id, v AS c_vec FROM e "
-        f"WHERE vec_id < {k})",
+        f"WHERE vec_id < {KMEANS_K})",
     ]
     prev = "cents_0"
-    for r in range(1, iters + 1):
+    for r in range(1, KMEANS_ITERS + 1):
         parts.append(
             f"""a{r} AS (
     SELECT vec_id, v, cluster_id FROM (
@@ -3500,6 +3488,11 @@ ORDER BY label_a, label_b
 """
 
 
+#: diverse picks per query of q_similarity_mmr; its oracle unrolls one
+#: argmax step per pick
+MMR_PICKS = 5
+
+
 def q_similarity_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MMR-diversified retrieval: exact cosine top-20 candidates for query
     vectors vec_id < 5 (same ground-truth ranker as similarity_bruteforce),
@@ -3515,7 +3508,7 @@ def q_similarity_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "neighbor_id",
     ).select("query_id", "neighbor_id", "cosine_sim", "c_vec")
-    return S.mmr_rerank(with_vec, lam=0.7, k=5).orderBy("query_id", "mmr_rank")
+    return S.mmr_rerank(with_vec, lam=0.7, k=MMR_PICKS).orderBy("query_id", "mmr_rank")
 
 
 def q_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4106,7 +4099,7 @@ def q_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 50)
     index = e.filter(F.col("vec_id") >= 50)
-    nn = S.brute_force_topk(index, queries, k=10)
+    nn = S.brute_force_topk(index, queries)
     labeled = nn.join(
         e.select(F.col("vec_id").alias("neighbor_id"), F.col("label").alias("n_label")),
         "neighbor_id",
@@ -4236,7 +4229,7 @@ ORDER BY b.query_id
 """
 
 
-def _similarity_mmr_sql(k: int = 5) -> str:
+def _similarity_mmr_sql() -> str:
     """Unrolled greedy-MMR oracle (one argmax CTE pair per selection):
     possible because the kernel SNAPS pairwise penalties to 6 dp (see
     operators/similarity.mmr_rerank's cross-engine contract) — every
@@ -4273,7 +4266,7 @@ def _similarity_mmr_sql(k: int = 5) -> str:
     ) WHERE rn = 1
 )""",
     ]
-    for r in range(2, k + 1):
+    for r in range(2, MMR_PICKS + 1):
         parts.append(
             f"""m{r} AS (
     SELECT c.query_id, c.neighbor_id, c.rel,
@@ -4306,7 +4299,7 @@ WITH {','.join(parts)}
 SELECT query_id, neighbor_id, CAST(mmr_rank AS INTEGER) AS mmr_rank,
        rel AS relevance,
        CAST(ROUND(CAST(s AS DECIMAL(28,8)), 6) AS DOUBLE) AS mmr_score
-FROM all{k}
+FROM all{MMR_PICKS}
 ORDER BY query_id, mmr_rank
 """
 
@@ -5114,15 +5107,13 @@ def q_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("cluster_id"), F.col("embedding").alias("c_vec")
         )
     )
-    lists = S.ivf_assign(emb, centroids, "vec_id", "embedding", n_probe=1).select(
+    lists = S.ivf_assign(emb, centroids).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c_emb"),
         S.norm(F.col("embedding")).alias("c_n"),
         "cluster_id",
     )
-    probes = S.ivf_assign(
-        queries, centroids, "vec_id", "embedding", n_probe=4
-    ).select(
+    probes = S.ivf_assign(queries, centroids, n_probe=S.IVF_PROBES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_vec"),
         S.norm(F.col("embedding")).alias("q_n"),
@@ -5744,15 +5735,14 @@ def q_lsh_band_fpr(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical bands). Same shuffle economics as dedup_minhash: band keys
     travel, shingles re-join only for the candidate verification."""
     d = load_table(spark, sf_dir, "documents")
-    rows_per_band = 32 // 8
     df = fan_out(d)
     sh_tbl = df.select(F.col("doc_id"), D.word_shingles("text", 3).alias("sh"))
     sigs = df.select(
-        "doc_id", D.shingle_hashes("text", 3).alias("shh")
-    ).select("doc_id", D.minhash_signature(F.col("shh"), 32).alias("sig"))
+        "doc_id", D.shingle_hashes("text").alias("shh")
+    ).select("doc_id", D.minhash_signature(F.col("shh")).alias("sig"))
     banded = sigs.select(
         "doc_id",
-        F.explode(D.band_keys(F.col("sig"), 8, rows_per_band)).alias("bk"),
+        F.explode(D.band_keys(F.col("sig"), D.BANDS)).alias("bk"),
     ).select(
         "doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
     )

@@ -16,8 +16,18 @@ from pyspark.sql import functions as F
 
 from candyspark.operators import dedup as D
 from candyspark.operators.components import checkpoint_observed, dedup_clusters
+from candyspark.operators.lpa import ROUNDS as LPA_ROUNDS
 from candyspark.plans.extensions import DEDUP_MINHASH_SQL
 from candyspark.sources.readers import load_table
+
+#: power-iteration rounds of pagerank_parts, personalized_pagerank and
+#: hits_customers_parts; each oracle unrolls the same count
+PAGERANK_ROUNDS = 8
+#: k of kcore_parts; peeling stops at its fixpoint or after KCORE_MAX_ROUNDS,
+#: and the oracle unrolls KCORE_ORACLE_ROUNDS (the fixtures converge in <= 3)
+KCORE_K, KCORE_MAX_ROUNDS, KCORE_ORACLE_ROUNDS = 3, 20, 12
+#: hops from the hub that bfs_hop_histogram expands
+BFS_HOPS = 4
 
 # near-dup edges: the MinHash-LSH pair generator (the linear-ish scale path —
 # a lang-blocked all-pairs Jaccard would be O(block²) and was measured 6×
@@ -43,9 +53,7 @@ lab AS (SELECT node AS doc_id, MIN(label) AS cluster_id FROM reach GROUP BY node
 def _near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same generator + parameters as the dedup_minhash query
     d = load_table(spark, sf_dir, "documents")
-    return D.minhash_lsh_pairs(
-        d, "text", "doc_id", num_hashes=32, bands=8, k=3, threshold=0.5
-    )
+    return D.minhash_lsh_pairs(d, "text", "doc_id")
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -192,7 +200,7 @@ def q_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("u").alias("src"), F.col("v").alias("dst")
     )
     edges = symmetrize(pairs, "src", "dst")
-    ranks = pagerank(edges, "a", "b", damping=0.85, iterations=8)
+    ranks = pagerank(edges, "a", "b", damping=0.85, iterations=PAGERANK_ROUNDS)
     return (
         ranks.select(F.col("node").alias("part"), "rank")
         .orderBy(F.desc("rank"), "part")
@@ -515,9 +523,7 @@ LIMIT 25
 """
 
 
-def kcore_decompose(
-    edges: DataFrame, k: int, max_rounds: int = 20
-) -> DataFrame:
+def kcore_decompose(edges: DataFrame, k: int) -> DataFrame:
     """The k-core of an undirected edge set ``(u, v)``: iteratively peel
     vertices of degree < k until a fixpoint; returns the surviving
     vertices with their within-core degree. The density filter graph
@@ -530,13 +536,13 @@ def kcore_decompose(
     lineage); the surviving edge count is observed on that checkpoint job
     (``checkpoint_observed``, no count job of its own) and the loop stops
     at the fixpoint — peeling converges in ≤ rounds the
-    depth of the degeneracy ordering, and ``max_rounds`` bounds the
+    depth of the degeneracy ordering, and ``KCORE_MAX_ROUNDS`` bounds the
     pathological chain. Rows-only driver check (iterative); fuzzed
     against a single-threaded peeling reference in test_components.
     """
     n_edges = F.count(F.lit(1))
     und, prev_edges = checkpoint_observed(edges.select("u", "v"), n_edges)
-    for _ in range(max_rounds):
+    for _ in range(KCORE_MAX_ROUNDS):
         deg = (
             und.select(F.col("u").alias("x"))
             .unionByName(und.select(F.col("v").alias("x")))
@@ -572,7 +578,7 @@ def q_kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.01, but none at sf0.1: there peeling removes every vertex of the
     ≥2-order edge set (:func:`copurchase_edges_sql` in the oracle), so an
     sf0.1 bench of this query times peeling down to an empty result."""
-    return kcore_decompose(_copurchase_edges(spark, sf_dir), k=3)
+    return kcore_decompose(_copurchase_edges(spark, sf_dir), k=KCORE_K)
 
 
 def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -793,7 +799,7 @@ def q_hits_customers_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     buyers = edges.groupBy("dst").agg(F.count(F.lit(1)).alias("n_buyers"))
-    _, auths = hits(edges, rounds=8, prepared=True)
+    _, auths = hits(edges, rounds=PAGERANK_ROUNDS, prepared=True)
     return (
         auths.join(buyers, "dst")
         .select(
@@ -806,7 +812,7 @@ def q_hits_customers_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hits_sql(rounds: int = 8) -> str:
+def _hits_sql() -> str:
     """Unrolled HITS oracle (the pagerank/LPA unrolling precedent): one
     (auth-sum, hub-sum, hub-normalize) CTE triple per round, mirroring
     operators/hits.py exactly — per-edge contributions snap to
@@ -830,7 +836,7 @@ def _hits_sql(rounds: int = 8) -> str:
     FROM srcs CROSS JOIN n0
 )""",
     ]
-    for r in range(1, rounds + 1):
+    for r in range(1, PAGERANK_ROUNDS + 1):
         parts.append(
             f"""a{r} AS MATERIALIZED (
     SELECT e.dst, SUM(CAST(h.hub AS DECIMAL(24,14))) AS auth
@@ -861,9 +867,9 @@ afin AS (
     SELECT dst,
            CAST(CAST(CAST(auth AS DOUBLE)
                 / (SELECT CAST(SUM(CAST(auth AS DECIMAL(24,14))) AS DOUBLE)
-                   FROM a{rounds})
+                   FROM a{PAGERANK_ROUNDS})
                 AS DECIMAL(24,14)) AS DOUBLE) AS auth
-    FROM a{rounds}
+    FROM a{PAGERANK_ROUNDS}
 ),
 buyers AS (SELECT dst, CAST(COUNT(*) AS BIGINT) AS n_buyers FROM e GROUP BY dst)
 SELECT afin.dst AS part,
@@ -976,7 +982,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from candyspark.operators.lpa import label_propagation
 
     und = _copurchase_edges(spark, sf_dir)
-    labels = label_propagation(und, src="u", dst="v", max_rounds=5)
+    labels = label_propagation(und, src="u", dst="v")
     return (
         labels.groupBy("label")
         .agg(F.count(F.lit(1)).alias("n_members"))
@@ -986,21 +992,21 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _label_propagation_sql(rounds: int = 5) -> str:
+def _label_propagation_sql() -> str:
     """Unrolled synchronous-LPA oracle (the kmeans/markov unrolling
     precedent): one vote-count + plurality-argmin CTE pair per round. All
     state is INTEGER (labels, counts) and the plurality pick is a total
     order (cnt DESC, label ASC — operators/lpa's min(struct(-cnt,label))),
     so no float discipline is needed anywhere. The Spark side may break
     early on convergence; converged labels are a FIXED POINT of the vote,
-    so the full {rounds}-round unroll is value-identical regardless of
+    so the full LPA_ROUNDS-round unroll is value-identical regardless of
     where the driver stopped."""
     parts = [
         copurchase_edges_sql("e0"),
         """und AS (SELECT u AS a, v AS b FROM e0 UNION SELECT v AS a, u AS b FROM e0)""",
         """l0 AS (SELECT DISTINCT a AS node, a AS label FROM und)""",
     ]
-    for r in range(1, rounds + 1):
+    for r in range(1, LPA_ROUNDS + 1):
         parts.append(
             f"""c{r} AS MATERIALIZED (
     SELECT node, label, COUNT(*) AS cnt FROM (
@@ -1023,7 +1029,7 @@ def _label_propagation_sql(rounds: int = 5) -> str:
     return f"""
 WITH {','.join(parts)}
 SELECT label AS community, CAST(COUNT(*) AS BIGINT) AS n_members
-FROM l{rounds}
+FROM l{LPA_ROUNDS}
 GROUP BY label
 ORDER BY n_members DESC, community
 LIMIT 20
@@ -1033,7 +1039,7 @@ LIMIT 20
 LABEL_PROPAGATION_SQL = _label_propagation_sql()
 
 
-def _pagerank_parts_sql(iterations: int = 8) -> str:
+def _pagerank_parts_sql() -> str:
     """Unrolled power-iteration oracle for q_pagerank_parts: one
     (contribution-sum, rank-update) CTE pair per round. The operator's own
     determinism discipline is what makes this possible — per-edge
@@ -1048,7 +1054,7 @@ def _pagerank_parts_sql(iterations: int = 8) -> str:
         """nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes)""",
         """r0 AS (SELECT node, 1.0 / n AS rank FROM nodes CROSS JOIN nn)""",
     ]
-    for r in range(1, iterations + 1):
+    for r in range(1, PAGERANK_ROUNDS + 1):
         parts.append(
             f"""m{r} AS MATERIALIZED (
     SELECT und.b AS node,
@@ -1071,7 +1077,7 @@ def _pagerank_parts_sql(iterations: int = 8) -> str:
     return f"""
 WITH {','.join(parts)}
 SELECT node AS part, rank
-FROM r{iterations}
+FROM r{PAGERANK_ROUNDS}
 ORDER BY rank DESC, part
 LIMIT 50
 """
@@ -1080,24 +1086,24 @@ LIMIT 50
 PAGERANK_PARTS_SQL = _pagerank_parts_sql()
 
 
-def _kcore_parts_sql(k: int = 3, rounds: int = 12) -> str:
+def _kcore_parts_sql() -> str:
     """Unrolled peeling oracle for q_kcore_parts: each round drops edges
     with a sub-k-degree endpoint. Peeling is a FIXED POINT (a stable edge
     set stays stable), so the Spark side's converge-and-break and this
-    fixed {rounds}-round unroll agree whenever peeling converges within
-    {rounds} rounds at the oracle SF — the fixture converges in ≤3
+    fixed KCORE_ORACLE_ROUNDS-round unroll agree whenever peeling converges
+    within that many rounds at the oracle SF — the fixture converges in ≤3
     (test_components fuzz); 12 is a 4× margin. All state is integer."""
     parts = [
         copurchase_edges_sql("g0"),
     ]
-    for r in range(1, rounds + 1):
+    for r in range(1, KCORE_ORACLE_ROUNDS + 1):
         parts.append(
             f"""k{r} AS MATERIALIZED (
     SELECT x FROM (
         SELECT x, COUNT(*) AS deg FROM (
             SELECT u AS x FROM g{r - 1} UNION ALL SELECT v AS x FROM g{r - 1}
         ) GROUP BY x
-    ) WHERE deg >= {k}
+    ) WHERE deg >= {KCORE_K}
 )"""
         )
         parts.append(
@@ -1109,7 +1115,7 @@ def _kcore_parts_sql(k: int = 3, rounds: int = 12) -> str:
     return f"""
 WITH {','.join(parts)}
 SELECT vertex, CAST(COUNT(*) AS BIGINT) AS core_degree
-FROM (SELECT u AS vertex FROM g{rounds} UNION ALL SELECT v AS vertex FROM g{rounds})
+FROM (SELECT u AS vertex FROM g{KCORE_ORACLE_ROUNDS} UNION ALL SELECT v AS vertex FROM g{KCORE_ORACLE_ROUNDS})
 GROUP BY vertex
 ORDER BY core_degree DESC, vertex
 """
@@ -1148,7 +1154,7 @@ def q_bfs_hop_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     visited = seed.localCheckpoint(eager=True)
     frontier = visited
-    for h in range(1, 5):
+    for h in range(1, BFS_HOPS + 1):
         nxt = (
             sym.join(frontier.select(F.col("node").alias("a")), "a")
             .select(F.col("b").alias("node"))
@@ -1177,7 +1183,7 @@ def q_bfs_hop_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bfs_hop_histogram_sql(rounds: int = 4) -> str:
+def _bfs_hop_histogram_sql() -> str:
     """Unrolled BFS oracle: per round a frontier-expansion CTE and a
     visited-union CTE; all state integer, seed deterministic."""
     parts = [
@@ -1187,7 +1193,7 @@ def _bfs_hop_histogram_sql(rounds: int = 4) -> str:
         """v0 AS (SELECT a AS node, 0 AS hop FROM deg ORDER BY deg DESC, a LIMIT 1)""",
         """f0 AS (SELECT node FROM v0)""",
     ]
-    for h in range(1, rounds + 1):
+    for h in range(1, BFS_HOPS + 1):
         parts.append(
             f"""new{h} AS MATERIALIZED (
     SELECT n.node, {h} AS hop FROM (
@@ -1202,10 +1208,10 @@ def _bfs_hop_histogram_sql(rounds: int = 4) -> str:
     return f"""
 WITH {','.join(parts)}
 SELECT CAST(hop AS INTEGER) AS hop, CAST(COUNT(*) AS BIGINT) AS n_parts
-FROM v{rounds} GROUP BY hop
+FROM v{BFS_HOPS} GROUP BY hop
 UNION ALL
 SELECT -1 AS hop,
-       CAST((SELECT COUNT(DISTINCT a) FROM und) - (SELECT COUNT(*) FROM v{rounds}) AS BIGINT)
+       CAST((SELECT COUNT(DISTINCT a) FROM und) - (SELECT COUNT(*) FROM v{BFS_HOPS}) AS BIGINT)
 FROM (VALUES (1))
 ORDER BY hop
 """
@@ -1277,7 +1283,7 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("is_seed") == 1, F.lit(base12)).otherwise(F.lit(0))
             + F.expr("(85 * coalesce(mass, 0L) * 2 + 10000) div 20000")
         ).cast("long").alias("r12"),
-        8,
+        PAGERANK_ROUNDS,
     )
     return (
         ranks.select(
@@ -1289,7 +1295,7 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _personalized_pagerank_sql(iterations: int = 8) -> str:
+def _personalized_pagerank_sql() -> str:
     """Unrolled integer-state PPR oracle: ranks at scale 10^12, half-up
     integer division mirrored as (2a+b)//(2b) — every round's state is
     int64, so the chain is bit-exact with the Spark loop by construction."""
@@ -1309,7 +1315,7 @@ def _personalized_pagerank_sql(iterations: int = 8) -> str:
 )""",
         """r0 AS (SELECT node, CASE WHEN is_seed = 1 THEN init12 ELSE 0 END AS r12 FROM np)""",
     ]
-    for r in range(1, iterations + 1):
+    for r in range(1, PAGERANK_ROUNDS + 1):
         parts.append(
             f"""m{r} AS MATERIALIZED (
     SELECT und.b AS node,
@@ -1332,7 +1338,7 @@ def _personalized_pagerank_sql(iterations: int = 8) -> str:
     return f"""
 WITH {','.join(parts)}
 SELECT node AS part, CAST(r12 AS DOUBLE) / 1000000000000.0 AS rank
-FROM r{iterations}
+FROM r{PAGERANK_ROUNDS}
 ORDER BY rank DESC, part
 LIMIT 50
 """

@@ -17,6 +17,7 @@ from pyspark.sql import types as T
 
 from candyspark.functions.numeric import snap_round
 from candyspark.operators.text import char_hash32
+from candyspark.plans.analytics import daily_revenue, daily_revenue_sql
 from candyspark.plans.candy import (
     TREND_SUMS_SQL,
     line_fit,
@@ -927,15 +928,12 @@ def q_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     C(n_days, 2) — day keys are distinct by construction, so the pair
     count needs no second pass over the join.
     """
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate").between("1995-01-01", "1995-12-31")
-    )
     days = (
-        o.groupBy(F.col("o_orderdate").alias("d"))
-        .agg(F.sum(F.col("o_totalprice").cast("decimal(12,2)")).alias("rev"))
+        daily_revenue(spark, sf_dir, F.col("o_orderdate").alias("d"))
+        .filter(F.col("d").between("1995-01-01", "1995-12-31"))
         .select(
             F.datediff(F.col("d"), F.lit("1992-01-01").cast("date")).alias("x"),
-            F.col("rev").cast("decimal(18,2)").alias("y"),
+            F.col("r").cast("decimal(18,2)").alias("y"),
         )
         .localCheckpoint()  # feeds the pair join (twice via alias) + resid
     )
@@ -970,13 +968,12 @@ def q_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-THEILSEN_TREND_SQL = """
-WITH days AS (
-    SELECT datediff('day', DATE '1992-01-01', o_orderdate) AS x,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DECIMAL(18,2)) AS y
-    FROM orders
-    WHERE o_orderdate BETWEEN DATE '1995-01-01' AND DATE '1995-12-31'
-    GROUP BY o_orderdate
+THEILSEN_TREND_SQL = f"""
+WITH {daily_revenue_sql("o_orderdate AS d")},
+days AS (
+    SELECT datediff('day', DATE '1992-01-01', d) AS x, CAST(r AS DECIMAL(18,2)) AS y
+    FROM daily
+    WHERE d BETWEEN DATE '1995-01-01' AND DATE '1995-12-31'
 ),
 slopes AS (
     SELECT CAST(ROUND(CAST(
@@ -1167,7 +1164,6 @@ def q_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         spend,
         "spend",
         [i / 10.0 for i in range(1, 10)],
-        out_prob="p",
         out_value="b",
     )
     blist = bounds.agg(

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from candyspark.functions.numeric import snap_round
 from candyspark.operators.text import char_hash32, md5_prefix_int
+from candyspark.plans.candy import line_fit, line_fit_sql, line_sums, line_sums_sql
 from candyspark.plans.stats2 import (
     MIDRANK2_SQL,
     doubled_midrank,
@@ -756,7 +757,7 @@ def q_price_quantiles_distributed(spark: SparkSession, sf_dir: str) -> DataFrame
     li = load_table(spark, sf_dir, "lineitem")
     probs = [i / 10.0 for i in range(11)]
     return exact_quantiles(
-        spark, li, "l_extendedprice", probs, out_prob="p", out_value="price"
+        spark, li, "l_extendedprice", probs, out_value="price"
     ).select("p", snap_round(F.col("price"), 4).alias("price"))
 
 
@@ -2490,24 +2491,12 @@ def q_regression_discontinuity(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("x") <= F.lit(1000).cast("decimal(12,2)"))
     )
     sums = banded.groupBy("right_side").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("decimal(24,2)").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y").cast("decimal(18,0)"))
-        .cast("decimal(30,2)")
-        .alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("decimal(30,4)").alias("sxx"),
+        *line_sums(F.col("x"), F.col("y").cast("decimal(18,0)"))
     )
-    n = F.col("n").cast("double")
-    sx = F.col("sx").cast("double")
-    sy = F.col("sy").cast("double")
-    sxy = F.col("sxy").cast("double")
-    sxx = F.col("sxx").cast("double")
-    slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-    intercept = (sy - slope * sx) / n
+    slope, intercept = line_fit()
     fits = sums.select(
         "right_side",
-        "n",
+        F.col("n").cast("long").alias("n"),
         snap_round(intercept, 6).alias("icept"),
         snap_round(slope, 8).alias("slope"),
     )
@@ -2530,7 +2519,7 @@ def q_regression_discontinuity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-REGRESSION_DISCONTINUITY_SQL = """
+REGRESSION_DISCONTINUITY_SQL = f"""
 WITH per_cust AS (
     SELECT c.c_custkey, c.c_acctbal,
            CAST(COUNT(o.o_orderkey) AS BIGINT) AS y
@@ -2538,31 +2527,19 @@ WITH per_cust AS (
     GROUP BY c.c_custkey, c.c_acctbal
 ),
 banded AS (
-    SELECT CAST(c_acctbal AS DECIMAL(12,2)) AS x, y,
+    SELECT CAST(c_acctbal AS DECIMAL(12,2)) AS x, CAST(y AS DECIMAL(18,0)) AS y,
            c_acctbal >= 0 AS right_side
     FROM per_cust
     WHERE CAST(c_acctbal AS DECIMAL(12,2)) BETWEEN -1000 AND 1000
 ),
 sums AS (
-    SELECT right_side,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(x) AS DECIMAL(24,2)) AS sx,
-           CAST(SUM(y) AS BIGINT) AS sy,
-           CAST(SUM(x * CAST(y AS DECIMAL(18,0))) AS DECIMAL(30,2)) AS sxy,
-           CAST(SUM(x * x) AS DECIMAL(30,4)) AS sxx
+    SELECT right_side, {line_sums_sql("x")}
     FROM banded GROUP BY right_side
 ),
 fits AS (
-    SELECT right_side, n,
-           CAST(ROUND(CAST(
-               (CAST(sy AS DOUBLE)
-                - ((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-                    - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                   / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-                      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
-                  * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE)
-               AS DECIMAL(28,8)), 6) AS DOUBLE) AS icept
-    FROM sums
+    SELECT right_side, CAST(n AS BIGINT) AS n,
+           CAST(ROUND(CAST(intercept AS DECIMAL(28,8)), 6) AS DOUBLE) AS icept
+    FROM {line_fit_sql("sums")}
 )
 SELECT l.n AS n_left, r.n AS n_right,
        l.icept AS intercept_left,
@@ -3034,21 +3011,21 @@ def q_mediation_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("y"),
     )
     s = base.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("m").cast("long").alias("sm"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("m") * F.col("m")).cast("long").alias("smm"),
-        F.sum(F.col("x") * F.col("m")).cast("long").alias("sxm"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("m") * F.col("y")).cast("long").alias("smy"),
+        *line_sums(F.col("x"), F.col("y")),
+        *[
+            F.sum(moment).cast("double").alias(c)
+            for moment, c in (
+                (F.col("m"), "sm"),
+                (F.col("m") * F.col("m"), "smm"),
+                (F.col("x") * F.col("m"), "sxm"),
+                (F.col("m") * F.col("y"), "smy"),
+            )
+        ],
     )
-    n = F.col("n").cast("double")
-    sx, sm, sy = [F.col(c).cast("double") for c in ("sx", "sm", "sy")]
-    sxx, smm, sxm = [F.col(c).cast("double") for c in ("sxx", "smm", "sxm")]
-    sxy, smy = [F.col(c).cast("double") for c in ("sxy", "smy")]
-    total = snap_round((n * sxy - sx * sy) / (n * sxx - sx * sx), 8)
+    n, sx, sm, sy, sxx, smm, sxm, sxy, smy = [
+        F.col(c) for c in ("n", "sx", "sm", "sy", "sxx", "smm", "sxm", "sxy", "smy")
+    ]
+    total = snap_round(line_fit()[0], 8)
     # two-feature direct effect by Cramer on the centered normal equations
     det = (
         n * (sxx * smm - sxm * sxm)
@@ -3062,7 +3039,7 @@ def q_mediation_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     direct = snap_round(det_x / det, 8)
     return s.select(
-        F.col("n").alias("n_rows"),
+        F.col("n").cast("long").alias("n_rows"),
         total.alias("total_effect"),
         direct.alias("direct_effect"),
         snap_round(total - direct, 8).alias("indirect_effect"),
@@ -3072,7 +3049,7 @@ def q_mediation_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MEDIATION_ANALYSIS_SQL = """
+MEDIATION_ANALYSIS_SQL = f"""
 WITH base AS (
     SELECT CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT) AS x,
            CAST(l_quantity AS BIGINT) AS m,
@@ -3080,37 +3057,23 @@ WITH base AS (
     FROM lineitem
 ),
 s AS (
-    SELECT CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(m) AS BIGINT) AS sm,
-           CAST(SUM(y) AS BIGINT) AS sy,
-           CAST(SUM(x * x) AS BIGINT) AS sxx, CAST(SUM(m * m) AS BIGINT) AS smm,
-           CAST(SUM(x * m) AS BIGINT) AS sxm, CAST(SUM(x * y) AS BIGINT) AS sxy,
-           CAST(SUM(m * y) AS BIGINT) AS smy
+    SELECT {line_sums_sql("x")},
+           CAST(SUM(m) AS DOUBLE) AS sm, CAST(SUM(m * m) AS DOUBLE) AS smm,
+           CAST(SUM(x * m) AS DOUBLE) AS sxm, CAST(SUM(m * y) AS DOUBLE) AS smy
     FROM base
 ),
 fx AS (
-    SELECT n,
+    SELECT CAST(n AS BIGINT) AS n,
+           CAST(ROUND(CAST(slope AS DECIMAL(28,10)), 8) AS DOUBLE) AS total_effect,
            CAST(ROUND(CAST(
-               (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-                - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-                  - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-               AS DECIMAL(28,10)), 8) AS DOUBLE) AS total_effect,
-           CAST(ROUND(CAST(
-               (CAST(n AS DOUBLE) * (CAST(sxy AS DOUBLE) * CAST(smm AS DOUBLE)
-                    - CAST(sxm AS DOUBLE) * CAST(smy AS DOUBLE))
-                - CAST(sy AS DOUBLE) * (CAST(sx AS DOUBLE) * CAST(smm AS DOUBLE)
-                    - CAST(sxm AS DOUBLE) * CAST(sm AS DOUBLE))
-                + CAST(sm AS DOUBLE) * (CAST(sx AS DOUBLE) * CAST(smy AS DOUBLE)
-                    - CAST(sxy AS DOUBLE) * CAST(sm AS DOUBLE)))
-               / (CAST(n AS DOUBLE) * (CAST(sxx AS DOUBLE) * CAST(smm AS DOUBLE)
-                    - CAST(sxm AS DOUBLE) * CAST(sxm AS DOUBLE))
-                  - CAST(sx AS DOUBLE) * (CAST(sx AS DOUBLE) * CAST(smm AS DOUBLE)
-                    - CAST(sxm AS DOUBLE) * CAST(sm AS DOUBLE))
-                  + CAST(sm AS DOUBLE) * (CAST(sx AS DOUBLE) * CAST(sxm AS DOUBLE)
-                    - CAST(sxx AS DOUBLE) * CAST(sm AS DOUBLE)))
+               (n * (sxy * smm - sxm * smy)
+                - sy * (sx * smm - sxm * sm)
+                + sm * (sx * smy - sxy * sm))
+               / (n * (sxx * smm - sxm * sxm)
+                  - sx * (sx * smm - sxm * sm)
+                  + sm * (sx * sxm - sxx * sm))
                AS DECIMAL(28,10)), 8) AS DOUBLE) AS direct_effect
-    FROM s
+    FROM {line_fit_sql("s")}
 )
 SELECT n AS n_rows, total_effect, direct_effect,
        CAST(ROUND(CAST(total_effect - direct_effect AS DECIMAL(28,10)), 8)
@@ -3853,6 +3816,10 @@ FROM star
 """
 
 
+#: row→column IPF rounds of q_raking_weights and its unrolled oracle
+RAKING_ROUNDS = 3
+
+
 def q_raking_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Survey raking / iterative proportional fitting: per-cell weights
     that calibrate the (market segment × balance bucket) sample to
@@ -3885,7 +3852,7 @@ def q_raking_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_tot = F.sum("n").over(whole).cast("double")
     k_seg = F.size(F.collect_set("seg").over(whole)).cast("double")
     k_bkt = F.size(F.collect_set("bkt").over(whole)).cast("double")
-    for _ in range(3):
+    for _ in range(RAKING_ROUNDS):
         row_mass = F.sum(F.col("n").cast("decimal(20,2)") * F.col("w")).over(nseg)
         cells = cells.withColumn(
             "w",
@@ -3922,7 +3889,7 @@ def q_raking_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("seg", "bkt")
 
 
-def _raking_sql(rounds: int = 3) -> str:
+def _raking_sql() -> str:
     parts = [
         """cells AS (
     SELECT c_mktsegment AS seg,
@@ -3941,7 +3908,7 @@ def _raking_sql(rounds: int = 3) -> str:
         """w0 AS (SELECT seg, bkt, n, CAST(1.0 AS DECIMAL(20,10)) AS w FROM cells)""",
     ]
     prev = "w0"
-    for r in range(1, rounds + 1):
+    for r in range(1, RAKING_ROUNDS + 1):
         parts.append(
             f"""wr{r} AS (
     SELECT seg, bkt, n,

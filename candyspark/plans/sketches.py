@@ -365,18 +365,17 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from candyspark.operators.sketch import cms_cells, cms_hash_pairs
     from candyspark.sources.readers import fan_out
 
-    d_rows, width = 4, 256
     # the 4 md5 row-hashes per line are the dominant compute and the compact
     # parquet lands in ~3 byte-sized splits (profiled: 2.8 s in a 3-task
     # stage) — fan out so the hash work parallelizes; no-op at real scale
     li = fan_out(load_table(spark, sf_dir, "lineitem").select("l_partkey"))
-    cells = cms_cells(li, "l_partkey", d_rows, width)
+    cells = cms_cells(li, "l_partkey")
     exact = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("exact_cnt"))
     top = exact.orderBy(F.desc("exact_cnt"), "l_partkey").limit(15)
     probes = top.select(
         "l_partkey",
         "exact_cnt",
-        F.explode(cms_hash_pairs(F.col("l_partkey"), d_rows, width)).alias("rb"),
+        F.explode(cms_hash_pairs(F.col("l_partkey"))).alias("rb"),
     ).select("l_partkey", "exact_cnt", F.col("rb.r").alias("r"), F.col("rb.b").alias("b"))
     return (
         probes.join(F.broadcast(cells), ["r", "b"])

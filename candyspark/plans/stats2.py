@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from candyspark.functions.numeric import snap_round
+from candyspark.plans.candy import line_fit, line_fit_sql, line_sums, line_sums_sql
 from candyspark.plans.analytics import (
     CENTRED_SERIES_SQL,
     centred_series,
@@ -1159,25 +1160,13 @@ def q_oaxaca_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("x").cast("decimal(10,0)").alias("x"),
         F.col("o_totalprice").cast("decimal(12,2)").alias("y"),
     )
-    g = per_order.groupBy("is_a").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    n = F.col("n").cast("double")
-    sx = F.col("sx").cast("double")
-    sy = F.col("sy").cast("double")
-    sxy = F.col("sxy").cast("double")
-    sxx = F.col("sxx").cast("double")
+    g = per_order.groupBy("is_a").agg(*line_sums(F.col("x"), F.col("y")))
+    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     # zero within-group x-variance → slope undefined (degenerate input)
-    beta = F.when(
-        n * sxx - sx * sx != 0.0, (n * sxy - sx * sy) / (n * sxx - sx * sx)
-    )
+    beta = line_fit()[0]
     fit = g.select(
         "is_a",
-        "n",
+        n.cast("long").alias("n"),
         F.round((sx / n).cast("decimal(18,8)"), 8).alias("xbar"),
         F.round((sy / n).cast("decimal(18,8)"), 8).alias("ybar"),
         F.round(beta.cast("decimal(18,8)"), 8).alias("beta"),
@@ -1211,7 +1200,7 @@ def q_oaxaca_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-OAXACA_DECOMPOSITION_SQL = """
+OAXACA_DECOMPOSITION_SQL = f"""
 WITH nlines AS (
     SELECT l_orderkey AS o_orderkey, CAST(COUNT(*) AS BIGINT) AS x
     FROM lineitem GROUP BY l_orderkey
@@ -1222,26 +1211,13 @@ per_order AS (
            CAST(o_totalprice AS DECIMAL(12,2)) AS y
     FROM orders JOIN nlines USING (o_orderkey)
 ),
-g AS (
-    SELECT is_a, CAST(COUNT(*) AS BIGINT) AS n,
-           SUM(x) AS sx, SUM(y) AS sy, SUM(x * y) AS sxy, SUM(x * x) AS sxx
-    FROM per_order GROUP BY is_a
-),
+g AS (SELECT is_a, {line_sums_sql("x")} FROM per_order GROUP BY is_a),
 fit AS (
-    SELECT is_a, n,
-           ROUND(CAST(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)
-                 AS DECIMAL(18,8)), 8) AS xbar,
-           ROUND(CAST(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)
-                 AS DECIMAL(18,8)), 8) AS ybar,
-           CASE WHEN CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-                     - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) <> 0.0
-           THEN ROUND(CAST(
-               (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-                - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-                  - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-               AS DECIMAL(18,8)), 8) END AS beta
-    FROM g
+    SELECT is_a, CAST(n AS BIGINT) AS n,
+           ROUND(CAST(sx / n AS DECIMAL(18,8)), 8) AS xbar,
+           ROUND(CAST(sy / n AS DECIMAL(18,8)), 8) AS ybar,
+           ROUND(CAST(slope AS DECIMAL(18,8)), 8) AS beta
+    FROM {line_fit_sql("g")}
 ),
 j AS (
     SELECT a.n AS n_a, b.n AS n_b,

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from candyspark.functions.numeric import money, snap_round
 from candyspark.operators.text import char_hash32
+from candyspark.plans.candy import line_fit, line_fit_sql
 from candyspark.plans.extensions import (
     FIRST_CONVERSIONS_SQL,
     TIME_TO_EVENT_SQL,
@@ -2074,14 +2075,8 @@ def q_quantile_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("sxy"),
     )
-    det = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    b_ols = snap_round(
-        F.when(
-            det != 0,
-            (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / det,
-        ),
-        8,
-    )
+    # the OLS seed snaps its slope BEFORE the intercept is taken from it
+    b_ols = snap_round(line_fit()[0], 8)
     a_ols = snap_round(
         (F.col("sy") - b_ols * F.col("sx")) / F.col("n"), 8
     )
@@ -2234,24 +2229,15 @@ sums AS (
                 AS DECIMAL(28,8))) AS DOUBLE) AS sxy
     FROM daily
 ),
-b0 AS (
-    SELECT CAST(n AS BIGINT) AS n_days,
-           CAST(ROUND(CAST((sy - (CASE WHEN n * sxx - sx * sx != 0
-                THEN CAST(ROUND(CAST((n * sxy - sx * sy) / (n * sxx - sx * sx)
-                     AS DECIMAL(28,8)), 8) AS DOUBLE) END) * sx) / n
-                AS DECIMAL(28,8)), 8) AS DOUBLE) AS a_ols,
-           CASE WHEN n * sxx - sx * sx != 0
-                THEN CAST(ROUND(CAST((n * sxy - sx * sy) / (n * sxx - sx * sx)
-                     AS DECIMAL(28,8)), 8) AS DOUBLE) END AS b_ols,
-           CAST(ROUND(CAST((sy - (CASE WHEN n * sxx - sx * sx != 0
-                THEN CAST(ROUND(CAST((n * sxy - sx * sy) / (n * sxx - sx * sx)
-                     AS DECIMAL(28,8)), 8) AS DOUBLE) END) * sx) / n
-                AS DECIMAL(28,8)), 8) AS DOUBLE) AS a,
-           CASE WHEN n * sxx - sx * sx != 0
-                THEN CAST(ROUND(CAST((n * sxy - sx * sy) / (n * sxx - sx * sx)
-                     AS DECIMAL(28,8)), 8) AS DOUBLE) END AS b
-    FROM sums
-),"""
+ols AS (
+    SELECT n, b,
+           CAST(ROUND(CAST((sy - b * sx) / n AS DECIMAL(28,8)), 8) AS DOUBLE) AS a
+    FROM (SELECT *, CAST(ROUND(CAST(slope AS DECIMAL(28,8)), 8) AS DOUBLE) AS b
+          FROM """
+    + line_fit_sql("sums")
+    + """)
+),
+b0 AS (SELECT CAST(n AS BIGINT) AS n_days, a AS a_ols, b AS b_ols, a, b FROM ols),"""
     + ",".join(_qr_sql_round(k) for k in range(1, _QR_ROUNDS + 1))
     + f"""
 ,

@@ -2,7 +2,6 @@ from candyspark.sources.readers import (
     load_csv,
     load_json_array_files,
     load_table,
-    load_testdata,
 )
 from candyspark.sources.sinks import save_parquet, save_single_csv
 
@@ -10,7 +9,6 @@ __all__ = [
     "load_csv",
     "load_json_array_files",
     "load_table",
-    "load_testdata",
     "save_parquet",
     "save_single_csv",
 ]

@@ -18,8 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from candyspark.schemas import TESTDATA_SCHEMAS
-
 
 def load_csv(
     spark: SparkSession, path: str, schema: T.StructType, header: bool = True
@@ -60,11 +58,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load all driver testdata tables keyed by name."""
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_SCHEMAS}
 
 
 def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

@@ -14,16 +14,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: tumbling and sliding window width, the sliding step, and the inactivity
+#: gap that closes a session; the oracle SQL buckets by the same intervals
+WINDOW = "1 hour"
+SLIDE = "30 minutes"
+SESSION_GAP = "30 minutes"
+
 
 def _dec(c: str):  # events.value has 2-dp synthetic values
     return F.col(c).cast("decimal(12,2)")
 
 
-def tumbling_agg(events: DataFrame, width: str = "1 hour") -> DataFrame:
-    """Tumbling event-time windows per event_type: count + sum(value).
-    Partial aggregation makes the shuffle one row per (window, type) task."""
+def tumbling_agg(events: DataFrame) -> DataFrame:
+    """Tumbling ``WINDOW`` event-time windows per event_type: count +
+    sum(value). Partial aggregation makes the shuffle one row per
+    (window, type) task."""
     return (
-        events.groupBy(F.window("ts", width).alias("w"), "event_type")
+        events.groupBy(F.window("ts", WINDOW).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("num_events"),
             F.round(F.sum(_dec("value")), 2).cast("double").alias("total_value"),
@@ -32,12 +39,10 @@ def tumbling_agg(events: DataFrame, width: str = "1 hour") -> DataFrame:
     )
 
 
-def sliding_agg(
-    events: DataFrame, width: str = "1 hour", slide: str = "30 minutes"
-) -> DataFrame:
-    """Sliding windows (each event lands in width/slide windows)."""
+def sliding_agg(events: DataFrame) -> DataFrame:
+    """Sliding windows (each event lands in WINDOW/SLIDE windows)."""
     return (
-        events.groupBy(F.window("ts", width, slide).alias("w"), "event_type")
+        events.groupBy(F.window("ts", WINDOW, SLIDE).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("num_events"),
             F.round(F.sum(_dec("value")), 2).cast("double").alias("total_value"),
@@ -46,11 +51,12 @@ def sliding_agg(
     )
 
 
-def session_agg(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Per-user session windows (gap-based): sessions close after ``gap`` of
-    inactivity. The batch twin of streaming sessionization."""
+def session_agg(events: DataFrame) -> DataFrame:
+    """Per-user session windows (gap-based): sessions close after
+    ``SESSION_GAP`` of inactivity. The batch twin of streaming
+    sessionization."""
     return (
-        events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("num_events"),
             F.round(F.sum(_dec("value")), 2).cast("double").alias("total_value"),

@@ -23,6 +23,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from candyspark.schemas import EVENTS
+from candyspark.streaming.events import WINDOW
+
+#: how far event time may lag before a stateful operator drops late rows
+#: and evicts their state
+WATERMARK = "2 hours"
 
 
 def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -30,15 +35,13 @@ def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     return spark.readStream.schema(EVENTS).parquet(path)
 
 
-def streaming_tumbling_agg(
-    events: DataFrame, width: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
+def streaming_tumbling_agg(events: DataFrame) -> DataFrame:
     """Watermarked tumbling-window count+sum per event_type — identical
     aggregation to ``events.tumbling_agg`` (kept textually in sync; the
     decimal discipline matters even here for batch/stream equality)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"), "event_type")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", WINDOW).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("num_events"),
             F.round(F.sum(F.col("value").cast("decimal(12,2)")), 2)
@@ -54,7 +57,7 @@ def streaming_tumbling_agg(
     )
 
 
-def streaming_dedup(events: DataFrame, keys: list[str], watermark: str = "2 hours") -> DataFrame:
+def streaming_dedup(events: DataFrame, keys: list[str]) -> DataFrame:
     """Watermarked streaming deduplication: first arrival per key wins,
     duplicates dropped across micro-batches. State holds one entry per key
     seen within the watermark horizon — the watermark is what makes dedup
@@ -66,12 +69,10 @@ def streaming_dedup(events: DataFrame, keys: list[str], watermark: str = "2 hour
     whenever the run is a single micro-batch or all duplicates arrive
     within the watermark.
     """
-    return events.withWatermark("ts", watermark).dropDuplicates([*keys, "ts"])
+    return events.withWatermark("ts", WATERMARK).dropDuplicates([*keys, "ts"])
 
 
-def streaming_dedup_within_watermark(
-    events: DataFrame, keys: list[str], watermark: str = "2 hours"
-) -> DataFrame:
+def streaming_dedup_within_watermark(events: DataFrame, keys: list[str]) -> DataFrame:
     """Near-duplicate-in-TIME deduplication: ``dropDuplicatesWithinWatermark``
     collapses re-sends of the same key whose event times DIFFER (retry with a
     fresh timestamp — the case plain ``dropDuplicates([*keys, "ts"])`` cannot
@@ -82,99 +83,40 @@ def streaming_dedup_within_watermark(
     unbounded stream. First-arrival-wins: columns outside ``keys`` keep the
     first-seen row's values, so only key-determined columns are
     deterministic under arrival reordering."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
+    return events.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(keys)
 
 
-def streaming_interval_join(
-    clicks: DataFrame, errors: DataFrame, lag: str = "INTERVAL 1 HOUR"
-) -> DataFrame:
-    """Stream-stream inner join: each 'error' event joins 'click' events by
-    the same user within [error.ts - lag, error.ts]. Both sides carry
-    watermarks and the join condition carries the time bound — together
-    they let the engine evict buffered rows once no future match is
-    possible (unbounded-state-safe, the canonical stream-stream pattern).
+def streaming_click_error_join(clicks: DataFrame, errors: DataFrame, how: str) -> DataFrame:
+    """Stream-stream join of each click with the errors the same user
+    raised within the following hour (``error_ts BETWEEN click_ts AND
+    click_ts + 1 hour``). Both sides carry ``WATERMARK`` and the join
+    carries the time bound — together they let the engine evict buffered
+    rows once no future match is possible, so state stays bounded by
+    construction (the canonical stream-stream pattern).
 
-    Batch twin: the same equi+range join over static frames
+    ``how`` is ``inner`` (matched pairs only), ``leftOuter`` (every click:
+    one that never errored emits null-padded once event time passes
+    click_ts + 1 hour + the watermark — watermark-DRIVEN, not
+    end-of-data-driven) or ``fullOuter`` (also every error that followed
+    no click, null-padded once the watermark proves no click can still
+    arrive). State and eviction are the same for all three; only the
+    emission set differs.
+
+    Batch twin / oracle: the identical JOIN over static frames
     (plans/extensions range_join_error_window is the banded batch form).
     """
-    c = clicks.withWatermark("ts", "2 hours").select(
+    c = clicks.withWatermark("ts", WATERMARK).select(
         F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"),
         F.col("event_id").alias("click_id"),
     )
-    e = errors.withWatermark("ts", "2 hours").select(
+    e = errors.withWatermark("ts", WATERMARK).select(
         F.col("user_id").alias("e_user"), F.col("ts").alias("error_ts"),
         F.col("event_id").alias("error_id"),
     )
     return c.join(
         e,
-        F.expr(
-            f"c_user = e_user AND click_ts BETWEEN error_ts - {lag} AND error_ts"
-        ),
-        "inner",
-    )
-
-
-def streaming_left_join(
-    clicks: DataFrame, errors: DataFrame, horizon: str = "INTERVAL 1 HOUR"
-) -> DataFrame:
-    """Stream-stream LEFT OUTER join: every click emits — matched with the
-    errors the same user raised within the following ``horizon``, or with
-    NULL error columns once the watermark proves no match can still arrive.
-    The outer side is exactly what the inner interval join
-    (``streaming_interval_join``) cannot express: "clicks that did NOT
-    lead to an error" requires the engine to hold each click in state
-    until event time passes click_ts + horizon + watermark, then emit the
-    null-padded row — so null emission is watermark-DRIVEN, not
-    end-of-data-driven. Both sides carry watermarks and the join carries
-    the time bound; state stays bounded by construction.
-
-    Batch twin / oracle: the identical LEFT JOIN over static frames.
-    """
-    c = clicks.withWatermark("ts", "2 hours").select(
-        F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    e = errors.withWatermark("ts", "2 hours").select(
-        F.col("user_id").alias("e_user"), F.col("ts").alias("error_ts"),
-        F.col("event_id").alias("error_id"),
-    )
-    return c.join(
-        e,
-        F.expr(
-            f"c_user = e_user AND error_ts BETWEEN click_ts AND click_ts + {horizon}"
-        ),
-        "leftOuter",
-    )
-
-
-def streaming_full_outer_join(
-    clicks: DataFrame, errors: DataFrame, horizon: str = "INTERVAL 1 HOUR"
-) -> DataFrame:
-    """Stream-stream FULL OUTER join: every click with its in-horizon
-    errors, every unmatched click null-padded once the watermark clears
-    its horizon (the left tail), AND every error that followed no click
-    null-padded once the watermark proves no click can still arrive (the
-    right tail) — the complete reconciliation view an operational
-    pipeline needs when BOTH sides can be orphans (clicks that never
-    errored, errors with no attributable click). State and eviction
-    bound exactly as the left join; only the emission set differs.
-
-    Batch twin / oracle: the identical FULL JOIN over static frames.
-    """
-    c = clicks.withWatermark("ts", "2 hours").select(
-        F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    e = errors.withWatermark("ts", "2 hours").select(
-        F.col("user_id").alias("e_user"), F.col("ts").alias("error_ts"),
-        F.col("event_id").alias("error_id"),
-    )
-    return c.join(
-        e,
-        F.expr(
-            f"c_user = e_user AND error_ts BETWEEN click_ts AND click_ts + {horizon}"
-        ),
-        "fullOuter",
+        F.expr("c_user = e_user AND error_ts BETWEEN click_ts AND click_ts + INTERVAL 1 HOUR"),
+        how,
     )
 
 
@@ -190,7 +132,7 @@ def streaming_static_enrich(stream: DataFrame, static_dim: DataFrame, keys: list
 #: State partitions for every ``drain()``. A stateful streaming query
 #: instantiates one state store per shuffle partition per stateful
 #: operator per micro-batch; at fixture scale (<=1M rows) 32 stores are
-#: pure fixed cost — measured on streaming_left_join at sf0.1: 16.6 s at
+#: pure fixed cost — measured on the left-outer click/error join at sf0.1: 16.6 s at
 #: 32 partitions vs 7.7 s at 4, identical results. This is a
 #: HARNESS-SCALE knob: a real deployment sizes it to state volume at
 #: query birth (it is frozen into the checkpoint and cannot change
@@ -387,9 +329,7 @@ def run_foreach_batch_merge(
     q.awaitTermination()
 
 
-def streaming_cms_cells(
-    events: DataFrame, d_rows: int = 4, width: int = 256
-) -> DataFrame:
+def streaming_cms_cells(events: DataFrame) -> DataFrame:
     """Count-Min Sketch cells maintained AS STREAMING STATE: the d×w cell
     grid is a running aggregate whose state size is fixed (≤ d·w rows)
     no matter how long the stream runs — the live form of the mergeability
@@ -402,5 +342,5 @@ def streaming_cms_cells(
     a batch DuckDB oracle."""
     from candyspark.operators.sketch import cms_cells
 
-    return cms_cells(events.select("user_id"), "user_id", d_rows, width)
+    return cms_cells(events.select("user_id"), "user_id")
 

@@ -91,27 +91,6 @@ def test_fuzzy_qgram_short_names(spark, tmp_path):
     assert ("almond aquamarine mellow", "almond aquamarine yellow") in got
 
 
-def test_ngram_jaccard_block_cap(spark):
-    """The quadratic-blowup guard: a block larger than max_block_rows must
-    raise up front instead of launching an all-pairs join."""
-    from candyspark.operators.dedup import ngram_jaccard_pairs
-
-    df = spark.createDataFrame(
-        [(i, "en", "the quick brown fox jumps") for i in range(5)],
-        "doc_id long, lang string, text string",
-    )
-    with pytest.raises(ValueError, match="quadratic"):
-        ngram_jaccard_pairs(df, "text", "doc_id", "lang", max_block_rows=3)
-    # under the cap (or with the check disabled) it runs
-    assert ngram_jaccard_pairs(df, "text", "doc_id", "lang").count() == 10
-    assert (
-        ngram_jaccard_pairs(
-            df, "text", "doc_id", "lang", max_block_rows=None
-        ).count()
-        == 10
-    )
-
-
 def test_markov_solver_pure_self_loop():
     """A state whose observed transitions are 100% self-loop puts a hard 0
     on the (I - Q) diagonal: the solve must pin that state's conversion
@@ -154,11 +133,14 @@ def test_markov_query_end_to_end(spark, tmp_path):
 
 
 def test_exact_quantiles_grouped_caller_bounds(spark):
-    """Supplying bounds_df (even OVER-covering lo/hi) must give identical
+    """Supplying bounds_rows (even OVER-covering lo/hi) must give identical
     quantiles to the self-computed-bounds path — the contract robust_stats'
     shared-bounds optimization leans on (its dev pass derives [0, max-dev]
     algebraically instead of re-scanning)."""
-    from candyspark.operators.quantiles import exact_quantiles_grouped
+    from candyspark.operators.quantiles import (
+        exact_quantiles_grouped,
+        exact_quantiles_grouped_rows,
+    )
 
     rows = [("a", float(v)) for v in [3, 1, 4, 1, 5, 9, 2, 6]] + [
         ("b", float(v)) for v in [10, 30, 20]
@@ -169,14 +151,15 @@ def test_exact_quantiles_grouped_caller_bounds(spark):
         (r["g"], r["p"]): r["value"]
         for r in exact_quantiles_grouped(spark, df, "g", "x", probs, n_buckets=8).collect()
     }
-    wide = spark.createDataFrame(
-        [("a", -100.0, 100.0, 8), ("b", 0.0, 1000.0, 3)], "g string, lo double, hi double, n long"
-    )
+    wide = [
+        {"grp": "a", "lo": -100.0, "hi": 100.0, "n": 8},
+        {"grp": "b", "lo": 0.0, "hi": 1000.0, "n": 3},
+    ]
     got = {
-        (r["g"], r["p"]): r["value"]
-        for r in exact_quantiles_grouped(
-            spark, df, "g", "x", probs, n_buckets=8, bounds_df=wide
-        ).collect()
+        (g, p): v
+        for g, p, v in exact_quantiles_grouped_rows(
+            spark, df, "g", "x", probs, n_buckets=8, bounds_rows=wide
+        )
     }
     assert got == base
 

@@ -34,7 +34,7 @@ RTOL, ATOL = 1e-2, 0.01
 
 @pytest.fixture(scope="module")
 def outputs(spark):
-    out = run_pipeline(spark, DATA)
+    out, _obs = run_pipeline(spark, DATA)
     return {
         "orders": out.orders.toPandas(),
         "li": out.order_line_items.toPandas(),
@@ -117,7 +117,7 @@ def test_save_outputs_golden_csv_shape(spark, tmp_path):
     (e.g. '6.70', never '1,234.56')."""
     from candyspark.pipeline import run_pipeline, save_outputs
 
-    out = run_pipeline(spark, DATA)
+    out, _obs = run_pipeline(spark, DATA)
     save_outputs(out, str(tmp_path))
     li = pd.read_csv(tmp_path / "order_line_items.csv", dtype=str)
     assert list(li.columns) == ["order_id", "product_id", "quantity", "unit_price", "line_total"]
@@ -136,9 +136,7 @@ def test_observed_pipeline_metrics_without_extra_jobs(spark):
     orders; 9,846 survive the all-null drop) from the SAME jobs that
     materialize the outputs — the A5 anti-pattern (count() control flow,
     17+ extra scans in the reference) replaced at zero scan cost."""
-    from candyspark.pipeline import run_pipeline_observed
-
-    outputs, obs = run_pipeline_observed(spark, DATA)
+    outputs, obs = run_pipeline(spark, DATA)
     # one action per observed frame materializes its metrics
     n_line_item_rows = outputs.order_line_items.count()
     n_order_rows = outputs.orders.count()

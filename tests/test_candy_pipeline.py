@@ -8,7 +8,7 @@ the five CSVs, the executed plans of the outputs, the jobs one pass
 launches and the labels of the sink jobs. Two hand-built inputs pin the
 edge cases: transaction files that hold only ``[]``, and one transaction
 delivered twice under different headers. One test runs the CLI,
-``python -m candyspark --observe``, in a subprocess.
+``python -m candyspark``, in a subprocess.
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ from pathlib import Path
 import pytest
 
 from candyspark.forecast import forecast_sales_and_profits
-from candyspark.pipeline import run_pipeline, run_pipeline_observed, save_outputs
+from candyspark.pipeline import run_pipeline, save_outputs
 from candyspark.sources.sinks import save_single_csv
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -49,7 +49,7 @@ candyref = _load("candyref")
 def _run_pass(spark, data: str, out: str, sink_group: str | None = None):
     """One pass of ``python -m candyspark``: stages, the four sinks, the
     forecast and its CSV. ``sink_group`` is the job group of the sinks."""
-    outputs = run_pipeline(spark, data)
+    outputs, _obs = run_pipeline(spark, data)
     sc = spark.sparkContext
     if sink_group is not None:
         sc.setJobGroup(sink_group, "candy pipeline sinks")
@@ -142,20 +142,16 @@ def _shuffle_map_stages(spark, tag: str) -> int:
     return sum(st.status().toString() == "COMPLETE" and st.shuffleWriteRecords() > 0 for st in ran)
 
 
-@pytest.mark.parametrize("observed", [False, True], ids=["run_pipeline", "run_pipeline_observed"])
-def test_one_shuffle_from_the_json_scan_to_the_allocator(candy_run, spark, observed):
+def test_one_shuffle_from_the_json_scan_to_the_allocator(candy_run, spark):
     """Building the outputs runs the JSON scan, the dedupe and the allocator
-    as one checkpointed plan: one shuffle map stage (on product_id), also
-    with ``observe()`` on the line items. The per-order aggregate reads
+    as one checkpointed plan: one shuffle map stage (on product_id), with
+    ``observe()`` on the line items. The per-order aggregate reads
     ``cost_to_make`` off the allocation, not off a second products scan."""
     sc = spark.sparkContext
     tag = f"candy-build-{uuid.uuid4().hex}"
     sc.addJobTag(tag)
     try:
-        if observed:
-            outputs, _obs = run_pipeline_observed(spark, candy_run["data"])
-        else:
-            outputs = run_pipeline(spark, candy_run["data"])
+        outputs, _obs = run_pipeline(spark, candy_run["data"])
     finally:
         sc.removeJobTag(tag)
     assert _shuffle_map_stages(spark, tag) == 1
@@ -163,12 +159,12 @@ def test_one_shuffle_from_the_json_scan_to_the_allocator(candy_run, spark, obser
 
 
 def test_cli_observe_matches_reference(candy_run, tmp_path):
-    """``python -m candyspark --observe`` end to end: the five CSVs match
-    the reference and the printed line-item count is the deduplicated one."""
+    """``python -m candyspark`` end to end: the five CSVs match the
+    reference and the printed line-item count is the deduplicated one."""
     out = tmp_path / "out"
     env = {**os.environ, "PYTHONPATH": str(ROOT), "SPARK_GRAFT_DRIVER_MEM": "1g"}
     proc = subprocess.run(
-        [sys.executable, "-m", "candyspark", "--observe",
+        [sys.executable, "-m", "candyspark",
          "--data-dir", candy_run["data"], "--output-dir", str(out)],
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
     )

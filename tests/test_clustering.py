@@ -93,4 +93,4 @@ def test_assign_clusters_empty_centroids_assigns_nothing(spark, toy):
 
     df, _, _ = toy
     empty = spark.createDataFrame([], "cluster_id int, c_vec array<float>")
-    assert assign_clusters(df, empty, "vec_id", "embedding").count() == 0
+    assert assign_clusters(df, empty).count() == 0

@@ -200,7 +200,7 @@ def test_lpa_matches_reference_on_random_graphs(spark):
         df = spark.createDataFrame(sorted(edges), "src long, dst long")
         got = {
             r["node"]: r["label"]
-            for r in label_propagation(df, max_rounds=5).collect()
+            for r in label_propagation(df).collect()
         }
         want = _lpa_reference(sorted(edges), rounds=5)
         assert got == want, f"trial {trial}: {got} != {want}"

@@ -1,8 +1,11 @@
 """Spark-free checks on the lists the engine derives instead of hand-keeping,
-and a source guard that keeps deleted inline copies from growing back."""
+and source guards that keep deleted inline copies, deleted second code paths
+and options every caller sets alike from growing back."""
 
 from __future__ import annotations
 
+import ast
+import collections
 import pathlib
 import re
 import types
@@ -13,6 +16,7 @@ import bench
 from candyspark.plans import FRONT, _module_queries, collect_registry
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "candyspark"
+ROOT = PKG.parent
 
 
 def test_headline_excludes_every_streaming_drain():
@@ -203,3 +207,121 @@ def test_snap_round_has_one_definition():
         for _ in re.finditer(r"^def snap_round\(", path.read_text(), re.M)
     ]
     assert defs == ["functions/numeric.py"], defs
+
+
+def _repo_trees() -> dict[pathlib.Path, ast.Module]:
+    """Every Python source of the repo (engine, tests, benches, tools)."""
+    return {
+        path: ast.parse(path.read_text())
+        for path in sorted(ROOT.rglob("*.py"))
+        if not any(part.startswith(".") or part == "spark-warehouse"
+                   for part in path.relative_to(ROOT).parts)
+    }
+
+
+def _ident(node: ast.AST) -> str | None:
+    """The identifier a Name or Attribute node spells."""
+    return node.id if isinstance(node, ast.Name) else getattr(node, "attr", None)
+
+
+#: the modules whose functions must not carry an option that every caller
+#: sets to one value (session.py and sources/ hold deployment settings)
+KNOB_SCOPE = ("operators", "streaming", "plans", "forecast.py", "pipeline.py")
+
+
+def _single_valued_options(trees: dict[pathlib.Path, ast.Module]) -> list[str]:
+    """``module.function(param)`` for each defaulted parameter of a
+    module-level function in KNOB_SCOPE that every call site in the repo
+    sets to the same value (an omitted argument counts as its default).
+    A function passed around as a value has call sites this cannot see,
+    so it is skipped; a call spreading ``*args``/``**kwargs`` makes the
+    parameters it does not name unknown."""
+    defs = collections.defaultdict(list)
+    for path, tree in trees.items():
+        rel = path.relative_to(ROOT)
+        if rel.parts[0] != "candyspark" or rel.parts[1] not in KNOB_SCOPE:
+            continue
+        module = ".".join(rel.with_suffix("").parts[1:])
+        for node in tree.body:
+            if not isinstance(node, ast.FunctionDef):
+                continue
+            a = node.args
+            pos = [x.arg for x in a.posonlyargs + a.args]
+            defaults = dict(zip(pos[len(pos) - len(a.defaults):],
+                                map(ast.unparse, a.defaults)))
+            defaults.update(
+                (x.arg, ast.unparse(d))
+                for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+            )
+            if defaults:
+                defs[node.name].append((f"{module}.{node.name}", pos, defaults))
+    sites = collections.defaultdict(list)
+    escaped = set()
+    for tree in trees.values():
+        callees, bases = set(), set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                callees.add(id(node.func))
+                if _ident(node.func) in defs:
+                    sites[_ident(node.func)].append(node)
+            elif isinstance(node, ast.Attribute):
+                bases.add(id(node.value))
+        escaped.update(
+            _ident(node)
+            for node in ast.walk(tree)
+            if _ident(node) in defs and id(node) not in callees | bases
+        )
+    offenders = []
+    for name, overloads in defs.items():
+        if name in escaped or not sites[name]:
+            continue
+        for where, pos, defaults in overloads:
+            values = {param: set() for param in defaults}
+            for call in sites[name]:
+                spread = any(isinstance(x, ast.Starred) for x in call.args) or any(
+                    k.arg is None for k in call.keywords
+                )
+                given = {pos[i]: ast.unparse(x) for i, x in enumerate(call.args)
+                         if i < len(pos) and not isinstance(x, ast.Starred)}
+                given.update((k.arg, ast.unparse(k.value)) for k in call.keywords if k.arg)
+                for param, default in defaults.items():
+                    values[param].add(
+                        given.get(param, object() if spread else default)
+                    )
+            offenders += [f"{where}({p}) = {v.pop()}" for p, v in values.items() if len(v) == 1]
+    return sorted(offenders)
+
+
+def test_no_option_is_set_to_one_value_by_every_caller():
+    # an option nobody sets differently is a constant with a second
+    # spelling: make it a module constant (shared with the oracle SQL
+    # where both need it)
+    offenders = _single_valued_options(_repo_trees())
+    assert not offenders, "\n".join(offenders)
+
+
+#: second code paths deleted because no query, CLI or pipeline stage took
+#: them: the blocked all-pairs n-gram Jaccard (its block-size guard), the
+#: literal-matrix hyperplane signature, the DataFrame form of caller
+#: quantile bounds, the unobserved pipeline, three copies of one
+#: click/error stream join, and the image-decode stub
+DELETED_FORKS = {
+    "ngram_jaccard_pairs_inverted", "max_block_rows", "hyperplane_signature",
+    "bounds_df", "run_pipeline_observed", "streaming_interval_join",
+    "streaming_left_join", "streaming_full_outer_join", "decode_image",
+}
+
+
+def test_deleted_forks_stay_deleted():
+    offenders = []
+    for path, tree in _repo_trees().items():
+        for node in ast.walk(tree):
+            name = (
+                _ident(node) if isinstance(node, (ast.Name, ast.Attribute))
+                else node.arg if isinstance(node, (ast.arg, ast.keyword))
+                else node.name if isinstance(node, (ast.FunctionDef, ast.alias))
+                else None
+            )
+            if name in DELETED_FORKS:
+                offenders.append(f"{path.relative_to(ROOT)}:{node.lineno}: {name}")
+    assert not offenders, "\n".join(offenders)

@@ -49,22 +49,33 @@ def test_query_survives_empty_input(spark, empty_sf_dir, name):
     assert len(df.schema.fields) > 0
 
 
-@pytest.fixture(scope="module")
-def one_day_sf_dir(tmp_path_factory):
-    """The testdata with ``orders`` cut to its first order date: every
-    daily series over it has exactly one day, the degenerate case of a
-    trend fit (its x has no spread). Single parquet files, as DuckDB reads
-    them."""
-    root = tmp_path_factory.mktemp("one_day_sf")
+def _short_series_sf_dir(tmp_path_factory, days: int) -> str:
+    """The testdata with ``orders`` cut to its first ``days`` order dates:
+    every daily series over it has exactly that many days. Single parquet
+    files, as DuckDB reads them."""
+    root = tmp_path_factory.mktemp(f"{days}_day_sf")
     for table in TESTDATA_TABLES:
         src, dst = f"{SF_DIR}/{table}.parquet", root / f"{table}.parquet"
         if table == "orders":
             orders = pq.read_table(src)
-            first = pc.min(orders["o_orderdate"])
-            pq.write_table(orders.filter(pc.equal(orders["o_orderdate"], first)), dst)
+            kept = pc.unique(orders["o_orderdate"]).sort()[:days]
+            pq.write_table(orders.filter(pc.is_in(orders["o_orderdate"], kept)), dst)
         else:
             shutil.copy(src, dst)
     return str(root)
+
+
+@pytest.fixture(scope="module")
+def one_day_sf_dir(tmp_path_factory):
+    """One day: the degenerate case of a trend fit (its x has no spread)."""
+    return _short_series_sf_dir(tmp_path_factory, 1)
+
+
+@pytest.fixture(scope="module")
+def two_day_sf_dir(tmp_path_factory):
+    """Two days: the line fits both points exactly, so every residual and
+    the residual variance are 0 and each point's leverage is 1."""
+    return _short_series_sf_dir(tmp_path_factory, 2)
 
 
 #: the fits over the daily sales series (plans/candy.py)
@@ -81,15 +92,26 @@ DAILY_SERIES_FITS = [
 ]
 
 
+def _matches_oracle(spark, sf_dir: str, name: str) -> None:
+    spec = REGISTRY[name]
+    con = duckdb_connection(sf_dir)
+    try:
+        oracle_pdf = con.execute(spec.sql).df()
+    finally:
+        con.close()
+    compare_frames(spec.fn(spark, sf_dir).toPandas(), oracle_pdf, name)
+
+
 @pytest.mark.parametrize("name", DAILY_SERIES_FITS)
 def test_one_day_series_matches_oracle(spark, one_day_sf_dir, name):
     # the fit's determinant n·Σx² − (Σx)² is 0: slope, intercept and the
     # leverage are NULL in both engines, not a divide-by-zero error on the
     # Spark side
-    spec = REGISTRY[name]
-    con = duckdb_connection(one_day_sf_dir)
-    try:
-        oracle_pdf = con.execute(spec.sql).df()
-    finally:
-        con.close()
-    compare_frames(spec.fn(spark, one_day_sf_dir).toPandas(), oracle_pdf, name)
+    _matches_oracle(spark, one_day_sf_dir, name)
+
+
+@pytest.mark.parametrize("name", DAILY_SERIES_FITS)
+def test_two_day_series_matches_oracle(spark, two_day_sf_dir, name):
+    # zero residuals: Durbin-Watson's Σe² and Cook's distance's s² and
+    # (1 - h)² are 0, so those terms are NULL in both engines
+    _matches_oracle(spark, two_day_sf_dir, name)

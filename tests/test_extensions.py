@@ -8,7 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from candyspark.operators.multimodal import binary_metadata, decode_image, with_binary_payload
+from candyspark.operators.multimodal import binary_metadata, with_binary_payload
 from candyspark.operators.similarity import brute_force_topk, lsh_bucketed_topk
 from candyspark.plans.extensions import q_dedup_minhash, q_dedup_ngram, q_similarity_bruteforce
 from candyspark.sources.readers import load_table
@@ -45,8 +45,8 @@ def test_ann_recall_vs_bruteforce(spark):
     on 64-dim clustered embeddings)."""
     e = load_table(spark, SF_SMOKE, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
-    exact = brute_force_topk(e, q, k=10).toPandas()
-    ann = lsh_bucketed_topk(e, q, k=10, planes=5, tables=6).toPandas()
+    exact = brute_force_topk(e, q).toPandas()
+    ann = lsh_bucketed_topk(e, q).toPandas()
     exact_pairs = set(zip(exact.query_id, exact.neighbor_id))
     ann_pairs = set(zip(ann.query_id, ann.neighbor_id))
     # every ANN hit carries the same cosine the exact scan computed
@@ -68,9 +68,7 @@ def test_bruteforce_is_consistent_topk(spark):
 
 
 def test_multimodal_stub_and_metadata(spark):
-    with pytest.raises(NotImplementedError, match="image library"):
-        decode_image(b"\x89PNG")
-    d = with_binary_payload(load_table(spark, SF_SMOKE, "documents"), "text")
+    d = with_binary_payload(load_table(spark, SF_SMOKE, "documents"))
     meta = binary_metadata(d, "doc_id", "payload").toPandas()
     docs = load_table(spark, SF_SMOKE, "documents").toPandas()
     j = docs.merge(meta, on="doc_id")
@@ -86,8 +84,8 @@ def test_ivf_recall_vs_bruteforce(spark):
 
     e = load_table(spark, SF_SMOKE, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
-    exact = brute_force_topk(e, q, k=10).toPandas()
-    ivf = ivf_topk(e, q, k=10, n_centroids=16, n_probe=4).toPandas()
+    exact = brute_force_topk(e, q).toPandas()
+    ivf = ivf_topk(e, q).toPandas()
     merged = ivf.merge(
         exact, on=["query_id", "neighbor_id"], suffixes=("_i", "_e"), how="inner"
     )
@@ -101,7 +99,7 @@ def test_ivf_recall_vs_bruteforce(spark):
 def test_resize_kernel_shape(spark):
     from candyspark.operators.multimodal import resize_images
 
-    d = with_binary_payload(load_table(spark, SF_SMOKE, "documents"), "text")
+    d = with_binary_payload(load_table(spark, SF_SMOKE, "documents"))
     out = resize_images(d, "doc_id", "payload", width=16, height=8).toPandas()
     assert (out.resized.str.len() == 16 * 8).all()
     assert (out.width == 16).all() and (out.height == 8).all()
@@ -111,7 +109,7 @@ def test_resize_kernel_shape(spark):
 def test_frame_sampling_is_one_to_many(spark):
     from candyspark.operators.multimodal import sample_frames
 
-    d = with_binary_payload(load_table(spark, SF_SMOKE, "documents"), "text")
+    d = with_binary_payload(load_table(spark, SF_SMOKE, "documents"))
     out = sample_frames(d, "doc_id", "payload", frame_bytes=64, every_n=2).toPandas()
     docs = load_table(spark, SF_SMOKE, "documents").toPandas()
     n_bytes = docs.set_index("doc_id").text.str.len()
@@ -411,8 +409,8 @@ def test_dedup_embedding_adaptive_planes_branch(spark):
     n = e.count()
     planes = max(4, math.ceil(math.log2(n / 32.0)))
     assert planes > 4, f"fixture too small to exercise the branch (n={n})"
-    lsh = embedding_dup_pairs_lsh(e, threshold=0.4, planes=planes, tables=8).toPandas()
-    exact = embedding_dup_pairs(e, threshold=0.4).toPandas()
+    lsh = embedding_dup_pairs_lsh(e, planes=planes).toPandas()
+    exact = embedding_dup_pairs(e).toPandas()
     exact_map = {(a, b): c for a, b, c in zip(exact.vec_a, exact.vec_b, exact.cosine_sim)}
     for a, b, c in zip(lsh.vec_a, lsh.vec_b, lsh.cosine_sim):
         assert exact_map[(a, b)] == c
@@ -440,10 +438,7 @@ def test_adaptive_planes_bounds_bucket_occupancy(spark):
         e = spark.read.parquet(f"{d}/embeddings.parquet")
         n = e.count()
         planes = max(4, math.ceil(math.log2(n / 32.0)))
-        b = _with_buckets(
-            fan_out(e), "vid", "vec", "vec_id", "embedding",
-            tables=2, planes=planes, dim=64,
-        )
+        b = _with_buckets(fan_out(e), "vid", "vec", tables=2, planes=planes)
         occ = (
             b.groupBy("tbl", "bucket").count().groupBy("tbl")
             .agg(F.avg("count").alias("mean_occ")).collect()

@@ -56,7 +56,7 @@ def test_forecast_many(spark):
     ]
     df = spark.createDataFrame(rows, "pid int, date date, value double")
     out = (
-        forecast_many(df, ["pid"], "date", "value", horizon=2, method="linear")
+        forecast_many(df, ["pid"], "date", "value")
         .toPandas()
         .sort_values(["pid", "date"])
         .reset_index(drop=True)

@@ -48,9 +48,7 @@ def test_containment_detects_doc_inside_doc(spark, tmp_path):
         # 32 bands of 1 row: collision prob 1-(1-J)^32, so even the low
         # symmetric Jaccard of a small-doc-in-big-doc pair gets recalled
         # (the operator docstring's "lower the band width" knob)
-        for r in containment_pairs(
-            d, "text", "doc_id", num_hashes=32, bands=32, threshold=0.5
-        ).collect()
+        for r in containment_pairs(d, "text", "doc_id", bands=32).collect()
     }
     assert (0, 1) in out, "embedded doc must surface as a containment pair"
     r = out[(0, 1)]

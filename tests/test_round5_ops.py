@@ -141,7 +141,7 @@ def test_semantic_dedup_quantizer_balance_holds_as_n_grows(spark):
         )
         sizes = [
             r.c
-            for r in S.ivf_assign(e, cents, "vec_id", "embedding", n_probe=1)
+            for r in S.ivf_assign(e, cents)
             .groupBy("cluster_id")
             .agg(F.count("*").alias("c"))
             .collect()

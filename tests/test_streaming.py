@@ -33,11 +33,11 @@ def test_streaming_equals_batch(spark, tmp_path):
     src = str(tmp_path / "events_src")
     save_parquet(events, src)
 
-    stream = streaming_tumbling_agg(read_events_stream(spark, src), "1 hour", "2 hours")
+    stream = streaming_tumbling_agg(read_events_stream(spark, src))
     assert stream.isStreaming
     got = drain(stream, "complete", str(tmp_path / "ckpt")).toPandas()
 
-    want = tumbling_agg(events, "1 hour").toPandas()
+    want = tumbling_agg(events).toPandas()
     key = ["window_start", "event_type"]
     got = got.sort_values(key).reset_index(drop=True)
     want = want.sort_values(key).reset_index(drop=True)
@@ -502,13 +502,11 @@ def test_rocksdb_state_store(spark, tmp_path):
     src = str(tmp_path / "events_src")
     save_parquet(events, src)
 
-    stream = streaming_tumbling_agg(
-        read_events_stream(spark, src), "1 hour", "2 hours"
-    )
+    stream = streaming_tumbling_agg(read_events_stream(spark, src))
     got = drain(
         stream, "update", str(tmp_path / "ckpt_rocks"), state_store="rocksdb"
     ).toPandas()
-    want = tumbling_agg(events, "1 hour").toPandas()
+    want = tumbling_agg(events).toPandas()
     key = ["window_start", "event_type"]
     got = got.sort_values(key).reset_index(drop=True)
     want = want.sort_values(key).reset_index(drop=True)
