@@ -142,19 +142,27 @@ def _shuffle_map_stages(spark, tag: str) -> int:
     return sum(st.status().toString() == "COMPLETE" and st.shuffleWriteRecords() > 0 for st in ran)
 
 
-def test_one_shuffle_from_the_json_scan_to_the_allocator(candy_run, spark):
+@pytest.mark.parametrize("read_metrics", [False, True], ids=["run_pipeline", "run_pipeline_observed"])
+def test_one_shuffle_from_the_json_scan_to_the_allocator(candy_run, spark, read_metrics):
     """Building the outputs runs the JSON scan, the dedupe and the allocator
     as one checkpointed plan: one shuffle map stage (on product_id), with
-    ``observe()`` on the line items. The per-order aggregate reads
-    ``cost_to_make`` off the allocation, not off a second products scan."""
+    ``observe()`` on the line items. Reading the line-item metrics after
+    the build adds no stage: they rode the checkpoint's job. The per-order
+    aggregate reads ``cost_to_make`` off the allocation, not off a second
+    products scan."""
     sc = spark.sparkContext
     tag = f"candy-build-{uuid.uuid4().hex}"
     sc.addJobTag(tag)
     try:
-        outputs, _obs = run_pipeline(spark, candy_run["data"])
+        outputs, obs = run_pipeline(spark, candy_run["data"])
+        if read_metrics:
+            n_line_items = obs["line_items"].get["n_line_items"]
     finally:
         sc.removeJobTag(tag)
     assert _shuffle_map_stages(spark, tag) == 1
+    if read_metrics:
+        expected = candyref.reference(candy_run["data"])
+        assert n_line_items == len(expected["order_line_items.csv"])
     assert "Scan csv" not in outputs.orders._jdf.queryExecution().executedPlan().toString()
 
 
